@@ -40,7 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
-    ArrayType, BinaryType, LongType, StructField, StructType,
+    ArrayType, LongType, StructField, StructType,
 )
 
 from annoy_spark.config import DedupConfig
@@ -183,7 +183,6 @@ def make_fingerprint_udf(cfg: DedupConfig):
 
 
 _EXTEND_SCHEMA = "u long, v long, match_len long"
-_SLICED_SCHEMA = "u long, v long, match_len long, capped boolean"
 
 # Window schedule: most anchors mismatch within a few bytes (failed
 # candidates), so the FIRST window is tiny — the per-anchor cost is
@@ -315,191 +314,6 @@ def make_extend_verifier(cfg: DedupConfig):
     return verify_batch
 
 
-# Content slicing: the extension verifier only ever compares bytes near an
-# anchor, so the pair join ships merged [pos - margin, pos + chunk + margin)
-# byte windows instead of whole files — shuffled/Arrow bytes then scale with
-# anchor count, not file size. A match longer than the window is detected
-# (the scan runs into a slice edge that is not a file edge), flagged
-# `capped`, and re-verified on full content, so match_len stays the TRUE
-# maximal length. Margin defaults to 2*min_substring_len: a capped anchor
-# then implies a real match >= ~2x the report threshold, which is rare, so
-# the escalation pass touches only genuinely-long-match pairs.
-_SLICE_FULL_FILE_FRAC = 0.8  # merged windows >= this fraction -> whole file
-
-
-def make_slicer_udf(margin: int, chunk: int):
-    """(file_id, content, ps) -> (file_id, flen, slices) where slices are
-    merged disjoint byte windows around the file's anchor positions, each
-    (start, bytes) over the utf-8 buffer (anchor positions are byte
-    offsets into that buffer, matching fingerprint_positions)."""
-    schema = StructType(
-        [
-            StructField("file_id", LongType()),
-            StructField("flen", LongType()),
-            StructField(
-                "slices",
-                ArrayType(
-                    StructType(
-                        [
-                            StructField("start", LongType()),
-                            StructField("bytes", BinaryType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-
-    def slice_batches(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            ids, flens, slices = [], [], []
-            for fid, content, ps in zip(
-                pdf["file_id"], pdf["content"], pdf["ps"]
-            ):
-                data = (content or "").encode("utf-8")
-                fl = len(data)
-                p = np.unique(np.asarray(list(ps), dtype=np.int64))
-                p = p[(p >= 0) & (p < fl)]
-                lo = np.maximum(p - margin, 0)
-                hi = np.minimum(p + chunk + margin, fl)
-                # merge overlapping windows (lo sorted): a new interval
-                # starts where lo exceeds the running max of hi
-                if len(p):
-                    runhi = np.maximum.accumulate(hi)
-                    brk = np.flatnonzero(lo[1:] > runhi[:-1]) + 1
-                    starts = lo[np.concatenate(([0], brk))]
-                    ends = runhi[np.concatenate((brk - 1, [len(p) - 1]))]
-                else:
-                    starts = ends = np.empty(0, dtype=np.int64)
-                if int((ends - starts).sum()) >= _SLICE_FULL_FILE_FRAC * fl:
-                    out = [{"start": 0, "bytes": data}]
-                else:
-                    out = [
-                        {"start": int(s), "bytes": data[int(s) : int(e)]}
-                        for s, e in zip(starts, ends)
-                    ]
-                ids.append(fid)
-                flens.append(fl)
-                slices.append(out)
-            yield pd.DataFrame(
-                {"file_id": ids, "flen": flens, "slices": slices}
-            )
-
-    return slice_batches, schema
-
-
-def _flatten_slices(col: pd.Series):
-    """Concatenate a batch's slice arrays into one flat byte buffer.
-
-    Returns (keys, starts, slens, offs, flat): `keys` is the per-slice
-    row-qualified start (row * 2^41 + start) so ONE searchsorted maps any
-    (row, pos) anchor to its slice; starts[j]/slens[j] are slice j's byte
-    range in its file; offs[j] is slice j's offset in `flat`."""
-    n_slices = np.fromiter((len(x) for x in col), np.int64, len(col))
-    bufs = [np.frombuffer(s["bytes"], dtype=np.uint8) for x in col for s in x]
-    total = int(n_slices.sum())
-    if total:
-        starts = np.fromiter(
-            (s["start"] for x in col for s in x), np.int64, total
-        )
-        slens = np.fromiter((len(b) for b in bufs), np.int64, total)
-        flat = np.concatenate(bufs) if slens.sum() else np.zeros(1, np.uint8)
-        offs = np.concatenate(([0], np.cumsum(slens)[:-1]))
-    else:
-        starts = slens = offs = np.empty(0, np.int64)
-        flat = np.zeros(1, np.uint8)
-    row_of_slice = np.repeat(np.arange(len(col), dtype=np.int64), n_slices)
-    keys = row_of_slice * _ROW_KEY + starts
-    return keys, starts, slens, offs, flat
-
-
-_ROW_KEY = np.int64(1) << np.int64(41)  # > any byte offset in one file
-
-
-def make_sliced_verifier(cfg: DedupConfig):
-    """Sparse-buffer twin of make_extend_verifier: anchors resolve into the
-    pair's pruned slice windows; an extension that exhausts a slice edge
-    short of the file edge marks the pair `capped` for full-content
-    re-verification (exactness contract, annoylib.h:1492-1494)."""
-    min_len = cfg.min_substring_len
-
-    def verify_batch(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    columns=["u", "v", "match_len", "capped"]
-                )
-                continue
-            ka, sa, la, oa, ca = _flatten_slices(pdf["slices_u"])
-            kb, sb, lb, ob, cb = _flatten_slices(pdf["slices_v"])
-            fla = pdf["flen_u"].to_numpy(np.int64)
-            flb = pdf["flen_v"].to_numpy(np.int64)
-
-            n_anc = np.fromiter(
-                (len(x) for x in pdf["pos_u"]), np.int64, len(pdf)
-            )
-            row = np.repeat(np.arange(len(pdf), dtype=np.int64), n_anc)
-            pu = (
-                np.concatenate(list(pdf["pos_u"])).astype(np.int64)
-                if n_anc.sum() else np.empty(0, np.int64)
-            )
-            pv = (
-                np.concatenate(list(pdf["pos_v"])).astype(np.int64)
-                if n_anc.sum() else np.empty(0, np.int64)
-            )
-            ok = (pu < fla[row]) & (pv < flb[row])
-            row, pu, pv = row[ok], pu[ok], pv[ok]
-
-            # anchor -> containing slice via the row-qualified start keys
-            ja = np.searchsorted(ka, row * _ROW_KEY + pu, side="right") - 1
-            jb = np.searchsorted(kb, row * _ROW_KEY + pv, side="right") - 1
-            ok = (
-                (ja >= 0) & (jb >= 0)
-                & (pu < sa[ja.clip(0)] + la[ja.clip(0)])
-                & (pu >= sa[ja.clip(0)])
-                & (pv < sb[jb.clip(0)] + lb[jb.clip(0)])
-                & (pv >= sb[jb.clip(0)])
-            )
-            row, pu, pv, ja, jb = row[ok], pu[ok], pv[ok], ja[ok], jb[ok]
-
-            rs_u = sa[ja] + la[ja] - pu          # bytes right of anchor, slice
-            rs_v = sb[jb] + lb[jb] - pv
-            rf = np.minimum(fla[row] - pu, flb[row] - pv)   # ... file
-            avail_r = np.minimum(rs_u, rs_v)
-            ls_u = pu - sa[ja]
-            ls_v = pv - sb[jb]
-            lf = np.minimum(pu, pv)
-            avail_l = np.minimum(ls_u, ls_v)
-
-            right = _batch_extend(
-                ca, cb, oa[ja] + ls_u, ob[jb] + ls_v, avail_r,
-                backwards=False,
-            )
-            left = _batch_extend(
-                ca, cb, oa[ja] + ls_u - 1, ob[jb] + ls_v - 1, avail_l,
-                backwards=True,
-            )
-            capped = ((right == avail_r) & (avail_r < rf)) | (
-                (left == avail_l) & (avail_l < lf)
-            )
-            total = left + right
-            best = np.zeros(len(pdf), dtype=np.int64)
-            np.maximum.at(best, row, total)
-            cap_any = np.zeros(len(pdf), dtype=bool)
-            np.logical_or.at(cap_any, row, capped)
-            keep = cap_any | (best >= min_len)
-            yield pd.DataFrame(
-                {
-                    "u": pdf["u"].to_numpy()[keep],
-                    "v": pdf["v"].to_numpy()[keep],
-                    "match_len": best[keep],
-                    "capped": cap_any[keep],
-                }
-            )
-
-    return verify_batch
-
-
 # broadcast the anchored pair set only while it stays comfortably in
 # memory: rows are (u, v, <=8+8 positions) ~ 150 B -> 500k ~ 75 MB
 PAIR_BROADCAST_CAP = 500_000
@@ -508,19 +322,12 @@ PAIR_BROADCAST_CAP = 500_000
 def substring_edges(
     corpus_with_ids: DataFrame,
     cfg: DedupConfig,
-    broadcast_pairs: bool | None = None,
     return_skipped: bool = False,
-    slice_margin: int | None = None,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """(u, v, match_len) pairs sharing a verbatim block >= min_substring_len.
 
     corpus_with_ids: (file_id, content) — pass sha-collapsed representatives
     to keep fingerprint groups free of exact-duplicate blowup.
-
-    broadcast_pairs=None (default) decides adaptively from the materialized
-    anchored-pair count. Content is NEVER broadcast: the pair-id set
-    broadcast-semi-filters the corpus, then two bounded sides shuffle-join —
-    worst case is a shuffle of candidate contents, not an executor OOM.
 
     return_skipped=True additionally returns the huge-fingerprint-family
     accounting DataFrame (fp, n_members) — families above band_group_cap
@@ -693,192 +500,37 @@ def substring_edges(
         )
     )
     # materialize the (small) anchored set once: cuts the UDF lineage so
-    # fps can be unpersisted, and gives an exact count for the adaptive
-    # broadcast decision. Lazy when the count follows immediately — the
-    # count then materializes the checkpoint in the same job (one pass,
-    # not two); eager when the caller pinned broadcast_pairs, because the
-    # checkpoint MUST exist before fps.unpersist() below.
-    if broadcast_pairs is None:
-        anchored = anchored.localCheckpoint(eager=False)
-        broadcast_pairs = anchored.count() <= PAIR_BROADCAST_CAP
-    else:
-        anchored = anchored.localCheckpoint(eager=True)
+    # fps can be unpersisted, and gives the exact count that sizes the
+    # pair join. Lazy: the count materializes the checkpoint in the same
+    # job, and it runs before fps.unpersist() below.
+    anchored = anchored.localCheckpoint(eager=False)
+    small = anchored.count() <= PAIR_BROADCAST_CAP
     if return_skipped:
         # consumed after fps is unpersisted -> cut its lineage now
         skipped = skipped.localCheckpoint(eager=True)
     fps.unpersist()
 
+    # exact anchored extension over whole-file contents. Content never
+    # carries a broadcast hint; a small pair set does: it joins into a
+    # streamed content scan (no content shuffle on the u side), and its v
+    # ids cut the v side down to candidate files before the pair join's
+    # shuffle. The planner cannot choose either by itself, since it sizes
+    # a checkpoint from the plan that built it, not from its rows:
+    # unhinted, both content sides shuffle whole once content outgrows
+    # the broadcast threshold.
     content = corpus_with_ids.select("file_id", "content")
-    if slice_margin is None:
-        slice_margin = adaptive_slice_margin(content, cfg)
-    if slice_margin <= 0:
-        edges = _full_content_verify(anchored, content, cfg, broadcast_pairs)
-    else:
-        edges = _sliced_verify(
-            anchored, content, cfg, broadcast_pairs, slice_margin
-        )
-    return (edges, skipped) if return_skipped else edges
-
-
-def adaptive_slice_margin(content: DataFrame, cfg: DedupConfig) -> int:
-    """Default slicing decision: slicing trades ONE extra content scan (the
-    slicer) for pair-join bytes bounded by anchor windows (~2*margin each
-    side). That only pays when files are much larger than the windows; for
-    small-file corpora the merged windows ARE the whole file and the extra
-    scan is pure overhead. A bounded sample of file lengths decides (one
-    small job; `limit` stops the scan after the first partitions). Two
-    documented approximations: the limit samples a PARTITION PREFIX, so an
-    input laid out by size can misrepresent the corpus mean, and that only
-    misprices the verify path — results are identical either way; pass
-    slice_margin explicitly to pin the choice for such layouts. Lengths
-    are measured in BYTES (octet_length) because every window/margin in
-    the slicer is utf-8 byte arithmetic."""
-    margin = 2 * cfg.min_substring_len
-    break_even = 4 * (2 * margin + cfg.substring_chunk)
-    avg_len = (
-        content.select(F.octet_length("content").alias("n"))
-        .limit(20_000)
-        .agg(F.avg("n"))
-        .collect()[0][0]
-    )
-    return margin if (avg_len or 0) > break_even else 0
-
-
-def _full_content_verify(
-    anchored: DataFrame,
-    content: DataFrame,
-    cfg: DedupConfig,
-    broadcast_pairs: bool,
-) -> DataFrame:
-    """Exact anchored extension over whole-file contents — the escalation
-    path for slice-capped pairs (and the slicing-off fallback)."""
-    if broadcast_pairs:
-        # u side: broadcast the anchored pair set (ids + positions only)
-        # into a streamed content scan — no shuffle, no content broadcast.
-        # v side: broadcast-semi-filter content down to candidate files,
-        # then shuffle-join the two bounded sides; the only shuffled
-        # content belongs to candidate pairs.
+    content_v = content
+    if small:
         v_ids = anchored.select(F.col("v").alias("file_id")).distinct()
-        content_v = content.join(F.broadcast(v_ids), "file_id").select(
-            F.col("file_id").alias("v"), F.col("content").alias("content_v")
-        )
-        j1 = content.select(
-            F.col("file_id").alias("u"), F.col("content").alias("content_u")
-        ).join(F.broadcast(anchored), "u")
-        joined = content_v.join(j1, "v")
-    else:
-        j1 = content.select(
-            F.col("file_id").alias("u"), F.col("content").alias("content_u")
-        ).join(anchored, "u")
-        joined = content.select(
-            F.col("file_id").alias("v"), F.col("content").alias("content_v")
-        ).join(j1, "v")
-    return joined.mapInPandas(make_extend_verifier(cfg), schema=_EXTEND_SCHEMA)
-
-
-def _prune_slices(slices_col: str, pos_col: str):
-    """Keep only the slices containing THIS pair's anchors (JVM-side, no
-    Python): a file in many pairs carries the union of all its anchors'
-    windows; per pair only its own windows matter."""
-    return F.filter(
-        F.col(slices_col),
-        lambda s: F.exists(
-            F.col(pos_col),
-            lambda p: (p >= s["start"])
-            & (p < s["start"] + F.length(s["bytes"])),
-        ),
+        content_v = content.join(F.broadcast(v_ids), "file_id", "left_semi")
+        anchored = F.broadcast(anchored)
+    j1 = content.select(
+        F.col("file_id").alias("u"), F.col("content").alias("content_u")
+    ).join(anchored, "u")
+    joined = content_v.select(
+        F.col("file_id").alias("v"), F.col("content").alias("content_v")
+    ).join(j1, "v")
+    edges = joined.mapInPandas(
+        make_extend_verifier(cfg), schema=_EXTEND_SCHEMA
     )
-
-
-def _sliced_verify(
-    anchored: DataFrame,
-    content: DataFrame,
-    cfg: DedupConfig,
-    broadcast_pairs: bool,
-    margin: int,
-) -> DataFrame:
-    """Anchored extension over per-file anchor-window slices.
-
-    One content scan builds merged byte windows around every anchor of every
-    candidate file (both pair roles); the pair join then ships slices, so
-    exchanged bytes scale with anchors (O(pairs * margin)) instead of file
-    sizes — at 100 TB the difference between shuffling the corpus subset
-    and shuffling a few KB per candidate pair. Pairs whose extension hits a
-    window edge short of the file edge (true match >= ~2x min_substring_len)
-    are re-verified on full content, so results are bit-identical to the
-    full-content path."""
-    per_file = (
-        anchored.select(F.col("u").alias("file_id"), F.col("pos_u").alias("ps"))
-        .unionByName(
-            anchored.select(
-                F.col("v").alias("file_id"), F.col("pos_v").alias("ps")
-            )
-        )
-        .select("file_id", F.explode("ps").alias("p"))
-        .groupBy("file_id")
-        .agg(F.collect_set("p").alias("ps"))
-    )
-    slicer, slice_schema = make_slicer_udf(margin, cfg.substring_chunk)
-    if broadcast_pairs:
-        sl_in = content.join(F.broadcast(per_file), "file_id")
-    else:
-        sl_in = content.join(per_file, "file_id")
-    # one content scan; both pair roles consume the (much smaller) result
-    slices_df = sl_in.mapInPandas(slicer, schema=slice_schema).persist()
-
-    ju = slices_df.select(
-        F.col("file_id").alias("u"),
-        F.col("flen").alias("flen_u"),
-        F.col("slices").alias("slices_u"),
-    )
-    jv = slices_df.select(
-        F.col("file_id").alias("v"),
-        F.col("flen").alias("flen_v"),
-        F.col("slices").alias("slices_v"),
-    )
-    pair_side = F.broadcast(anchored) if broadcast_pairs else anchored
-    joined = (
-        ju.join(pair_side, "u")
-        # prune BEFORE the v-side shuffle so exchanged u-bytes are this
-        # pair's windows only; v slices shuffle per-file (pre-join), so
-        # pruning them after the join only trims the Arrow transfer
-        .withColumn("slices_u", _prune_slices("slices_u", "pos_u"))
-        .join(jv, "v")
-        .withColumn("slices_v", _prune_slices("slices_v", "pos_v"))
-    )
-    # cache(), not localCheckpoint: narrow (u, v, match_len, capped) rows;
-    # executor loss recomputes through recoverable lineage instead of
-    # killing the job (cluster localCheckpoint blocks die with their
-    # executor — same rationale as the ANN serving plan, ADVICE r3). The
-    # count materializes the cache in one pass AND sizes the escalation.
-    sliced = joined.mapInPandas(
-        make_sliced_verifier(cfg), schema=_SLICED_SCHEMA
-    ).persist()
-    n_esc = sliced.where("capped").count()
-    slices_df.unpersist()
-
-    final = sliced.where(
-        (~F.col("capped")) & (F.col("match_len") >= cfg.min_substring_len)
-    ).select("u", "v", "match_len")
-    if n_esc == 0:
-        # materialize the narrow edge rows from the cached verifier output,
-        # then release the cache — the old code returned a lazy filter over
-        # `sliced` and the persisted partitions leaked for the session
-        # lifetime (ADVICE r5; guide §5 "unpersist when done")
-        final = final.localCheckpoint(eager=True)
-        sliced.unpersist()
-        return final
-    esc = sliced.where("capped").select("u", "v")
-    # the escalated pair set obeys the same broadcast cap as every other
-    # pair join: long-verbatim-heavy corpora can cap MILLIONS of pairs,
-    # and a forced broadcast there would override AQE into a driver OOM
-    esc_bcast = n_esc <= PAIR_BROADCAST_CAP
-    esc_anchored = anchored.join(
-        F.broadcast(esc) if esc_bcast else esc, ["u", "v"]
-    )
-    esc_edges = _full_content_verify(
-        esc_anchored, content, cfg, broadcast_pairs=esc_bcast
-    )
-    out = final.unionByName(esc_edges).localCheckpoint(eager=True)
-    sliced.unpersist()
-    return out
+    return (edges, skipped) if return_skipped else edges

@@ -13,8 +13,11 @@ For every candidate pair we compute
 A pair passes if jaccard >= cfg.jaccard_s OR hamming <= cfg.hamming_t.
 
 Scale notes: the two joins below move only (file_id, shingle_hashes,
-simhash) for *candidate* files — never content. Edge keys are near-unique
-so the joins shuffle evenly; AQE skew-join covers pathological hubs.
+simhash) for *candidate* files — never content: each signature side is
+semi-joined to its candidate ids before any shuffle. The first pass
+carries no hint; the planner sizes a parquet-read candidate set from its
+files and broadcasts what is small. Edge keys are near-unique so shuffled
+joins spread evenly, and AQE skew-join covers pathological hubs.
 """
 
 from __future__ import annotations
@@ -99,32 +102,56 @@ def verify(
     candidates: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
-    small_candidates: bool = False,
 ) -> DataFrame:
     """Verified edges: (u, v, kind, jaccard, hamming) for passing pairs.
 
     Candidates of kind 'exact' (sha-equal) pass by construction with
     jaccard=1, hamming=0; only 'lsh' candidates face the exact re-rank.
 
-    small_candidates=True broadcasts ONLY edge-id sets (16 B/row — never
-    the shingle arrays): the edge list broadcast-joins against signatures
-    (signatures streamed, not shuffled), and the second join's signature
-    side is broadcast-semi-filtered down to candidate files first, so the
-    only shuffle moves candidate-file signatures. Shingle arrays are
-    ~KB/row, so broadcasting any joined intermediate (the round-1 shape)
-    could OOM executors at a few million edges; ids never can. With huge
-    edge sets leave False and let AQE pick strategy + skew splitting.
+    With cfg.star_rescue_cap > 0 the star-failure rescue pass follows.
+    Two star members that are near-dups of each other but not of the group
+    min both fail the first pass and their cluster would silently split;
+    rescue enumerates pairs among each center's failed members (bounded by
+    cfg.star_rescue_cap) and sends them through the same exact re-rank.
+
+    Cost shape: the first pass's scored rows are localCheckpointed ONCE
+    (narrow columns, candidate-count rows) and both the pass set and the
+    star-failure set are filters over them — no anti-join against the
+    verified output and no recompute of the scoring joins. The second
+    scoring pass runs only over the (small, capped) rescue pairs.
     """
     exact = candidates.where(F.col("kind") == "exact").select(
         "u", "v", "kind",
         F.lit(1.0).alias("jaccard"),
         F.lit(0).cast("long").alias("hamming"),
     )
-    scored = _score_lsh(candidates, signatures, cfg, small_candidates)
-    lsh_passed = scored.where(_pass_expr(cfg)).select(
-        "u", "v", "kind", "jaccard", "hamming"
-    )
-    return exact.unionByName(lsh_passed)
+    scored = _score_lsh(candidates, signatures, cfg)
+    rescue_on = cfg.star_rescue_cap > 0
+    if rescue_on:
+        # lazy: the rescue path's isEmpty() below is the first action and
+        # materializes the checkpoint in the same job (the eager form paid
+        # a separate materialization pass first)
+        scored = scored.localCheckpoint(eager=False)
+    passed = _passing(scored, cfg)
+    out = exact.unionByName(passed)
+    if not rescue_on:
+        return out
+    # rescue eligibility = ANY star-tier provenance (from_star survives the
+    # min-collapse that can downgrade kind to 'lsh' when the same pair was
+    # also fully enumerated in another small band group)
+    failed_star = scored.where(
+        (~_pass_expr(cfg)) & (F.col("from_star") == 1)
+    ).select("u", "v")
+    rescue = star_rescue_candidates(failed_star, cfg.star_rescue_cap)
+    if rescue.isEmpty():
+        return out
+    # the rescue set is small by construction (capped per center):
+    # broadcast it into a streamed signature scan
+    rescued = _passing(_score_lsh(F.broadcast(rescue), signatures, cfg), cfg)
+    # keep only genuinely new pairs (a rescue pair can already exist via
+    # another band group's full enumeration)
+    rescued = rescued.join(passed.select("u", "v"), ["u", "v"], "left_anti")
+    return out.unionByName(rescued)
 
 
 def _pass_expr(cfg: DedupConfig) -> F.Column:
@@ -136,11 +163,16 @@ def _pass_expr(cfg: DedupConfig) -> F.Column:
     )
 
 
+def _passing(scored: DataFrame, cfg: DedupConfig) -> DataFrame:
+    return scored.where(_pass_expr(cfg)).select(
+        "u", "v", "kind", "jaccard", "hamming"
+    )
+
+
 def _score_lsh(
     candidates: DataFrame,
     signatures: DataFrame,
     cfg: DedupConfig,
-    small_candidates: bool,
 ) -> DataFrame:
     """Exact re-rank scores for non-exact candidates:
     (u, v, kind, jaccard, hamming, min_shingles) — pass/fail NOT applied,
@@ -156,24 +188,20 @@ def _score_lsh(
             "u", "v", "kind",
             (F.col("kind") == "lsh_star").cast("int").alias("from_star"),
         )
-    cand = F.broadcast(candidates) if small_candidates else candidates
-    sig_u = sig.select(
-        F.col("file_id").alias("u"),
-        F.col("shingle_hashes").alias("sh_u"),
-        F.col("simhash").alias("sim_u"),
-        F.col("n_shingles").alias("ns_u"),
-    )
-    sig_v = sig.select(
-        F.col("file_id").alias("v"),
-        F.col("shingle_hashes").alias("sh_v"),
-        F.col("simhash").alias("sim_v"),
-        F.col("n_shingles").alias("ns_v"),
-    )
-    if small_candidates:
-        v_ids = candidates.select("v").distinct()
-        sig_v = sig_v.join(F.broadcast(v_ids), "v")
-    j1 = cand.join(sig_u, "u")
-    joined = j1.join(sig_v, "v")
+
+    def side(s: str) -> DataFrame:
+        # signatures of the files on one side of a pair, cut down by a
+        # semi-join before any shuffle; a broadcast hint on `candidates`
+        # reaches the id set through its project/aggregate
+        ids = candidates.select(F.col(s).alias("file_id")).distinct()
+        return sig.join(ids, "file_id", "left_semi").select(
+            F.col("file_id").alias(s),
+            F.col("shingle_hashes").alias(f"sh_{s}"),
+            F.col("simhash").alias(f"sim_{s}"),
+            F.col("n_shingles").alias(f"ns_{s}"),
+        )
+
+    joined = candidates.join(side("u"), "u").join(side("v"), "v")
     return joined.select(
         "u",
         "v",
@@ -183,59 +211,6 @@ def _score_lsh(
         hamming_col("sim_u", "sim_v", cfg.simhash_words).alias("hamming"),
         F.least("ns_u", "ns_v").alias("min_shingles"),
     )
-
-
-def verify_with_rescue(
-    candidates: DataFrame,
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    small_candidates: bool = False,
-) -> DataFrame:
-    """verify() plus the star-failure rescue pass.
-
-    Two star members that are near-dups of each other but not of the group
-    min both fail the first pass and their cluster would silently split;
-    rescue enumerates pairs among each center's failed members (bounded by
-    cfg.star_rescue_cap) and sends them through the same exact re-rank.
-
-    Cost shape: the first pass's scored rows are localCheckpointed ONCE
-    (narrow columns, candidate-count rows) and both the pass set and the
-    star-failure set are filters over them — no anti-join against the
-    verified output and no recompute of the scoring joins. The second
-    scoring pass runs only over the (small, capped) rescue pairs."""
-    exact = candidates.where(F.col("kind") == "exact").select(
-        "u", "v", "kind",
-        F.lit(1.0).alias("jaccard"),
-        F.lit(0).cast("long").alias("hamming"),
-    )
-    if cfg.star_rescue_cap <= 0:
-        return verify(candidates, signatures, cfg, small_candidates)
-    # lazy: the rescue path's isEmpty() below is the first action and
-    # materializes the checkpoint in the same job (the eager form paid a
-    # separate materialization pass first)
-    scored = _score_lsh(
-        candidates, signatures, cfg, small_candidates
-    ).localCheckpoint(eager=False)
-    passed = scored.where(_pass_expr(cfg)).select(
-        "u", "v", "kind", "jaccard", "hamming"
-    )
-    # rescue eligibility = ANY star-tier provenance (from_star survives the
-    # min-collapse that can downgrade kind to 'lsh' when the same pair was
-    # also fully enumerated in another small band group)
-    failed_star = scored.where(
-        (~_pass_expr(cfg)) & (F.col("from_star") == 1)
-    ).select("u", "v")
-    rescue = star_rescue_candidates(failed_star, cfg.star_rescue_cap)
-    if rescue.isEmpty():
-        return exact.unionByName(passed)
-    rescued = _score_lsh(rescue, signatures, cfg, small_candidates=True)
-    rescued = rescued.where(_pass_expr(cfg)).select(
-        "u", "v", "kind", "jaccard", "hamming"
-    )
-    # keep only genuinely new pairs (a rescue pair can already exist via
-    # another band group's full enumeration)
-    rescued = rescued.join(passed.select("u", "v"), ["u", "v"], "left_anti")
-    return exact.unionByName(passed).unionByName(rescued)
 
 
 def star_rescue_candidates(failed_star: DataFrame, cap: int) -> DataFrame:

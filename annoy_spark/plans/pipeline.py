@@ -18,7 +18,7 @@ from annoy_spark.operators.band import all_candidate_edges
 from annoy_spark.operators.cluster import connected_components
 from annoy_spark.operators.sign import file_id_col, sign
 from annoy_spark.operators.substring import substring_edges
-from annoy_spark.operators.verify import verify_with_rescue
+from annoy_spark.operators.verify import verify
 from annoy_spark.sources.checkpoint import CheckpointStore
 
 STAGES = ("signatures", "candidate_edges", "skipped_groups",
@@ -77,16 +77,9 @@ def run_pipeline(
             store, spark, "candidate_edges", build_candidates, metrics,
             resume,
         )
-        # broadcast the edge set through the verification joins while it's
-        # small (parquet count is metadata-only); at scale AQE handles
-        # strategy + skew
-        n_cand = metrics["candidate_edges"].get("n_rows") or cand.count()
         return _stage(
             store, spark, "verified_edges",
-            lambda: verify_with_rescue(
-                cand, signatures, cfg, small_candidates=n_cand < 2_000_000
-            ),
-            metrics, resume,
+            lambda: verify(cand, signatures, cfg), metrics, resume,
         )
 
     sub_edges = None
@@ -100,8 +93,8 @@ def run_pipeline(
             )
             # materialize the rep-content relation ONCE (lazy; the fp-UDF
             # pass triggers it): the substring operator consumes content in
-            # up to four places (fingerprint scan, adaptive-margin probe,
-            # both verify sides) and each reference re-ran this scan+join.
+            # three places (fingerprint scan, both verify sides) and each
+            # reference re-ran this scan+join.
             # Block loss just fails the stage, which the per-stage
             # checkpoint protocol re-runs from `signatures`.
             corpus_reps = (

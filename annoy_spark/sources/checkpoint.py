@@ -18,6 +18,7 @@ used when a configured catalog is available).
 from __future__ import annotations
 
 import json
+import os
 import time
 from pathlib import Path
 
@@ -58,20 +59,8 @@ class CheckpointStore:
                 )
 
     def write(self, stage: str, df: DataFrame, **extra) -> None:
-        d = self._dir(stage)
-        df.write.mode("overwrite").parquet(str(d))
-        (d / _META).write_text(
-            json.dumps(
-                {
-                    "stage": stage,
-                    "config_hash": self.cfg.config_hash(),
-                    "config": json.loads(self.cfg.to_json()),
-                    "written_at": time.time(),
-                    **extra,
-                },
-                sort_keys=True,
-            )
-        )
+        df.write.mode("overwrite").parquet(str(self._dir(stage)))
+        self.restamp(stage, **extra)
 
     def append(self, stage: str, df: DataFrame, **extra) -> None:
         """Append rows to an existing stage (incremental index growth —
@@ -87,19 +76,33 @@ class CheckpointStore:
     def restamp(self, stage: str, **extra) -> None:
         """Rewrite a stage's meta under the current config hash without
         touching its data files (used when data files are PUBLISHED into
-        the stage dir by rename — the staged-append commit path)."""
-        (self._dir(stage) / _META).write_text(
-            json.dumps(
-                {
-                    "stage": stage,
-                    "config_hash": self.cfg.config_hash(),
-                    "config": json.loads(self.cfg.to_json()),
-                    "written_at": time.time(),
-                    **extra,
-                },
-                sort_keys=True,
-            )
-        )
+        the stage dir by rename — the staged-append commit path).
+
+        The meta goes to a temp file in the stage dir and is renamed into
+        place, so a crash mid-write leaves either the old meta or none —
+        never truncated JSON that would break ``exists()``."""
+        d = self._dir(stage)
+        tmp = d / f".{_META}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(
+                    {
+                        "stage": stage,
+                        "config_hash": self.cfg.config_hash(),
+                        "config": json.loads(self.cfg.to_json()),
+                        "written_at": time.time(),
+                        **extra,
+                    },
+                    f,
+                    sort_keys=True,
+                )
+                # durable before the rename: after an OS crash the rename
+                # must not survive without the bytes it points at
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, d / _META)
+        finally:
+            tmp.unlink(missing_ok=True)
 
     def publish_files(self, stage: str, staged_dir) -> None:
         """Move every DATA file from ``staged_dir`` into the live stage

@@ -20,6 +20,8 @@ first-writer-wins on content sha via dropDuplicates over the stream.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -101,9 +103,13 @@ def incremental_dedup_stream(
                 "file_id", "shingle_hashes", "simhash", "n_shingles"
             )
         )
+        # a micro-batch's pair set is bounded by the batch: broadcast it
+        # (ids only, never shingle arrays) so the signature snapshot is
+        # streamed and semi-filtered to candidate files, never shuffled
+        # whole — per-batch cost follows the batch, not the corpus
         edges = verify(
-            exact.unionByName(cand).unionByName(intra),
-            all_sigs, cfg, small_candidates=True,
+            F.broadcast(exact.unionByName(cand).unionByName(intra)),
+            all_sigs, dataclasses.replace(cfg, star_rescue_cap=0),
         )
         # idempotent per-batch sink: rerun of a failed batch overwrites
         edges.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")

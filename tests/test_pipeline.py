@@ -195,7 +195,7 @@ def test_verify_plan_is_udf_free(spark, corpus):
     source this guard retired)."""
     from annoy_spark.operators.band import all_candidate_edges
     from annoy_spark.operators.sign import sign
-    from annoy_spark.operators.verify import verify_with_rescue
+    from annoy_spark.operators.verify import verify
 
     # materialize signatures first: in the real pipeline verify reads a
     # checkpoint scan, so the SIGN stage's (legitimate) Arrow UDF must
@@ -203,7 +203,7 @@ def test_verify_plan_is_udf_free(spark, corpus):
     sigs = sign(corpus, CFG).localCheckpoint()
     cand, _ = all_candidate_edges(sigs, CFG)
     cand = cand.localCheckpoint()
-    verified = verify_with_rescue(cand, sigs, CFG, small_candidates=True)
+    verified = verify(cand, sigs, CFG)
     plan = verified._jdf.queryExecution().executedPlan().toString()
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
         assert node not in plan, f"{node} reappeared in the verify plan"

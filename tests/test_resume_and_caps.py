@@ -5,6 +5,7 @@ from __future__ import annotations
 import shutil
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from annoy_spark.config import DedupConfig
@@ -57,6 +58,51 @@ def test_invalidate_forces_recompute(spark, tmp_path):
     r2 = run_pipeline(spark, corpus, CFG, str(out), resume=True)
     assert r2.metrics["signatures"]["resumed"] is True
     assert r2.metrics["verified_edges"]["resumed"] is False
+    got = {r.file_id: r.cluster_id for r in r2.clusters.collect()}
+    assert got == want
+
+
+def test_torn_meta_write_leaves_no_meta_and_resume_recomputes(
+    spark, tmp_path, monkeypatch
+):
+    """A crash partway through the stage meta's JSON dump must leave no
+    meta file at all (never truncated JSON that exists() cannot parse),
+    and the next resume recomputes that stage with identical clusters."""
+    import json
+
+    from annoy_spark.sources import checkpoint
+
+    corpus, _ = generate_corpus(spark, 200, seed=11, partitions=4)
+    out = tmp_path / "ck"
+    r1 = run_pipeline(spark, corpus, CFG, str(out), resume=True)
+    want = {r.file_id: r.cluster_id for r in r1.clusters.collect()}
+    for stage in ("verified_edges", "clusters"):
+        shutil.rmtree(out / stage)
+
+    real_dump = json.dump
+
+    def torn_dump(obj, fp, **kw):
+        if isinstance(obj, dict) and obj.get("stage") == "verified_edges":
+            text = json.dumps(obj, **kw)
+            fp.write(text[: len(text) // 2])
+            fp.flush()
+            raise OSError("disk went away mid-write")
+        return real_dump(obj, fp, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="mid-write"):
+            run_pipeline(spark, corpus, CFG, str(out), resume=True)
+
+    stage_dir = out / "verified_edges"
+    assert (stage_dir / "_SUCCESS").exists(), "data files were written"
+    leftovers = [p.name for p in stage_dir.iterdir() if "META" in p.name]
+    assert leftovers == [], f"partial meta left behind: {leftovers}"
+
+    r2 = run_pipeline(spark, corpus, CFG, str(out), resume=True)
+    assert r2.metrics["candidate_edges"]["resumed"] is True
+    assert r2.metrics["verified_edges"]["resumed"] is False
+    assert r2.metrics["clusters"]["resumed"] is False
     got = {r.file_id: r.cluster_id for r in r2.clusters.collect()}
     assert got == want
 
@@ -127,7 +173,7 @@ def test_star_rescue_connects_split_members(spark):
     """Two star members that are near-dups of each other but NOT of the
     star center must be re-connected by the rescue pass (the silent
     cluster-split failure of pure star enumeration)."""
-    from annoy_spark.operators.verify import verify_with_rescue
+    from annoy_spark.operators.verify import verify
 
     text_ab = " ".join(f"shared token t{i % 23} body" for i in range(300))
     rows = [
@@ -155,7 +201,7 @@ def test_star_rescue_connects_split_members(spark):
         ],
         "u long, v long, kind string",
     )
-    out = verify_with_rescue(cand, sigs, cfg, small_candidates=True).collect()
+    out = verify(cand, sigs, cfg).collect()
     pairs = {(r.u, r.v): r.kind for r in out}
     ab = tuple(sorted((ids["a"], ids["b"])))
     assert ab in pairs, f"rescue must recover the a-b edge, got {pairs}"
@@ -172,7 +218,7 @@ def test_star_rescue_connects_split_members(spark):
         ],
         "u long, v long, kind string, from_star int",
     )
-    out2 = verify_with_rescue(cand2, sigs, cfg, small_candidates=True).collect()
+    out2 = verify(cand2, sigs, cfg).collect()
     pairs2 = {(r.u, r.v): r.kind for r in out2}
     assert ab in pairs2, (
         f"downgraded-kind star edge must stay rescue-eligible, got {pairs2}"
@@ -183,7 +229,5 @@ def test_star_rescue_connects_split_members(spark):
 
     # rescue disabled -> the edge is lost (documents the approximation)
     cfg_off = DedupConfig(enable_substring=False, star_rescue_cap=0)
-    out_off = verify_with_rescue(
-        cand, sign(corpus, cfg_off), cfg_off, small_candidates=True
-    ).collect()
+    out_off = verify(cand, sign(corpus, cfg_off), cfg_off).collect()
     assert ab not in {(r.u, r.v) for r in out_off}

@@ -4,11 +4,9 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from annoy_spark.config import DedupConfig
 from annoy_spark.operators.substring import (
-    adaptive_slice_margin,
     fingerprint_positions,
     rolling_gram_hashes,
     substring_edges,
@@ -97,8 +95,8 @@ def test_substring_edges_end_to_end(spark, sub_corpus):
 
 @pytest.fixture(scope="module")
 def long_corpus(spark):
-    """Matches both inside and beyond the default slice margin, so the
-    sliced verifier's capped-pair escalation path actually fires."""
+    """A match far longer than the extension's first scan windows, a
+    match just above the threshold, and a sub-threshold overlap."""
     rng = np.random.default_rng(23)
 
     def text(n):
@@ -115,34 +113,26 @@ def long_corpus(spark):
     return spark.createDataFrame(rows, "file_id long, content string")
 
 
-def test_sliced_equals_full_content(spark, long_corpus):
-    """The anchor-window sliced path (the default margin AND a margin far
-    below every true match, forcing escalation of every pair) is
-    bit-identical to whole-file extension."""
+def test_full_content_long_and_short_matches(spark, long_corpus):
+    """Whole-file extension reports the true maximal match length for
+    both a ~9 KB and a ~2.6 KB shared block, and drops the 900-byte
+    overlap below min_substring_len."""
     full = {(r.u, r.v, r.match_len)
-            for r in substring_edges(long_corpus, CFG, slice_margin=0).collect()}
+            for r in substring_edges(long_corpus, CFG).collect()}
     assert any(ml >= 8500 for (_, _, ml) in full), full
     assert any(CFG.min_substring_len <= ml < 4000 for (_, _, ml) in full), full
-    for margin in (2 * CFG.min_substring_len, 500):
-        sliced = {
-            (r.u, r.v, r.match_len)
-            for r in substring_edges(
-                long_corpus, CFG, slice_margin=margin
-            ).collect()
-        }
-        assert sliced == full, (margin, sliced ^ full)
+    assert not any({u, v} == {1, 5} for (u, v, _) in full), full
 
 
-def test_adaptive_slice_margin(spark, long_corpus):
-    """Small-file corpora take the full-content path (slicing's extra scan
-    is pure overhead when merged windows cover the whole file); corpora of
-    genuinely large files get the anchor-window margin."""
-    assert adaptive_slice_margin(long_corpus, CFG) == 0  # ~11 KB files
-    big = long_corpus.select(
-        "file_id",
-        F.concat_ws(" ", F.array_repeat("content", 8)).alias("content"),
-    )  # ~90 KB >> break-even (~32 KB)
-    assert adaptive_slice_margin(big, CFG) == 2 * CFG.min_substring_len
+def test_pair_join_paths_agree(spark, long_corpus, monkeypatch):
+    """Above PAIR_BROADCAST_CAP the pair join runs unhinted; it reports
+    the same edges as the broadcast join small pair sets take."""
+    from annoy_spark.operators import substring
+
+    hinted = {tuple(r) for r in substring_edges(long_corpus, CFG).collect()}
+    monkeypatch.setattr(substring, "PAIR_BROADCAST_CAP", -1)
+    plain = {tuple(r) for r in substring_edges(long_corpus, CFG).collect()}
+    assert hinted and plain == hinted, hinted ^ plain
 
 
 def test_substring_deterministic_across_partitioning(spark, sub_corpus):

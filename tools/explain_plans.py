@@ -25,14 +25,23 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def final_plan_of(df) -> str:
+    """Plan after one execution, so AQE's runtime join choices show."""
+    df.collect()
+    return plan_of(df)
+
+
 def main() -> None:
+    from dataclasses import replace
+
     from pyspark.sql import functions as F
 
     from annoy_spark.config import DedupConfig
     from annoy_spark.corpus import generate_corpus
     from annoy_spark.operators.band import all_candidate_edges
     from annoy_spark.operators.knn import knn_bruteforce
-    from annoy_spark.operators.sign import sign
+    from annoy_spark.operators.sign import file_id_col, sign
+    from annoy_spark.operators.substring import substring_edges
     from annoy_spark.operators.verify import verify
     from annoy_spark.session import get_spark
 
@@ -66,9 +75,18 @@ def main() -> None:
             plan_of(sign(corpus, cfg)),
         "CANDIDATE stage (posexplode -> map-side-combined min/count -> "
         "tiered joins)": plan_of(all_candidate_edges(sigs_p, cfg)[0]),
-        "VERIFY stage (id-only broadcast + semi-filtered second join; "
-        "shingle arrays never broadcast)":
-            plan_of(verify(cand_p, sigs_p, cfg, small_candidates=True)),
+        "VERIFY stage, executed (no join hints: the planner sizes the "
+        "parquet candidate set and broadcasts it; each signature side is "
+        "semi-joined to its candidate ids before any shuffle)":
+            final_plan_of(verify(
+                cand_p, sigs_p, replace(cfg, star_rescue_cap=0))),
+        "SUBSTRING pair join, executed (the counted anchored pair set is "
+        "broadcast into a streamed content scan; its broadcast v ids "
+        "semi-filter the v-side content, which the planner broadcasts "
+        "while it is small)":
+            final_plan_of(substring_edges(
+                corpus.select(file_id_col().alias("file_id"), "content"),
+                cfg)),
         "KNN brute force (broadcast queries, no shuffle of items)":
             plan_of(knn_bruteforce(emb, emb.limit(5), k=3)),
         "KNN LSH (capped/salted bucket self-join, exact re-rank)":

@@ -27,7 +27,7 @@ def main() -> None:
     from annoy_spark.operators.hamming_pairs import hamming_pairs
     from annoy_spark.operators.knn import knn_lsh
     from annoy_spark.operators.sign import sign
-    from annoy_spark.operators.verify import verify_with_rescue
+    from annoy_spark.operators.verify import verify
     from annoy_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -72,8 +72,7 @@ def main() -> None:
     cand, _skipped = all_candidate_edges(sigs_m, cfg)
     dump("pipeline_candidates", cand)
     cand_m = cand.localCheckpoint(eager=True)
-    dump("pipeline_verify",
-         verify_with_rescue(cand_m, sigs_m, cfg, small_candidates=True))
+    dump("pipeline_verify", verify(cand_m, sigs_m, cfg))
 
     from pyspark.sql import functions as F
     sim = sigs_m.select(
