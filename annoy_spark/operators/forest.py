@@ -42,17 +42,10 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from annoy_spark.operators.knn import (
-    _cap_buckets,
-    _dot,
-    _norm2,
-    _topk,
-    collect_training_sample,
-    with_unit_vectors,
-)
+from annoy_spark.operators.knn import collect_training_sample
 
 _TWO_MEANS_ITERS = 200  # annoylib.h:366 (iteration_steps)
 _IMBALANCE_RETRIES = 3  # annoylib.h:1387 (attempt loop)
@@ -481,127 +474,38 @@ def knn_forest(
     ('dot' builds ANGULAR trees over the MIPS-augmented space,
     annoylib.h:605-703, and re-ranks by -<q,n>), hamming builds
     axis-aligned bit-split trees (annoylib.h:758-792) over packed int64
-    signatures (spill_eps has no margin analog there — on the by-vector
-    path it is read as the number of bottom split LEVELS probed on both
-    sides, the bit-tree search_k analog).
+    signatures (a bit margin has no eps scale, so there spill_eps is read
+    as the number of bottom split LEVELS probed on both sides — the
+    bit-tree search_k analog).
 
     Same output contract as knn_lsh/knn_ivf; candidate generation is the
     (tree, leaf) equi-join — shuffle-friendly, reducer-bounded by
     _cap_buckets salting; exact re-rank in the true metric decides
-    (annoylib.h:1492-1494).
+    (annoylib.h:1492-1494). All-items spill_eps widens every row's leaf
+    set (both sides of the join); for 'dot' the items keep their single
+    augmented leaf per tree and the query side spills.
 
     queries=DataFrame switches to by-VECTOR mode (get_nns_by_vector,
     annoylib.h:1234-1236): query rows are routed down the SAME trees
     (spill_eps applies to the query side only — the search_k analog) and
-    joined against the item leaf assignments. For the build-once /
-    save / load / query-forever lifecycle use
+    joined against the item leaf assignments. Both modes run on the
+    shared AnnModel router (sources.ann_index.knn_all_items /
+    knn_by_vector_approx); for the build-once / save / load /
+    query-forever lifecycle use
     annoy_spark.sources.ann_index.build_index / load_index."""
-    if metric not in ("angular", "dot", "euclidean", "manhattan", "hamming"):
-        raise ValueError(
-            "knn_forest supports angular/dot/euclidean/manhattan/hamming, "
-            f"got {metric}"
-        )
-    if queries is not None or metric == "dot":
-        from annoy_spark.sources.ann_index import (
-            AnnIndexConfig,
-            knn_by_vector_approx,
-        )
+    from annoy_spark.sources.ann_index import (
+        AnnIndexConfig,
+        knn_all_items,
+        knn_by_vector_approx,
+    )
 
-        cfg = AnnIndexConfig(
-            kind="forest", metric=metric, seed=seed, n_trees=n_trees,
-            leaf_cap=leaf_cap, bucket_cap=bucket_cap, max_sample=max_sample,
-            sample_fraction=sample_fraction,
-        )
-        if queries is not None:
-            return knn_by_vector_approx(
-                items, queries, cfg, k, id_col, vec_col, spill_eps=spill_eps
-            )
-        # all-items dot is intrinsically ASYMMETRIC (items route through
-        # the sqrt(M^2-|x|^2) augmentation, queries through the
-        # 0-augmentation — annoylib.h:605-703), so the by-vector plan with
-        # items on both sides is the one-pass expression; drop self and
-        # re-densify ranks (same contract as the other all-items paths)
-        res = knn_by_vector_approx(
-            items, items, cfg, k + 1, id_col, vec_col, spill_eps=spill_eps
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("distance").asc(), F.col("nid")
-        )
-        return (
-            res.where(F.col("qid") != F.col("nid"))
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k)
-        )
-    trees = build_forest(
-        items, n_trees=n_trees, leaf_cap=leaf_cap, seed=seed, metric=metric,
-        vec_col=vec_col, id_col=id_col, max_sample=max_sample,
+    cfg = AnnIndexConfig(
+        kind="forest", metric=metric, seed=seed, n_trees=n_trees,
+        leaf_cap=leaf_cap, bucket_cap=bucket_cap, max_sample=max_sample,
         sample_fraction=sample_fraction,
     )
-    if metric == "hamming":
-        leaves = hamming_forest_leaf_udf(trees)
-        raw = F.col(vec_col).cast("array<long>")
-        base = items.select(
-            F.col(id_col).alias("id"), raw.alias("v"),
-            leaves(raw).alias("keys"),
+    if queries is not None:
+        return knn_by_vector_approx(
+            items, queries, cfg, k, id_col, vec_col, spill_eps=spill_eps
         )
-    elif metric == "angular":
-        leaves = forest_leaf_udf(trees, spill_eps=spill_eps)
-        base = with_unit_vectors(items, vec_col).select(
-            F.col(id_col).alias("id"),
-            F.col("unit_vec").alias("v"),
-            leaves(F.col("unit_vec")).alias("keys"),
-        )
-    else:
-        leaves = forest_leaf_udf(trees, spill_eps=spill_eps)
-        raw = F.col(vec_col).cast("array<double>")
-        base = items.select(
-            F.col(id_col).alias("id"), raw.alias("v"),
-            leaves(raw).alias("keys"),
-        )
-    # ids only through the (tree, leaf) self-join; dedup the narrow
-    # (qid, nid) pairs BEFORE re-attaching vectors, so the interpreted
-    # higher-order distance runs once per distinct pair instead of once
-    # per co-leaf occurrence (~n_trees x with spill; guide §2.3/§8 —
-    # same shape as knn_lsh and the stored-index serving path)
-    buckets = _cap_buckets(
-        base.select("id", F.explode("keys").alias("bucket")), bucket_cap
-    )
-    vecs = base.select("id", "v")
-    pairs = (
-        buckets.alias("a")
-        .join(buckets.alias("b"), ["bucket", "salt"])
-        .where(F.col("a.id") != F.col("b.id"))
-        .select(F.col("a.id").alias("qid"), F.col("b.id").alias("nid"))
-        .dropDuplicates(["qid", "nid"])
-    )
-    cand = (
-        pairs.join(
-            vecs.select(F.col("id").alias("qid"), F.col("v").alias("qv")),
-            "qid",
-        )
-        .join(
-            vecs.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
-            "nid",
-        )
-    )
-    if metric == "angular":
-        d = F.sqrt(F.greatest(F.lit(0.0), F.lit(2.0) - 2.0 * _dot("qv", "nv")))
-    elif metric == "euclidean":
-        diff = F.zip_with("qv", "nv", lambda x, y: x - y)
-        d = F.sqrt(F.greatest(F.lit(0.0), _norm2(diff)))
-    elif metric == "manhattan":
-        d = F.aggregate(
-            F.zip_with("qv", "nv", lambda x, y: F.abs(x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    else:  # hamming popcount (annoylib.h:736-743), JVM-side
-        d = F.aggregate(
-            F.zip_with(
-                "qv", "nv",
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-    return _topk(cand, d, k, dedup=False)  # pairs deduped above
+    return knn_all_items(items, cfg, k, id_col, vec_col, spill_eps=spill_eps)

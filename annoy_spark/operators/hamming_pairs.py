@@ -25,7 +25,7 @@ sha-collapsed representatives if family expansion is unwanted).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def _block_value(sig_col: str, lo: int, width: int) -> Column:
@@ -79,18 +79,18 @@ def hamming_pairs(
     # distinct-signature collapse keyed on the packed word ARRAY itself
     # (array<long> equality is exact) — the old string skey concat shuffled
     # ~40-byte keys everywhere and paid a per-row string build (guide §2.3:
-    # narrower types). Downstream pair keys are the int64 rep ids.
+    # narrower types). Distinct signatures pair on their int64 rep ids.
     keyed = signatures.select(
         F.col(id_col).alias("id"), F.col(sig_col).alias("sig")
+    ).localCheckpoint(eager=False)  # 5 consumers; compute the input once
+    # one representative (min id) per DISTINCT signature (exact-dup
+    # collapse). groupBy, not a window: the min is partially aggregated
+    # map-side, so a mega-family reaches its reducer as one row per map
+    # task instead of being sorted whole in one task
+    reps = (
+        keyed.groupBy("sig").agg(F.min("id").alias("rid"))
+        .localCheckpoint(eager=False)
     )
-    # one representative per DISTINCT signature (exact-dup collapse); the
-    # member id -> rep id mapping rides the same window pass, so members
-    # join back on an 8-byte rid instead of the signature value
-    wsig = Window.partitionBy("sig")
-    with_rep = keyed.select(
-        "id", "sig", F.min("id").over(wsig).alias("rid")
-    ).localCheckpoint(eager=False)
-    reps = with_rep.where(F.col("id") == F.col("rid")).select("rid", "sig")
 
     rep_blocks = reps.select(
         "rid", "sig",
@@ -107,18 +107,19 @@ def hamming_pairs(
         .dropDuplicates(["ra", "rb"])
         .withColumn("hamming", _popcount_xor("sa", "sb"))
         .where(F.col("hamming") <= t)
-        .select("ra", "rb", "hamming")
+        .select("sa", "sb", "hamming")
     )
 
-    members = with_rep.select("id", "rid")
+    # members join back on the signature itself: no id -> rep mapping
+    # relation to build, and the planner sizes `keyed` from its input
     cross = (
         sig_pairs.join(
-            members.select(F.col("id").alias("ia"), F.col("rid").alias("ra")),
-            "ra",
+            keyed.select(F.col("id").alias("ia"), F.col("sig").alias("sa")),
+            "sa",
         )
         .join(
-            members.select(F.col("id").alias("ib"), F.col("rid").alias("rb")),
-            "rb",
+            keyed.select(F.col("id").alias("ib"), F.col("sig").alias("sb")),
+            "sb",
         )
         .select(
             F.least("ia", "ib").alias("u"),
@@ -127,8 +128,8 @@ def hamming_pairs(
         )
     )
     within = (
-        members.alias("a")
-        .join(members.alias("b"), "rid")
+        keyed.alias("a")
+        .join(keyed.alias("b"), "sig")
         .where(F.col("a.id") < F.col("b.id"))
         .select(
             F.col("a.id").alias("u"), F.col("b.id").alias("v"),

@@ -31,16 +31,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from annoy_spark.operators.knn import (
-    _dot,
-    _norm2,
-    _topk,
-    collect_training_sample,
-    with_unit_vectors,
-)
+from annoy_spark.operators.knn import collect_training_sample
 
 
 def train_centroids(
@@ -128,9 +122,7 @@ def _train_hamming_centroids(
     the coordinate mean). Bit order inside each word only needs to be
     CONSISTENT between unpack and repack — popcount and majorities are
     order-invariant."""
-    from annoy_spark.operators.knn import collect_training_sample as _cts
-
-    x = _cts(
+    x = collect_training_sample(
         items, id_col, vec_col, seed, max_train, sample_fraction,
         as_longs=True,
     )
@@ -213,118 +205,21 @@ def knn_ivf(
 
     queries=DataFrame switches to by-VECTOR mode (get_nns_by_vector,
     annoylib.h:1234-1236): query rows probe their nprobe nearest cells of
-    the SAME trained quantizer and join the item cell assignments. For the
-    persisted build/save/load lifecycle use
+    the SAME trained quantizer and join the item cell assignments. Both
+    modes run on the shared AnnModel router (sources.ann_index.
+    knn_all_items / knn_by_vector_approx); for the persisted
+    build/save/load lifecycle use
     annoy_spark.sources.ann_index.build_index / load_index."""
-    if metric not in ("angular", "dot", "euclidean", "manhattan", "hamming"):
-        raise ValueError(
-            f"knn_ivf supports angular/dot/euclidean/manhattan/hamming, "
-            f"got {metric}"
-        )
-    if queries is not None or metric == "dot":
-        from annoy_spark.sources.ann_index import (
-            AnnIndexConfig,
-            knn_by_vector_approx,
-        )
+    from annoy_spark.sources.ann_index import (
+        AnnIndexConfig,
+        knn_all_items,
+        knn_by_vector_approx,
+    )
 
-        cfg = AnnIndexConfig(
-            kind="ivf", metric=metric, seed=seed, n_centroids=n_centroids,
-            nprobe=nprobe, bucket_cap=cell_cap,
-            sample_fraction=sample_fraction,
-        )
-        if queries is not None:
-            return knn_by_vector_approx(
-                items, queries, cfg, k, id_col, vec_col
-            )
-        # all-items dot: asymmetric MIPS routing (annoylib.h:605-703) —
-        # express as by-vector with items on both sides, then drop self
-        res = knn_by_vector_approx(items, items, cfg, k + 1, id_col, vec_col)
-        w = Window.partitionBy("qid").orderBy(
-            F.col("distance").asc(), F.col("nid")
-        )
-        return (
-            res.where(F.col("qid") != F.col("nid"))
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k)
-        )
-    cent = train_centroids(
-        items, n_centroids, seed, vec_col, metric,
-        sample_fraction=sample_fraction, id_col=id_col,
+    cfg = AnnIndexConfig(
+        kind="ivf", metric=metric, seed=seed, n_centroids=n_centroids,
+        nprobe=nprobe, bucket_cap=cell_cap, sample_fraction=sample_fraction,
     )
-    probes = _probe_udf(cent, nprobe, metric)
-
-    if metric == "hamming":
-        raw_l = F.col(vec_col).cast("array<long>")
-        base = items.select(
-            F.col(id_col).alias("id"),
-            raw_l.alias("raw"),
-            probes(raw_l).alias("cells"),
-        )
-        vec = "raw"
-    else:
-        base = with_unit_vectors(items, vec_col).select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("raw"),
-            F.col("unit_vec"),
-            probes(F.col(vec_col).cast("array<double>")).alias("cells"),
-        )
-        vec = "unit_vec" if metric == "angular" else "raw"
-    # both the assignment side and the probe side read `base`; without a
-    # materialization the items chain AND the probe pandas UDF ran twice
-    base = base.localCheckpoint(eager=False)
-    assign = base.select(
-        F.col("id").alias("nid"), F.col(vec).alias("nv"),
-        F.element_at("cells", 1).alias("cid"),
-    )
-    # hot-cell accounting + replicated skew join: items hash into one of m
-    # sub-cells, probes replicate across all m (no pair lost)
-    sizes = assign.groupBy("cid").agg(F.count(F.lit(1)).alias("csize"))
-    sizes = sizes.select(
-        "cid",
-        F.greatest(F.lit(1), F.ceil(F.col("csize") / cell_cap))
-        .cast("long").alias("m"),
-    )
-    assign = assign.join(F.broadcast(sizes), "cid").select(
-        "cid", "nid", "nv",
-        F.pmod(F.xxhash64("nid", "cid"), F.col("m")).alias("salt"),
-    )
-    probe_rows = (
-        base.select(
-            F.col("id").alias("qid"), F.col(vec).alias("qv"),
-            F.explode("cells").alias("cid"),
-        )
-        .join(F.broadcast(sizes), "cid")
-        .select(
-            "cid", "qid", "qv",
-            F.explode(F.sequence(F.lit(0), F.col("m") - 1)).alias("salt"),
-        )
-    )
-    cand = (
-        probe_rows.join(assign, ["cid", "salt"])
-        .where(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", "qv", "nv")
-    )
-    if metric == "angular":
-        d = F.sqrt(F.greatest(F.lit(0.0), F.lit(2.0) - 2.0 * _dot("qv", "nv")))
-    elif metric == "euclidean":
-        diff = F.zip_with("qv", "nv", lambda x, y: x - y)
-        d = F.sqrt(F.greatest(F.lit(0.0), _norm2(diff)))
-    elif metric == "manhattan":
-        d = F.aggregate(
-            F.zip_with("qv", "nv", lambda x, y: F.abs(x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    else:  # hamming popcount (annoylib.h:736-743), JVM-side
-        d = F.aggregate(
-            F.zip_with(
-                "qv", "nv",
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-    # (qid, nid) is already unique here: an item lives in exactly one
-    # (cell, salt) and each probe covers every salt of a cell once, so the
-    # legacy dropDuplicates was a pure no-op exchange
-    return _topk(cand, d, k, dedup=False)
+    if queries is not None:
+        return knn_by_vector_approx(items, queries, cfg, k, id_col, vec_col)
+    return knn_all_items(items, cfg, k, id_col, vec_col)

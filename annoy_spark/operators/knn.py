@@ -98,12 +98,15 @@ def collect_training_sample(
         ) from e
 
 
+def _unit(raw: F.Column) -> F.Column:
+    n = F.sqrt(_norm2(raw))
+    return F.when(n > 0, F.transform(raw, lambda x: x / n)).otherwise(raw)
+
+
 def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Pre-normalize once (annoy Angular caches node norms, annoylib.h:483)."""
     v = F.col(vec_col).cast("array<double>")
-    n = F.sqrt(_norm2(v))
-    unit = F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
-    return emb.withColumn("unit_vec", unit)
+    return emb.withColumn("unit_vec", _unit(v))
 
 
 def knn_bruteforce(
@@ -167,23 +170,6 @@ def knn_bruteforce(
         else:
             raise ValueError(f"unknown metric {metric}")
     scored = pairs.select("qid", "nid", d.alias("distance"))
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _topk(cand: DataFrame, d: F.Column, k: int, dedup: bool = True) -> DataFrame:
-    """Top-k tail shared by the approximate paths. dedup=True keeps the
-    legacy score-then-dedup behavior for callers whose candidate rows can
-    repeat; pass dedup=False when (qid, nid) is already distinct (IVF's
-    replicated skew join matches each pair exactly once; knn_lsh/forest
-    now dedup the narrow id pairs BEFORE attaching vectors) — the
-    dropDuplicates exchange is then a pure no-op shuffle."""
-    scored = cand.select("qid", "nid", d.alias("distance"))
-    if dedup:
-        scored = scored.dropDuplicates(["qid", "nid"])
     w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("nid"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -361,7 +347,6 @@ def knn_lsh(
     bucket_cap: int = 2000,
     bucket_width: float = 2.0,
     queries: DataFrame | None = None,
-    dedup_first: bool | None = None,
 ) -> DataFrame:
     """All-items approximate top-k: (qid, nid, rank, distance). Candidates =
     pairs sharing >= 1 hyperplane (sub-)bucket; exact re-rank on candidates
@@ -370,8 +355,10 @@ def knn_lsh(
     queries=DataFrame switches to by-VECTOR mode (get_nns_by_vector,
     annoylib.h:1234-1236): query rows are signed with the SAME planes
     (dot: queries get the 0-augmentation, items the sqrt(M²-|x|²) one) and
-    joined against the item buckets. For the persisted build/save/load
-    lifecycle use annoy_spark.sources.ann_index.build_index / load_index.
+    joined against the item buckets. Both modes run on the shared
+    AnnModel router (sources.ann_index.knn_all_items /
+    knn_by_vector_approx); for the persisted build/save/load lifecycle use
+    annoy_spark.sources.ann_index.build_index / load_index.
 
     metric="angular": distance = sqrt(2-2cos) over unit vectors.
     metric="dot": MIPS via the Bachrach reduction (annoylib.h:605-703) —
@@ -388,166 +375,16 @@ def knn_lsh(
     JVM-side (shift/mask, whole-stage codegen, no UDF), exact popcount
     re-rank.
     """
-    if queries is not None:
-        from annoy_spark.sources.ann_index import (
-            AnnIndexConfig,
-            knn_by_vector_approx,
-        )
-
-        cfg = AnnIndexConfig(
-            kind="lsh", metric=metric, seed=seed, n_tables=n_tables,
-            n_bits=n_bits, bucket_width=bucket_width, bucket_cap=bucket_cap,
-        )
-        return knn_by_vector_approx(items, queries, cfg, k, id_col, vec_col)
-
-    dim = len(items.select(vec_col).first()[0])
-
-    # parallelism floor (guide §6.1): a small single-row-group parquet scan
-    # yields ONE partition, serializing the key UDF + bucket explode that
-    # ride the scan. Repartition only when the input is under-split; at
-    # scale the scan already has >= defaultParallelism splits and this is
-    # a no-op (no constant tuned to local mode).
-    target = items.sparkSession.sparkContext.defaultParallelism
-    if items.rdd.getNumPartitions() < target:
-        items = items.repartition(target, id_col)
-
-    # Candidate assembly (round 6, guide §2.3/§8) with ADAPTIVE dedup
-    # placement. Coarse buckets (expected items per bucket >> k): every
-    # pair is proposed by ~n_tables tables, so the 16-byte (qid, nid)
-    # pairs are deduplicated FIRST and vectors re-attached afterwards —
-    # the interpreted higher-order distance then runs once per distinct
-    # pair (cut the 4-bit p-stable recall gate 14.3 s -> ~3 s), and at
-    # scale the dedup exchange carries ids, not vectors (the stored-index
-    # serving shape). Fine buckets (duplication ~1): vectors ride the
-    # bucket rows and the narrow (qid, nid, distance) rows dedup AFTER
-    # scoring (round-5 shape) — early dedup + re-attach joins are pure
-    # overhead there. The switch derives from the data (count vs key
-    # space), never from a local-mode constant; the count is one cheap
-    # probe next to the existing dim probe.
-    if dedup_first is None:
-        n_items = items.count()
-        dedup_first = n_items > (1 << n_bits) * 2 * k
-
-    if metric == "dot":
-        raw = F.col(vec_col).cast("array<double>")
-        # one scalar aggregate (metadata-scale collect, like the dim probe)
-        max_n2 = items.select(
-            F.max(_norm2(raw)).alias("m")
-        ).first()["m"] or 0.0
-        aug_item = F.concat(
-            raw,
-            F.array(F.sqrt(F.greatest(F.lit(0.0), F.lit(max_n2) - _norm2(raw)))),
-        )
-        aug_query = F.concat(raw, F.array(F.lit(0.0)))
-        keys = hyperplane_keys_udf(dim + 1, n_tables, n_bits, seed)
-        base = items.select(
-            F.col(id_col).alias("id"),
-            raw.alias("v"),
-            keys(aug_item).alias("ikeys"),
-            keys(aug_query).alias("qkeys"),
-        )
-        qkc, ikc = "qkeys", "ikeys"
-        d = -_dot("qv", "nv")
-    elif metric == "angular":
-        keys = hyperplane_keys_udf(dim, n_tables, n_bits, seed)
-        base = with_unit_vectors(items, vec_col).select(
-            F.col(id_col).alias("id"),
-            F.col("unit_vec").alias("v"),
-            keys(F.col(vec_col).cast("array<double>")).alias("keys"),
-        )
-        qkc = ikc = "keys"
-        d = F.sqrt(F.greatest(F.lit(0.0), F.lit(2.0) - 2.0 * _dot("qv", "nv")))
-    elif metric in ("euclidean", "manhattan"):
-        keys = pstable_keys_udf(
-            dim, n_tables, n_bits, seed, bucket_width,
-            p=2 if metric == "euclidean" else 1,
-        )
-        raw = F.col(vec_col).cast("array<double>")
-        base = items.select(
-            F.col(id_col).alias("id"), raw.alias("v"), keys(raw).alias("keys")
-        )
-        qkc = ikc = "keys"
-        if metric == "euclidean":
-            diff = F.zip_with("qv", "nv", lambda x, y: x - y)
-            d = F.sqrt(F.greatest(F.lit(0.0), _norm2(diff)))
-        else:
-            d = F.aggregate(
-                F.zip_with("qv", "nv", lambda x, y: F.abs(x - y)),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x,
-            )
-    elif metric == "hamming":
-        # dim here = number of 64-bit words; sample bit positions per table
-        raw = F.col(vec_col)
-        base = items.select(
-            F.col(id_col).alias("id"), raw.alias("v"),
-            hamming_keys_col(raw, dim, n_tables, n_bits, seed).alias("keys"),
-        )
-        qkc = ikc = "keys"
-        d = F.aggregate(
-            F.zip_with(
-                "qv", "nv",
-                lambda x, y: F.bit_count(x.bitwiseXOR(y)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).cast("double")
-    else:
-        raise ValueError(
-            "knn_lsh supports metric in ('angular','dot','euclidean',"
-            f"'manhattan','hamming'), got {metric}"
-        )
-
-    if dedup_first:
-        # ids only through the bucket self-join; unused columns (v, the
-        # key arrays) are pruned out of the exploded relations
-        qbuckets = _cap_buckets(
-            base.select("id", F.explode(qkc).alias("bucket")), bucket_cap
-        )
-        ibuckets = qbuckets if ikc == qkc else _cap_buckets(
-            base.select("id", F.explode(ikc).alias("bucket")), bucket_cap
-        )
-        vecs = base.select("id", "v")
-        pairs = (
-            qbuckets.alias("a")
-            .join(ibuckets.alias("b"), ["bucket", "salt"])
-            .where(F.col("a.id") != F.col("b.id"))
-            .select(F.col("a.id").alias("qid"), F.col("b.id").alias("nid"))
-            .dropDuplicates(["qid", "nid"])
-        )
-        scored = (
-            pairs.join(
-                vecs.select(F.col("id").alias("qid"), F.col("v").alias("qv")),
-                "qid",
-            )
-            .join(
-                vecs.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
-                "nid",
-            )
-            .select("qid", "nid", d.alias("distance"))
-        )
-    else:
-        qbuckets = _cap_buckets(
-            base.select("id", "v", F.explode(qkc).alias("bucket")), bucket_cap
-        )
-        ibuckets = qbuckets if ikc == qkc else _cap_buckets(
-            base.select("id", "v", F.explode(ikc).alias("bucket")), bucket_cap
-        )
-        scored = (
-            qbuckets.alias("a")
-            .join(ibuckets.alias("b"), ["bucket", "salt"])
-            .where(F.col("a.id") != F.col("b.id"))
-            .select(
-                F.col("a.id").alias("qid"),
-                F.col("b.id").alias("nid"),
-                F.col("a.v").alias("qv"),
-                F.col("b.v").alias("nv"),
-            )
-            .select("qid", "nid", d.alias("distance"))
-            .dropDuplicates(["qid", "nid"])
-        )
-    w = Window.partitionBy("qid").orderBy(F.col("distance").asc(), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+    from annoy_spark.sources.ann_index import (
+        AnnIndexConfig,
+        knn_all_items,
+        knn_by_vector_approx,
     )
+
+    cfg = AnnIndexConfig(
+        kind="lsh", metric=metric, seed=seed, n_tables=n_tables,
+        n_bits=n_bits, bucket_width=bucket_width, bucket_cap=bucket_cap,
+    )
+    if queries is not None:
+        return knn_by_vector_approx(items, queries, cfg, k, id_col, vec_col)
+    return knn_all_items(items, cfg, k, id_col, vec_col)

@@ -52,6 +52,11 @@ relations are only ever scanned and equi-joined; a LARGE batch (e.g.
 re-indexing the corpus against itself) degrades to plain shuffle
 equi-joins instead of a broadcast OOM. The candidate relation itself is
 never hint-broadcast — AQE picks the strategy from its measured size.
+
+The ephemeral operators run on the same router, stored-vector projection
+and metric without persisting anything: ``knn_by_vector_approx`` (the
+``queries=`` mode of knn_forest/knn_ivf/knn_lsh) and ``knn_all_items``
+(their all-items mode, get_nns_by_item for every item).
 """
 
 from __future__ import annotations
@@ -73,8 +78,10 @@ from annoy_spark.operators.forest import (
 )
 from annoy_spark.operators.ivf import _probe_udf, train_centroids
 from annoy_spark.operators.knn import (
+    _cap_buckets,
     _dot,
     _norm2,
+    _unit,
     hamming_keys_col,
     hyperplane_keys_udf,
     pstable_keys_udf,
@@ -141,11 +148,6 @@ class AnnIndexConfig:
         return cls(**json.loads(s))
 
 
-def _unit(raw: F.Column) -> F.Column:
-    n = F.sqrt(_norm2(raw))
-    return F.when(n > 0, F.transform(raw, lambda x: x / n)).otherwise(raw)
-
-
 def _mips_aug(raw: F.Column, max_n2: float, query_side: bool) -> F.Column:
     """Bachrach MIPS reduction (annoylib.h:605-703 DotProduct preprocess):
     items gain an extra coordinate sqrt(M^2 - |x|^2) (M = max build norm,
@@ -200,6 +202,19 @@ def _distance(cfg: AnnIndexConfig, qv: str, nv: str) -> F.Column:
     ).cast("double")
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(qid, nid, distance) -> each query's k nearest with rank 1..k,
+    ties broken by nid — the rank window every approximate path ends
+    with."""
+    w = Window.partitionBy("qid").orderBy(
+        F.col("distance").asc(), F.col("nid")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+    )
+
+
 class AnnModel:
     """In-memory router model: the trained arrays + config. Everything in
     ``arrays`` round-trips through one npz file; LSH planes are NOT stored
@@ -223,20 +238,22 @@ class AnnModel:
     ) -> "AnnModel":
         arrays: dict[str, np.ndarray] = {}
         router_metric = cfg.metric
-        if cfg.metric == "dot" and cfg.kind in ("forest", "ivf"):
-            # DotProduct trees (annoylib.h:605-703): the router is an
-            # ANGULAR structure over the (dim+1)-augmented space; the
-            # data-dependent scale M^2 is frozen into the model exactly
-            # like annoy's preprocess stamps dot_factor into every node
+        if cfg.metric == "dot":
+            # the data-dependent MIPS scale M^2 is frozen into the model
+            # exactly like annoy's preprocess stamps dot_factor into every
+            # node (annoylib.h:605-703)
             raw = F.col(vec_col).cast("array<double>")
             max_n2 = items.select(F.max(_norm2(raw)).alias("m")).first()["m"]
             max_n2 = float(max_n2 or 0.0)
             arrays["max_n2"] = np.asarray([max_n2], dtype=np.float64)
-            items = items.withColumn(
-                "__aug_vec", _mips_aug(raw, max_n2, query_side=False)
-            )
-            vec_col = "__aug_vec"
-            router_metric = "angular"
+            if cfg.kind in ("forest", "ivf"):
+                # DotProduct trees: the router is an ANGULAR structure
+                # over the (dim+1)-augmented space
+                items = items.withColumn(
+                    "__aug_vec", _mips_aug(raw, max_n2, query_side=False)
+                )
+                vec_col = "__aug_vec"
+                router_metric = "angular"
         if cfg.kind == "forest":
             trees = build_forest(
                 items, n_trees=cfg.n_trees, leaf_cap=cfg.leaf_cap,
@@ -273,10 +290,6 @@ class AnnModel:
                 max_train=cfg.max_sample,
                 sample_fraction=cfg.sample_fraction, id_col=id_col,
             )
-        elif cfg.metric == "dot":
-            raw = F.col(vec_col).cast("array<double>")
-            max_n2 = items.select(F.max(_norm2(raw)).alias("m")).first()["m"]
-            arrays["max_n2"] = np.asarray([max_n2 or 0.0], dtype=np.float64)
         return cls(cfg, arrays)
 
     # --- routing ---------------------------------------------------------
@@ -362,16 +375,9 @@ class AnnModel:
         if cfg.metric == "dot":
             udf = hyperplane_keys_udf(cfg.dim + 1, cfg.n_tables, cfg.n_bits,
                                       cfg.seed)
-            if query_side:
-                aug = F.concat(raw, F.array(F.lit(0.0)))
-            else:
-                m2 = float(self.arrays["max_n2"][0])
-                aug = F.concat(
-                    raw,
-                    F.array(F.sqrt(F.greatest(F.lit(0.0),
-                                              F.lit(m2) - _norm2(raw)))),
-                )
-            return udf(aug)
+            return udf(
+                _mips_aug(raw, float(self.arrays["max_n2"][0]), query_side)
+            )
         if cfg.metric in ("euclidean", "manhattan"):
             udf = pstable_keys_udf(
                 cfg.dim, cfg.n_tables, cfg.n_bits, cfg.seed,
@@ -404,10 +410,15 @@ def _auto_n_trees(cfg: AnnIndexConfig) -> int:
     return max(1, int(bytes_per_vec / (16.0 + node_share)))
 
 
-def _resolve_n_trees(cfg: AnnIndexConfig) -> AnnIndexConfig:
-    """Resolve the ``n_trees=-1`` sentinel AFTER dim inference. The
-    resolved count is what gets persisted/hash-validated (annoy stores
-    the actual trees built, not the -1 it was asked for)."""
+def _resolve_cfg(
+    cfg: AnnIndexConfig, items: DataFrame, vec_col: str
+) -> AnnIndexConfig:
+    """Infer ``dim=0`` from the first item, then resolve the ``n_trees=-1``
+    sentinel (it needs dim). The resolved count is what gets
+    persisted/hash-validated (annoy stores the actual trees built, not
+    the -1 it was asked for)."""
+    if cfg.dim == 0:
+        cfg = replace(cfg, dim=_infer_dim(items, vec_col))
     if cfg.n_trees != -1:
         return cfg
     if cfg.kind != "forest":
@@ -590,13 +601,7 @@ def _query_plan(
     scored = joined.select(
         "qid", "nid", _distance(cfg, "qv", "v").alias("distance")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("distance").asc(), F.col("nid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 _MODEL_STAGE = "model"
@@ -687,20 +692,8 @@ def _read_meta(root: str) -> dict:
 
 
 def _write_meta(root: str, cfg: AnnIndexConfig, **extra) -> None:
-    mdir = Path(root) / _MODEL_STAGE
-    mdir.mkdir(parents=True, exist_ok=True)
-    (mdir / _META).write_text(
-        json.dumps(
-            {
-                "stage": _MODEL_STAGE,
-                "format": _FORMAT,
-                "config_hash": cfg.config_hash(),
-                "config": json.loads(cfg.to_json()),
-                **extra,
-            },
-            sort_keys=True,
-        )
-    )
+    # temp file + fsync + rename: a crash mid-write leaves the old meta
+    CheckpointStore(root, cfg).restamp(_MODEL_STAGE, format=_FORMAT, **extra)
 
 
 class AnnIndex:
@@ -848,14 +841,7 @@ class AnnIndex:
         )
         if include_self:
             return res
-        w = Window.partitionBy("qid").orderBy(
-            F.col("distance").asc(), F.col("nid")
-        )
-        return (
-            res.where(F.col("qid") != F.col("nid"))
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .where(F.col("rank") <= k)
-        )
+        return _top_k(res.where(F.col("qid") != F.col("nid")), k)
 
     def unload(self) -> None:
         """annoy ``unload`` (annoylib.h:1141-1165): drop the cached
@@ -1013,9 +999,7 @@ def build_index(
     """Train the router, route every item once, persist model + artifacts
     (annoy ``build`` + ``save``, annoylib.h:1037-1127). Returns the live
     index (no reload needed to query immediately)."""
-    if cfg.dim == 0:
-        cfg = replace(cfg, dim=_infer_dim(items, vec_col))
-    cfg = _resolve_n_trees(cfg)
+    cfg = _resolve_cfg(cfg, items, vec_col)
     model = AnnModel.train(items, cfg, id_col, vec_col)
     vectors, bucketed = _route_items(items, model, id_col, vec_col)
     store = CheckpointStore(root, cfg)
@@ -1390,9 +1374,7 @@ def knn_by_vector_approx(
 ) -> DataFrame:
     """Ephemeral by-vector path (no persistence): train + route + query in
     one plan — the ``queries=`` backend for knn_forest/knn_ivf/knn_lsh."""
-    if cfg.dim == 0:
-        cfg = replace(cfg, dim=_infer_dim(items, vec_col))
-    cfg = _resolve_n_trees(cfg)
+    cfg = _resolve_cfg(cfg, items, vec_col)
     model = AnnModel.train(items, cfg, id_col, vec_col)
     vectors, bucketed = _route_items(items, model, id_col, vec_col)
     # cache()+count(), not localCheckpoint: the oversized relation is tiny
@@ -1405,3 +1387,100 @@ def knn_by_vector_approx(
         queries, vectors, assign, sizes, model, k, id_col, vec_col,
         spill_eps, has_oversized,
     )
+
+
+def knn_all_items(
+    items: DataFrame,
+    cfg: AnnIndexConfig,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    spill_eps: float = 0.0,
+) -> DataFrame:
+    """Ephemeral all-items path — get_nns_by_item for EVERY item in one
+    plan (annoylib.h:1228-1232), self excluded: (qid, nid, rank,
+    distance). The no-``queries`` backend of knn_forest/knn_ivf/knn_lsh,
+    on the same router, stored-vector projection and metric as the
+    persisted index.
+
+    Every item is routed once, with the QUERY-side knobs (forest
+    spill_eps, IVF nprobe), since every item is also a query; only 'dot'
+    routes items and queries differently (the MIPS augmentations), so it
+    adds the item-side keys to the same pass.
+
+    The candidate joins keep their cost bounds. Forest/LSH self-join on
+    (bucket, salt) with BOTH sides salted by _cap_buckets (a mega-bucket
+    costs O(g * cap), not O(g^2)) and dedup the narrow id pairs before the
+    vectors are re-attached, so the distance runs once per distinct pair.
+    IVF joins each item's cell (its first probe) with every row's probes
+    replicated across the cell's salts: no pair is lost and each matches
+    exactly once, so the vectors ride that join."""
+    cfg = _resolve_cfg(cfg, items, vec_col)
+    model = AnnModel.train(items, cfg, id_col, vec_col)
+    cols = [
+        F.col(id_col).alias("id"),
+        _stored_vec(cfg, vec_col).alias("v"),
+        model.keys_col(vec_col, query_side=True, spill_eps=spill_eps)
+        .alias("keys"),
+    ]
+    ikeys = "keys"
+    if cfg.metric == "dot":
+        ikeys = "ikeys"
+        cols.append(model.keys_col(vec_col, query_side=False).alias(ikeys))
+    base = items.select(*cols)
+    if cfg.kind == "ivf":
+        # both join sides read `base`: materialize it so the routing UDF
+        # runs once
+        base = base.localCheckpoint(eager=False)
+        assign = base.select(
+            F.element_at(ikeys, 1).alias("bucket"),
+            F.col("id").alias("nid"), F.col("v").alias("nv"),
+        )
+        sizes = assign.groupBy("bucket").agg(
+            F.greatest(
+                F.lit(1), F.ceil(F.count(F.lit(1)) / cfg.bucket_cap)
+            ).cast("long").alias("m")
+        )
+        assign = assign.join(F.broadcast(sizes), "bucket").select(
+            "bucket", "nid", "nv",
+            F.pmod(F.xxhash64("nid", "bucket"), F.col("m")).alias("salt"),
+        )
+        probes = (
+            base.select(
+                F.col("id").alias("qid"), F.col("v").alias("qv"),
+                F.explode("keys").alias("bucket"),
+            )
+            .join(F.broadcast(sizes), "bucket")
+            .select(
+                "bucket", "qid", "qv",
+                F.explode(F.sequence(F.lit(0), F.col("m") - 1)).alias("salt"),
+            )
+        )
+        cand = probes.join(assign, ["bucket", "salt"]).where(
+            F.col("qid") != F.col("nid")
+        )
+    else:
+        qb = _cap_buckets(
+            base.select("id", F.explode("keys").alias("bucket")),
+            cfg.bucket_cap,
+        )
+        ib = qb if ikeys == "keys" else _cap_buckets(
+            base.select("id", F.explode(ikeys).alias("bucket")),
+            cfg.bucket_cap,
+        )
+        pairs = (
+            qb.alias("a").join(ib.alias("b"), ["bucket", "salt"])
+            .where(F.col("a.id") != F.col("b.id"))
+            .select(F.col("a.id").alias("qid"), F.col("b.id").alias("nid"))
+            .dropDuplicates(["qid", "nid"])
+        )
+        vecs = base.select("id", "v")
+        cand = pairs.join(
+            vecs.select(F.col("id").alias("qid"), F.col("v").alias("qv")),
+            "qid",
+        ).join(
+            vecs.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
+            "nid",
+        )
+    d = _distance(cfg, "qv", "nv")
+    return _top_k(cand.select("qid", "nid", d.alias("distance")), k)

@@ -491,3 +491,75 @@ def test_build_rejects_null_or_ragged_vectors(spark, corpus, tmp_path):
     cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
     with pytest.raises(Exception, match="invalid vector"):
         build_index(spark, bad, str(tmp_path / "idx"), cfg)
+
+
+def test_torn_model_meta_write_keeps_previous_meta(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A write that dies partway through the model meta during append's
+    publish must leave the previous meta byte-identical (temp file +
+    rename, never an in-place rewrite): load refuses the index because of
+    the pending marker, and repair_append completes the batch."""
+    import builtins
+    import io
+    import os
+    from pathlib import Path
+
+    from annoy_spark.sources.ann_index import (
+        _META,
+        _MODEL_STAGE,
+        _PENDING,
+        repair_append,
+    )
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42,
+                         sample_fraction=1.0)
+    root = str(tmp_path / "idx")
+    idx = build_index(spark, corpus.where(F.col("vec_id") < 300), root, cfg)
+    meta = Path(root) / _MODEL_STAGE / _META
+    before = meta.read_bytes()
+
+    class TornWriter:
+        """Writes half of the first chunk, then fails like a crash."""
+
+        def __init__(self, f):
+            self._f = f
+
+        def write(self, data):
+            self._f.write(data[: len(data) // 2])
+            self._f.flush()
+            raise OSError("simulated crash mid-write")
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self._f.close()
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+    real_open = builtins.open
+
+    def torn_open(file, mode="r", *args, **kwargs):
+        f = real_open(file, mode, *args, **kwargs)
+        path = Path(os.fsdecode(file)) if isinstance(
+            file, (str, bytes, os.PathLike)) else None
+        if (path is not None and "w" in mode
+                and path.parent.name == _MODEL_STAGE and _META in path.name):
+            return TornWriter(f)
+        return f
+
+    # Path.write_text opens through io.open, plain open() through builtins
+    monkeypatch.setattr(builtins, "open", torn_open)
+    monkeypatch.setattr(io, "open", torn_open)
+    with pytest.raises(OSError, match="simulated crash"):
+        idx.append(corpus.where(F.col("vec_id") >= 300))
+    monkeypatch.undo()
+
+    assert meta.read_bytes() == before
+    assert (Path(root) / _PENDING).exists()
+    with pytest.raises(ValueError, match="UNFINISHED"):
+        load_index(spark, root)
+    assert repair_append(spark, root).n_items() == 400
+    assert not (Path(root) / _PENDING).exists()

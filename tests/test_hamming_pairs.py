@@ -57,3 +57,30 @@ def test_pigeonhole_equals_bruteforce(spark, n_bits, words, t):
 def test_pigeonhole_empty_and_singleton(spark):
     df = spark.createDataFrame([(1, [5])], "doc_id long, sig array<long>")
     assert hamming_pairs(df, t=4, n_bits=60).count() == 0
+
+
+def test_mega_family_equals_bruteforce(spark):
+    """A 3000-member exact-duplicate family (the skew the signature
+    collapse exists for) plus a perturbed tail: the family expands to all
+    its member pairs at distance 0, and the tail's near pairs to the
+    family are found, exactly as the brute-force referee says."""
+    rng = np.random.default_rng(11)
+    n_fam, t, n_bits = 3000, 6, 60
+    fam = int(rng.integers(0, 1 << 60))
+    rows = [(i, [fam]) for i in range(n_fam)]
+    for i in range(40):
+        sig = fam
+        for b in rng.integers(0, n_bits, size=rng.integers(1, 2 * t)):
+            sig ^= 1 << int(b)
+        rows.append((n_fam + i, [sig]))
+    df = spark.createDataFrame(rows, "doc_id long, sig array<long>")
+    got = hamming_pairs(df, t=t, n_bits=n_bits).toPandas()
+    want = _brute([r[0] for r in rows], [r[1] for r in rows], t)
+    # distinct + same size + every row in the referee's set => equal sets
+    assert len(got) == len(want)
+    assert not got.duplicated(["u", "v"]).any()
+    assert all(
+        (u, v, h) in want
+        for u, v, h in zip(got["u"].tolist(), got["v"].tolist(),
+                           got["hamming"].tolist())
+    )

@@ -231,22 +231,44 @@ def test_lsh_deterministic(spark):
     assert a == b
 
 
-def test_lsh_adaptive_dedup_paths_identical(spark):
-    """Round 6: knn_lsh's two candidate-assembly shapes (dedup-first vs
-    score-first) must return identical rows on the same input; the
-    adaptive default must match whichever shape it picks."""
-    from annoy_spark.operators.knn import knn_lsh
+def test_all_items_match_query_by_items(spark, tmp_path):
+    """The all-items mode of knn_lsh / knn_forest / knn_ivf and
+    get_nns_by_item over a built index (query_by_items over every id,
+    self excluded) share the router, stored vectors and metric, so they
+    return the same neighbors and ranks. Distances agree to float noise:
+    query_by_items re-normalizes the stored unit vector for angular."""
+    from annoy_spark.operators.forest import knn_forest
+    from annoy_spark.operators.ivf import knn_ivf
+    from annoy_spark.sources.ann_index import AnnIndexConfig, build_index
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    for kwargs in (
-        dict(k=10, n_tables=8, n_bits=8, seed=42),
-        dict(k=5, n_tables=8, n_bits=4, seed=42, metric="euclidean",
-             bucket_width=4.0),
-        dict(k=5, n_tables=6, n_bits=5, seed=7, metric="dot"),
-    ):
-        first = sorted(map(tuple, knn_lsh(
-            emb, dedup_first=True, **kwargs).collect()))
-        second = sorted(map(tuple, knn_lsh(
-            emb, dedup_first=False, **kwargs).collect()))
-        auto = sorted(map(tuple, knn_lsh(emb, **kwargs).collect()))
-        assert first == second == auto, kwargs
+    ids = emb.select("vec_id")
+    cases = [
+        (knn_lsh, AnnIndexConfig(kind="lsh", n_tables=8, n_bits=8, seed=42),
+         dict(k=10, n_tables=8, n_bits=8, seed=42)),
+        (knn_lsh, AnnIndexConfig(kind="lsh", metric="euclidean", n_tables=8,
+                                 n_bits=4, seed=42, bucket_width=4.0),
+         dict(k=5, n_tables=8, n_bits=4, seed=42, metric="euclidean",
+              bucket_width=4.0)),
+        (knn_lsh, AnnIndexConfig(kind="lsh", metric="dot", n_tables=6,
+                                 n_bits=5, seed=7),
+         dict(k=5, n_tables=6, n_bits=5, seed=7, metric="dot")),
+        (knn_forest, AnnIndexConfig(kind="forest", n_trees=8, leaf_cap=32,
+                                    seed=42, sample_fraction=1.0),
+         dict(k=10, n_trees=8, leaf_cap=32, seed=42, sample_fraction=1.0)),
+        (knn_ivf, AnnIndexConfig(kind="ivf", n_centroids=16, nprobe=4,
+                                 seed=42, sample_fraction=1.0),
+         dict(k=10, n_centroids=16, nprobe=4, seed=42,
+              sample_fraction=1.0)),
+    ]
+    def rows(df):
+        return sorted((r.qid, r.rank, r.nid, r.distance) for r in df.collect())
+
+    for i, (fn, cfg, kwargs) in enumerate(cases):
+        all_items = rows(fn(emb, **kwargs))
+        idx = build_index(spark, emb, str(tmp_path / f"idx{i}"), cfg)
+        by_item = rows(idx.query_by_items(ids, kwargs["k"]))
+        assert [r[:3] for r in all_items] == [r[:3] for r in by_item], kwargs
+        assert all(
+            abs(a[3] - b[3]) <= 1e-12 for a, b in zip(all_items, by_item)
+        ), kwargs

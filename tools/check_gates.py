@@ -61,12 +61,15 @@ def main() -> int:
     # every registered gate must have an oracle twin — a truncated or
     # partially-registered run is a loud failure, not a silent gap
     # (round-5 driver artifact recorded 50 of 53 registered gates)
+    # (raise, not assert: `python -O` strips asserts)
     missing_oracle = [n for n in qs if n not in oracles]
-    assert not missing_oracle, f"gates without oracle SQL: {missing_oracle}"
-    assert len(qs) == len(oracles) == 53, (
-        f"expected 53 registered gates with 53 oracles, got "
-        f"{len(qs)}/{len(oracles)}"
-    )
+    if missing_oracle:
+        raise SystemExit(f"gates without oracle SQL: {missing_oracle}")
+    if not len(qs) == len(oracles) == 53:
+        raise SystemExit(
+            f"expected 53 registered gates with 53 oracles, got "
+            f"{len(qs)}/{len(oracles)}"
+        )
     failures = []
     ran = 0
     for name, fn in qs.items():
