@@ -41,11 +41,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql import DataFrame
 
-from annoy_spark.operators.knn import collect_training_sample
+from annoy_spark.operators.knn import collect_training_sample, keys_udf
 
 _TWO_MEANS_ITERS = 200  # annoylib.h:366 (iteration_steps)
 _IMBALANCE_RETRIES = 3  # annoylib.h:1387 (attempt loop)
@@ -299,8 +297,22 @@ def _subtree_heights(children: np.ndarray) -> np.ndarray:
     return h
 
 
-def hamming_forest_leaf_udf(trees: list[HammingTree], spill_levels: int = 0):
-    """pandas UDF: packed int64 signature -> leaf keys (>=1 per tree).
+def _per_row_keys(acc_rows, acc_keys, n: int) -> list[np.ndarray]:
+    """Flat (row, key) pairs -> each row's sorted, distinct keys (spill
+    revisits can reach one leaf twice)."""
+    ar = np.concatenate(acc_rows)
+    ak = np.concatenate(acc_keys)
+    order = np.lexsort((ak, ar))
+    ar, ak = ar[order], ak[order]
+    keep = np.ones(len(ar), dtype=bool)
+    keep[1:] = (ar[1:] != ar[:-1]) | (ak[1:] != ak[:-1])
+    ar, ak = ar[keep], ak[keep]
+    return np.split(ak, np.searchsorted(ar, np.arange(1, n)))
+
+
+def hamming_forest_leaves(trees: list[HammingTree], spill_levels: int = 0):
+    """Kernel: (n, words) packed int64 signatures -> each row's leaf keys
+    (>=1 per tree).
 
     Level-synchronous vectorized bit tests (margin, annoylib.h:744-752).
     A hamming margin is a bit, not a distance to a plane, so spill_eps has
@@ -317,11 +329,7 @@ def hamming_forest_leaf_udf(trees: list[HammingTree], spill_levels: int = 0):
     ]
     stride = 1 + max(len(t.children) for t in trees)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def leaves(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(v, dtype=np.int64) for v in vecs])
+    def leaves(mat: np.ndarray) -> list[np.ndarray]:
         umat = mat.view(np.uint64)
         n = len(mat)
         acc_rows, acc_keys = [], []  # flat (row, key) pairs, vectorized
@@ -349,17 +357,14 @@ def hamming_forest_leaf_udf(trees: list[HammingTree], spill_levels: int = 0):
                     cur = np.concatenate([nxt, other])
                 else:
                     cur = nxt
-        ar = np.concatenate(acc_rows)
-        ak = np.concatenate(acc_keys)
-        order = np.lexsort((ak, ar))
-        ar, ak = ar[order], ak[order]
-        keep = np.ones(len(ar), dtype=bool)  # dedup (row, key)
-        keep[1:] = (ar[1:] != ar[:-1]) | (ak[1:] != ak[:-1])
-        ar, ak = ar[keep], ak[keep]
-        per_row = np.split(ak, np.searchsorted(ar, np.arange(1, n)))
-        return pd.Series([k.tolist() for k in per_row])
+        return _per_row_keys(acc_rows, acc_keys, n)
 
     return leaves
+
+
+def hamming_forest_leaf_udf(trees: list[HammingTree], spill_levels: int = 0):
+    """pandas UDF of :func:`hamming_forest_leaves`."""
+    return keys_udf(hamming_forest_leaves(trees, spill_levels), np.int64)
 
 
 def build_forest(
@@ -399,8 +404,9 @@ def build_forest(
     ]
 
 
-def forest_leaf_udf(trees: list[Tree], spill_eps: float = 0.0):
-    """pandas UDF: vector -> leaf keys (>=1 per tree, unique across trees).
+def forest_leaves(trees: list[Tree], spill_eps: float = 0.0):
+    """Kernel: (n, dim) vectors -> each row's leaf keys (>=1 per tree,
+    unique across trees).
 
     Level-synchronous vectorized routing; spill_eps > 0 descends BOTH
     children where |margin| <= spill_eps (the search_k analog,
@@ -411,11 +417,7 @@ def forest_leaf_udf(trees: list[Tree], spill_eps: float = 0.0):
     ]
     stride = 1 + max(len(t.children) for t in trees)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def leaves(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    def leaves(mat: np.ndarray) -> list[np.ndarray]:
         n = len(mat)
         acc_rows, acc_keys = [], []  # flat (row, key) pairs, fully vectorized
         for normals, offsets, children, ti in packed:
@@ -440,17 +442,14 @@ def forest_leaf_udf(trees: list[Tree], spill_eps: float = 0.0):
                     cur = np.concatenate([nxt, other])
                 else:
                     cur = nxt
-        ar = np.concatenate(acc_rows)
-        ak = np.concatenate(acc_keys)
-        order = np.lexsort((ak, ar))
-        ar, ak = ar[order], ak[order]
-        keep = np.ones(len(ar), dtype=bool)  # dedup (row, key) — spill revisits
-        keep[1:] = (ar[1:] != ar[:-1]) | (ak[1:] != ak[:-1])
-        ar, ak = ar[keep], ak[keep]
-        per_row = np.split(ak, np.searchsorted(ar, np.arange(1, n)))
-        return pd.Series([k.tolist() for k in per_row])
+        return _per_row_keys(acc_rows, acc_keys, n)
 
     return leaves
+
+
+def forest_leaf_udf(trees: list[Tree], spill_eps: float = 0.0):
+    """pandas UDF of :func:`forest_leaves`."""
+    return keys_udf(forest_leaves(trees, spill_eps))
 
 
 def knn_forest(

@@ -30,9 +30,7 @@ Clustered corpora are exactly where IVF beats data-independent hyperplanes
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql import DataFrame
 
 from annoy_spark.operators.knn import collect_training_sample
 
@@ -143,32 +141,23 @@ def _train_hamming_centroids(
     return cent
 
 
-def _probe_udf(centroids: np.ndarray, nprobe: int, metric: str):
-    """pandas UDF: vector -> nprobe nearest centroid ids (first = nearest),
-    in the metric's own distance (L2/cos via the dot expansion, L1, or
-    popcount for packed hamming signatures)."""
+def ivf_probes(centroids: np.ndarray, nprobe: int, metric: str):
+    """Kernel: (n, dim) vectors -> (n, nprobe) nearest centroid ids (first
+    = nearest), in the metric's own distance (L2/cos via the dot
+    expansion, L1, or popcount for packed hamming signatures)."""
     cent = centroids
 
     if metric == "hamming":
 
-        @F.pandas_udf(ArrayType(LongType()))
-        def probes_h(vecs: pd.Series) -> pd.Series:
-            if len(vecs) == 0:
-                return pd.Series([], dtype=object)
-            mat = np.stack([np.asarray(v, dtype=np.int64) for v in vecs])
+        def probes_h(mat: np.ndarray) -> np.ndarray:
             d = _hamming_cdist(mat, cent)
-            order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-            return pd.Series(list(order.astype(np.int64)))
+            return np.argsort(d, axis=1, kind="stable")[:, :nprobe]
 
         return probes_h
 
     c2 = (cent ** 2).sum(1)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    def probes(mat: np.ndarray) -> np.ndarray:
         if metric == "angular":
             n = np.linalg.norm(mat, axis=1, keepdims=True)
             mat = mat / np.maximum(n, 1e-12)
@@ -176,8 +165,7 @@ def _probe_udf(centroids: np.ndarray, nprobe: int, metric: str):
             d2 = np.abs(mat[:, None, :] - cent[None, :, :]).sum(-1)
         else:
             d2 = (mat ** 2).sum(1)[:, None] - 2 * mat @ cent.T + c2[None, :]
-        order = np.argsort(d2, axis=1)[:, :nprobe].astype(np.int64)
-        return pd.Series(list(order))
+        return np.argsort(d2, axis=1)[:, :nprobe].astype(np.int64)
 
     return probes
 

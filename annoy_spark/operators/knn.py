@@ -103,6 +103,14 @@ def _unit(raw: F.Column) -> F.Column:
     return F.when(n > 0, F.transform(raw, lambda x: x / n)).otherwise(raw)
 
 
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """_unit over the rows of a matrix, bit for bit: the norm is the same
+    left fold from 0.0 (cumsum, not np.linalg.norm's pairwise sum), and a
+    zero row stays as it is."""
+    n = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1:])
+    return np.divide(mat, n, out=mat.copy(), where=n > 0)
+
+
 def with_unit_vectors(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Pre-normalize once (annoy Angular caches node norms, annoylib.h:483)."""
     v = F.col(vec_col).cast("array<double>")
@@ -177,8 +185,25 @@ def knn_bruteforce(
     )
 
 
-def hyperplane_keys_udf(dim: int, n_tables: int, n_bits: int, seed: int):
-    """pandas UDF: embedding -> one LSH key per table (sign-bit pattern).
+def keys_udf(kernel, dtype=np.float64):
+    """pandas UDF running a routing kernel ``(mat) -> per-row key arrays``
+    over a column of vectors (``dtype`` rows: float64, or int64 for packed
+    hamming words). The kernel is the router; this is only the Arrow
+    boundary, so the driver can call the same kernel on a numpy batch."""
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def keys(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:
+            return pd.Series([], dtype=object)
+        mat = np.stack([np.asarray(v, dtype=dtype) for v in vecs])
+        return pd.Series(list(kernel(mat)))
+
+    return keys
+
+
+def hyperplane_keys(dim: int, n_tables: int, n_bits: int, seed: int):
+    """Kernel: (n, dim) embeddings -> (n, n_tables) LSH keys, one sign-bit
+    pattern per table.
 
     Exactly annoy's Angular create_split/side (annoylib.h:503-510, 491-501)
     with data-independent Gaussian hyperplanes: key bit = sign(<r, x>).
@@ -187,27 +212,28 @@ def hyperplane_keys_udf(dim: int, n_tables: int, n_bits: int, seed: int):
     planes = rng.standard_normal((n_tables, n_bits, dim))
     weights = np.power(2.0, np.arange(n_bits))  # bit-pack via dot with 2^i
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def keys(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    def keys(mat: np.ndarray) -> np.ndarray:
         proj = np.einsum("nd,tbd->ntb", mat, planes)  # (n, tables, bits)
         bits = proj > 0
         packed = bits @ weights  # (n, tables) float -> exact ints < 2^n_bits
         out = packed.astype(np.int64)
         out += np.arange(n_tables, dtype=np.int64) * (1 << n_bits)
-        return pd.Series(list(out))
+        return out
 
     return keys
 
 
-def pstable_keys_udf(
+def hyperplane_keys_udf(dim: int, n_tables: int, n_bits: int, seed: int):
+    """pandas UDF of :func:`hyperplane_keys`."""
+    return keys_udf(hyperplane_keys(dim, n_tables, n_bits, seed))
+
+
+def pstable_keys(
     dim: int, n_tables: int, n_bits: int, seed: int, width: float, p: int
 ):
-    """pandas UDF: embedding -> one E2LSH key per table (Datar et al. '04
-    p-stable projections — the data-independent stand-in for annoy's
-    two-means Euclidean/Manhattan splits, annoylib.h:849-891):
+    """Kernel: (n, dim) embeddings -> (n, n_tables) E2LSH keys (Datar et
+    al. '04 p-stable projections — the data-independent stand-in for
+    annoy's two-means Euclidean/Manhattan splits, annoylib.h:849-891):
 
         key bit_i = floor((<r_i, x> + b_i) / width),  r_i ~ p-stable
 
@@ -224,17 +250,12 @@ def pstable_keys_udf(
     mixers = rng.integers(1, 1 << 61, (n_bits,), dtype=np.int64) | 1
     tsalt = rng.integers(0, 1 << 62, (n_tables,), dtype=np.int64)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def keys(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    def keys(mat: np.ndarray) -> np.ndarray:
         proj = np.einsum("nd,tbd->ntb", mat, planes) + offsets
         q = np.floor(proj / width).astype(np.int64)
         mixed = (q * mixers).sum(axis=2, dtype=np.int64)  # wraparound mix
         mixed ^= mixed >> 33
-        out = mixed ^ tsalt  # per-table stream separation
-        return pd.Series(list(out))
+        return mixed ^ tsalt  # per-table stream separation
 
     return keys
 

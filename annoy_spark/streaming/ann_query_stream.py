@@ -11,11 +11,11 @@ equi-joined against the stored bucket assignments, and ranked neighbors
 append to the sink exactly-once via the checkpoint.
 
 The index is loaded ONCE at query-stream start (the mmap analog: the
-model npz is driver-held and broadcast inside the routing UDF; the
-bucket/vector parquet is re-scanned per micro-batch — an Iceberg table
-served from cluster cache in production). Micro-batches are
-query-batch-sized by contract, so the per-batch plan is the broadcast
-shape audited in PLANS.md (stored relations streamed, query side built).
+model npz is driver-held; the bucket/vector parquet is re-scanned per
+micro-batch — an Iceberg table served from cluster cache in production).
+Micro-batches are query-batch-sized by contract, so each one is fetched
+once and routed on the driver, and its routes join the stored relations
+as a local relation (the plan audited in PLANS.md).
 
 foreachBatch (not a streaming join) because the per-batch work is a
 full multi-join + window top-k over a BATCH relation — the exact pattern
@@ -54,22 +54,17 @@ def ann_query_stream(
 
     max_files_per_trigger bounds how much backlog one micro-batch drains
     (availableNow would otherwise take EVERYTHING in one batch after
-    downtime); per-batch plan choice is still probed (small_queries=None)
-    so a batch past SMALL_QUERY_MAX degrades to the shuffle serving plan
-    instead of forcing an oversized broadcast. Pass None to unbound the
-    reader (e.g. a trusted low-rate source).
+    downtime); a catch-up batch past SMALL_QUERY_MAX is still answered,
+    routed on the executors instead of the driver (see AnnIndex.query).
+    Pass None to unbound the reader (e.g. a trusted low-rate source).
     """
     idx: AnnIndex = load_index(spark, index_root)
 
     def answer_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        # probe each batch's size (one cheap limit-count): steady-state
-        # online batches broadcast, a catch-up batch past SMALL_QUERY_MAX
-        # falls back to shuffle equi-joins rather than a broadcast OOM
         result = idx.query(
-            batch, k=k, id_col=id_col, vec_col=vec_col,
-            spill_eps=spill_eps, small_queries=None,
+            batch, k=k, id_col=id_col, vec_col=vec_col, spill_eps=spill_eps
         )
         result.write.mode("overwrite").parquet(
             f"{out_dir}/batch_id={batch_id}"

@@ -2,7 +2,7 @@
 unbuild -> add_item -> build reopening (/root/reference/src/
 annoylib.h:1080-1091; test/index_test.py:234-245 pins which transitions
 are allowed), plus the introspection API (annoylib.h:1238-1254) and the
-serving-plan broadcast guard."""
+driver-routed vs executor-routed query paths."""
 
 from __future__ import annotations
 
@@ -246,23 +246,74 @@ def test_ivf_query_time_nprobe(spark, corpus, queries, tmp_path):
     )
 
 
-def test_large_batch_falls_back_to_shuffle(spark, corpus, tmp_path):
-    """The broadcast serving contract is now GUARDED: forcing the
-    large-batch path (small_queries=False) must produce the same rows as
-    the pinned broadcast plan, through shuffle joins instead of
-    broadcasts."""
+def test_large_batch_falls_back_to_shuffle(spark, corpus, tmp_path,
+                                          monkeypatch):
+    """A batch past SMALL_QUERY_MAX is routed on the executors (routing
+    UDF + shuffle equi-joins) instead of the driver; forced here on the
+    same batch by lowering the cap, it must return the same rows as the
+    driver-routed plan. An empty batch returns no rows, with the same
+    schema, on both paths."""
+    import annoy_spark.sources.ann_index as ann_index
+
     cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
     idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
     qs = corpus.select(
         (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
     )
-    a = idx.query(qs, k=5, small_queries=True).collect()
-    b = idx.query(qs, k=5, small_queries=False).collect()
-    key = lambda r: (r.qid, r.rank)  # noqa: E731
-    assert sorted([(r.qid, r.nid, r.rank) for r in a]) == sorted(
-        [(r.qid, r.nid, r.rank) for r in b]
-    )
+    small = idx.query(qs, k=5)
+    a = small.collect()
+    empty_small = idx.query(qs.limit(0), k=5)
+    monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", 10)
+    large = idx.query(qs, k=5)
+    b = large.collect()
+    monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", -1)
+    empty_large = idx.query(qs.limit(0), k=5)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "ArrowEvalPython" not in plan(small)
+    assert "ArrowEvalPython" in plan(large)
     assert len(a) == corpus.count() * 5
+    key = lambda r: (r.qid, r.nid, r.rank)  # noqa: E731
+    a, b = sorted(a, key=key), sorted(b, key=key)
+    assert [key(r) for r in a] == [key(r) for r in b]
+    assert max(abs(x.distance - y.distance) for x, y in zip(a, b)) <= 1e-12
+    for df in (empty_small, empty_large):
+        assert df.schema == small.schema
+        assert df.collect() == []
+
+
+def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
+    """A 500-query batch from a local relation (the serving shape) runs
+    no Python UDF and at most 6 Spark jobs: the batch fetch runs none,
+    routing is numpy on the driver, and the rest is the stored-relation
+    joins and the re-rank."""
+    import pandas as pd
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
+    idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
+    rng = np.random.default_rng(3)
+    qs = spark.createDataFrame(
+        pd.DataFrame({
+            "vec_id": np.arange(500),
+            "embedding": list(rng.standard_normal((500, 16)) * 3),
+        }),
+        "vec_id long, embedding array<double>",
+    )
+    idx.query(qs, k=10).collect()  # warm-up, not counted
+    sc = spark.sparkContext
+    sc.setJobGroup("driver_routed_batch", "500-query batch")
+    try:
+        res = idx.query(qs, k=10)
+        rows = res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 5000
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    jobs = sc.statusTracker().getJobIdsForGroup("driver_routed_batch")
+    assert 0 < len(jobs) <= 6, jobs
 
 
 def test_load_rejects_old_format(spark, corpus, tmp_path):

@@ -523,3 +523,123 @@ def test_auto_n_trees_memory_envelope(spark, corpus, tmp_path):
             spark, corpus, str(tmp_path / "auto_ivf"),
             AnnIndexConfig(kind="ivf", metric="angular", n_trees=-1),
         )
+
+
+@pytest.mark.parametrize("path", ["driver", "executor"])
+@pytest.mark.parametrize("bad", [None, [1.0] * 15], ids=["null", "15d"])
+def test_query_rejects_bad_vectors(spark, corpus, tmp_path, monkeypatch,
+                                   path, bad):
+    """A null or wrong-length query vector fails the query, naming its
+    id, on both query paths: the driver path checks the fetched batch
+    before any job, the executor path fails the routing job through the
+    same JVM guard as item routing."""
+    import annoy_spark.sources.ann_index as ann_index
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
+    qs = spark.createDataFrame(
+        [(9_000_000, [0.5] * 16), (9_000_001, bad)],
+        "vec_id long, embedding array<double>",
+    )
+    if path == "driver":
+        with pytest.raises(ValueError, match="query 9000001"):
+            idx.query(qs, k=5)
+    else:
+        monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", 1)
+        with pytest.raises(Exception, match="invalid vector for query 9000001"):
+            idx.query(qs, k=5).collect()
+
+
+def _router_cases():
+    cases = [
+        (kind, metric, {})
+        for kind in ("forest", "ivf", "lsh")
+        for metric in ("angular", "dot", "euclidean", "manhattan", "hamming")
+    ]
+    return cases + [
+        ("forest", "angular", {"spill_eps": 0.2}),
+        ("forest", "euclidean", {"spill_eps": 0.5}),
+        ("forest", "dot", {"spill_eps": 0.2}),
+        ("forest", "hamming", {"spill_eps": 1}),
+        ("forest", "hamming", {"spill_eps": 3}),
+        ("ivf", "angular", {"nprobe": 5}),
+        ("ivf", "dot", {"nprobe": 5}),
+    ]
+
+
+@pytest.mark.parametrize(
+    "kind,metric,kw", _router_cases(),
+    ids=lambda v: str(v).replace(" ", "") if isinstance(v, dict) else v,
+)
+def test_driver_router_matches_keys_col(spark, corpus, kind, metric, kw):
+    """The driver routes a query batch with the same kernels and
+    projections as keys_col's UDF, key for key, on every (kind, metric)
+    pair and query-time knob — including an all-zero vector (the unit
+    guard) and the 'dot' augmentations."""
+    from annoy_spark.sources.ann_index import (
+        _KIND_METRICS,
+        AnnModel,
+        _query_head,
+        _resolve_cfg,
+        _route_on_driver,
+    )
+
+    assert metric in _KIND_METRICS[kind]
+    if metric == "hamming":
+        rng = np.random.default_rng(5)
+        words = rng.integers(-(2**62), 2**62, (300, 2))
+        items = spark.createDataFrame(
+            [(i, [int(x) for x in w]) for i, w in enumerate(words)],
+            "vec_id long, embedding array<long>",
+        )
+        qrows = [(10_000 + i, [int(x) for x in w ^ (1 << i)])
+                 for i, w in enumerate(words[:30])]
+        qs = spark.createDataFrame(qrows, "vec_id long, embedding array<long>")
+    else:
+        items = corpus
+        qs = corpus.where("vec_id % 13 = 0").unionByName(
+            spark.createDataFrame(
+                [(-1, [0.0] * 16)], "vec_id long, embedding array<double>"
+            )
+        )
+    cfg = AnnIndexConfig(
+        kind=kind, metric=metric, seed=42, n_trees=4, leaf_cap=16,
+        n_centroids=12, nprobe=2, n_tables=6, n_bits=6,
+    )
+    cfg = _resolve_cfg(cfg, items, "embedding")
+    model = AnnModel.train(items, cfg, "vec_id", "embedding")
+    spark_keys = {
+        r.vec_id: list(r.keys)
+        for r in qs.select(
+            "vec_id", model.keys_col("embedding", True, **kw).alias("keys")
+        ).collect()
+    }
+    rows = _query_head(qs, model, "vec_id", "embedding").collect()
+    _, keys = _route_on_driver(rows, model, **kw)
+    assert len(rows) == len(spark_keys) > 0
+    for r, k in zip(rows, keys):
+        assert np.array_equal(k, spark_keys[r.qid]), r.qid
+
+
+def test_unit_rows_bit_identical_to_unit(spark):
+    """The driver's unit projection equals Spark's _unit bit for bit: the
+    norm is the same left fold (np.linalg.norm's pairwise sum is not),
+    and a zero vector passes through."""
+    from pyspark.sql import functions as F
+
+    from annoy_spark.operators.knn import _unit, _unit_rows
+
+    rng = np.random.default_rng(9)
+    mat = np.vstack([
+        rng.standard_normal((200, 65)) * 10.0 ** rng.integers(-8, 8, (200, 1)),
+        np.zeros((1, 65)),
+    ])
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(mat)],
+        "i long, v array<double>",
+    )
+    got = np.array([
+        r.u for r in df.orderBy("i").select(_unit(F.col("v")).alias("u"))
+        .collect()
+    ])
+    assert np.array_equal(_unit_rows(mat), got)

@@ -108,10 +108,13 @@ def main() -> None:
                            sample_fraction=1.0))
 
     # persisted ANN index: by-vector query against STORED parquet
-    # artifacts — parquet scans of buckets/vectors, broadcast query
-    # routing, narrow (qid, nid) dedup before the vector re-attach
+    # artifacts — parquet scans of buckets/vectors, query routes and
+    # vectors as local relations routed on the driver, narrow (qid, nid)
+    # dedup before the vector re-attach; plans after one run, so AQE's
+    # join choices show
     import tempfile
 
+    import annoy_spark.sources.ann_index as ann_index
     from annoy_spark.sources.ann_index import AnnIndexConfig, build_index
 
     idx_root = tempfile.mkdtemp(prefix="plans_annidx_")
@@ -124,21 +127,23 @@ def main() -> None:
         (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
     )
     sections[
-        "ANN INDEX QUERY (stored bucket/vector parquet scans, broadcast "
-        "query routing + salt replication, narrow (qid,nid) dedup, "
-        "re-attach vectors, exact re-rank)"
-    ] = plan_of(idx.query(queries, k=3, spill_eps=0.1,
-                          small_queries=True))
+        "ANN INDEX QUERY (stored bucket/vector parquet scans, driver-routed "
+        "query side as local relations, no UDF, no hints; narrow (qid,nid) "
+        "dedup, re-attach vectors, exact re-rank)"
+    ] = final_plan_of(idx.query(queries, k=3, spill_eps=0.1))
 
-    # the guarded fallback: the SAME query above a large batch — the
-    # query-derived sides lose their broadcast hints and the joins
-    # degrade to shuffle equi-joins instead of a broadcast OOM
-    sections[
-        "ANN INDEX QUERY — LARGE-BATCH FALLBACK (small_queries=False: "
-        "no query-side broadcast hints; shuffle equi-joins; AQE decides "
-        "the candidate join from measured size)"
-    ] = plan_of(idx.query(queries, k=3, spill_eps=0.1,
-                          small_queries=False))
+    # the SAME query routed on the executors, as a batch past
+    # SMALL_QUERY_MAX is: forced here by lowering the cap below the batch
+    cap = ann_index.SMALL_QUERY_MAX
+    ann_index.SMALL_QUERY_MAX = 2
+    try:
+        sections[
+            "ANN INDEX QUERY — EXECUTOR-ROUTED LARGE BATCH (cap lowered "
+            "below the batch to force it: Arrow routing UDF, no hints, AQE "
+            "picks every join from measured sizes)"
+        ] = final_plan_of(idx.query(queries, k=3, spill_eps=0.1))
+    finally:
+        ann_index.SMALL_QUERY_MAX = cap
 
     # after append + compact the serving plan must be SHAPE-IDENTICAL —
     # compaction only changes file layout (fewer, bucket-sorted files),
@@ -154,8 +159,7 @@ def main() -> None:
     sections[
         "ANN INDEX QUERY AFTER APPEND+COMPACT (same plan shape over the "
         "consolidated bucket-sorted artifacts — compaction is layout-only)"
-    ] = plan_of(cidx.query(queries, k=3, spill_eps=0.1,
-                           small_queries=True))
+    ] = final_plan_of(cidx.query(queries, k=3, spill_eps=0.1))
 
     out = ["# PLANS — physical plan evidence (auto-generated)\n",
            "Regenerate: `python tools/explain_plans.py`\n"]

@@ -70,17 +70,14 @@ def main() -> None:
     n_exact = exact.count()
 
     # warmup (python workers + JIT), excluded
-    idx.query(queries.limit(10), k=10, spill_eps=0.0,
-              small_queries=True).count()
+    idx.query(queries.limit(10), k=10, spill_eps=0.0).count()
 
     rows = []
     for eps in SPILLS:
         best = None
         for _ in range(2):  # min of 2 (VM steal)
             t0 = time.time()
-            ap = idx.query(
-                queries, k=10, spill_eps=eps, small_queries=True
-            ).select("qid", "nid")
+            ap = idx.query(queries, k=10, spill_eps=eps).select("qid", "nid")
             n_hit = exact.join(ap, ["qid", "nid"], "left_semi").count()
             dt = time.time() - t0
             best = (dt, n_hit) if best is None else min(best, (dt, n_hit))

@@ -94,17 +94,14 @@ def main() -> None:
     ).select("qid", "nid").cache()
     n_exact = exact.count()
 
-    idx.query(queries.limit(10), k=10, spill_eps=0,
-              small_queries=True).count()  # warmup, excluded
+    idx.query(queries.limit(10), k=10, spill_eps=0).count()  # warmup, excluded
 
     rows_out = []
     for d in LEVELS:
         best = None
         for _ in range(2):  # min of 2 (VM steal)
             t0 = time.time()
-            ap = idx.query(
-                queries, k=10, spill_eps=d, small_queries=True
-            ).select("qid", "nid")
+            ap = idx.query(queries, k=10, spill_eps=d).select("qid", "nid")
             n_hit = exact.join(ap, ["qid", "nid"], "left_semi").count()
             dt = time.time() - t0
             best = (dt, n_hit) if best is None else min(best, (dt, n_hit))
