@@ -43,7 +43,7 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import DataFrame
 
-from annoy_spark.operators.knn import collect_training_sample, keys_udf
+from annoy_spark.operators.knn import collect_training_sample
 
 _TWO_MEANS_ITERS = 200  # annoylib.h:366 (iteration_steps)
 _IMBALANCE_RETRIES = 3  # annoylib.h:1387 (attempt loop)
@@ -362,11 +362,6 @@ def hamming_forest_leaves(trees: list[HammingTree], spill_levels: int = 0):
     return leaves
 
 
-def hamming_forest_leaf_udf(trees: list[HammingTree], spill_levels: int = 0):
-    """pandas UDF of :func:`hamming_forest_leaves`."""
-    return keys_udf(hamming_forest_leaves(trees, spill_levels), np.int64)
-
-
 def build_forest(
     items: DataFrame,
     n_trees: int = 8,
@@ -445,11 +440,6 @@ def forest_leaves(trees: list[Tree], spill_eps: float = 0.0):
         return _per_row_keys(acc_rows, acc_keys, n)
 
     return leaves
-
-
-def forest_leaf_udf(trees: list[Tree], spill_eps: float = 0.0):
-    """pandas UDF of :func:`forest_leaves`."""
-    return keys_udf(forest_leaves(trees, spill_eps))
 
 
 def knn_forest(

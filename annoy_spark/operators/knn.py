@@ -223,11 +223,6 @@ def hyperplane_keys(dim: int, n_tables: int, n_bits: int, seed: int):
     return keys
 
 
-def hyperplane_keys_udf(dim: int, n_tables: int, n_bits: int, seed: int):
-    """pandas UDF of :func:`hyperplane_keys`."""
-    return keys_udf(hyperplane_keys(dim, n_tables, n_bits, seed))
-
-
 def pstable_keys(
     dim: int, n_tables: int, n_bits: int, seed: int, width: float, p: int
 ):
@@ -326,7 +321,7 @@ def embedding_near_dup_pairs_lsh(
     vectors (cos -> 1) agree on almost every hyperplane sign, so recall at
     min_cosine ~ 0.99 is near-perfect with a handful of tables."""
     dim = len(items.select(vec_col).first()[0])
-    keys = hyperplane_keys_udf(dim, n_tables, n_bits, seed)
+    keys = keys_udf(hyperplane_keys(dim, n_tables, n_bits, seed))
     base = with_unit_vectors(items, vec_col).select(
         F.col(id_col).alias("id"),
         F.col("unit_vec"),

@@ -46,12 +46,14 @@ QUERY side only — annoy's search_k is a query-time knob
 (annoylib.h:1447-1480), so one stored index serves every accuracy budget.
 
 Scale shape: one bounded fetch of at most SMALL_QUERY_MAX + 1 query rows
-decides. An online-lookup-sized batch is routed on the driver with the
-same numpy kernels the executor UDFs run (annoy answers in-process against
-the mapped index, annoylib.h:1447-1504) and joins the stored relations as
-exact-sized local relations, so the planner broadcasts whichever side is
-small; a LARGE batch (e.g. re-indexing the corpus against itself) is
-routed by the UDF on the executors and joins through shuffle equi-joins.
+decides (no job for a local input; any other input comes back as Arrow,
+cheap to drop when the batch is over the cap). A batch within the cap is
+routed on the driver with the same numpy kernels the executor UDFs run
+(annoy answers in-process against the mapped index, annoylib.h:1447-1504)
+and joins the stored relations as exact-sized local relations, so the
+planner broadcasts whichever side is small; a LARGE batch (e.g.
+re-indexing the corpus against itself) is routed by the UDF on the
+executors and joins through shuffle equi-joins.
 No join carries a hint: the stored buckets/vectors relations are only
 ever scanned and equi-joined, and AQE sizes the candidate relation.
 
@@ -102,7 +104,10 @@ _KIND_METRICS = {
 
 #: query batches at or below this row count are fetched and routed on the
 #: driver and join the stored relations as local relations; larger batches
-#: route on the executors (routing UDF + shuffle equi-joins)
+#: route on the executors (routing UDF + shuffle equi-joins). The driver
+#: path was the faster one at every batch size measured up to this cap
+#: (4 cores, 64-d forest), so the cap bounds driver memory, not time: a
+#: 65,536 x 64-d batch peaks near 290 MB of Python heap on the driver.
 SMALL_QUERY_MAX = 65_536
 
 _FORMAT = 2
@@ -468,6 +473,14 @@ def _infer_dim(items: DataFrame, vec_col: str) -> int:
     return len(row[0])
 
 
+def _valid_vector(raw: F.Column, dim: int) -> F.Column:
+    """The one validity rule for a stored or query vector: non-null with
+    exactly ``dim`` elements. The executor paths raise through it in
+    _checked_vectors; the driver path fetches it as _query_head's ``ok``
+    flag and raises in _route_on_driver before any routing job."""
+    return raw.isNotNull() & (F.size(raw) == F.lit(dim))
+
+
 def _checked_vectors(
     df: DataFrame, id_col: str, vec_col: str, dim: int, what: str,
     id_as: str,
@@ -480,8 +493,7 @@ def _checked_vectors(
     raise_error alongside the UDF would race it and surface an opaque
     pandas error instead)."""
     raw = F.col(vec_col)
-    ok = raw.isNotNull() & (F.size(raw) == F.lit(dim))
-    checked = F.when(ok, raw).otherwise(
+    checked = F.when(_valid_vector(raw, dim), raw).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"invalid vector for {what} "),
@@ -587,17 +599,18 @@ def _replicate_salts(
 def _query_head(
     queries: DataFrame, model: AnnModel, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(qid, raw[, keys]): what the driver fetches of a query batch — the
-    raw vector in the stored element type, plus the keys where they are a
-    JVM expression (guarded, so a bad vector reaches _route_on_driver's
-    check instead of failing inside the expression)."""
+    """(qid, raw, ok[, keys]): what the driver fetches of a query batch —
+    the raw vector in the stored element type, its validity flag, plus
+    the keys where they are a JVM expression (guarded, so a bad vector
+    reaches _route_on_driver's check instead of failing inside the
+    expression)."""
     cfg = model.cfg
     raw = F.col(vec_col).cast(
         "array<long>" if cfg.metric == "hamming" else "array<double>"
     )
-    cols = [F.col(id_col).alias("qid"), raw.alias("raw")]
+    ok = _valid_vector(raw, cfg.dim)
+    cols = [F.col(id_col).alias("qid"), raw.alias("raw"), ok.alias("ok")]
     if model.jvm_keys:
-        ok = raw.isNotNull() & (F.size(raw) == F.lit(cfg.dim))
         cols.append(
             F.when(ok, model.keys_col(vec_col, query_side=True))
             .alias("keys")
@@ -613,7 +626,7 @@ def _route_on_driver(
     wrong-length vector raises ValueError naming its query id."""
     cfg = model.cfg
     for r in rows:
-        if r["raw"] is None or len(r["raw"]) != cfg.dim:
+        if not r["ok"]:
             raise ValueError(
                 f"invalid vector for query {r['qid']}: need a non-null "
                 f"array of {cfg.dim} elements"
@@ -625,6 +638,21 @@ def _route_on_driver(
     if model.jvm_keys:
         return raw, [np.asarray(r["keys"], dtype=np.int64) for r in rows]
     return raw, model.route(raw, spill_eps, nprobe)
+
+
+def _fetch_batch(queries: DataFrame, head: DataFrame) -> list | None:
+    """The rows of ``head`` (_query_head of ``queries``) if the batch has
+    at most SMALL_QUERY_MAX rows, else None. A local input (e.g. a pandas
+    batch under spark.sql.execution.arrow.localRelationThreshold) is
+    already in driver memory, so collecting it runs no job; anything
+    else is fetched as Arrow, so a batch past the cap throws away
+    columnar buffers, not Python objects."""
+    bounded = head.limit(SMALL_QUERY_MAX + 1)
+    if queries.isLocal():
+        rows = bounded.collect()
+        return rows if len(rows) <= SMALL_QUERY_MAX else None
+    table = bounded.toArrow()
+    return table.to_pylist() if len(table) <= SMALL_QUERY_MAX else None
 
 
 def _local_query_side(
@@ -713,17 +741,17 @@ def _query_plan(
     assignments, dedup NARROW (ids only), re-attach vectors, exact
     re-rank.
 
-    One bounded fetch of the batch picks the query side. Up to
-    SMALL_QUERY_MAX rows are routed on the driver with the routing
-    kernels and join as exact-sized local relations (a local input runs
-    no job for the fetch); a larger batch is routed on the executors.
+    One bounded fetch of the batch (_fetch_batch) picks the query side.
+    Up to SMALL_QUERY_MAX rows are routed on the driver with the routing
+    kernels and join as exact-sized local relations; a larger batch is
+    routed on the executors.
     Either way the planner picks every join strategy from sizes: the
     stored buckets/vectors relations are the 10^12-row side and are only
     ever scanned and equi-joined, never hint-broadcast."""
     cfg = model.cfg
     head = _query_head(queries, model, id_col, vec_col)
-    rows = head.limit(SMALL_QUERY_MAX + 1).collect()
-    if len(rows) <= SMALL_QUERY_MAX:
+    rows = _fetch_batch(queries, head)
+    if rows is not None:
         qroutes, qvecs = _local_query_side(
             queries.sparkSession, rows, head.schema["qid"].dataType, model,
             salts, spill_eps, nprobe,
@@ -860,8 +888,7 @@ class AnnIndex:
         self._bucketed = bucketed
         self._sizes = sizes
         self._salts = salts
-        self._has_oversized = bool(salts)
-        self._assign = _salted_assign(bucketed, sizes, self._has_oversized)
+        self._assign = _salted_assign(bucketed, sizes, bool(salts))
 
     # --- introspection (annoylib.h:1238-1254) ----------------------------
     def n_items(self) -> int:
@@ -1110,7 +1137,6 @@ class AnnIndex:
         self._bucketed = store.read(self._spark, "buckets")
         self._sizes = sizes
         self._salts = salts
-        self._has_oversized = bool(salts)
         self._assign = _salted_assign(self._bucketed, sizes, bool(salts))
         self._n_items = n_items
         return self

@@ -118,9 +118,9 @@ def test_append_crossing_bucket_cap_resalts(spark, tmp_path):
     cfg = AnnIndexConfig(kind="forest", n_trees=4, bucket_cap=40, seed=42)
     root = str(tmp_path / "hot")
     idx = build_index(spark, mk(range(30)), root, cfg)
-    assert not idx._has_oversized
+    assert not idx._salts
     idx = idx.append(mk(range(1000, 1300)))
-    assert idx._has_oversized
+    assert idx._salts
     qs = spark.createDataFrame(
         [(9_000_000, base)], "vec_id long, embedding array<double>"
     )
@@ -288,7 +288,8 @@ def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
     """A 500-query batch from a local relation (the serving shape) runs
     no Python UDF and at most 6 Spark jobs: the batch fetch runs none,
     routing is numpy on the driver, and the rest is the stored-relation
-    joins and the re-rank."""
+    joins and the re-rank. The same batch as a non-local input is
+    fetched through Arrow and returns the same rows."""
     import pandas as pd
 
     cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
@@ -301,7 +302,8 @@ def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
         }),
         "vec_id long, embedding array<double>",
     )
-    idx.query(qs, k=10).collect()  # warm-up, not counted
+    assert qs.isLocal() and not qs.select("*").isLocal()
+    via_arrow = idx.query(qs.select("*"), k=10).collect()
     sc = spark.sparkContext
     sc.setJobGroup("driver_routed_batch", "500-query batch")
     try:
@@ -310,6 +312,7 @@ def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 5000
+    assert sorted(rows) == sorted(via_arrow)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     jobs = sc.statusTracker().getJobIdsForGroup("driver_routed_batch")

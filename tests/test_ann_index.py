@@ -376,8 +376,9 @@ def test_hamming_spill_levels_superset_and_bounded(spark):
     holds at most 2^d leaves per tree."""
     from annoy_spark.operators.forest import (
         build_hamming_tree,
-        hamming_forest_leaf_udf,
+        hamming_forest_leaves,
     )
+    from annoy_spark.operators.knn import keys_udf
 
     rng = np.random.default_rng(11)
     sig = rng.integers(-(2**62), 2**62, (300, 2)).astype(np.int64)
@@ -389,8 +390,8 @@ def test_hamming_spill_levels_superset_and_bounded(spark):
         "vec_id long, sig array<long>",
     )
     d = 2
-    base = hamming_forest_leaf_udf(trees, spill_levels=0)
-    wide = hamming_forest_leaf_udf(trees, spill_levels=d)
+    base = keys_udf(hamming_forest_leaves(trees, 0), np.int64)
+    wide = keys_udf(hamming_forest_leaves(trees, d), np.int64)
     rows = df.select(
         "vec_id", base("sig").alias("k0"), wide("sig").alias("kd")
     ).collect()
@@ -525,23 +526,31 @@ def test_auto_n_trees_memory_envelope(spark, corpus, tmp_path):
         )
 
 
-@pytest.mark.parametrize("path", ["driver", "executor"])
+@pytest.mark.parametrize("path", ["driver", "driver_local", "executor"])
 @pytest.mark.parametrize("bad", [None, [1.0] * 15], ids=["null", "15d"])
 def test_query_rejects_bad_vectors(spark, corpus, tmp_path, monkeypatch,
                                    path, bad):
     """A null or wrong-length query vector fails the query, naming its
     id, on both query paths: the driver path checks the fetched batch
-    before any job, the executor path fails the routing job through the
-    same JVM guard as item routing."""
+    (Arrow, or rows of a local pandas batch) before any routing job, the
+    executor path fails the routing job through the same JVM guard as
+    item routing."""
+    import pandas as pd
+
     import annoy_spark.sources.ann_index as ann_index
 
     cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
     idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
-    qs = spark.createDataFrame(
-        [(9_000_000, [0.5] * 16), (9_000_001, bad)],
-        "vec_id long, embedding array<double>",
-    )
-    if path == "driver":
+    data = [(9_000_000, [0.5] * 16), (9_000_001, bad)]
+    schema = "vec_id long, embedding array<double>"
+    if path == "driver_local":
+        qs = spark.createDataFrame(
+            pd.DataFrame(data, columns=["vec_id", "embedding"]), schema
+        )
+        assert qs.isLocal()
+    else:
+        qs = spark.createDataFrame(data, schema)
+    if path != "executor":
         with pytest.raises(ValueError, match="query 9000001"):
             idx.query(qs, k=5)
     else:

@@ -10,10 +10,10 @@ import pytest
 from annoy_spark.operators.forest import (
     build_forest,
     build_tree,
-    forest_leaf_udf,
+    forest_leaves,
     knn_forest,
 )
-from annoy_spark.operators.knn import knn_bruteforce
+from annoy_spark.operators.knn import keys_udf, knn_bruteforce
 
 
 def _recall(exact_rows, approx_rows, k):
@@ -74,10 +74,10 @@ def test_spill_widens_leaf_sets(spark, emb_df):
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     narrow = base.select(
-        "vec_id", forest_leaf_udf(trees, 0.0)("v").alias("keys")
+        "vec_id", keys_udf(forest_leaves(trees, 0.0))("v").alias("keys")
     ).collect()
     wide = base.select(
-        "vec_id", forest_leaf_udf(trees, 0.2)("v").alias("keys")
+        "vec_id", keys_udf(forest_leaves(trees, 0.2))("v").alias("keys")
     ).collect()
     wide_by_id = {r.vec_id: set(r.keys) for r in wide}
     grew = 0

@@ -108,7 +108,7 @@ def test_winnow_guarantee_random_blocks(seed):
 @settings(max_examples=40, deadline=None)
 def test_hamming_tree_partitions_and_routes_consistently(rows, seed):
     """Every sample lands in exactly one leaf, and routing the SAME rows
-    through hamming_forest_leaf_udf's bit logic reproduces the leaf the
+    through hamming_forest_leaves' bit logic reproduces the leaf the
     builder assigned — the margin contract of annoylib.h:744-752 (bit at
     position p, MSB-first within each 64-bit word)."""
     from annoy_spark.operators.forest import (
