@@ -8,33 +8,14 @@ defenses mirror Annoy's split-imbalance fallback (annoylib.h:1337-1425):
 1. sha256 pre-collapse — byte-identical files contribute ONE representative
    to LSH (their edges are emitted directly), so boilerplate mega-groups
    cost O(g) instead of O(g^2);
-2. tiered enumeration — small groups (<= cfg.pair_enum_cap) enumerate all
-   pairs (full verified-edge recall); medium groups enumerate star edges to
-   the group minimum only (O(g), clusters restored by CC); huge groups
-   (> cfg.band_group_cap) use a SALTED two-level star — members point at a
-   per-salt-bucket minimum, bucket minima point at the group minimum — so
-   no single reducer materializes the group's pairs and nothing is dropped
-   (the north rule's salted repartitioning). Huge groups are additionally
-   *accounted* (skipped_groups checkpoint) for skew observability.
-
-KNOWN APPROXIMATION of tiers 2-3 (deliberate, same tradeoff as Annoy's
-random-side fallback): star edges are verified INDIVIDUALLY against the
-group minimum, so two members that are true near-duplicates of each other
-but both fail verification against gmin are not linked through this band
-group. This only bites when a band group is *heterogeneous* — a band
-collision between documents that aren't actually similar to the group min
-— which for groups past pair_enum_cap (>64 docs agreeing on 4 minhashes)
-is overwhelmingly boilerplate families where members DO verify against
-gmin. The pair still has bands-1 other chances to collide in a small
-group, the substring pass links long verbatim blocks independently, and
-capped groups are accounted in skipped_groups so the recall exposure is
-observable, not silent. Raising pair_enum_cap trades reducer cost for
-exact enumeration (config knob, per-deployment).
+2. the skew ladder, ``tiered_pairs`` — the one pair enumerator shared by
+   banding, the substring pass's fingerprint families and the verify
+   stage's star-rescue pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from annoy_spark.config import DedupConfig
 
@@ -57,6 +38,110 @@ def exact_edges(signatures: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("file_id") == F.col("rep_id")
     ).drop("rep_id")
     return representatives, edges
+
+
+def _member(payload: str | None, prefix: str = "") -> Column:
+    return F.struct(*(prefix + c for c in ("file_id", payload) if c))
+
+
+def group_stats(keys: list[str], payload: str | None = None) -> list[Column]:
+    """The window columns ``tiered_pairs`` reads, in ONE window pass:
+    ``gm``, the group minimum as min(struct(file_id[, payload])) — file_id
+    is unique within a group, so the struct min is the minimum member
+    together with its own payload — and ``gsize``, the group size."""
+    w = Window.partitionBy(*keys)
+    return [
+        F.min(_member(payload)).over(w).alias("gm"),
+        F.count(F.lit(1)).over(w).alias("gsize"),
+    ]
+
+
+def tiered_pairs(
+    annotated: DataFrame,
+    keys: list[str],
+    pair_cap: int,
+    group_cap: int | None,
+    salt_buckets: int,
+    payload: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The skew ladder: (pairs, accounting) from members grouped by ``keys``.
+
+    annotated: one row per (group, member) with ``keys``, ``file_id``, the
+    optional ``payload`` column and ``group_stats(keys, payload)``. Callers
+    own its materialization.
+
+    pairs: (u, v, star[, pu, pv]) with u < v; pu/pv are the payloads of
+    the rows u and v come from.
+    - tier 1, 1 < gsize <= pair_cap: every pair (star = 0); the self-join
+      key equals the window partitioning, so neither side re-shuffles;
+    - tier 2, pair_cap < gsize <= group_cap: star edges to the group
+      minimum (star = 1), straight from the window columns;
+    - tier 3, gsize > group_cap: a SALTED two-level star (star = 1) —
+      members link to the minimum of their salt bucket, bucket minima to
+      the group minimum — so no reducer sees the whole group and nothing is
+      dropped. ``group_cap=None`` is unbounded: the filter folds to false
+      and the planner prunes tier 3.
+    accounting: (keys..., n_members) of the groups above group_cap.
+
+    KNOWN APPROXIMATION of tiers 2-3 (deliberate, same tradeoff as Annoy's
+    random-side fallback): star edges are verified INDIVIDUALLY against the
+    group minimum, so two members that are true near-duplicates of each
+    other but both fail verification against gmin are not linked through
+    this group. This only bites when a band group is *heterogeneous* — a
+    band collision between documents that aren't actually similar to the
+    group min — which for groups past pair_enum_cap (>64 docs agreeing on
+    4 minhashes) is overwhelmingly boilerplate families where members DO
+    verify against gmin. The pair still has bands-1 other chances to
+    collide in a small group, the substring pass links long verbatim
+    blocks independently, the verify stage's star-rescue pass re-enumerates
+    each center's failed members through this same ladder, and capped
+    groups are accounted so the recall exposure is observable, not silent.
+    Raising pair_enum_cap trades reducer cost for exact enumeration
+    (config knob, per-deployment).
+    """
+    gsize, fid = F.col("gsize"), F.col("file_id")
+    huge = gsize > group_cap if group_cap is not None else F.lit(False)
+    carry = [payload] if payload else []
+
+    def ends(star: int, u: Column, v: Column) -> list[Column]:
+        pay = ([u[payload].alias("pu"), v[payload].alias("pv")]
+               if payload else [])
+        return [u["file_id"].alias("u"), v["file_id"].alias("v"),
+                F.lit(star).alias("star"), *pay]
+
+    in_small = annotated.where((gsize > 1) & (gsize <= pair_cap)).select(
+        *keys, "file_id", *carry
+    )
+    full = (
+        in_small.alias("a")
+        .join(in_small.alias("b"), keys)
+        .where(F.col("a.file_id") < F.col("b.file_id"))
+        .select(*ends(0, _member(payload, "a."), _member(payload, "b.")))
+    )
+    star = annotated.where(
+        (gsize > pair_cap) & ~huge & (fid != F.col("gm.file_id"))
+    ).select(*ends(1, F.col("gm"), _member(payload)))
+    # the salt spreads the per-bucket window across salt_buckets reducers
+    sub = annotated.where(huge).select(
+        "*", F.pmod(F.xxhash64("file_id"), F.lit(salt_buckets)).alias("salt")
+    ).select(
+        "*",
+        F.min(_member(payload)).over(
+            Window.partitionBy(*keys, "salt")
+        ).alias("sm"),
+    )
+    # a member links to its bucket minimum; a bucket minimum to the group's
+    smin = F.col("sm.file_id")
+    salted = sub.where((fid != smin) | (fid != F.col("gm.file_id"))).select(
+        *ends(1, F.when(fid != smin, F.col("sm")).otherwise(F.col("gm")),
+              _member(payload))
+    )
+    accounting = (
+        annotated.where(huge)
+        .groupBy(*keys)
+        .agg(F.first("gsize").alias("n_members"))
+    )
+    return full.unionByName(star).unionByName(salted), accounting
 
 
 def all_candidate_edges(
@@ -85,95 +170,35 @@ def candidate_edges(
     candidate_pairs: distinct (u < v) file-id pairs sharing >= 1 band key.
     skipped_groups: (band_idx, band_key, n_members) for capped groups.
     """
+    keys = ["band_idx", "band_key"]
     bands = (
         representatives.where(F.col("n_shingles") >= 1)
-        .select("file_id", F.posexplode("band_keys").alias("band_idx", "band_key"))
-    )
-
-    # one shuffle total for group stats: window aggregates attach the group
-    # min (star center) and size to every member — no join-back scan
-    w = Window.partitionBy("band_idx", "band_key")
-    annotated = bands.select(
-        "file_id", "band_idx", "band_key",
-        F.min("file_id").over(w).alias("gmin"),
-        F.count(F.lit(1)).over(w).alias("gsize"),
+        .select("file_id", F.posexplode("band_keys").alias(*keys))
     )
     # materialize ONCE: five consumers reference this relation (skipped +
     # three tiers, twice in the tier-1 self-join) and Spark re-ran the
-    # explode + window sort per reference (guide §2.4 / §5). Narrow rows
-    # (5 int64-ish cols); lazily checkpointed — the first consumer's job
-    # materializes it. Block loss just fails the pipeline stage, which the
-    # per-stage checkpoint protocol already re-runs from `signatures`.
-    annotated = annotated.localCheckpoint(eager=False)
-
-    skipped = (
-        annotated.where(F.col("gsize") > cfg.band_group_cap)
-        .groupBy("band_idx", "band_key")
-        .agg(F.first("gsize").alias("n_members"))
+    # explode + window sort per reference (guide §2.4 / §5). Narrow rows;
+    # lazily checkpointed — the first consumer's job materializes it.
+    # Block loss just fails the pipeline stage, which the per-stage
+    # checkpoint protocol already re-runs from `signatures`.
+    annotated = bands.select("*", *group_stats(keys)).localCheckpoint(
+        eager=False
     )
-
-    # tier 1: full pair enumeration inside small groups — the self-join key
-    # equals the window partitioning, so no re-shuffle of either side
-    in_small = annotated.where(
-        (F.col("gsize") > 1) & (F.col("gsize") <= cfg.pair_enum_cap)
-    ).select("band_idx", "band_key", "file_id")
-    full_pairs = (
-        in_small.alias("a")
-        .join(in_small.alias("b"), ["band_idx", "band_key"])
-        .where(F.col("a.file_id") < F.col("b.file_id"))
-        .select(F.col("a.file_id").alias("u"), F.col("b.file_id").alias("v"))
+    pairs, skipped = tiered_pairs(
+        annotated, keys, cfg.pair_enum_cap, cfg.band_group_cap,
+        cfg.salt_buckets,
     )
-
-    # tier 2: star edges to the group min — directly from window columns,
-    # zero additional shuffles
-    star_pairs = annotated.where(
-        (F.col("gsize") > cfg.pair_enum_cap)
-        & (F.col("gsize") <= cfg.band_group_cap)
-        & (F.col("file_id") != F.col("gmin"))
-    ).select(F.col("gmin").alias("u"), F.col("file_id").alias("v"))
-
-    # tier 3: salted two-level star for huge groups — the salt spreads the
-    # per-bucket window across cfg.salt_buckets reducers
-    huge = annotated.where(F.col("gsize") > cfg.band_group_cap).select(
-        "band_idx", "band_key", "file_id", "gmin",
-        F.pmod(F.xxhash64("file_id"), F.lit(cfg.salt_buckets)).alias("salt"),
-    )
-    ws = Window.partitionBy("band_idx", "band_key", "salt")
-    sub = huge.select(
-        "*", F.min("file_id").over(ws).alias("smin")
-    )
-    salted_pairs = (
-        sub.where(F.col("file_id") != F.col("smin"))
-        .select(F.col("smin").alias("u"), F.col("file_id").alias("v"))
-        .unionByName(
-            sub.where(
-                (F.col("file_id") == F.col("smin"))
-                & (F.col("smin") != F.col("gmin"))
-            ).select(F.col("gmin").alias("u"), F.col("smin").alias("v"))
-        )
-    )
-
     # tier provenance: 'lsh' = fully enumerated (tier 1); 'lsh_star' = star
     # approximation (tiers 2-3) whose verification failures are eligible
-    # for the rescue pass (pipeline.py) — two star members that are true
-    # near-dups of each other but not of the group min would otherwise
-    # never get a direct edge and their cluster would silently split.
-    # A pair seen by BOTH tiers keeps kind='lsh' (already fully enumerated
-    # somewhere) but RETAINS from_star=1: rescue eligibility must survive
-    # the min-collapse, or a (center, member) edge that also occurred in a
-    # small band group would silently drop the member from the center's
-    # failed-member set and the split the rescue pass exists to fix could
-    # still occur through that path.
-    pairs = (
-        full_pairs.select("u", "v", F.lit("lsh").alias("kind"))
-        .unionByName(star_pairs.select("u", "v", F.lit("lsh_star").alias("kind")))
-        .unionByName(salted_pairs.select("u", "v", F.lit("lsh_star").alias("kind")))
-        .groupBy("u", "v")
-        .agg(
-            F.min("kind").alias("kind"),
-            F.max(
-                F.when(F.col("kind") == "lsh_star", 1).otherwise(0)
-            ).alias("from_star"),
-        )
+    # for the rescue pass (verify.py). A pair seen by BOTH tiers keeps
+    # kind='lsh' (already fully enumerated somewhere) but RETAINS
+    # from_star=1: rescue eligibility must survive the min-collapse, or a
+    # (center, member) edge that also occurred in a small band group would
+    # silently drop the member from the center's failed-member set and the
+    # split the rescue pass exists to fix could still occur through that
+    # path.
+    edges = pairs.groupBy("u", "v").agg(
+        F.when(F.min("star") == 0, "lsh").otherwise("lsh_star").alias("kind"),
+        F.max("star").alias("from_star"),
     )
-    return pairs, skipped
+    return edges, skipped

@@ -15,9 +15,9 @@ built across executors without an all-to-all of the corpus):
    fingerprint, regardless of alignment. Fully vectorized (prefix-product
    rolling hash + block prefix/suffix minima), ~2·len/window fingerprints
    per file.
-2. Fingerprint groupBy -> anchor pairs through the SAME three-tier skew
-   ladder as banding (full pairs / star / salted two-level star, nothing
-   dropped; huge fingerprint families additionally accounted).
+2. Fingerprint families -> anchor pairs through the skew ladder
+   (``band.tiered_pairs``: full pairs / star / salted two-level star,
+   nothing dropped; huge fingerprint families additionally accounted).
 3. DIAGONAL VOTING anchor selection: a shared block aligns the two files at
    one offset delta = pos_u - pos_v, and every shared fingerprint inside
    the block votes for that delta (the seed-and-extend diagonal trick).
@@ -38,12 +38,13 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, LongType, StructField, StructType,
 )
 
 from annoy_spark.config import DedupConfig
+from annoy_spark.operators.band import group_stats, tiered_pairs
 
 _B = np.uint64(0x100000001B3)  # odd => invertible mod 2^64
 _BINV = np.uint64(pow(0x100000001B3, -1, 1 << 64))
@@ -164,7 +165,7 @@ def make_fingerprint_udf(cfg: DedupConfig):
     schema = StructType(
         [
             StructField("fp", ArrayType(LongType())),
-            StructField("fp_pos", ArrayType(ArrayType(LongType()))),
+            StructField("poss", ArrayType(ArrayType(LongType()))),
         ]
     )
 
@@ -177,7 +178,7 @@ def make_fingerprint_udf(cfg: DedupConfig):
             )
             hs.append(h)
             ps.append([x for x in p])
-        return pd.DataFrame({"fp": hs, "fp_pos": ps})
+        return pd.DataFrame({"fp": hs, "poss": ps})
 
     return fp_udf
 
@@ -337,107 +338,25 @@ def substring_edges(
     fp_udf = make_fingerprint_udf(cfg)
 
     # one UDF pass, one row per (file, distinct fingerprint hash) with the
-    # capped position list; window-annotated group stats; persisted because
+    # capped position list as the ladder's payload; persisted because the
     # three tiers consume it (without persist the content-scanning UDF
     # would re-run per consumer)
-    w = Window.partitionBy("fp")
     fps = (
         corpus_with_ids.select(
             "file_id", fp_udf(F.col("content")).alias("f")
         )
-        .select("file_id", F.arrays_zip("f.fp", "f.fp_pos").alias("z"))
+        .select("file_id", F.arrays_zip("f.fp", "f.poss").alias("z"))
         .select("file_id", F.explode("z").alias("e"))
-        .select(
-            "file_id",
-            F.col("e.fp").alias("fp"),
-            F.col("e.fp_pos").alias("poss"),
-        )
-        .select(
-            "*",
-            # ONE window pass: min over (file_id, poss) structs orders by
-            # file_id first (unique within a group), so the struct min IS
-            # (gmin, gmin's position list) — the old two-pass form (min
-            # then max(when(file_id == gmin))) cost a second sort+window
-            # over the largest intermediate of the stage
-            F.min(F.struct("file_id", "poss")).over(w).alias("gm"),
-            F.count(F.lit(1)).over(w).alias("gsize"),
-        )
-        .select(
-            "file_id", "fp", "poss", "gsize",
-            F.col("gm.file_id").alias("gmin"),
-            F.col("gm.poss").alias("gmin_poss"),
-        )
+        .select("file_id", "e.fp", "e.poss")
+        .select("*", *group_stats(["fp"], "poss"))
         .persist()
     )
-
-    # tier 1: full pairs in small groups (self-join reuses fp partitioning)
-    in_small = fps.where(
-        (F.col("gsize") > 1) & (F.col("gsize") <= cfg.pair_enum_cap)
-    ).select("fp", "file_id", "poss")
-    full_pairs = (
-        in_small.alias("a")
-        .join(in_small.alias("b"), "fp")
-        .where(F.col("a.file_id") < F.col("b.file_id"))
-        .select(
-            F.col("a.file_id").alias("u"),
-            F.col("b.file_id").alias("v"),
-            F.col("a.poss").alias("pu_list"),
-            F.col("b.poss").alias("pv_list"),
-        )
+    # fingerprint families run the skew ladder; the huge ones
+    # (boilerplate/license blocks) are accounted in `skipped`
+    pairs, skipped = tiered_pairs(
+        fps, ["fp"], cfg.pair_enum_cap, cfg.band_group_cap,
+        cfg.salt_buckets, payload="poss",
     )
-    # tier 2: star edges to the group min — anchor positions directly from
-    # the window columns, zero extra shuffles
-    star_pairs = fps.where(
-        (F.col("gsize") > cfg.pair_enum_cap)
-        & (F.col("gsize") <= cfg.band_group_cap)
-        & (F.col("file_id") != F.col("gmin"))
-    ).select(
-        F.col("gmin").alias("u"),
-        F.col("file_id").alias("v"),
-        F.col("gmin_poss").alias("pu_list"),
-        F.col("poss").alias("pv_list"),
-    )
-    # tier 3: salted two-level star for huge fingerprint families
-    # (boilerplate/license blocks) — members point at a per-salt-bucket
-    # minimum, bucket minima at the family minimum; no reducer sees the
-    # whole family and nothing is dropped (band.py's ladder, same shape)
-    huge = fps.where(F.col("gsize") > cfg.band_group_cap).select(
-        "fp", "file_id", "poss", "gmin", "gmin_poss",
-        F.pmod(F.xxhash64("file_id"), F.lit(cfg.salt_buckets)).alias("salt"),
-    )
-    ws = Window.partitionBy("fp", "salt")
-    # same single-pass struct-min trick as the fps window above
-    sub = huge.select(
-        "*", F.min(F.struct("file_id", "poss")).over(ws).alias("sm")
-    ).select(
-        F.col("fp"), F.col("file_id"), F.col("poss"), F.col("gmin"),
-        F.col("gmin_poss"), F.col("salt"),
-        F.col("sm.file_id").alias("smin"),
-        F.col("sm.poss").alias("smin_poss"),
-    )
-    salted_pairs = (
-        sub.where(F.col("file_id") != F.col("smin"))
-        .select(
-            F.col("smin").alias("u"), F.col("file_id").alias("v"),
-            F.col("smin_poss").alias("pu_list"), F.col("poss").alias("pv_list"),
-        )
-        .unionByName(
-            sub.where(
-                (F.col("file_id") == F.col("smin"))
-                & (F.col("smin") != F.col("gmin"))
-            ).select(
-                F.col("gmin").alias("u"), F.col("smin").alias("v"),
-                F.col("gmin_poss").alias("pu_list"),
-                F.col("poss").alias("pv_list"),
-            )
-        )
-    )
-    skipped = (
-        fps.where(F.col("gsize") > cfg.band_group_cap)
-        .groupBy("fp")
-        .agg(F.first("gsize").alias("n_members"))
-    )
-    pairs = full_pairs.unionByName(star_pairs).unionByName(salted_pairs)
 
     # DIAGONAL VOTING: every shared fingerprint occurrence pair votes for
     # an alignment delta = pu - pv; the true shared block's diagonal gets
@@ -446,8 +365,8 @@ def substring_edges(
     # anchors under-extend, so anchoring on the winning diagonal is what
     # makes match_len the TRUE maximal length.
     combos = (
-        pairs.select("u", "v", F.explode("pu_list").alias("pu"), "pv_list")
-        .select("u", "v", "pu", F.explode("pv_list").alias("pv"))
+        pairs.select("u", "v", F.explode("pu").alias("pu"), "pv")
+        .select("u", "v", "pu", F.explode("pv").alias("pv"))
         .withColumn("delta", F.col("pu") - F.col("pv"))
     )
     # one SMALL shuffle: vote count + two boundary anchors per diagonal,

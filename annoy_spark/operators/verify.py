@@ -24,10 +24,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType
 
 from annoy_spark.config import DedupConfig
+from annoy_spark.operators.band import group_stats, tiered_pairs
 
 
 @F.pandas_udf(DoubleType())
@@ -216,37 +217,24 @@ def _score_lsh(
 def star_rescue_candidates(failed_star: DataFrame, cap: int) -> DataFrame:
     """Second-chance pairs for star-tier verification failures.
 
-    The star tiers (band.py tiers 2-3) only enumerate (group_min, member)
-    edges; two members that are true near-duplicates of each other but NOT
-    of the group min both fail verification and their edge is never seen —
-    the cluster silently splits. Failures are rare (a band collision
-    without pairwise similarity to the min), so enumerating pairs AMONG
-    the failed members of each star center is bounded: full O(f^2) up to
-    `cap` failures per center, a star to the min failed member beyond
-    (the same ladder one level down). Returned pairs carry
-    kind='lsh_rescue' and must still pass the exact re-rank.
+    The star tiers of ``band.tiered_pairs`` only enumerate (group_min,
+    member) edges; two members that are true near-duplicates of each other
+    but NOT of the group min both fail verification and their edge is never
+    seen — the cluster silently splits. Failures are rare (a band collision
+    without pairwise similarity to the min), so the failed members of each
+    star center go through ``tiered_pairs`` grouped by center: full pairs up
+    to `cap` failures per center, a star to the min failed member beyond,
+    and no salted tier. Returned pairs carry kind='lsh_rescue' and must
+    still pass the exact re-rank.
     """
-    w = Window.partitionBy("u")
-    ann = failed_star.select(
-        F.col("u").alias("center"),
-        F.col("v").alias("member"),
-        F.count(F.lit(1)).over(w).alias("fsize"),
-        F.min("v").over(w).alias("fmin"),
+    members = failed_star.select(
+        F.col("u").alias("center"), F.col("v").alias("file_id")
+    ).select("*", *group_stats(["center"]))
+    pairs, _ = tiered_pairs(
+        members, ["center"], cap, group_cap=None, salt_buckets=1
     )
-    small = ann.where(F.col("fsize") <= cap).select("center", "member")
-    full = (
-        small.alias("a")
-        .join(small.alias("b"), "center")
-        .where(F.col("a.member") < F.col("b.member"))
-        .select(
-            F.col("a.member").alias("u"), F.col("b.member").alias("v")
-        )
-    )
-    star = ann.where(
-        (F.col("fsize") > cap) & (F.col("member") != F.col("fmin"))
-    ).select(F.col("fmin").alias("u"), F.col("member").alias("v"))
     return (
-        full.unionByName(star)
+        pairs.select("u", "v")
         .distinct()
         .select("u", "v", F.lit("lsh_rescue").alias("kind"))
     )

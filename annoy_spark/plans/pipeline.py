@@ -9,8 +9,11 @@ surface replacing annoy's get_n_items/get_n_trees (annoylib.h:1238-1254).
 from __future__ import annotations
 
 import time
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from annoy_spark.config import DedupConfig
@@ -51,6 +54,36 @@ def _stage(store: CheckpointStore, spark: SparkSession, name: str,
     metrics[name] = {"resumed": False, "duration_s": dur, "n_rows": n}
     store.log_lineage(spark, {"stage": name, "n_rows": n, "duration_s": dur})
     return out
+
+
+def _run_branches(sc: SparkContext, *branches):
+    """Results of the branches, run in concurrent driver threads.
+
+    Each thread tags its Spark jobs with a tag unique to the branch and
+    the call. When a branch fails, every branch's jobs are cancelled, again
+    and again until all branches have finished, so jobs a sibling submits
+    after the failure are cancelled too; then the first failure is raised.
+    A failed branch never waits for its siblings to run to the end."""
+    tags = [f"annoy_spark-{uuid.uuid4().hex}" for _ in branches]
+
+    def tagged(tag, branch):
+        sc.addJobTag(tag)
+        try:
+            return branch()
+        finally:
+            sc.removeJobTag(tag)
+
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futs = [pool.submit(tagged, t, b) for t, b in zip(tags, branches)]
+        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
+        failed = next((f for f in done if f.exception()), None)
+        if failed is None:
+            return [f.result() for f in futs]
+        while not all(f.done() for f in futs):
+            for tag in tags:
+                sc.cancelJobsWithTag(tag)
+            wait(futs, timeout=0.2)
+        raise failed.exception()
 
 
 def run_pipeline(
@@ -117,16 +150,12 @@ def run_pipeline(
         # second back-fills, which is exactly the wanted shape. Stage
         # checkpoints, metrics keys, and lineage files are disjoint, so
         # the resume protocol is unchanged.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_v = pool.submit(run_band_verify)
-            fut_s = pool.submit(
-                _stage, store, spark, "substring_edges", build_substring,
-                metrics, resume,
-            )
-            verified = fut_v.result()
-            sub_edges = fut_s.result()
+        verified, sub_edges = _run_branches(
+            spark.sparkContext,
+            run_band_verify,
+            lambda: _stage(store, spark, "substring_edges", build_substring,
+                           metrics, resume),
+        )
     else:
         verified = run_band_verify()
     skipped = store.read(spark, "skipped_groups")

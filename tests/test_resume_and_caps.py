@@ -231,3 +231,119 @@ def test_star_rescue_connects_split_members(spark):
     cfg_off = DedupConfig(enable_substring=False, star_rescue_cap=0)
     out_off = verify(cand, sign(corpus, cfg_off), cfg_off).collect()
     assert ab not in {(r.u, r.v) for r in out_off}
+
+
+def _ladder_want(groups, pair_cap, group_cap, salt):
+    """(u, v, star) edges the skew ladder must emit, tier by tier."""
+    want = set()
+    for members in groups.values():
+        gmin = min(members)
+        if len(members) <= pair_cap:
+            want |= {(a, b, 0) for a in members for b in members if a < b}
+        elif group_cap is None or len(members) <= group_cap:
+            want |= {(gmin, m, 1) for m in members if m != gmin}
+        else:
+            buckets: dict[int, list[int]] = {}
+            for m in members:
+                buckets.setdefault(salt[m], []).append(m)
+            for bucket in buckets.values():
+                smin = min(bucket)
+                want |= {(smin, m, 1) for m in bucket if m != smin}
+                if smin != gmin:
+                    want.add((gmin, smin, 1))
+    return want
+
+
+def test_tiered_pairs_ladder(spark):
+    """The one skew ladder band, substring and the star rescue share: full
+    pairs up to pair_cap, a star to the group minimum up to group_cap, a
+    salted two-level star beyond, payloads carried to both ends, huge
+    groups accounted; an unbounded group_cap never salts."""
+    from annoy_spark.operators.band import group_stats, tiered_pairs
+
+    pair_cap, group_cap, buckets = 3, 5, 2
+    sizes = [1, 2, pair_cap, pair_cap + 1, group_cap, group_cap + 1,
+             3 * group_cap]
+    # member ids interleave across groups, so no group's min is its first row
+    ids = [(g, 10**5 - 7 * (100 * i + g))
+           for g, n in enumerate(sizes) for i in range(n)]
+    rows = [(g, fid, f"p{fid}") for g, fid in ids]
+    groups: dict[int, list[int]] = {}
+    for g, fid, _ in rows:
+        groups.setdefault(g, []).append(fid)
+    df = spark.createDataFrame(rows, "g int, file_id long, pay string")
+    salt = dict(df.select(
+        "file_id", F.pmod(F.xxhash64("file_id"), F.lit(buckets))
+    ).collect())
+    ann = df.select("*", *group_stats(["g"], "pay"))
+
+    pairs, acc = tiered_pairs(ann, ["g"], pair_cap, group_cap, buckets,
+                              payload="pay")
+    got = pairs.collect()
+    assert all(r.pu == f"p{r.u}" and r.pv == f"p{r.v}" for r in got)
+    edges = [(r.u, r.v, r.star) for r in got]
+    assert len(edges) == len(set(edges))
+    assert set(edges) == _ladder_want(groups, pair_cap, group_cap, salt)
+    # the two-level star really has a second level in the largest group
+    big = groups[len(sizes) - 1]
+    assert len({salt[m] for m in big}) == buckets
+    assert any(u == min(big) and salt[v] != salt[u] for u, v, _ in edges)
+    assert sorted(tuple(r) for r in acc.collect()) == [
+        (5, group_cap + 1), (6, 3 * group_cap)]
+
+    # rescue-style call: unbounded group_cap, no payload
+    ann = df.select("g", "file_id", *group_stats(["g"]))
+    pairs, acc = tiered_pairs(ann, ["g"], pair_cap, None, buckets)
+    assert "salt" not in pairs._jdf.queryExecution().optimizedPlan().toString()
+    edges = [(r.u, r.v, r.star) for r in pairs.collect()]
+    assert set(edges) == _ladder_want(groups, pair_cap, None, salt)
+    assert acc.collect() == []
+
+
+def test_failed_branch_cancels_sibling_and_resume_recovers(
+    spark, tmp_path, monkeypatch
+):
+    """A failing band->verify branch must surface promptly: the substring
+    branch's jobs are cancelled, not waited for. A resumed rerun with the
+    real stages then gives the clusters of a fresh run."""
+    import time
+
+    from annoy_spark.plans import pipeline
+
+    cfg = DedupConfig()
+    corpus, _ = generate_corpus(spark, 200, seed=5, partitions=4)
+    out = tmp_path / "ck"
+
+    def failing_verify(*a, **kw):
+        raise RuntimeError("injected verify failure")
+
+    @F.udf("long")
+    def sleepy(x):
+        import time as t
+
+        t.sleep(180)
+        return x
+
+    def slow_substring(corpus_reps, cfg, return_skipped=False):
+        edges = corpus_reps.select(
+            sleepy("file_id").alias("u"), F.col("file_id").alias("v"),
+            F.lit(0).cast("long").alias("match_len"),
+        )
+        return edges, edges.select("u")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "verify", failing_verify)
+        m.setattr(pipeline, "substring_edges", slow_substring)
+        t0 = time.time()
+        with pytest.raises(RuntimeError, match="injected verify failure"):
+            run_pipeline(spark, corpus, cfg, str(out), resume=True)
+        assert time.time() - t0 < 60, "failure waited for the sibling"
+
+    r2 = run_pipeline(spark, corpus, cfg, str(out), resume=True)
+    assert r2.metrics["signatures"]["resumed"] is True
+    assert r2.metrics["candidate_edges"]["resumed"] is True
+    assert r2.metrics["verified_edges"]["resumed"] is False
+    fresh = run_pipeline(spark, corpus, cfg, str(tmp_path / "fresh"),
+                         resume=False)
+    got = {r.file_id: r.cluster_id for r in r2.clusters.collect()}
+    assert got == {r.file_id: r.cluster_id for r in fresh.clusters.collect()}

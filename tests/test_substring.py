@@ -141,3 +141,41 @@ def test_substring_deterministic_across_partitioning(spark, sub_corpus):
     b = {(r.u, r.v, r.match_len)
          for r in substring_edges(sub_corpus.repartition(5), CFG).collect()}
     assert a == b
+
+
+def test_skewed_fingerprint_family(spark):
+    """Fingerprint families past pair_enum_cap take the ladder's star and
+    salted two-level star tiers: a block shared by 12 files (a family past
+    band_group_cap) and a second block shared by 4 of them (a star-tier
+    family) still connect every file, and the huge family is accounted
+    with its member count."""
+    from dataclasses import replace
+
+    from annoy_spark.operators.cluster import connected_components
+
+    rng = np.random.default_rng(31)
+
+    def text(n):
+        return " ".join(f"tk{v}" for v in rng.integers(0, 3000, size=n))
+
+    block_a, block_b = text(500), text(500)   # ~2.7 KB each
+    assert min(len(block_a), len(block_b)) > CFG.min_substring_len
+    rows = [(i, text(60) + " " + block_a + " " + text(60)) for i in range(12)]
+    rows[11] = (11, rows[11][1] + " " + block_b)
+    rows += [(i, text(60) + " " + block_b + " " + text(60))
+             for i in range(12, 15)]
+    corpus = spark.createDataFrame(rows, "file_id long, content string")
+    cfg = replace(CFG, pair_enum_cap=2, band_group_cap=5, salt_buckets=3)
+
+    edges, skipped = substring_edges(corpus, cfg, return_skipped=True)
+    edges = edges.collect()
+    assert all(r.match_len >= cfg.min_substring_len for r in edges)
+    # star tiers: far fewer edges than the C(12,2) + C(4,2) full pairs
+    assert len(edges) < 66 + 6
+    labels = connected_components(
+        spark.createDataFrame([(r.u, r.v) for r in edges], "u long, v long")
+    ).collect()
+    assert {r.doc_id for r in labels} == set(range(15))
+    assert len({r.cluster_id for r in labels}) == 1
+    sk = skipped.collect()
+    assert sk and {r.n_members for r in sk} == {12}, sk
