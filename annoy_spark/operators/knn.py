@@ -103,11 +103,16 @@ def _unit(raw: F.Column) -> F.Column:
     return F.when(n > 0, F.transform(raw, lambda x: x / n)).otherwise(raw)
 
 
+def _norm2_rows(mat: np.ndarray) -> np.ndarray:
+    """_norm2 of every row of a matrix, bit for bit: the same left fold
+    from 0.0 (cumsum, not np.linalg.norm's pairwise sum)."""
+    return np.cumsum(mat * mat, axis=1)[:, -1]
+
+
 def _unit_rows(mat: np.ndarray) -> np.ndarray:
-    """_unit over the rows of a matrix, bit for bit: the norm is the same
-    left fold from 0.0 (cumsum, not np.linalg.norm's pairwise sum), and a
-    zero row stays as it is."""
-    n = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1:])
+    """_unit over the rows of a matrix, bit for bit: the norm is the
+    square root of _norm2_rows, and a zero row stays as it is."""
+    n = np.sqrt(_norm2_rows(mat))[:, None]
     return np.divide(mat, n, out=mat.copy(), where=n > 0)
 
 

@@ -421,13 +421,16 @@ def substring_edges(
     # materialize the (small) anchored set once: cuts the UDF lineage so
     # fps can be unpersisted, and gives the exact count that sizes the
     # pair join. Lazy: the count materializes the checkpoint in the same
-    # job, and it runs before fps.unpersist() below.
-    anchored = anchored.localCheckpoint(eager=False)
-    small = anchored.count() <= PAIR_BROADCAST_CAP
-    if return_skipped:
-        # consumed after fps is unpersisted -> cut its lineage now
-        skipped = skipped.localCheckpoint(eager=True)
-    fps.unpersist()
+    # job, and it runs before fps.unpersist() below — which runs even when
+    # these jobs fail or are cancelled, so fps never outlives the call.
+    try:
+        anchored = anchored.localCheckpoint(eager=False)
+        small = anchored.count() <= PAIR_BROADCAST_CAP
+        if return_skipped:
+            # consumed after fps is unpersisted -> cut its lineage now
+            skipped = skipped.localCheckpoint(eager=True)
+    finally:
+        fps.unpersist()
 
     # exact anchored extension over whole-file contents. Content never
     # carries a broadcast hint; a small pair set does: it joins into a

@@ -45,15 +45,19 @@ the true metric (annoylib.h:1492-1494). ``spill_eps`` is applied on the
 QUERY side only — annoy's search_k is a query-time knob
 (annoylib.h:1447-1480), so one stored index serves every accuracy budget.
 
-Scale shape: one bounded fetch of at most SMALL_QUERY_MAX + 1 query rows
-decides (no job for a local input; any other input comes back as Arrow,
-cheap to drop when the batch is over the cap). A batch within the cap is
-routed on the driver with the same numpy kernels the executor UDFs run
-(annoy answers in-process against the mapped index, annoylib.h:1447-1504)
-and joins the stored relations as exact-sized local relations, so the
-planner broadcasts whichever side is small; a LARGE batch (e.g.
-re-indexing the corpus against itself) is routed by the UDF on the
-executors and joins through shuffle equi-joins.
+Scale shape: one bounded fetch of at most SMALL_QUERY_MAX + 1 rows of a
+query or append batch decides (no job for a local input; any other input
+comes back as Arrow, cheap to drop when the batch is over the cap). A
+batch within the cap is checked and routed on the driver with the same
+numpy kernels the executor UDFs run (annoy answers and adds items
+in-process against the mapped index, annoylib.h:1080-1091, 1447-1504).
+A query batch joins the stored relations as exact-sized local relations,
+so the planner broadcasts whichever side is small; an append batch is
+staged with pyarrow, and its commit reads only the stored counts of the
+buckets it touched — no append cost grows with the stored index beyond
+the one id-clash semi-join. A LARGE batch (e.g. re-indexing the corpus
+against itself) is routed by the UDF on the executors: queries join
+through shuffle equi-joins, appends stage through Spark writes.
 No join carries a hint: the stored buckets/vectors relations are only
 ever scanned and equi-joined, and AQE sizes the candidate relation.
 
@@ -67,6 +71,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import uuid
 from dataclasses import asdict, dataclass, replace
 from pathlib import Path
 
@@ -87,6 +92,7 @@ from annoy_spark.operators.knn import (
     _cap_buckets,
     _dot,
     _norm2,
+    _norm2_rows,
     _unit,
     _unit_rows,
     hamming_keys_col,
@@ -102,9 +108,10 @@ _KIND_METRICS = {
     "lsh": ("angular", "dot", "euclidean", "manhattan", "hamming"),
 }
 
-#: query batches at or below this row count are fetched and routed on the
-#: driver and join the stored relations as local relations; larger batches
-#: route on the executors (routing UDF + shuffle equi-joins). The driver
+#: query and append batches at or below this row count are fetched and
+#: routed on the driver (queries join the stored relations as local
+#: relations, appends stage with pyarrow); larger batches route on the
+#: executors (routing UDF + shuffle equi-joins / Spark writes). The driver
 #: path was the faster one at every batch size measured up to this cap
 #: (4 cores, 64-d forest), so the cap bounds driver memory, not time: a
 #: 65,536 x 64-d batch peaks near 290 MB of Python heap on the driver.
@@ -175,6 +182,31 @@ def _mips_aug(raw: F.Column, max_n2: float, query_side: bool) -> F.Column:
     )
 
 
+def _mips_aug_rows(
+    raw: np.ndarray, max_n2: float, query_side: bool
+) -> np.ndarray:
+    """_mips_aug over the rows of a matrix, bit for bit: items gain
+    sqrt(max(0, M^2 - |x|^2)), queries gain 0."""
+    if query_side:
+        extra = np.zeros(len(raw))
+    else:
+        extra = np.sqrt(np.maximum(0.0, max_n2 - _norm2_rows(raw)))
+    return np.hstack([raw, extra[:, None]])
+
+
+def _check_max_norm(max_norm2: float, model: "AnnModel") -> None:
+    """The MIPS augmentation sqrt(M^2-|x|^2) is frozen at build
+    (annoylib.h:605-703 preprocess); an appended item with a larger norm
+    would silently clamp to 0 and lose recall, so it is refused."""
+    m2 = float(model.arrays["max_n2"][0])
+    if max_norm2 > m2 * (1 + 1e-9):
+        raise ValueError(
+            f"appended item norm^2 {max_norm2:.6g} exceeds the stored "
+            f"MIPS max-norm^2 {m2:.6g} — rebuild the index "
+            "(annoy freezes the preprocess scale at build)"
+        )
+
+
 def _stored_vec(cfg: AnnIndexConfig, vec_col: str) -> F.Column:
     """The vector representation persisted with the index and used by the
     exact re-rank: unit vectors for angular (annoy caches norms,
@@ -183,6 +215,11 @@ def _stored_vec(cfg: AnnIndexConfig, vec_col: str) -> F.Column:
         return F.col(vec_col).cast("array<long>")
     raw = F.col(vec_col).cast("array<double>")
     return _unit(raw) if cfg.metric == "angular" else raw
+
+
+def _stored_rows(cfg: AnnIndexConfig, raw: np.ndarray) -> np.ndarray:
+    """_stored_vec over the rows of a fetched batch, bit for bit."""
+    return _unit_rows(raw) if cfg.metric == "angular" else raw
 
 
 def _distance(cfg: AnnIndexConfig, qv: str, nv: str) -> F.Column:
@@ -408,17 +445,20 @@ class AnnModel:
 
     def route(
         self, raw: np.ndarray, spill_eps: float = 0.0,
-        nprobe: int | None = None,
+        nprobe: int | None = None, query_side: bool = True,
     ) -> list[np.ndarray]:
-        """Query-side keys of every row of ``raw`` (raw vectors; int64
-        words for hamming), on the driver: the same kernels and the same
-        projections as ``keys_col(..., query_side=True)``, bit for bit.
-        LSH hamming keys are a JVM expression; evaluate keys_col there."""
+        """Keys of every row of ``raw`` (raw vectors; int64 words for
+        hamming), on the driver: the same kernels and the same projections
+        as ``keys_col(..., query_side)``, bit for bit — query batches and
+        appended item batches alike. LSH hamming keys are a JVM
+        expression; evaluate keys_col there."""
         if not len(raw):
             return []
-        kernel, _ = self._router(True, spill_eps, nprobe)
+        kernel, _ = self._router(query_side, spill_eps, nprobe)
         if self.cfg.metric == "dot":
-            raw = np.hstack([raw, np.zeros((len(raw), 1))])  # query aug: 0
+            raw = _mips_aug_rows(
+                raw, float(self.arrays["max_n2"][0]), query_side
+            )
         if self._unit_routed:
             raw = _unit_rows(raw)
         return list(kernel(raw))
@@ -579,8 +619,25 @@ def _salted_assign(
 
 def _salt_map(sizes: DataFrame) -> dict[int, int]:
     """{bucket: m} of the oversized buckets, collected once per build /
-    load / append so query batches replicate salts on the driver."""
+    load so query batches replicate salts on the driver (an append merges
+    its delta into the map instead, see _merged_salts)."""
     return {r["bucket"]: r["m"] for r in sizes.collect()}
+
+
+def _sizes_relation(
+    spark: SparkSession, salts: dict[int, int]
+) -> DataFrame:
+    """(bucket, m) of the oversized buckets as a local relation built
+    from the salt map: the broadcast side of the item salting and of the
+    executor query side's replication. Tiny by construction, so there is
+    nothing to cache."""
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"bucket": list(salts), "m": list(salts.values())},
+            dtype=np.int64,
+        ),
+        "bucket long, m long",
+    )
 
 
 def _replicate_salts(
@@ -599,11 +656,12 @@ def _replicate_salts(
 def _query_head(
     queries: DataFrame, model: AnnModel, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(qid, raw, ok[, keys]): what the driver fetches of a query batch —
-    the raw vector in the stored element type, its validity flag, plus
-    the keys where they are a JVM expression (guarded, so a bad vector
-    reaches _route_on_driver's check instead of failing inside the
-    expression)."""
+    """(qid, raw, ok[, keys]): what the driver fetches of a query batch
+    or of an appended item batch (``qid`` is then the item id) — the raw
+    vector in the stored element type, its validity flag, plus the keys
+    where they are a JVM expression (LSH hamming bit sampling, the same
+    on both sides; guarded, so a bad vector reaches _route_on_driver's
+    check instead of failing inside the expression)."""
     cfg = model.cfg
     raw = F.col(vec_col).cast(
         "array<long>" if cfg.metric == "hamming" else "array<double>"
@@ -620,15 +678,17 @@ def _query_head(
 
 def _route_on_driver(
     rows: list, model: AnnModel, spill_eps: float = 0.0,
-    nprobe: int | None = None,
+    nprobe: int | None = None, query_side: bool = True,
 ) -> tuple[np.ndarray, list[np.ndarray]]:
-    """(raw matrix, per-row keys) of fetched _query_head rows; a null or
-    wrong-length vector raises ValueError naming its query id."""
+    """(raw matrix, per-row keys) of fetched _query_head rows, routed on
+    the query or the item side; a null or wrong-length vector raises
+    ValueError naming its id, in the executor paths' words."""
     cfg = model.cfg
+    what = "query" if query_side else "item"
     for r in rows:
         if not r["ok"]:
             raise ValueError(
-                f"invalid vector for query {r['qid']}: need a non-null "
+                f"invalid vector for {what} {r['qid']}: need a non-null "
                 f"array of {cfg.dim} elements"
             )
     raw = np.array(
@@ -637,11 +697,12 @@ def _route_on_driver(
     ).reshape(len(rows), cfg.dim)
     if model.jvm_keys:
         return raw, [np.asarray(r["keys"], dtype=np.int64) for r in rows]
-    return raw, model.route(raw, spill_eps, nprobe)
+    return raw, model.route(raw, spill_eps, nprobe, query_side)
 
 
 def _fetch_batch(queries: DataFrame, head: DataFrame) -> list | None:
-    """The rows of ``head`` (_query_head of ``queries``) if the batch has
+    """The rows of ``head`` (_query_head of ``queries``, a query or an
+    appended item batch) if the batch has
     at most SMALL_QUERY_MAX rows, else None. A local input (e.g. a pandas
     batch under spark.sql.execution.arrow.localRelationThreshold) is
     already in driver memory, so collecting it runs no job; anything
@@ -671,7 +732,7 @@ def _local_query_side(
     )
     qids = np.empty(len(rows), dtype=object)
     qids[:] = [r["qid"] for r in rows]
-    qv = _unit_rows(raw) if cfg.metric == "angular" else raw
+    qv = _stored_rows(cfg, raw)
     vec_type = LongType() if cfg.metric == "hamming" else DoubleType()
     routes = spark.createDataFrame(
         pd.DataFrame({"qid": qids[row], "bucket": bucket, "salt": salt}),
@@ -810,18 +871,130 @@ def _staging_complete(root: str) -> bool:
     )
 
 
+#: the counts artifact's schema, so reading it runs no inference job
+_COUNTS_SCHEMA = "bucket long, gsize long"
+
+
+def _stage_on_driver(
+    staging: Path, ids: list, raw: np.ndarray, keys: list[np.ndarray],
+    cfg: AnnIndexConfig, nid_type,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Write a driver-routed batch's staged vectors / buckets / counts
+    with pyarrow, one file each plus _SUCCESS (no Spark job); returns the
+    batch's count delta (touched buckets, gsize). File names are unique,
+    because publishing skips a name already present."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    stored = _stored_rows(cfg, raw)
+    n, dim = stored.shape
+    v = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32)),
+        pa.array(stored.ravel()),
+    )
+    nid = pa.array(ids, type=to_arrow_type(nid_type))
+    n_keys = np.fromiter(map(len, keys), np.int64, n)
+    bucket = np.concatenate(keys).astype(np.int64)
+    touched, gsize = np.unique(bucket, return_counts=True)
+    tables = {
+        "vectors": pa.table({"nid": nid, "v": v}),
+        "buckets": pa.table({
+            "bucket": bucket,
+            "nid": nid.take(np.repeat(np.arange(n), n_keys)),
+        }),
+        "counts": pa.table({"bucket": touched, "gsize": gsize}),
+    }
+    for stage, table in tables.items():
+        d = staging / stage
+        d.mkdir(parents=True)
+        pq.write_table(table, d / f"part-00000-{uuid.uuid4()}.parquet")
+        (d / "_SUCCESS").touch()
+    return touched, gsize
+
+
+def _stage_on_executors(
+    spark: SparkSession, staging: Path, items: DataFrame, model: AnnModel,
+    id_col: str, vec_col: str,
+) -> tuple[np.ndarray, np.ndarray, int]:
+    """Stage a batch over SMALL_QUERY_MAX through the routing UDF; returns
+    (touched buckets, gsize, rows staged). ONE routing pass: the UDF
+    lineage is materialized once into the staged 'routed' relation and
+    vectors/buckets/counts all derive from its re-read, so a
+    non-deterministic input can never persist counts that diverge from
+    the bucket rows (and the UDF is not re-paid per artifact)."""
+    _routed_items(items, model, id_col, vec_col).write.parquet(
+        str(staging / "routed")
+    )
+    routed = spark.read.parquet(str(staging / "routed"))
+    routed.select("nid", "v").write.parquet(str(staging / "vectors"))
+    routed.select(
+        F.explode("keys").alias("bucket"), "nid"
+    ).write.parquet(str(staging / "buckets"))
+    # count DELTA only — history is never rewritten (snapshot-append);
+    # recounted from the staged bucket rows
+    _bucket_counts(
+        spark.read.parquet(str(staging / "buckets"))
+    ).write.parquet(str(staging / "counts"))
+    delta = spark.read.schema(_COUNTS_SCHEMA).parquet(
+        str(staging / "counts")
+    ).toArrow()
+    return (
+        delta["bucket"].to_numpy(), delta["gsize"].to_numpy(),
+        routed.count(),
+    )
+
+
+def _merged_salts(
+    spark: SparkSession, root: str, salts: dict[int, int],
+    touched: np.ndarray, gsize: np.ndarray, bucket_cap: int,
+) -> dict[int, int]:
+    """The salt map after an append: ``salts`` with every bucket the
+    batch touched re-derived from its full total — its stored partial
+    counts (one job: the counts artifact semi-joined to the touched
+    buckets, summed on the driver) plus the batch's delta. Buckets the
+    batch did not touch keep their m, so nothing here scales with the
+    stored index."""
+    stored = (
+        spark.read.schema(_COUNTS_SCHEMA).parquet(str(Path(root) / "counts"))
+        .join(
+            spark.createDataFrame(
+                pd.DataFrame({"bucket": touched}), "bucket long"
+            ),
+            "bucket", "left_semi",
+        )
+        .toArrow()
+    )
+    ub, inv = np.unique(
+        np.concatenate([stored["bucket"].to_numpy(), touched]),
+        return_inverse=True,
+    )
+    total = np.zeros(len(ub), np.int64)
+    np.add.at(total, inv, np.concatenate([stored["gsize"].to_numpy(), gsize]))
+    out = dict(salts)
+    for b, t in zip(ub.tolist(), total.tolist()):
+        if t > bucket_cap:
+            out[b] = -(-t // bucket_cap)  # ceil(gsize / cap), as _oversized
+        else:
+            out.pop(b, None)
+    return out
+
+
 def _publish_staged(
-    spark: SparkSession, root: str, cfg: AnnIndexConfig
+    spark: SparkSession, root: str, cfg: AnnIndexConfig,
+    n_items: int | None = None, has_oversized: bool | None = None,
 ) -> None:
     """COMMIT a fully staged append batch: move the staged data files
-    into the live artifact dirs, re-stamp stage metas, recompute the
-    model meta from the published artifacts (n_items from the vectors
+    into the live artifact dirs, re-stamp stage metas, write the model
+    meta, then drop staging + the pending marker (marker last: its
+    absence IS the commit record). ``append`` passes the new n_items
+    (stored + batch) and has_oversized (from its merged salt map), so a
+    commit scans nothing; ``repair_append`` passes neither, and the meta
+    is recounted from the published artifacts (n_items from the vectors
     relation, has_oversized from the summed counts — both idempotent
-    under re-publish), then drop staging + the pending marker (marker
-    last: its absence IS the commit record). On Iceberg the three
-    appends + meta collapse into one transactional snapshot commit; the
-    parquet degradation gets the same all-or-repairable contract from
-    this ordering."""
+    under re-publish). On Iceberg the three appends + meta collapse into
+    one transactional snapshot commit; the parquet degradation gets the
+    same all-or-repairable contract from this ordering."""
     import shutil
 
     staging = Path(root) / _STAGING
@@ -830,12 +1003,15 @@ def _publish_staged(
         store.publish_files(stage, staging / stage)
         # files arrived by RENAME, which bypasses the write path's
         # automatic recache: refresh file listings AND any cached plan
-        # fragment over this path (e.g. the build-time sizes cache),
-        # or readers keep serving the pre-append snapshot
+        # fragment over this path, or readers keep serving the
+        # pre-append snapshot
         spark.catalog.refreshByPath(str(Path(root) / stage))
-    counts = store.read(spark, "counts")
-    has_oversized = _oversized(counts, cfg.bucket_cap).limit(1).count() > 0
-    n_items = store.read(spark, "vectors").count()
+    if n_items is None:
+        counts = store.read(spark, "counts")
+        has_oversized = (
+            _oversized(counts, cfg.bucket_cap).limit(1).count() > 0
+        )
+        n_items = store.read(spark, "vectors").count()
     _write_meta(root, cfg, has_oversized=has_oversized, n_items=n_items)
     shutil.rmtree(staging, ignore_errors=True)
     (Path(root) / _PENDING).unlink(missing_ok=True)
@@ -873,7 +1049,6 @@ class AnnIndex:
         model: AnnModel,
         vectors: DataFrame,
         bucketed: DataFrame,
-        sizes: DataFrame,
         salts: dict[int, int],
         spark: SparkSession | None = None,
         root: str | None = None,
@@ -883,12 +1058,18 @@ class AnnIndex:
         self.cfg = model.cfg
         self._spark = spark
         self._root = root
+        self._set_body(vectors, bucketed, salts, n_items)
+
+    def _set_body(
+        self, vectors: DataFrame, bucketed: DataFrame,
+        salts: dict[int, int], n_items: int | None,
+    ) -> None:
         self._n_items = n_items
         self._vectors = vectors
         self._bucketed = bucketed
-        self._sizes = sizes
         self._salts = salts
-        self._assign = _salted_assign(bucketed, sizes, bool(salts))
+        self._sizes = _sizes_relation(vectors.sparkSession, salts)
+        self._assign = _salted_assign(bucketed, self._sizes, bool(salts))
 
     # --- introspection (annoylib.h:1238-1254) ----------------------------
     def n_items(self) -> int:
@@ -1010,10 +1191,10 @@ class AnnIndex:
         return _top_k(res.where(F.col("qid") != F.col("nid")), k)
 
     def unload(self) -> None:
-        """annoy ``unload`` (annoylib.h:1141-1165): drop the cached
-        relations; the persisted artifacts stay on disk and the index
-        re-loads via load_index."""
-        self._sizes.unpersist()
+        """annoy ``unload`` (annoylib.h:1141-1165). Nothing is cached —
+        the oversized-bucket relation is a local relation built from the
+        salt map — so there is nothing to drop; the persisted artifacts
+        stay on disk and the index re-loads via load_index."""
 
     def append(
         self,
@@ -1028,13 +1209,24 @@ class AnnIndex:
         the full rebuild: the ROUTER IS FROZEN (same trees/centroids/
         planes — the set_seed contract keeps old answers stable), new
         items are routed with it and appended to the vectors/buckets
-        artifacts, and only the per-bucket count DELTAS are written. The
-        oversized-bucket relation and the derived salts refresh from the
-        summed counts, so a bucket that crosses bucket_cap mid-life
-        re-salts consistently for ALL its items on the next query.
+        artifacts, and only the per-bucket count DELTAS are written.
+
+        A batch of at most SMALL_QUERY_MAX rows takes the query batches'
+        driver path: one bounded fetch (_fetch_batch; no job for a local
+        input), the vector checks in numpy, item-side routing with the
+        same kernels, and the staged artifacts written with pyarrow. A
+        larger batch is checked and routed on the executors. Every check
+        (dim, null or wrong-length vector naming its id, the MIPS
+        max-norm, id clashes) runs before the pending marker is written.
+
+        The commit reads only what the batch touched: n_items becomes the
+        stored count plus the batch, and the salt map is merged with the
+        full totals of the touched buckets (_merged_salts), so a bucket
+        that crosses bucket_cap mid-life re-salts consistently for ALL
+        its items on the next query. An empty batch is a no-op.
 
         Returns self (internal relations refreshed in place).
-        check_ids=True (default) anti-join-asserts the new ids are not
+        check_ids=True (default) semi-join-asserts the new ids are not
         already stored — annoy's positional add_item cannot collide, a
         keyed store can."""
         if self._root is None or self._spark is None:
@@ -1044,43 +1236,51 @@ class AnnIndex:
                 "per call"
             )
         _check_pending(self._root)
-        cfg = self.cfg
-        if _infer_dim(items, vec_col) != cfg.dim:
+        spark, root, cfg = self._spark, self._root, self.cfg
+        head = _query_head(items, self.model, id_col, vec_col)
+        rows = _fetch_batch(items, head)
+        if rows is None:  # past the cap: checked on the executors
+            first_row = items.select(vec_col).first()
+            if first_row is None:
+                return self
+            first = first_row[0]
+        elif not rows:
+            return self
+        else:
+            first = rows[0]["raw"]
+        if first is not None and len(first) != cfg.dim:
             raise ValueError(
                 f"appended vectors must have dim {cfg.dim} "
                 "(annoy load-validation analog: geometry is frozen)"
             )
-        if cfg.metric == "dot":
-            # the MIPS augmentation sqrt(M^2-|x|^2) is frozen at build
-            # (annoylib.h:605-703 preprocess); an appended item with a
-            # larger norm would silently clamp to 0 and lose recall
-            raw = F.col(vec_col).cast("array<double>")
-            mx = items.select(F.max(_norm2(raw)).alias("m")).first()["m"]
-            m2 = float(self.model.arrays["max_n2"][0])
-            if mx is not None and mx > m2 * (1 + 1e-9):
-                raise ValueError(
-                    f"appended item norm^2 {mx:.6g} exceeds the stored "
-                    f"MIPS max-norm^2 {m2:.6g} — rebuild the index "
-                    "(annoy freezes the preprocess scale at build)"
-                )
-        n_new = items.count()
-        if n_new == 0:
-            return self
+        if rows is not None:
+            ids = [r["qid"] for r in rows]
+            raw, keys = _route_on_driver(rows, self.model, query_side=False)
+            if cfg.metric == "dot":
+                _check_max_norm(float(_norm2_rows(raw).max()), self.model)
+        elif cfg.metric == "dot":
+            vec = F.col(vec_col).cast("array<double>")
+            mx = items.select(F.max(_norm2(vec))).first()[0]
+            if mx is not None:
+                _check_max_norm(mx, self.model)
         if check_ids:
-            clash = (
-                items.select(F.col(id_col).alias("nid"))
-                .join(self._vectors.select("nid"), "nid", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
+            if rows is not None:
+                new_ids = spark.createDataFrame(
+                    pd.DataFrame({"nid": ids}),
+                    StructType().add("nid", head.schema["qid"].dataType),
+                )
+            else:
+                new_ids = items.select(F.col(id_col).alias("nid"))
+            # one semi-join job, not Column.isin (a py4j call per literal)
+            if new_ids.join(
+                self._vectors.select("nid"), "nid", "left_semi"
+            ).take(1):
                 raise ValueError(
                     "appended item ids collide with stored ids — "
                     "pass check_ids=False only if upstream guarantees "
                     "disjoint ids"
                 )
-        spark, root = self._spark, self._root
-        store = CheckpointStore(root, cfg)
+        n_stored = self.n_items()
         staging = Path(root) / _STAGING
         if staging.exists():  # unreachable debris (marker gone => rolled
             import shutil     # back/committed); never mix two batches
@@ -1092,25 +1292,20 @@ class AnnIndex:
         (Path(root) / _PENDING).write_text(
             json.dumps({"staging": str(staging), "written_at": _time.time()})
         )
-        # ONE routing pass: the Arrow routing UDF lineage is materialized
-        # once into the staged 'routed' relation; vectors/buckets/counts
-        # all derive from its re-read, so a non-deterministic input can
-        # never persist counts that diverge from the bucket rows (and the
-        # UDF is not re-paid per artifact)
         try:
-            _routed_items(items, self.model, id_col, vec_col).write.parquet(
-                str(staging / "routed")
+            if rows is not None:
+                touched, gsize = _stage_on_driver(
+                    staging, ids, raw, keys, cfg,
+                    self._vectors.schema["nid"].dataType,
+                )
+                n_new = len(ids)
+            else:
+                touched, gsize, n_new = _stage_on_executors(
+                    spark, staging, items, self.model, id_col, vec_col
+                )
+            salts = _merged_salts(
+                spark, root, self._salts, touched, gsize, cfg.bucket_cap
             )
-            routed = spark.read.parquet(str(staging / "routed"))
-            routed.select("nid", "v").write.parquet(str(staging / "vectors"))
-            routed.select(
-                F.explode("keys").alias("bucket"), "nid"
-            ).write.parquet(str(staging / "buckets"))
-            # count DELTA only — history is never rewritten
-            # (snapshot-append); recounted from the staged buckets rows
-            _bucket_counts(
-                spark.read.parquet(str(staging / "buckets"))
-            ).write.parquet(str(staging / "counts"))
         except BaseException:
             # publish has not started (it begins only after staging
             # completes), so an ORDINARY failed job — a ragged embedding,
@@ -1123,22 +1318,20 @@ class AnnIndex:
             (Path(root) / _PENDING).unlink(missing_ok=True)
             raise
         # ---- commit (resumable; see _publish_staged) -------------------
-        _publish_staged(spark, root, cfg)
-        # drop the superseded cached sizes BEFORE caching its successor:
-        # both read the same counts path, so their canonical plans (and
-        # cache entries) coincide — unpersisting afterwards would evict
-        # the fresh cache too
-        self._sizes.unpersist()
-        counts = store.read(spark, "counts")
-        sizes = _oversized(counts, cfg.bucket_cap).cache()
-        salts = _salt_map(sizes)
-        n_items = (self._n_items or self._vectors.count()) + n_new
-        self._vectors = store.read(self._spark, "vectors")
-        self._bucketed = store.read(self._spark, "buckets")
-        self._sizes = sizes
-        self._salts = salts
-        self._assign = _salted_assign(self._bucketed, sizes, bool(salts))
-        self._n_items = n_items
+        n_items = n_stored + n_new
+        _publish_staged(
+            spark, root, cfg, n_items=n_items, has_oversized=bool(salts)
+        )
+        # re-read with the schemas already held: no inference job
+        self._set_body(
+            spark.read.schema(self._vectors.schema).parquet(
+                str(Path(root) / "vectors")
+            ),
+            spark.read.schema(self._bucketed.schema).parquet(
+                str(Path(root) / "buckets")
+            ),
+            salts, n_items,
+        )
         return self
 
     def compact(self) -> "AnnIndex":
@@ -1150,7 +1343,6 @@ class AnnIndex:
                 "compact requires a persisted index (build_index/"
                 "load_index); an ephemeral index has no files to compact"
             )
-        self.unload()
         return compact_index(self._spark, self._root)
 
 
@@ -1176,8 +1368,7 @@ def build_index(
     bucketed_stored = store.read(spark, "buckets")
     store.write("counts", _bucket_counts(bucketed_stored))
     counts = store.read(spark, "counts")
-    sizes = _oversized(counts, cfg.bucket_cap).cache()
-    salts = _salt_map(sizes)
+    salts = _salt_map(_oversized(counts, cfg.bucket_cap))
     vectors_stored = store.read(spark, "vectors")
     n_items = vectors_stored.count()
     mdir = store.root / _MODEL_STAGE
@@ -1185,7 +1376,7 @@ def build_index(
     np.savez(mdir / _NPZ, **model.arrays)
     _write_meta(root, cfg, has_oversized=bool(salts), n_items=n_items)
     return AnnIndex(
-        model, vectors_stored, bucketed_stored, sizes, salts,
+        model, vectors_stored, bucketed_stored, salts,
         spark=spark, root=root, n_items=n_items,
     )
 
@@ -1223,19 +1414,17 @@ def load_index(
         arrays = {k: z[k] for k in z.files}
     model = AnnModel(cfg, arrays)
     store = CheckpointStore(root, cfg)
-    counts = store.read(spark, "counts")
-    sizes = _oversized(counts, cfg.bucket_cap)
     salts: dict[int, int] = {}
     if meta.get("has_oversized", True):
         # tiny by construction; collected once per loaded index, never
         # per query (and no job at all in the common no-oversized case)
-        sizes = sizes.cache()
-        salts = _salt_map(sizes)
+        salts = _salt_map(
+            _oversized(store.read(spark, "counts"), cfg.bucket_cap)
+        )
     return AnnIndex(
         model,
         store.read(spark, "vectors"),
         store.read(spark, "buckets"),
-        sizes,
         salts,
         spark=spark,
         root=root,
@@ -1544,11 +1733,10 @@ def knn_by_vector_approx(
     cfg = _resolve_cfg(cfg, items, vec_col)
     model = AnnModel.train(items, cfg, id_col, vec_col)
     vectors, bucketed = _route_items(items, model, id_col, vec_col)
-    # cache()+count(), not localCheckpoint: the oversized relation is tiny
-    # and has two consumers (item salting + query replication); on a real
-    # cluster localCheckpoint blocks die with their executor (ADVICE r3)
-    sizes = _oversized(_bucket_counts(bucketed), cfg.bucket_cap).cache()
-    salts = _salt_map(sizes)
+    # the oversized relation is tiny and has two consumers (item salting
+    # + query replication): collect it once, both read the local relation
+    salts = _salt_map(_oversized(_bucket_counts(bucketed), cfg.bucket_cap))
+    sizes = _sizes_relation(items.sparkSession, salts)
     assign = _salted_assign(bucketed, sizes, bool(salts))
     return _query_plan(
         queries, vectors, assign, sizes, salts, model, k, id_col, vec_col,

@@ -121,7 +121,6 @@ def ann_item_stream(
         # loses an applied batch, and a replayed (skipped) batch never
         # re-triggers it
         if compact_every and (batch_id + 1) % compact_every == 0:
-            idx.unload()
             idx = compact_index(spark, index_root)
 
     stream = spark.readStream.schema(item_schema).parquet(input_dir)

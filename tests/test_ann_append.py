@@ -617,3 +617,233 @@ def test_torn_model_meta_write_keeps_previous_meta(
         load_index(spark, root)
     assert repair_append(spark, root).n_items() == 400
     assert not (Path(root) / _PENDING).exists()
+
+
+def _index_state(spark, root):
+    """Order-independent view of a persisted index: row count and
+    bit_xor(xxhash64) digest of vectors and buckets, counts summed per
+    bucket, and the meta's n_items / has_oversized."""
+    import json
+    from pathlib import Path
+
+    from annoy_spark.sources.ann_index import _META, _MODEL_STAGE
+
+    out = {}
+    for stage in ("vectors", "buckets"):
+        df = spark.read.parquet(str(Path(root) / stage))
+        cols = ", ".join(df.columns)
+        out[stage] = tuple(df.agg(
+            F.count(F.lit(1)),
+            F.expr(f"bit_xor(xxhash64({cols}))"),
+        ).first())
+    out["counts"] = sorted(
+        tuple(r) for r in spark.read.parquet(str(Path(root) / "counts"))
+        .groupBy("bucket").agg(F.sum("gsize")).collect()
+    )
+    meta = json.loads((Path(root) / _MODEL_STAGE / _META).read_text())
+    out["meta"] = (meta["n_items"], meta["has_oversized"])
+    return out
+
+
+def _parity_batches(spark, metric):
+    """(build items, appended items): 200 + 60 rows; hamming rows are
+    packed words, 'dot' appends are scaled inside the build's max norm."""
+    rng = np.random.default_rng(21)
+    if metric == "hamming":
+        words = rng.integers(-(2**62), 2**62, (260, 2))
+        rows = [(i, [int(x) for x in w]) for i, w in enumerate(words)]
+        schema = "vec_id long, embedding array<long>"
+    else:
+        x = rng.standard_normal((260, 16)) + 2.0 * (np.arange(260) % 4)[:, None]
+        if metric == "dot":
+            x[200:] *= 0.5
+        rows = [(i, [float(v) for v in r]) for i, r in enumerate(x)]
+        schema = "vec_id long, embedding array<double>"
+    return (spark.createDataFrame(rows[:200], schema),
+            spark.createDataFrame(rows[200:], schema))
+
+
+@pytest.mark.parametrize("kind,metric", [
+    ("forest", "angular"), ("forest", "dot"), ("forest", "hamming"),
+    ("ivf", "euclidean"), ("lsh", "hamming"),
+])
+def test_append_driver_executor_parity(spark, tmp_path, monkeypatch, kind,
+                                       metric):
+    """The same batch appended on the driver path (numpy checks and
+    routing, pyarrow staging) and on the executor path (routing UDF,
+    Spark staging; forced by SMALL_QUERY_MAX = -1) publishes identical
+    vectors, buckets, summed counts, meta and salts, and both indexes
+    answer queries identically."""
+    import shutil
+
+    import annoy_spark.sources.ann_index as ann_index
+
+    base, new = _parity_batches(spark, metric)
+    cfg = AnnIndexConfig(
+        kind=kind, metric=metric, seed=42, n_trees=4, leaf_cap=16,
+        n_centroids=6, nprobe=2, n_tables=4, n_bits=5, bucket_cap=30,
+    )
+    driver, executor = str(tmp_path / "driver"), str(tmp_path / "executor")
+    build_index(spark, base, driver, cfg)
+    shutil.copytree(driver, executor)
+    a = load_index(spark, driver).append(new)
+    monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", -1)
+    b = load_index(spark, executor).append(new)
+    monkeypatch.undo()
+    assert _index_state(spark, driver) == _index_state(spark, executor)
+    assert a._salts == b._salts
+    assert a.n_items() == b.n_items() == 260
+    qs = new.union(base.where(F.col("vec_id") % 10 == 0)).select(
+        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
+    )
+    key = lambda r: (r.qid, r.nid, r.rank)  # noqa: E731
+    got_a = sorted(map(key, a.query(qs, k=5).collect()))
+    got_b = sorted(map(key, b.query(qs, k=5).collect()))
+    assert got_a == got_b and len(got_a) > 0
+
+
+def test_append_paths_raise_same_errors(spark, tmp_path, monkeypatch):
+    """Both append paths refuse an id clash, a wrong dim, a null vector
+    (naming its id) and an item past the MIPS max-norm, before anything
+    is published: the index and its meta are unchanged afterwards."""
+    from pathlib import Path
+
+    import annoy_spark.sources.ann_index as ann_index
+
+    base, _ = _parity_batches(spark, "dot")
+    schema = "vec_id long, embedding array<double>"
+    cfg = AnnIndexConfig(kind="forest", metric="dot", n_trees=4, seed=42)
+    root = str(tmp_path / "idx")
+    idx = build_index(spark, base, root, cfg)
+    before = _index_state(spark, root)
+    cases = {
+        "collide": base.where(F.col("vec_id") < 5),
+        "must have dim 16": spark.createDataFrame(
+            [(9000, [1.0, 2.0])], schema),
+        "invalid vector for item 9002": spark.createDataFrame(
+            [(9001, [0.1] * 16), (9002, None)], schema),
+        "max-norm": spark.createDataFrame([(9003, [50.0] * 16)], schema),
+    }
+    for cap in (ann_index.SMALL_QUERY_MAX, -1):
+        monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", cap)
+        for pattern, batch in cases.items():
+            with pytest.raises(Exception, match=pattern):
+                idx.append(batch)
+            assert not (Path(root) / ann_index._PENDING).exists()
+    assert _index_state(spark, root) == before
+    assert idx.n_items() == 200
+
+
+def test_empty_append_is_noop(spark, corpus, tmp_path):
+    """An empty batch changes nothing: no marker, no staging, no file,
+    the same meta, and no Spark job past the batch fetch itself."""
+    import pandas as pd
+    from pathlib import Path
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    root = Path(tmp_path / "idx")
+    idx = build_index(spark, corpus, str(root), cfg)
+
+    def snapshot():
+        return sorted(
+            (str(p.relative_to(root)), p.read_bytes() if p.name.endswith(
+                ".json") else p.stat().st_size)
+            for p in root.rglob("*") if p.is_file()
+        )
+
+    before = snapshot()
+    empty_pandas = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.zeros(0, np.int64), "embedding": []}),
+        "vec_id long, embedding array<double>",
+    )
+    sc = spark.sparkContext
+    for i, empty in enumerate((empty_pandas, corpus.limit(0))):
+        sc.setJobGroup(f"empty_append_{i}", "empty append")
+        try:
+            assert idx.append(empty) is idx
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(
+            f"empty_append_{i}")) <= 1
+    assert idx.n_items() == 400
+    assert snapshot() == before
+
+
+def test_incremental_salts_match_recount(spark, tmp_path, monkeypatch):
+    """After every append the merged salt map equals a full recount of
+    the stored counts, and meta n_items equals the stored vectors — for
+    batches that touch only cold buckets, push the hot bucket further
+    past bucket_cap, and push cold buckets over it. A crash between
+    staging and publish is completed by repair_append to the same meta
+    and salts as an uninterrupted append."""
+    import json
+    import shutil
+    from pathlib import Path
+
+    import annoy_spark.sources.ann_index as ann_index
+    from annoy_spark.sources.ann_index import (
+        _META,
+        _MODEL_STAGE,
+        _PENDING,
+        _oversized,
+        _salt_map,
+        repair_append,
+    )
+    from annoy_spark.sources.checkpoint import CheckpointStore
+
+    rng = np.random.default_rng(11)
+    hot = [float(x) for x in rng.standard_normal(8)]
+    mk = lambda ids, same: spark.createDataFrame(  # noqa: E731
+        [(int(i), hot if same else [float(x) for x in rng.standard_normal(8)])
+         for i in ids],
+        "vec_id long, embedding array<double>",
+    )
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, bucket_cap=40, seed=42)
+    root = str(tmp_path / "idx")
+    idx = build_index(
+        spark, mk(range(60), True).union(mk(range(60, 120), False)), root,
+        cfg,
+    )
+    store = CheckpointStore(root, idx.cfg)
+
+    def recount():
+        return _salt_map(_oversized(store.read(spark, "counts"), 40))
+
+    def meta():
+        m = json.loads((Path(root) / _MODEL_STAGE / _META).read_text())
+        return m["n_items"], m["has_oversized"]
+
+    assert idx._salts == recount() and idx._salts
+    seen = [dict(idx._salts)]
+    for ids, same in ((range(1000, 1050), False), (range(2000, 2100), True),
+                      (range(3000, 3300), False)):
+        idx = idx.append(mk(ids, same))
+        assert idx._salts == recount()
+        assert meta() == (store.read(spark, "vectors").count(),
+                          bool(idx._salts))
+        assert idx.n_items() == meta()[0]
+        seen.append(dict(idx._salts))
+    assert seen[2] != seen[1]             # the hot buckets grew
+    assert len(seen[3]) > len(seen[2])    # cold buckets crossed the cap
+
+    batch = mk(range(4000, 4080), True)
+    clean = str(tmp_path / "clean")
+    shutil.copytree(root, clean)
+    want = load_index(spark, clean).append(batch)
+    real, calls = ann_index._publish_staged, []
+
+    def crash_once(*args, **kwargs):
+        calls.append(kwargs)
+        if len(calls) == 1:
+            raise RuntimeError("crash between staging and publish")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ann_index, "_publish_staged", crash_once)
+    with pytest.raises(RuntimeError, match="crash between"):
+        idx.append(batch)
+    assert (Path(root) / _PENDING).exists()
+    repaired = repair_append(spark, root)
+    assert calls[1] == {}  # repair recounts: no values passed
+    assert repaired._salts == want._salts == recount()
+    assert meta() == (want.n_items(), bool(want._salts))
+    assert _index_state(spark, root) == _index_state(spark, clean)

@@ -179,3 +179,27 @@ def test_skewed_fingerprint_family(spark):
     assert len({r.cluster_id for r in labels}) == 1
     sk = skipped.collect()
     assert sk and {r.n_members for r in sk} == {12}, sk
+
+
+def test_failed_substring_build_unpersists_fingerprints(spark):
+    """A substring build whose jobs fail after the fingerprint relation
+    was persisted (here: content that raises when read) still unpersists
+    it, so a failed or cancelled branch leaves the session's cache
+    manager empty."""
+    from pyspark.sql import functions as F
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    corpus = spark.createDataFrame(
+        [(i, "shared block " * 200) for i in range(4)],
+        "file_id long, content string",
+    ).select(
+        "file_id",
+        F.when(F.col("file_id") < 0, F.col("content"))
+        .otherwise(F.raise_error(F.lit("unreadable content")))
+        .alias("content"),
+    )
+    assert cache.isEmpty()
+    with pytest.raises(Exception, match="unreadable content"):
+        substring_edges(corpus, CFG)
+    assert cache.isEmpty()

@@ -1,4 +1,5 @@
-"""Row count and order-independent digest of every pipeline checkpoint.
+"""Row count and order-independent digest of every pipeline checkpoint, or
+of a persisted ANN index.
 
 For each stage in ``annoy_spark.plans.pipeline.STAGES`` present under
 ``<out_dir>``, prints one tab-separated line: the stage name, its row count
@@ -6,11 +7,18 @@ and ``bit_xor(xxhash64(<all columns>))`` over its rows. Two pipeline runs
 with equal lines produced the same rows, whatever their order or file
 layout, so the output of two commits can be compared stage by stage.
 
+When ``<out_dir>`` is an ANN index root (``model/_ANNOY_SPARK_META.json``
+exists), prints the same line for ``vectors``, ``buckets`` and ``counts``
+summed per bucket (appends write partial counts, so only the sums are
+comparable), then one ``meta`` line with ``n_items`` and
+``has_oversized``.
+
 Usage: python tools/stage_digests.py <out_dir>
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -27,22 +35,39 @@ def main(argv: list[str]) -> int:
     from annoy_spark.plans.pipeline import STAGES
     from annoy_spark.session import get_spark
 
+    def digest_line(name: str, df) -> str:
+        cols = ", ".join(f"`{c}`" for c in df.columns)
+        row = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr(f"bit_xor(xxhash64({cols}))").alias("digest"),
+        ).first()
+        return f"{name}\t{row['n']}\t{row['digest']}"
+
     out_dir = Path(argv[0])
+    meta_path = out_dir / "model" / "_ANNOY_SPARK_META.json"
     spark = get_spark("stage_digests", master="local[2]")
     spark.sparkContext.setLogLevel("ERROR")
     try:
+        if meta_path.exists():
+            for stage in ("vectors", "buckets", "counts"):
+                df = spark.read.parquet(str(out_dir / stage))
+                if stage == "counts":
+                    df = df.groupBy("bucket").agg(
+                        F.sum("gsize").alias("gsize")
+                    )
+                print(digest_line(stage, df))
+            meta = json.loads(meta_path.read_text())
+            print(
+                f"meta\tn_items={meta.get('n_items')}\t"
+                f"has_oversized={meta.get('has_oversized')}"
+            )
+            return 0
         for stage in STAGES:
             path = out_dir / stage
             if not path.is_dir():
                 print(f"{stage}\tmissing")
                 continue
-            df = spark.read.parquet(str(path))
-            cols = ", ".join(f"`{c}`" for c in df.columns)
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(xxhash64({cols}))").alias("digest"),
-            ).first()
-            print(f"{stage}\t{row['n']}\t{row['digest']}")
+            print(digest_line(stage, spark.read.parquet(str(path))))
     finally:
         spark.stop()
     return 0
