@@ -65,8 +65,13 @@ def collect_training_sample(
 
     Sorting by id fixes POSITION too: two_means / k-means init draw by
     index, so the same membership in a different order would still train a
-    different model."""
-    h = F.xxhash64(F.col(id_col), F.lit(int(seed)))
+    different model.
+
+    ``items`` may instead be a sample already picked from a fetched batch
+    (training_sample_rows); it is returned as it is."""
+    if isinstance(items, np.ndarray):
+        return items
+    h = sample_hash(id_col, seed)
     # as_longs keeps packed hamming words exact (int64 -> double would
     # round away bits above 2^53)
     sql_t = "array<long>" if as_longs else "array<double>"
@@ -96,6 +101,28 @@ def collect_training_sample(
             f"invalid vector in trainer sample (item {bad!r}): all items "
             "must be non-null arrays of one fixed dimension"
         ) from e
+
+
+def sample_hash(id_col: str, seed: int) -> F.Column:
+    """The seeded id hash that ranks trainer-sample candidates."""
+    return F.xxhash64(F.col(id_col), F.lit(int(seed)))
+
+
+def training_sample_rows(
+    ids: np.ndarray, h: np.ndarray, max_sample: int,
+    sample_fraction: float = 1.0,
+) -> np.ndarray:
+    """collect_training_sample over a batch already on the driver: the
+    positions of its rows, in its order — the same hash gate, the
+    max_sample smallest (h, id), then sorted by id. ``h`` is the batch's
+    sample_hash column."""
+    keep = np.arange(len(h))
+    if sample_fraction < 1.0:
+        denom = 1 << 20
+        # np.mod takes the divisor's sign, as pmod does
+        keep = keep[np.mod(h, denom) < int(sample_fraction * denom)]
+    top = keep[np.lexsort((ids[keep], h[keep]))[:max_sample]]
+    return top[np.argsort(ids[top], kind="stable")]
 
 
 def _unit(raw: F.Column) -> F.Column:

@@ -45,19 +45,23 @@ the true metric (annoylib.h:1492-1494). ``spill_eps`` is applied on the
 QUERY side only — annoy's search_k is a query-time knob
 (annoylib.h:1447-1480), so one stored index serves every accuracy budget.
 
-Scale shape: one bounded fetch of at most SMALL_QUERY_MAX + 1 rows of a
-query or append batch decides (no job for a local input; any other input
-comes back as Arrow, cheap to drop when the batch is over the cap). A
-batch within the cap is checked and routed on the driver with the same
-numpy kernels the executor UDFs run (annoy answers and adds items
-in-process against the mapped index, annoylib.h:1080-1091, 1447-1504).
+Scale shape: query, append and build share one driver batch path. One
+bounded fetch of at most SMALL_QUERY_MAX + 1 rows of a query batch, an
+append batch or a build's items decides (no job for a local input; any
+other input comes back as Arrow, cheap to drop when the batch is over the
+cap). A batch within the cap is checked and routed on the driver with the
+same numpy kernels the executor UDFs run (annoy builds, adds and answers
+in-process over its item array, annoylib.h:1037-1091, 1447-1504).
 A query batch joins the stored relations as exact-sized local relations,
-so the planner broadcasts whichever side is small; an append batch is
-staged with pyarrow, and its commit reads only the stored counts of the
-buckets it touched — no append cost grows with the stored index beyond
-the one id-clash semi-join. A LARGE batch (e.g. re-indexing the corpus
-against itself) is routed by the UDF on the executors: queries join
-through shuffle equi-joins, appends stage through Spark writes.
+so the planner broadcasts whichever side is small. A build trains on the
+sample picked from the fetched rows and stages its artifacts with
+pyarrow, as an append does; an append's commit reads only the stored
+counts of the buckets it touched — no append cost grows with the stored
+index beyond the one id-clash semi-join. A LARGE batch (e.g. re-indexing
+the corpus against itself) is routed by the UDF on the executors:
+queries join through shuffle equi-joins, builds and appends stage
+through Spark writes. Loading reads each artifact with the schema in its
+parquet footer, so a load runs no Spark job unless a bucket is oversized.
 No join carries a hint: the stored buckets/vectors relations are only
 ever scanned and equi-joined, and AQE sizes the candidate relation.
 
@@ -71,6 +75,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import shutil
 import uuid
 from dataclasses import asdict, dataclass, replace
 from pathlib import Path
@@ -99,6 +104,8 @@ from annoy_spark.operators.knn import (
     hyperplane_keys,
     keys_udf,
     pstable_keys,
+    sample_hash,
+    training_sample_rows,
 )
 from annoy_spark.sources.checkpoint import CheckpointStore
 
@@ -108,12 +115,12 @@ _KIND_METRICS = {
     "lsh": ("angular", "dot", "euclidean", "manhattan", "hamming"),
 }
 
-#: query and append batches at or below this row count are fetched and
-#: routed on the driver (queries join the stored relations as local
-#: relations, appends stage with pyarrow); larger batches route on the
-#: executors (routing UDF + shuffle equi-joins / Spark writes). The driver
-#: path was the faster one at every batch size measured up to this cap
-#: (4 cores, 64-d forest), so the cap bounds driver memory, not time: a
+#: query, append and build batches at or below this row count are fetched
+#: and routed on the driver (queries join the stored relations as local
+#: relations, builds and appends stage with pyarrow); larger batches route
+#: on the executors (routing UDF + shuffle equi-joins / Spark writes). The
+#: driver path was the faster one at every batch size measured up to this
+#: cap (4 cores, 64-d forest), so the cap bounds driver memory, not time: a
 #: 65,536 x 64-d batch peaks near 290 MB of Python heap on the driver.
 SMALL_QUERY_MAX = 65_536
 
@@ -279,11 +286,17 @@ class AnnModel:
     @classmethod
     def train(
         cls,
-        items: DataFrame,
+        items: DataFrame | np.ndarray,
         cfg: AnnIndexConfig,
-        id_col: str,
-        vec_col: str,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        max_n2: float | None = None,
     ) -> "AnnModel":
+        """Train the router on ``items``: the items relation (sampled by
+        collect_training_sample), or — build on the driver batch path —
+        the sample already picked from the fetched batch
+        (training_sample_rows), with the batch's max norm² as ``max_n2``
+        for 'dot'; then no Spark job runs."""
         arrays: dict[str, np.ndarray] = {}
         router_metric = cfg.metric
         if cfg.metric == "dot":
@@ -291,16 +304,20 @@ class AnnModel:
             # exactly like annoy's preprocess stamps dot_factor into every
             # node (annoylib.h:605-703)
             raw = F.col(vec_col).cast("array<double>")
-            max_n2 = items.select(F.max(_norm2(raw)).alias("m")).first()["m"]
+            if max_n2 is None:
+                max_n2 = items.select(F.max(_norm2(raw))).first()[0]
             max_n2 = float(max_n2 or 0.0)
             arrays["max_n2"] = np.asarray([max_n2], dtype=np.float64)
             if cfg.kind in ("forest", "ivf"):
                 # DotProduct trees: the router is an ANGULAR structure
                 # over the (dim+1)-augmented space
-                items = items.withColumn(
-                    "__aug_vec", _mips_aug(raw, max_n2, query_side=False)
-                )
-                vec_col = "__aug_vec"
+                if isinstance(items, np.ndarray):
+                    items = _mips_aug_rows(items, max_n2, query_side=False)
+                else:
+                    items = items.withColumn(
+                        "__aug_vec", _mips_aug(raw, max_n2, query_side=False)
+                    )
+                    vec_col = "__aug_vec"
                 router_metric = "angular"
         if cfg.kind == "forest":
             trees = build_forest(
@@ -484,14 +501,23 @@ def _auto_n_trees(cfg: AnnIndexConfig) -> int:
 
 
 def _resolve_cfg(
-    cfg: AnnIndexConfig, items: DataFrame, vec_col: str
+    cfg: AnnIndexConfig, items: DataFrame, vec_col: str,
+    id_col: str = "vec_id",
 ) -> AnnIndexConfig:
-    """Infer ``dim=0`` from the first item, then resolve the ``n_trees=-1``
-    sentinel (it needs dim). The resolved count is what gets
-    persisted/hash-validated (annoy stores the actual trees built, not
-    the -1 it was asked for)."""
+    """Infer ``dim=0`` from the first item (one job), then resolve the
+    ``n_trees=-1`` sentinel (see _sized)."""
     if cfg.dim == 0:
-        cfg = replace(cfg, dim=_infer_dim(items, vec_col))
+        first = items.select(
+            F.col(id_col).alias("qid"), F.col(vec_col).alias("raw")
+        ).take(1)
+        cfg = replace(cfg, dim=_first_dim(first))
+    return _sized(cfg)
+
+
+def _sized(cfg: AnnIndexConfig) -> AnnIndexConfig:
+    """Resolve the ``n_trees=-1`` sentinel (it needs dim). The resolved
+    count is what gets persisted/hash-validated (annoy stores the actual
+    trees built, not the -1 it was asked for)."""
     if cfg.n_trees != -1:
         return cfg
     if cfg.kind != "forest":
@@ -503,21 +529,27 @@ def _resolve_cfg(
     return replace(cfg, n_trees=_auto_n_trees(cfg))
 
 
-def _infer_dim(items: DataFrame, vec_col: str) -> int:
-    row = items.select(vec_col).first()
-    if row is None or row[0] is None or len(row[0]) == 0:
+def _first_dim(rows: list) -> int:
+    """The index dim: the length of the first fetched (qid, raw) row's
+    vector (annoy requires >= 1 added item before build)."""
+    if not rows:
         raise ValueError(
-            "cannot build an ANN index from an empty items relation / "
-            "empty vectors (annoy requires >= 1 added item before build)"
+            "cannot build an ANN index from an empty items relation "
+            "(annoy requires >= 1 added item before build)"
         )
-    return len(row[0])
+    if not rows[0]["raw"]:
+        raise ValueError(
+            f"invalid vector for item {rows[0]['qid']}: the first vector "
+            "sets the index dim, so it must be a non-empty array"
+        )
+    return len(rows[0]["raw"])
 
 
 def _valid_vector(raw: F.Column, dim: int) -> F.Column:
     """The one validity rule for a stored or query vector: non-null with
     exactly ``dim`` elements. The executor paths raise through it in
-    _checked_vectors; the driver path fetches it as _query_head's ``ok``
-    flag and raises in _route_on_driver before any routing job."""
+    _checked_vectors; the driver path applies it to the fetched rows in
+    _checked_matrix, before any routing."""
     return raw.isNotNull() & (F.size(raw) == F.lit(dim))
 
 
@@ -551,8 +583,8 @@ def _routed_items(
     """(nid, v, keys): every item routed once with the stored model.
 
     A null or wrong-length vector FAILS the routing job with the offending
-    id instead of persisting a poison row (`_infer_dim` samples only the
-    first row, so ragged inputs would otherwise slip through; a stored
+    id instead of persisting a poison row (the dim comes from the first
+    row only, so ragged inputs would otherwise slip through; a stored
     null vector breaks get_item_vector and re-rank distances later, far
     from the cause)."""
     cfg = model.cfg
@@ -562,18 +594,6 @@ def _routed_items(
         _stored_vec(cfg, vec_col).alias("v"),
         model.keys_col(vec_col, query_side=False).alias("keys"),
     )
-
-
-def _route_items(
-    items: DataFrame, model: AnnModel, id_col: str, vec_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """(item_vectors, bucketed): route every item once with the stored
-    model — vectors (nid, v); bucketed (bucket, nid), unsalted (the skew
-    salt is derived at query time from the live counts, see module doc)."""
-    base = _routed_items(items, model, id_col, vec_col)
-    vectors = base.select("nid", "v")
-    bucketed = base.select(F.explode("keys").alias("bucket"), "nid")
-    return vectors, bucketed
 
 
 def _bucket_counts(bucketed: DataFrame) -> DataFrame:
@@ -656,48 +676,62 @@ def _replicate_salts(
 def _query_head(
     queries: DataFrame, model: AnnModel, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(qid, raw, ok[, keys]): what the driver fetches of a query batch
-    or of an appended item batch (``qid`` is then the item id) — the raw
-    vector in the stored element type, its validity flag, plus the keys
-    where they are a JVM expression (LSH hamming bit sampling, the same
-    on both sides; guarded, so a bad vector reaches _route_on_driver's
-    check instead of failing inside the expression)."""
+    """(qid, raw[, keys]): what the driver fetches of a query batch or of
+    an item batch (``qid`` is then the item id) — the raw vector in the
+    stored element type, plus the keys where they are a JVM expression
+    (LSH hamming bit sampling, the same on both sides; guarded, so a bad
+    vector reaches _checked_matrix instead of failing inside the
+    expression)."""
     cfg = model.cfg
     raw = F.col(vec_col).cast(
         "array<long>" if cfg.metric == "hamming" else "array<double>"
     )
-    ok = _valid_vector(raw, cfg.dim)
-    cols = [F.col(id_col).alias("qid"), raw.alias("raw"), ok.alias("ok")]
+    cols = [F.col(id_col).alias("qid"), raw.alias("raw")]
     if model.jvm_keys:
         cols.append(
-            F.when(ok, model.keys_col(vec_col, query_side=True))
-            .alias("keys")
+            F.when(
+                _valid_vector(raw, cfg.dim),
+                model.keys_col(vec_col, query_side=True),
+            ).alias("keys")
         )
     return queries.select(*cols)
+
+
+def _checked_matrix(rows: list, cfg: AnnIndexConfig, what: str) -> np.ndarray:
+    """The raw vectors of fetched _query_head rows as one matrix; a null
+    or wrong-length vector raises ValueError naming its id, in the
+    executor paths' words."""
+    for r in rows:
+        if r["raw"] is None or len(r["raw"]) != cfg.dim:
+            raise ValueError(
+                f"invalid vector for {what} {r['qid']}: need a non-null "
+                f"array of {cfg.dim} elements"
+            )
+    return np.array(
+        [r["raw"] for r in rows],
+        dtype=np.int64 if cfg.metric == "hamming" else np.float64,
+    ).reshape(len(rows), cfg.dim)
+
+
+def _driver_keys(
+    rows: list, raw: np.ndarray, model: AnnModel, spill_eps: float = 0.0,
+    nprobe: int | None = None, query_side: bool = True,
+) -> list[np.ndarray]:
+    """Per-row keys of fetched rows: the fetched JVM keys for LSH
+    hamming, else ``model.route`` of their checked matrix."""
+    if model.jvm_keys:
+        return [np.asarray(r["keys"], dtype=np.int64) for r in rows]
+    return model.route(raw, spill_eps, nprobe, query_side)
 
 
 def _route_on_driver(
     rows: list, model: AnnModel, spill_eps: float = 0.0,
     nprobe: int | None = None, query_side: bool = True,
 ) -> tuple[np.ndarray, list[np.ndarray]]:
-    """(raw matrix, per-row keys) of fetched _query_head rows, routed on
-    the query or the item side; a null or wrong-length vector raises
-    ValueError naming its id, in the executor paths' words."""
-    cfg = model.cfg
-    what = "query" if query_side else "item"
-    for r in rows:
-        if not r["ok"]:
-            raise ValueError(
-                f"invalid vector for {what} {r['qid']}: need a non-null "
-                f"array of {cfg.dim} elements"
-            )
-    raw = np.array(
-        [r["raw"] for r in rows],
-        dtype=np.int64 if cfg.metric == "hamming" else np.float64,
-    ).reshape(len(rows), cfg.dim)
-    if model.jvm_keys:
-        return raw, [np.asarray(r["keys"], dtype=np.int64) for r in rows]
-    return raw, model.route(raw, spill_eps, nprobe, query_side)
+    """(raw matrix, per-row keys) of fetched _query_head rows, checked
+    and routed on the query or the item side."""
+    raw = _checked_matrix(rows, model.cfg, "query" if query_side else "item")
+    return raw, _driver_keys(rows, raw, model, spill_eps, nprobe, query_side)
 
 
 def _fetch_batch(queries: DataFrame, head: DataFrame) -> list | None:
@@ -841,6 +875,8 @@ _STAGING = "_staging_append"
 _PENDING = "_APPEND_PENDING.json"
 _COMPACT_STAGING = "_staging_compact"
 _COMPACT_PENDING = "_COMPACT_PENDING.json"
+#: the persisted relations, one directory each under the index root
+_ARTIFACTS = ("vectors", "buckets", "counts")
 
 
 def _check_pending(root: str) -> None:
@@ -867,7 +903,7 @@ def _check_pending(root: str) -> None:
 def _staging_complete(root: str) -> bool:
     return all(
         (Path(root) / _STAGING / s / "_SUCCESS").exists()
-        for s in ("vectors", "buckets", "counts")
+        for s in _ARTIFACTS
     )
 
 
@@ -917,7 +953,8 @@ def _stage_on_executors(
     spark: SparkSession, staging: Path, items: DataFrame, model: AnnModel,
     id_col: str, vec_col: str,
 ) -> tuple[np.ndarray, np.ndarray, int]:
-    """Stage a batch over SMALL_QUERY_MAX through the routing UDF; returns
+    """Stage an append batch or a build over SMALL_QUERY_MAX through the
+    routing UDF into ``staging`` (a build's is the index root); returns
     (touched buckets, gsize, rows staged). ONE routing pass: the UDF
     lineage is materialized once into the staged 'routed' relation and
     vectors/buckets/counts all derive from its re-read, so a
@@ -971,10 +1008,20 @@ def _merged_salts(
     )
     total = np.zeros(len(ub), np.int64)
     np.add.at(total, inv, np.concatenate([stored["gsize"].to_numpy(), gsize]))
+    return _resalted(salts, ub, total, bucket_cap)
+
+
+def _resalted(
+    salts: dict[int, int], buckets: np.ndarray, totals: np.ndarray,
+    bucket_cap: int,
+) -> dict[int, int]:
+    """``salts`` with each of ``buckets`` re-derived from its full total:
+    m = ceil(total / cap) past bucket_cap (as _oversized), absent
+    otherwise."""
     out = dict(salts)
-    for b, t in zip(ub.tolist(), total.tolist()):
+    for b, t in zip(buckets.tolist(), totals.tolist()):
         if t > bucket_cap:
-            out[b] = -(-t // bucket_cap)  # ceil(gsize / cap), as _oversized
+            out[b] = -(-t // bucket_cap)
         else:
             out.pop(b, None)
     return out
@@ -995,11 +1042,9 @@ def _publish_staged(
     under re-publish). On Iceberg the three appends + meta collapse into
     one transactional snapshot commit; the parquet degradation gets the
     same all-or-repairable contract from this ordering."""
-    import shutil
-
     staging = Path(root) / _STAGING
     store = CheckpointStore(root, cfg)
-    for stage in ("vectors", "buckets", "counts"):
+    for stage in _ARTIFACTS:
         store.publish_files(stage, staging / stage)
         # files arrived by RENAME, which bypasses the write path's
         # automatic recache: refresh file listings AND any cached plan
@@ -1007,11 +1052,11 @@ def _publish_staged(
         # pre-append snapshot
         spark.catalog.refreshByPath(str(Path(root) / stage))
     if n_items is None:
-        counts = store.read(spark, "counts")
+        counts = _read_artifact(spark, store, "counts")
         has_oversized = (
             _oversized(counts, cfg.bucket_cap).limit(1).count() > 0
         )
-        n_items = store.read(spark, "vectors").count()
+        n_items = _read_artifact(spark, store, "vectors").count()
     _write_meta(root, cfg, has_oversized=has_oversized, n_items=n_items)
     shutil.rmtree(staging, ignore_errors=True)
     (Path(root) / _PENDING).unlink(missing_ok=True)
@@ -1283,9 +1328,7 @@ class AnnIndex:
         n_stored = self.n_items()
         staging = Path(root) / _STAGING
         if staging.exists():  # unreachable debris (marker gone => rolled
-            import shutil     # back/committed); never mix two batches
-
-            shutil.rmtree(staging)
+            shutil.rmtree(staging)  # back/committed); never mix batches
         # ---- stage (marker first: its presence means 'in flight') ------
         import time as _time
 
@@ -1312,8 +1355,6 @@ class AnnIndex:
             # a cancelled stage — rolls back here instead of bricking the
             # index behind the pending marker until manual repair; a
             # process crash still leaves the marker for repair_append
-            import shutil
-
             shutil.rmtree(staging, ignore_errors=True)
             (Path(root) / _PENDING).unlink(missing_ok=True)
             raise
@@ -1355,29 +1396,103 @@ def build_index(
     vec_col: str = "embedding",
 ) -> AnnIndex:
     """Train the router, route every item once, persist model + artifacts
-    (annoy ``build`` + ``save``, annoylib.h:1037-1127). Returns the live
-    index (no reload needed to query immediately)."""
-    cfg = _resolve_cfg(cfg, items, vec_col)
-    model = AnnModel.train(items, cfg, id_col, vec_col)
-    vectors, bucketed = _route_items(items, model, id_col, vec_col)
+    (annoy ``build`` + ``save``, annoylib.h:1037-1127). The build
+    replaces whatever ``root`` held — a previous index, and an unfinished
+    append or compaction with its staging. Returns the live index (no
+    reload needed to query immediately).
+
+    Build is the third operation on the driver batch path, after query
+    and append (annoy builds in-process over its item array). One bounded
+    fetch (_fetch_batch) of (id, raw vector, trainer-sample hash) decides.
+    A relation of at most SMALL_QUERY_MAX items takes its dim from the
+    first row, is checked in numpy, trains on the sample picked in numpy
+    (training_sample_rows: the membership and order the Spark sample
+    would give), is routed with the item-side kernels and staged with
+    pyarrow — no Spark job past the fetch. A larger relation is sampled,
+    routed and staged on the executors (_stage_on_executors, append's
+    one routing pass). Either way n_items and the salt map come from the
+    staged batch's counts, and the artifacts are read back with the
+    schema in their parquet footers."""
+    if cfg.dim == 0 and AnnModel(cfg, {}).jvm_keys:
+        # the fetched keys are a JVM expression over dim: one first() job
+        cfg = _resolve_cfg(cfg, items, vec_col, id_col)
+    head = _query_head(items, AnnModel(cfg, {}), id_col, vec_col).withColumn(
+        "h", sample_hash("qid", cfg.seed)
+    )
+    rows = _fetch_batch(items, head)
+    out = Path(root)
+    if rows is None:  # past the cap: sampled and routed on the executors
+        cfg = _resolve_cfg(cfg, items, vec_col, id_col)
+        model = AnnModel.train(
+            _checked_vectors(items, id_col, vec_col, cfg.dim, "item", id_col),
+            cfg, id_col, vec_col,
+        )
+        _clear_root(out)
+        touched, gsize, n_items = _stage_on_executors(
+            spark, out, items, model, id_col, vec_col
+        )
+        shutil.rmtree(out / "routed")
+    else:
+        dim = _first_dim(rows)
+        cfg = _sized(replace(cfg, dim=cfg.dim or dim))
+        raw = _checked_matrix(rows, cfg, "item")
+        ids = [r["qid"] for r in rows]
+        pick = training_sample_rows(
+            np.asarray(ids),
+            np.fromiter((r["h"] for r in rows), np.int64, len(rows)),
+            cfg.max_sample, cfg.sample_fraction,
+        )
+        max_n2 = float(_norm2_rows(raw).max()) if cfg.metric == "dot" else None
+        model = AnnModel.train(raw[pick], cfg, id_col, vec_col, max_n2=max_n2)
+        keys = _driver_keys(rows, raw, model, query_side=False)
+        _clear_root(out)
+        touched, gsize = _stage_on_driver(
+            out, ids, raw, keys, cfg, head.schema["qid"].dataType
+        )
+        n_items = len(rows)
     store = CheckpointStore(root, cfg)
-    store.write("vectors", vectors)
-    store.write("buckets", bucketed)
-    # recount from the WRITTEN buckets so the routing UDF lineage does not
-    # re-run for the aggregation
-    bucketed_stored = store.read(spark, "buckets")
-    store.write("counts", _bucket_counts(bucketed_stored))
-    counts = store.read(spark, "counts")
-    salts = _salt_map(_oversized(counts, cfg.bucket_cap))
-    vectors_stored = store.read(spark, "vectors")
-    n_items = vectors_stored.count()
+    for stage in _ARTIFACTS:
+        store.restamp(stage)
+        spark.catalog.refreshByPath(str(out / stage))
+    salts = _resalted({}, touched, gsize, cfg.bucket_cap)
     mdir = store.root / _MODEL_STAGE
     mdir.mkdir(parents=True, exist_ok=True)
     np.savez(mdir / _NPZ, **model.arrays)
     _write_meta(root, cfg, has_oversized=bool(salts), n_items=n_items)
     return AnnIndex(
-        model, vectors_stored, bucketed_stored, salts,
+        model, _read_artifact(spark, store, "vectors"),
+        _read_artifact(spark, store, "buckets"), salts,
         spark=spark, root=root, n_items=n_items,
+    )
+
+
+def _clear_root(root: Path) -> None:
+    """Remove what an earlier index left under ``root``: its model meta
+    first (a crash part way then leaves no loadable index), the pending
+    markers of an unfinished append or compaction, their staging, the
+    model and every artifact directory."""
+    _meta_path(root).unlink(missing_ok=True)
+    for marker in (_PENDING, _COMPACT_PENDING):
+        (root / marker).unlink(missing_ok=True)
+    for d in (
+        _STAGING, _COMPACT_STAGING, _MODEL_STAGE, *_ARTIFACTS,
+        *(f"{a}__precompact" for a in _ARTIFACTS),
+    ):
+        shutil.rmtree(root / d, ignore_errors=True)
+
+
+def _read_artifact(
+    spark: SparkSession, store: CheckpointStore, stage: str
+) -> DataFrame:
+    """A stored artifact, read with the schema in one of its data files'
+    parquet footer (every file of an artifact has the same columns), so
+    reading runs no schema-inference job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    part = min((store.root / stage).glob("*.parquet"), default=None)
+    return store.read(
+        spark, stage, part and from_arrow_schema(pq.read_schema(part))
     )
 
 
@@ -1419,12 +1534,12 @@ def load_index(
         # tiny by construction; collected once per loaded index, never
         # per query (and no job at all in the common no-oversized case)
         salts = _salt_map(
-            _oversized(store.read(spark, "counts"), cfg.bucket_cap)
+            _oversized(_read_artifact(spark, store, "counts"), cfg.bucket_cap)
         )
     return AnnIndex(
         model,
-        store.read(spark, "vectors"),
-        store.read(spark, "buckets"),
+        _read_artifact(spark, store, "vectors"),
+        _read_artifact(spark, store, "buckets"),
         salts,
         spark=spark,
         root=root,
@@ -1441,8 +1556,6 @@ def repair_append(spark: SparkSession, root: str) -> "AnnIndex":
     after staging completes) — roll the batch back by dropping staging +
     marker. Either way the index afterwards loads clean; a rolled-back
     batch is simply re-appended by the caller/stream replay."""
-    import shutil
-
     marker = Path(root) / _PENDING
     if marker.exists():
         meta = _read_meta(root)
@@ -1509,11 +1622,9 @@ def _publish_compact(spark: SparkSession, root: str, cfg: AnnIndexConfig) -> Non
     but the marker still forces repair so no index serves with staging
     debris attached. On Iceberg this whole publish is `rewrite_data_files`
     in one transactional snapshot commit."""
-    import shutil
-
     staging = Path(root) / _COMPACT_STAGING
     store = CheckpointStore(root, cfg)
-    for stage in ("vectors", "buckets", "counts"):
+    for stage in _ARTIFACTS:
         live = Path(root) / stage
         old = Path(root) / f"{stage}__precompact"
         staged = staging / stage
@@ -1526,11 +1637,11 @@ def _publish_compact(spark: SparkSession, root: str, cfg: AnnIndexConfig) -> Non
         # dirs arrived by RENAME, which bypasses the write path's
         # automatic recache (same rationale as _publish_staged)
         spark.catalog.refreshByPath(str(live))
-    counts = store.read(spark, "counts")
+    counts = _read_artifact(spark, store, "counts")
     has_oversized = _oversized(counts, cfg.bucket_cap).limit(1).count() > 0
-    n_items = store.read(spark, "vectors").count()
+    n_items = _read_artifact(spark, store, "vectors").count()
     _write_meta(root, cfg, has_oversized=has_oversized, n_items=n_items)
-    for stage in ("vectors", "buckets", "counts"):
+    for stage in _ARTIFACTS:
         shutil.rmtree(Path(root) / f"{stage}__precompact", ignore_errors=True)
     shutil.rmtree(staging, ignore_errors=True)
     (Path(root) / _COMPACT_PENDING).unlink(missing_ok=True)
@@ -1568,8 +1679,6 @@ def compact_index(spark: SparkSession, root: str) -> AnnIndex:
     from mixed artifacts. Only the Iceberg store's snapshot isolation
     gives true read-through-compact (readers pinned to the old
     snapshot)."""
-    import shutil
-
     _check_pending(root)
     meta = _read_meta(root)
     cfg = AnnIndexConfig.from_json(json.dumps(meta["config"]))
@@ -1580,8 +1689,8 @@ def compact_index(spark: SparkSession, root: str) -> AnnIndex:
     marker = Path(root) / _COMPACT_PENDING
     marker.write_text(json.dumps({"phase": "staging"}))
     try:
-        vectors = store.read(spark, "vectors")
-        bucketed = store.read(spark, "buckets")
+        vectors = _read_artifact(spark, store, "vectors")
+        bucketed = _read_artifact(spark, store, "buckets")
         n_items = int(meta.get("n_items") or vectors.count())
         n_assign = bucketed.count()
         # row widths: vectors carry the (possibly MIPS-augmented) double
@@ -1622,8 +1731,6 @@ def repair_compact(spark: SparkSession, root: str) -> AnnIndex:
     never touched — drop staging + marker. Either way the index
     afterwards loads clean and answers exactly what it answered before
     the compact started."""
-    import shutil
-
     marker = Path(root) / _COMPACT_PENDING
     if marker.exists():
         meta = _read_meta(root)
@@ -1669,9 +1776,9 @@ def validate_index(spark: SparkSession, root: str) -> dict:
     meta = _read_meta(root)
     cfg = AnnIndexConfig.from_json(json.dumps(meta["config"]))
     store = CheckpointStore(root, cfg)
-    vectors = store.read(spark, "vectors")
-    buckets = store.read(spark, "buckets")
-    counts = store.read(spark, "counts")
+    vectors = _read_artifact(spark, store, "vectors")
+    buckets = _read_artifact(spark, store, "buckets")
+    counts = _read_artifact(spark, store, "counts")
     problems: list[str] = []
 
     n_vec = vectors.count()
@@ -1730,9 +1837,12 @@ def knn_by_vector_approx(
 ) -> DataFrame:
     """Ephemeral by-vector path (no persistence): train + route + query in
     one plan — the ``queries=`` backend for knn_forest/knn_ivf/knn_lsh."""
-    cfg = _resolve_cfg(cfg, items, vec_col)
+    cfg = _resolve_cfg(cfg, items, vec_col, id_col)
     model = AnnModel.train(items, cfg, id_col, vec_col)
-    vectors, bucketed = _route_items(items, model, id_col, vec_col)
+    routed = _routed_items(items, model, id_col, vec_col)
+    vectors = routed.select("nid", "v")
+    # bucket rows are unsalted: the salt derives from the counts below
+    bucketed = routed.select(F.explode("keys").alias("bucket"), "nid")
     # the oversized relation is tiny and has two consumers (item salting
     # + query replication): collect it once, both read the local relation
     salts = _salt_map(_oversized(_bucket_counts(bucketed), cfg.bucket_cap))
@@ -1770,7 +1880,7 @@ def knn_all_items(
     IVF joins each item's cell (its first probe) with every row's probes
     replicated across the cell's salts: no pair is lost and each matches
     exactly once, so the vectors ride that join."""
-    cfg = _resolve_cfg(cfg, items, vec_col)
+    cfg = _resolve_cfg(cfg, items, vec_col, id_col)
     model = AnnModel.train(items, cfg, id_col, vec_col)
     cols = [
         F.col(id_col).alias("id"),

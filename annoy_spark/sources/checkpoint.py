@@ -122,11 +122,14 @@ class CheckpointStore:
                 shutil.move(str(f), str(target))
         self.restamp(stage)
 
-    def read(self, spark: SparkSession, stage: str) -> DataFrame:
+    def read(self, spark: SparkSession, stage: str, schema=None) -> DataFrame:
+        """The stage's rows; with a known ``schema`` (a StructType or DDL
+        string), reading runs no schema-inference job."""
         self.validate_or_raise(stage)
         if not self.exists(stage):
             raise FileNotFoundError(f"no valid checkpoint for stage '{stage}'")
-        return spark.read.parquet(str(self._dir(stage)))
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(str(self._dir(stage)))
 
     def invalidate(self, stage: str) -> None:
         meta = self._dir(stage) / _META

@@ -847,3 +847,119 @@ def test_incremental_salts_match_recount(spark, tmp_path, monkeypatch):
     assert repaired._salts == want._salts == recount()
     assert meta() == (want.n_items(), bool(want._salts))
     assert _index_state(spark, root) == _index_state(spark, clean)
+
+
+def _model_arrays(root):
+    from pathlib import Path
+
+    from annoy_spark.sources.ann_index import _MODEL_STAGE, _NPZ
+
+    with np.load(Path(root) / _MODEL_STAGE / _NPZ) as z:
+        return {k: z[k] for k in z.files}
+
+
+@pytest.mark.parametrize("kind,metric,n_trees", [
+    ("forest", "angular", 4), ("forest", "dot", 4), ("forest", "hamming", 4),
+    ("ivf", "euclidean", 4), ("lsh", "hamming", 4), ("forest", "angular", -1),
+])
+def test_build_driver_executor_parity(spark, tmp_path, monkeypatch, kind,
+                                      metric, n_trees):
+    """The same items built on the driver path (one fetch, numpy sample,
+    training and routing, pyarrow staging) and on the executor path
+    (Spark sample, routing UDF, Spark staging; forced by
+    SMALL_QUERY_MAX = -1) give identical model arrays, artifacts, meta
+    and salts — a bucket past bucket_cap included — and both indexes
+    answer a query identically."""
+    import annoy_spark.sources.ann_index as ann_index
+
+    base, new = _parity_batches(spark, metric)
+    # 40 copies of one vector share every bucket: past bucket_cap = 30
+    hot = base.where(F.col("vec_id") == 0).crossJoin(
+        spark.range(40).select((F.col("id") + 500).alias("copy"))
+    ).select(F.col("copy").alias("vec_id"), "embedding")
+    items = base.unionByName(hot)
+    cfg = AnnIndexConfig(
+        kind=kind, metric=metric, seed=42, n_trees=n_trees, leaf_cap=16,
+        n_centroids=6, nprobe=2, n_tables=4, n_bits=5, bucket_cap=30,
+    )
+    driver, executor = str(tmp_path / "driver"), str(tmp_path / "executor")
+    a = build_index(spark, items, driver, cfg)
+    monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", -1)
+    b = build_index(spark, items, executor, cfg)
+    monkeypatch.undo()
+    arrays_a, arrays_b = _model_arrays(driver), _model_arrays(executor)
+    assert arrays_a.keys() == arrays_b.keys()
+    assert all(np.array_equal(arrays_a[k], arrays_b[k]) for k in arrays_a)
+    assert _index_state(spark, driver) == _index_state(spark, executor)
+    assert a.cfg == b.cfg and a._salts == b._salts and a._salts
+    assert a.n_items() == b.n_items() == 240
+    qs = new.select((F.col("vec_id") + 10_000).alias("vec_id"), "embedding")
+    key = lambda r: (r.qid, r.nid, r.rank)  # noqa: E731
+    got_a = sorted(map(key, a.query(qs, k=5).collect()))
+    got_b = sorted(map(key, b.query(qs, k=5).collect()))
+    assert got_a == got_b and len(got_a) > 0
+
+
+def test_build_paths_raise_same_errors(spark, tmp_path, monkeypatch):
+    """Both build paths refuse a null vector and a ragged vector naming
+    the item, and an empty relation."""
+    import annoy_spark.sources.ann_index as ann_index
+
+    base, _ = _parity_batches(spark, "angular")
+    schema = "vec_id long, embedding array<double>"
+    cases = {
+        "invalid vector for item 9000": base.unionByName(
+            spark.createDataFrame([(9000, None)], schema)),
+        "invalid vector for item 9001": base.unionByName(
+            spark.createDataFrame([(9001, [1.0, 2.0])], schema)),
+        "empty items relation": base.limit(0),
+    }
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    for cap in (ann_index.SMALL_QUERY_MAX, -1):
+        monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", cap)
+        for pattern, items in cases.items():
+            with pytest.raises(Exception, match=pattern):
+                build_index(spark, items, str(tmp_path / "idx"), cfg)
+
+
+def test_rebuild_supersedes_unfinished_append_and_compact(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """A build replaces the whole root: after an append or a compaction
+    crashed between staging and publish, a rebuild into the same root
+    loads clean with only its own items — no pending marker, no staging,
+    and no parquet file of the old index left."""
+    from pathlib import Path
+
+    import annoy_spark.sources.ann_index as ann_index
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    root = Path(tmp_path / "idx")
+    leftovers = {
+        "_publish_staged": (ann_index._PENDING, ann_index._STAGING),
+        "_publish_compact": (ann_index._COMPACT_PENDING,
+                             ann_index._COMPACT_STAGING),
+    }
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash between staging and publish")
+
+    for publish, left in leftovers.items():
+        old = build_index(spark, corpus.where(F.col("vec_id") < 200),
+                          str(root), cfg)
+        monkeypatch.setattr(ann_index, publish, crash)
+        with pytest.raises(RuntimeError, match="crash between"):
+            if publish == "_publish_staged":
+                old.append(corpus.where(F.col("vec_id").between(200, 249)))
+            else:
+                old.compact()
+        monkeypatch.undo()
+        assert all((root / name).exists() for name in left)
+        old_files = set(root.rglob("*.parquet"))
+
+        new = corpus.where(F.col("vec_id") >= 250)
+        build_index(spark, new, str(root), cfg)
+        idx = load_index(spark, str(root))
+        assert idx.n_items() == idx._vectors.count() == 150
+        assert not any((root / name).exists() for name in left)
+        assert not old_files & set(root.rglob("*.parquet"))

@@ -652,3 +652,40 @@ def test_unit_rows_bit_identical_to_unit(spark):
         .collect()
     ])
     assert np.array_equal(_unit_rows(mat), got)
+
+
+def test_load_runs_no_spark_job(spark, corpus, tmp_path):
+    """Loading reads every artifact with the schema in its parquet footer
+    and the salt map is empty: no Spark job, and the loaded index
+    answers like the built one. A build from a local relation runs none
+    either (the fetch of a local relation is not a job)."""
+    import pandas as pd
+
+    rows = corpus.collect()
+    local = spark.createDataFrame(
+        pd.DataFrame({"vec_id": [r.vec_id for r in rows],
+                      "embedding": [list(r.embedding) for r in rows]}),
+        "vec_id long, embedding array<double>",
+    )
+    root = str(tmp_path / "idx")
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    built, build_jobs = jobs("local_build", lambda: build_index(
+        spark, local, root, cfg))
+    loaded, load_jobs = jobs("load", lambda: load_index(spark, root))
+    assert (build_jobs, load_jobs) == (0, 0)
+    assert not loaded._salts
+    assert loaded._vectors.schema == built._vectors.schema
+    qs = corpus.where("vec_id % 50 = 0")
+    key = lambda r: (r.qid, r.nid, r.rank)  # noqa: E731
+    assert sorted(map(key, loaded.query(qs, k=5).collect())) == sorted(
+        map(key, built.query(qs, k=5).collect()))

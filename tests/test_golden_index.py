@@ -78,3 +78,15 @@ def test_golden_index_compacted_copy_answers_identically(spark, tmp_path):
     for g, w in zip(got, want["rows"]):
         assert (g.qid, g.nid, g.rank) == (w["qid"], w["nid"], w["rank"])
         assert g.distance == pytest.approx(w["distance"], abs=1e-12)
+
+
+def test_golden_index_rebuild_is_identical(spark, tmp_path):
+    """Build determinism against the committed fixture: rebuilding its
+    config from the same items gives byte-equal model.npz arrays and the
+    same vectors / buckets / summed-counts digests and meta — the
+    comparison of `make_golden_index.py --check`."""
+    idx = _tool.build_golden(spark, tmp_path / "golden")
+    assert idx.cfg.config_hash() == json.loads(
+        (FIXTURE / "model" / "_ANNOY_SPARK_META.json").read_text()
+    )["config_hash"]
+    assert _tool.fixture_differences(spark, tmp_path / "golden") == []

@@ -10,6 +10,14 @@ expected answers for a pinned query batch
 persisted format changes deliberately, and say so in the commit:
 
     python tools/make_golden_index.py
+
+``--check DIR`` rebuilds the same index into DIR instead and compares it
+with the committed fixture, which it leaves untouched: the model.npz
+arrays, and the order-independent digests of vectors, buckets and summed
+counts plus the meta line (tools/stage_digests.py). It prints each
+artifact that differs and exits 1 if any does:
+
+    python tools/make_golden_index.py --check /tmp/golden_check
 """
 
 from __future__ import annotations
@@ -22,6 +30,7 @@ from pathlib import Path
 import numpy as np
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+sys.path.insert(0, str(Path(__file__).resolve().parent))  # stage_digests
 
 REPO = Path(__file__).resolve().parent.parent
 FIXTURE = REPO / "tests" / "fixtures" / "golden_index"
@@ -47,26 +56,69 @@ def golden_query_rows():
     ]
 
 
+def golden_config():
+    from annoy_spark.sources.ann_index import AnnIndexConfig
+
+    return AnnIndexConfig(
+        kind="forest", metric="angular", n_trees=4, leaf_cap=16, seed=SEED,
+        sample_fraction=1.0,
+    )
+
+
+def build_golden(spark, root: Path):
+    """Build the golden index from golden_items_rows() into ``root``."""
+    from annoy_spark.sources.ann_index import build_index
+
+    items = spark.createDataFrame(
+        golden_items_rows(), "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    return build_index(spark, items, str(root), golden_config())
+
+
+def fixture_differences(spark, root: Path) -> list[str]:
+    """One line per artifact of the index at ``root`` that differs from
+    the committed fixture; empty when they are identical."""
+    from stage_digests import index_lines
+
+    out = []
+    with np.load(root / "model" / "model.npz") as got, \
+            np.load(FIXTURE / "model" / "model.npz") as want:
+        for k in sorted(set(got.files) | set(want.files)):
+            if (k not in got.files or k not in want.files
+                    or not np.array_equal(got[k], want[k])):
+                out.append(f"model.npz: array {k!r} differs")
+    for g, w in zip(index_lines(spark, root), index_lines(spark, FIXTURE)):
+        if g != w:
+            out.append(f"{g.split()[0]}: {g!r}, fixture {w!r}")
+    return out
+
+
+def check(root: Path) -> int:
+    from annoy_spark.session import get_spark
+
+    spark = get_spark("golden_index_check", master="local[2]")
+    try:
+        build_golden(spark, root)
+        diffs = fixture_differences(spark, root)
+    finally:
+        spark.stop()
+    print("\n".join(diffs) if diffs else f"{root} matches {FIXTURE}")
+    return 1 if diffs else 0
+
+
 def main() -> int:
     from annoy_spark.session import get_spark
-    from annoy_spark.sources.ann_index import AnnIndexConfig, build_index
 
     spark = get_spark("golden_index", master="local[2]")
     # 1 shuffle partition keeps the committed parquet to a handful of files
     spark.conf.set("spark.sql.shuffle.partitions", "1")
-    items = spark.createDataFrame(
-        golden_items_rows(), "vec_id long, embedding array<double>"
-    ).coalesce(1)
     qs = spark.createDataFrame(
         golden_query_rows(), "vec_id long, embedding array<double>"
     )
     if FIXTURE.exists():
         shutil.rmtree(FIXTURE)
-    cfg = AnnIndexConfig(
-        kind="forest", metric="angular", n_trees=4, leaf_cap=16, seed=SEED,
-        sample_fraction=1.0,
-    )
-    idx = build_index(spark, items, str(FIXTURE), cfg)
+    cfg = golden_config()
+    idx = build_golden(spark, FIXTURE)
     rows = sorted(
         idx.query(qs, k=K, spill_eps=0.1).collect(),
         key=lambda r: (r.qid, r.rank),
@@ -90,4 +142,8 @@ def main() -> int:
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--check"] and len(sys.argv) == 3:
+        sys.exit(check(Path(sys.argv[2])))
+    if len(sys.argv) > 1:
+        sys.exit("usage: make_golden_index.py [--check DIR]")
     sys.exit(main())

@@ -26,41 +26,51 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 
+def digest_line(name: str, df) -> str:
+    """``name``, row count and bit_xor(xxhash64(all columns)) of ``df``,
+    tab-separated."""
+    from pyspark.sql import functions as F
+
+    cols = ", ".join(f"`{c}`" for c in df.columns)
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.expr(f"bit_xor(xxhash64({cols}))").alias("digest"),
+    ).first()
+    return f"{name}\t{row['n']}\t{row['digest']}"
+
+
+def index_lines(spark, root: Path) -> list[str]:
+    """The digest lines of the ANN index at ``root``: vectors, buckets,
+    counts summed per bucket, then the meta line."""
+    from pyspark.sql import functions as F
+
+    lines = []
+    for stage in ("vectors", "buckets", "counts"):
+        df = spark.read.parquet(str(root / stage))
+        if stage == "counts":
+            df = df.groupBy("bucket").agg(F.sum("gsize").alias("gsize"))
+        lines.append(digest_line(stage, df))
+    meta = json.loads((root / "model" / "_ANNOY_SPARK_META.json").read_text())
+    lines.append(
+        f"meta\tn_items={meta.get('n_items')}\t"
+        f"has_oversized={meta.get('has_oversized')}"
+    )
+    return lines
+
+
 def main(argv: list[str]) -> int:
     if len(argv) != 1:
         print(__doc__.strip().splitlines()[-1], file=sys.stderr)
         return 2
-    from pyspark.sql import functions as F
-
     from annoy_spark.plans.pipeline import STAGES
     from annoy_spark.session import get_spark
 
-    def digest_line(name: str, df) -> str:
-        cols = ", ".join(f"`{c}`" for c in df.columns)
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(f"bit_xor(xxhash64({cols}))").alias("digest"),
-        ).first()
-        return f"{name}\t{row['n']}\t{row['digest']}"
-
     out_dir = Path(argv[0])
-    meta_path = out_dir / "model" / "_ANNOY_SPARK_META.json"
     spark = get_spark("stage_digests", master="local[2]")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        if meta_path.exists():
-            for stage in ("vectors", "buckets", "counts"):
-                df = spark.read.parquet(str(out_dir / stage))
-                if stage == "counts":
-                    df = df.groupBy("bucket").agg(
-                        F.sum("gsize").alias("gsize")
-                    )
-                print(digest_line(stage, df))
-            meta = json.loads(meta_path.read_text())
-            print(
-                f"meta\tn_items={meta.get('n_items')}\t"
-                f"has_oversized={meta.get('has_oversized')}"
-            )
+        if (out_dir / "model" / "_ANNOY_SPARK_META.json").exists():
+            print("\n".join(index_lines(spark, out_dir)))
             return 0
         for stage in STAGES:
             path = out_dir / stage
