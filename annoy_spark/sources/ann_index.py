@@ -39,9 +39,9 @@ Persisted layout (format 2 — append-friendly):
 Query semantics (get_nns_by_vector, annoylib.h:1234-1236): the query batch
 is routed with the SAME stored trees/centroids/planes, replicated across
 each oversized bucket's salt sub-buckets (the replicated skew join — no
-candidate lost to the item-side salting), equi-joined against the stored
-bucket assignments, deduped NARROW on (qid, nid), and exact re-ranked in
-the true metric (annoylib.h:1492-1494). ``spill_eps`` is applied on the
+candidate lost to the item-side salting), matched with the stored bucket
+assignments, deduped NARROW on (qid, nid), and exact re-ranked in the
+true metric (annoylib.h:1492-1494). ``spill_eps`` is applied on the
 QUERY side only — annoy's search_k is a query-time knob
 (annoylib.h:1447-1480), so one stored index serves every accuracy budget.
 
@@ -52,8 +52,14 @@ other input comes back as Arrow, cheap to drop when the batch is over the
 cap). A batch within the cap is checked and routed on the driver with the
 same numpy kernels the executor UDFs run (annoy builds, adds and answers
 in-process over its item array, annoylib.h:1037-1091, 1447-1504).
-A query batch joins the stored relations as exact-sized local relations,
-so the planner broadcasts whichever side is small. A build trains on the
+A query batch is also answered there, at call time: two bounded
+semi-join fetches bring the routed buckets' assignments and their items'
+vectors, and numpy dedups, scores (the JVM distance's left folds, bit
+for bit) and ranks, in chunks of at most SMALL_QUERY_MAX candidate
+pairs; the answer is a local relation. Only when the routed buckets hold
+more than SMALL_QUERY_MAX assignments does the batch join the stored
+relations as exact-sized local relations instead, so the planner
+broadcasts whichever side is small. A build trains on the
 sample picked from the fetched rows and stages its artifacts with
 pyarrow, as an append does; an append's commit reads only the stored
 counts of the buckets it touched — no append cost grows with the stored
@@ -63,7 +69,8 @@ queries join through shuffle equi-joins, builds and appends stage
 through Spark writes. Loading reads each artifact with the schema in its
 parquet footer, so a load runs no Spark job unless a bucket is oversized.
 No join carries a hint: the stored buckets/vectors relations are only
-ever scanned and equi-joined, and AQE sizes the candidate relation.
+ever scanned, semi-joined and equi-joined, and AQE sizes the candidate
+relation.
 
 The ephemeral operators run on the same router, stored-vector projection
 and metric without persisting anything: ``knn_by_vector_approx`` (the
@@ -83,7 +90,13 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from annoy_spark.operators.forest import (
     HammingTree,
@@ -255,6 +268,39 @@ def _distance(cfg: AnnIndexConfig, qv: str, nv: str) -> F.Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     ).cast("double")
+
+
+#: set bits of every byte value: the popcount table (numpy 1.26 has no
+#: bitwise_count)
+_POPCOUNT = np.array([bin(b).count("1") for b in range(256)], np.uint8)
+
+
+def _distance_rows(
+    cfg: AnnIndexConfig, qv: np.ndarray, v: np.ndarray
+) -> np.ndarray:
+    """_distance over paired rows of two matrices, bit for bit: the same
+    left folds from 0.0 (cumsum; the + 0.0 turns a fold of only -0.0
+    terms into the +0.0 the JVM fold starts from), the same outer forms,
+    and hamming's popcount of the XOR summed exactly."""
+    if cfg.metric == "hamming":
+        x = np.bitwise_xor(qv, v)
+        bits = _POPCOUNT[x.view(np.uint8)].reshape(len(x), -1)
+        return bits.sum(axis=1, dtype=np.int64).astype(np.float64)
+    if cfg.metric in ("angular", "dot"):
+        terms = qv * v
+    elif cfg.metric == "euclidean":
+        terms = qv - v
+        terms *= terms
+    else:
+        terms = np.abs(qv - v)
+    s = np.cumsum(terms, axis=1, out=terms)[:, -1] + 0.0
+    if cfg.metric == "angular":
+        return np.sqrt(np.maximum(0.0, 2.0 - 2.0 * s))
+    if cfg.metric == "dot":
+        return -s
+    if cfg.metric == "euclidean":
+        return np.sqrt(np.maximum(0.0, s))
+    return s
 
 
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -668,9 +714,16 @@ def _replicate_salts(
     m = np.fromiter(
         (salts.get(b, 1) for b in bucket.tolist()), np.int64, len(bucket)
     )
-    start = np.repeat(np.cumsum(m) - m, m)
-    salt = np.arange(int(m.sum()), dtype=np.int64) - start
-    return np.repeat(row, m), np.repeat(bucket, m), salt
+    owner, salt = _ragged(m)
+    return row[owner], bucket[owner], salt
+
+
+def _ragged(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(owner, offset): each index i repeated counts[i] times, with the
+    offsets 0..counts[i]-1 — the row expansion of a one-to-many match."""
+    owner = np.repeat(np.arange(len(counts)), counts)
+    start = np.repeat(np.cumsum(counts) - counts, counts)
+    return owner, np.arange(len(owner), dtype=np.int64) - start
 
 
 def _query_head(
@@ -734,41 +787,56 @@ def _route_on_driver(
     return raw, _driver_keys(rows, raw, model, spill_eps, nprobe, query_side)
 
 
+def _bounded(df: DataFrame):
+    """``df`` as one Arrow table if it has at most SMALL_QUERY_MAX rows,
+    else None: one bounded fetch, so a relation past the cap costs at
+    most SMALL_QUERY_MAX + 1 rows of columnar buffers."""
+    table = df.limit(SMALL_QUERY_MAX + 1).toArrow()
+    return table if len(table) <= SMALL_QUERY_MAX else None
+
+
 def _fetch_batch(queries: DataFrame, head: DataFrame) -> list | None:
     """The rows of ``head`` (_query_head of ``queries``, a query or an
     appended item batch) if the batch has
     at most SMALL_QUERY_MAX rows, else None. A local input (e.g. a pandas
     batch under spark.sql.execution.arrow.localRelationThreshold) is
     already in driver memory, so collecting it runs no job; anything
-    else is fetched as Arrow, so a batch past the cap throws away
-    columnar buffers, not Python objects."""
-    bounded = head.limit(SMALL_QUERY_MAX + 1)
+    else is fetched as Arrow (_bounded)."""
     if queries.isLocal():
-        rows = bounded.collect()
+        rows = head.limit(SMALL_QUERY_MAX + 1).collect()
         return rows if len(rows) <= SMALL_QUERY_MAX else None
-    table = bounded.toArrow()
-    return table.to_pylist() if len(table) <= SMALL_QUERY_MAX else None
+    table = _bounded(head)
+    return None if table is None else table.to_pylist()
 
 
-def _local_query_side(
-    spark: SparkSession, rows: list, qid_type, model: AnnModel,
-    salts: dict[int, int], spill_eps: float, nprobe: int | None,
-) -> tuple[DataFrame, DataFrame]:
-    """((qid, bucket, salt), (qid, qv)) as local relations from fetched
-    _query_head rows, routed on the driver."""
-    cfg = model.cfg
+def _driver_routes(
+    rows: list, model: AnnModel, salts: dict[int, int], spill_eps: float,
+    nprobe: int | None,
+) -> tuple[np.ndarray, np.ndarray, tuple]:
+    """(qids, qv, (row, bucket, salt)) of fetched _query_head rows: the
+    ids, each vector in its stored form, and the routes, checked and
+    routed on the driver and replicated across oversized buckets' salts."""
     raw, keys = _route_on_driver(rows, model, spill_eps, nprobe)
     n_keys = np.fromiter(map(len, keys), np.int64, len(keys))
-    row, bucket, salt = _replicate_salts(
+    routes = _replicate_salts(
         np.repeat(np.arange(len(rows)), n_keys),
         np.concatenate(keys) if keys else np.zeros(0, np.int64),
         salts,
     )
     qids = np.empty(len(rows), dtype=object)
     qids[:] = [r["qid"] for r in rows]
-    qv = _stored_rows(cfg, raw)
+    return qids, _stored_rows(model.cfg, raw), routes
+
+
+def _local_query_side(
+    spark: SparkSession, qids: np.ndarray, qid_type, qv: np.ndarray,
+    routes: tuple, cfg: AnnIndexConfig,
+) -> tuple[DataFrame, DataFrame]:
+    """((qid, bucket, salt), (qid, qv)) as local relations from a batch
+    routed on the driver (_driver_routes)."""
+    row, bucket, salt = routes
     vec_type = LongType() if cfg.metric == "hamming" else DoubleType()
-    routes = spark.createDataFrame(
+    qroutes = spark.createDataFrame(
         pd.DataFrame({"qid": qids[row], "bucket": bucket, "salt": salt}),
         StructType().add("qid", qid_type).add("bucket", LongType())
         .add("salt", LongType()),
@@ -777,7 +845,187 @@ def _local_query_side(
         pd.DataFrame({"qid": qids, "qv": list(qv)}),
         StructType().add("qid", qid_type).add("qv", ArrayType(vec_type)),
     )
-    return routes, qvecs
+    return qroutes, qvecs
+
+
+def _members_of(
+    spark: SparkSession, assign: DataFrame, buckets: np.ndarray
+) -> DataFrame:
+    """(bucket, salt, nid) of the stored assignments in ``buckets``: a
+    semi-join against the buckets as a local relation, which the planner
+    broadcasts into the assignments scan (not Column.isin, which makes
+    one py4j call per literal)."""
+    wanted = spark.createDataFrame(
+        pd.DataFrame({"bucket": buckets}), "bucket long"
+    )
+    return assign.join(wanted, "bucket", "left_semi").select(
+        "bucket", "salt", "nid"
+    )
+
+
+def _vectors_of(
+    spark: SparkSession, vectors: DataFrame, nids: np.ndarray
+) -> DataFrame:
+    """(nid, v) of the stored vectors of ``nids``, the same semi-join."""
+    wanted = spark.createDataFrame(
+        pd.DataFrame({"nid": nids}),
+        StructType().add("nid", vectors.schema["nid"].dataType),
+    )
+    return vectors.join(wanted, "nid", "left_semi").select("nid", "v")
+
+
+def _answer_schema(qid_type, nid: StructField) -> StructType:
+    """The schema of _join_plan's answer, nullability included: the qid
+    of the local query relation, the nid of the stored assignments, a
+    nullable distance and the row_number rank, never null."""
+    return (
+        StructType()
+        .add("qid", qid_type)
+        .add(nid.name, nid.dataType, nid.nullable)
+        .add("distance", DoubleType())
+        .add("rank", LongType(), False)
+    )
+
+
+def _answer(
+    spark: SparkSession, schema: StructType, qid: np.ndarray,
+    nid: np.ndarray, distance: np.ndarray, rank: np.ndarray,
+) -> DataFrame:
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {"qid": qid, "nid": nid, "distance": distance, "rank": rank}
+        ),
+        schema,
+    )
+
+
+def _member_runs(
+    members, bucket: np.ndarray, salt: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(by_key, lo, cnt): the fetched members' order by (bucket, salt),
+    and where each route's members start in that order and how many
+    there are — the (bucket, salt) equi-join of routes and members."""
+    msalt = members["salt"].to_numpy()
+    both = pd.factorize(
+        np.concatenate([members["bucket"].to_numpy(), bucket])
+    )[0]
+    width = int(max(msalt.max(initial=0), salt.max())) + 1
+    mkey = both[: len(msalt)] * width + msalt
+    by_key = np.argsort(mkey, kind="stable")
+    rkey = both[len(msalt):] * width + salt
+    lo = np.searchsorted(mkey[by_key], rkey, "left")
+    return by_key, lo, np.searchsorted(mkey[by_key], rkey, "right") - lo
+
+
+def _driver_top_k(
+    spark: SparkSession, cfg: AnnIndexConfig, k: int, qids: np.ndarray,
+    qv: np.ndarray, routes: tuple, assign: DataFrame, vectors: DataFrame,
+    drop_self: bool, schema: StructType,
+) -> DataFrame | None:
+    """Each query's k nearest of a driver-routed batch, answered on the
+    driver as annoy answers in-process (gather the leaves' items, dedup,
+    exact distances, partial sort; annoylib.h:1447-1504): the rows of
+    _join_plan, distances bit for bit, as a local relation. None when
+    the batch's buckets hold more than SMALL_QUERY_MAX assignments.
+
+    Two bounded fetches: the assignments of the routed buckets
+    (_members_of) and the vectors of their distinct items (_vectors_of;
+    no more rows than the first). The routes meet the members on
+    (bucket, salt) in numpy, in chunks of whole queries holding at most
+    SMALL_QUERY_MAX route-member pairs each. A chunk dedups its
+    (qid, nid) pairs, drops self pairs for drop_self, scores them with
+    _distance_rows and keeps each query's k best by (distance, nid). A
+    repeated qid is one query scored with each of its vectors, as the
+    join plan scores it."""
+    row, bucket, salt = routes
+    # a query is a qid code: a repeated qid is one query, a null qid gets
+    # -1 and no answer, as in the join
+    qcode, qkeys = pd.factorize(qids)
+    if not len(qkeys):  # an empty batch, or only null ids
+        empty = qids[:0]
+        return _answer(
+            spark, schema, empty, empty, np.zeros(0), np.zeros(0, np.int64)
+        )
+    members = _bounded(_members_of(spark, assign, np.unique(bucket)))
+    if members is None:
+        return None
+    # sorted codes, so code order is Spark's nid order (strings included)
+    mnid, nids = pd.factorize(
+        members["nid"].to_numpy(zero_copy_only=False), sort=True
+    )
+    vecs = _vectors_of(spark, vectors, nids).toArrow()
+    at = pd.Index(nids).get_indexer(
+        vecs["nid"].to_numpy(zero_copy_only=False)
+    )
+    v_of = np.zeros((len(nids), cfg.dim), qv.dtype)
+    v_of[at] = (
+        vecs["v"].combine_chunks().flatten().to_numpy().reshape(-1, cfg.dim)
+    )
+    # an assignment without a stored vector drops out, as in the inner join
+    has_v = np.zeros(len(nids), bool)
+    has_v[at] = True
+    by_key, lo, cnt = _member_runs(members, bucket, salt)
+    # routes sorted by query, so a run of queries is a run of routes
+    rq = qcode[row]
+    by_q = np.argsort(rq, kind="stable")
+    by_q = by_q[rq[by_q] >= 0]
+    rq, lo, cnt = rq[by_q], lo[by_q], cnt[by_q]
+    nq = len(qkeys)
+    first_route = np.searchsorted(rq, np.arange(nq + 1))
+    pairs_before = np.concatenate([[0], np.cumsum(cnt)])[first_route]
+    # the batch rows of each query: each of them is scored
+    qrows = np.flatnonzero(qcode >= 0)
+    qrows = qrows[np.argsort(qcode[qrows], kind="stable")]
+    n_rows = np.bincount(qcode[qrows], minlength=nq)
+    first_row = np.cumsum(n_rows) - n_rows
+    self_nid = pd.Index(nids).get_indexer(qkeys) if drop_self else None
+    n_nids = max(len(nids), 1)
+    out = []
+    a = 0
+    while a < nq:
+        b = max(a + 1, int(np.searchsorted(
+            pairs_before, pairs_before[a] + SMALL_QUERY_MAX, "right")) - 1)
+        ra, rb = first_route[a], first_route[b]
+        owner, off = _ragged(cnt[ra:rb])
+        pq = rq[ra:rb][owner]
+        pn = mnid[by_key[lo[ra:rb][owner] + off]]
+        keep = has_v[pn]
+        if drop_self:
+            keep &= pn != self_nid[pq]
+        pair = np.unique(pq[keep] * n_nids + pn[keep])
+        pq, pn = pair // n_nids, pair % n_nids
+        owner, off = _ragged(n_rows[pq])
+        pq, pn = pq[owner], pn[owner]
+        d = _distance_rows(cfg, qv[qrows[first_row[pq] + off]], v_of[pn])
+        order = np.lexsort((pn, d, pq))
+        pq, pn, d = pq[order], pn[order], d[order]
+        rank = np.arange(1, len(pq) + 1) - np.searchsorted(pq, pq)
+        top = rank <= k
+        out.append((pq[top], pn[top], d[top], rank[top]))
+        a = b
+    pq, pn, d, rank = map(np.concatenate, zip(*out))
+    return _answer(spark, schema, qkeys[pq], nids[pn], d, rank)
+
+
+def _join_plan(
+    qroutes: DataFrame, qvecs: DataFrame, assign: DataFrame,
+    vectors: DataFrame, cfg: AnnIndexConfig, k: int, drop_self: bool,
+) -> DataFrame:
+    """(qid, nid, distance, rank) of a query side joined on the
+    executors: equi-join the stored assignments, dedup NARROW (ids only;
+    self pairs dropped first for drop_self), re-attach vectors, exact
+    re-rank."""
+    cand = qroutes.join(assign, ["bucket", "salt"]).select("qid", "nid")
+    if drop_self:
+        cand = cand.where(F.col("qid") != F.col("nid"))
+    joined = (
+        cand.dropDuplicates(["qid", "nid"])
+        .join(vectors, "nid").join(qvecs, "qid")
+    )
+    scored = joined.select(
+        "qid", "nid", _distance(cfg, "qv", "v").alias("distance")
+    )
+    return _top_k(scored, k)
 
 
 def _executor_query_side(
@@ -830,42 +1078,44 @@ def _query_plan(
     vec_col: str,
     spill_eps: float,
     nprobe: int | None = None,
+    drop_self: bool = False,
 ) -> DataFrame:
-    """(qid, nid, rank, distance): route queries with the stored model,
-    replicate across oversized buckets' salts, equi-join stored
-    assignments, dedup NARROW (ids only), re-attach vectors, exact
-    re-rank.
+    """(qid, nid, distance, rank): route queries with the stored model,
+    replicate across oversized buckets' salts, match the stored
+    assignments, dedup (qid, nid), exact re-rank. drop_self drops each
+    query's own id from its candidates before the ranking
+    (get_nns_by_item without the item).
 
-    One bounded fetch of the batch (_fetch_batch) picks the query side.
-    Up to SMALL_QUERY_MAX rows are routed on the driver with the routing
-    kernels and join as exact-sized local relations; a larger batch is
-    routed on the executors.
-    Either way the planner picks every join strategy from sizes: the
-    stored buckets/vectors relations are the 10^12-row side and are only
-    ever scanned and equi-joined, never hint-broadcast."""
+    One bounded fetch of the batch (_fetch_batch) picks the path. Up to
+    SMALL_QUERY_MAX rows are routed on the driver with the routing
+    kernels and answered there (_driver_top_k): the call runs its two
+    bounded fetches and returns a local relation. If the routed buckets
+    hold more than SMALL_QUERY_MAX assignments, the driver-routed side
+    joins as exact-sized local relations instead, and a larger batch is
+    routed on the executors; both end in the lazy _join_plan, where the
+    planner picks every join strategy from sizes: the stored
+    buckets/vectors relations are the 10^12-row side and are only ever
+    scanned, semi-joined or equi-joined, never hint-broadcast."""
     cfg = model.cfg
+    spark = queries.sparkSession
     head = _query_head(queries, model, id_col, vec_col)
     rows = _fetch_batch(queries, head)
-    if rows is not None:
-        qroutes, qvecs = _local_query_side(
-            queries.sparkSession, rows, head.schema["qid"].dataType, model,
-            salts, spill_eps, nprobe,
-        )
-    else:
+    if rows is None:
         qroutes, qvecs = _executor_query_side(
             queries, sizes, bool(salts), model, id_col, vec_col, spill_eps,
             nprobe,
         )
-    cand = (
-        qroutes.join(assign, ["bucket", "salt"])
-        .select("qid", "nid")
-        .dropDuplicates(["qid", "nid"])
+        return _join_plan(qroutes, qvecs, assign, vectors, cfg, k, drop_self)
+    qid_type = head.schema["qid"].dataType
+    qids, qv, routes = _driver_routes(rows, model, salts, spill_eps, nprobe)
+    schema = _answer_schema(qid_type, assign.schema["nid"])
+    answer = _driver_top_k(
+        spark, cfg, k, qids, qv, routes, assign, vectors, drop_self, schema
     )
-    joined = cand.join(vectors, "nid").join(qvecs, "qid")
-    scored = joined.select(
-        "qid", "nid", _distance(cfg, "qv", "v").alias("distance")
-    )
-    return _top_k(scored, k)
+    if answer is not None:
+        return answer
+    qroutes, qvecs = _local_query_side(spark, qids, qid_type, qv, routes, cfg)
+    return _join_plan(qroutes, qvecs, assign, vectors, cfg, k, drop_self)
 
 
 _MODEL_STAGE = "model"
@@ -1202,7 +1452,14 @@ class AnnIndex:
         For HAMMING forests spill_eps is read as a level count
         (floor(spill_eps) bottom split levels probed on both sides —
         a bit margin has no eps scale, see hamming_forest_leaves).
-        A null or wrong-length query vector raises, naming its id."""
+        A null or wrong-length query vector raises, naming its id.
+
+        A batch of at most SMALL_QUERY_MAX rows is answered at call
+        time: routed and re-ranked on the driver, it comes back as a
+        local relation (about 4 Spark jobs: two bounded fetches of the
+        stored relations). A larger batch, or one whose routed buckets
+        hold more than SMALL_QUERY_MAX assignments, returns a lazy join
+        plan with the same rows and schema."""
         return _query_plan(
             queries, self._vectors, self._assign, self._sizes, self._salts,
             self.model, k, id_col, vec_col, spill_eps, nprobe,
@@ -1219,21 +1476,17 @@ class AnnIndex:
         """get_nns_by_item over the stored index (annoylib.h:1228-1232):
         the query vectors are the STORED representations of the given
         item ids (one column DataFrame). include_self=False drops each
-        item from its own neighbor list (annoy includes it; rank is
-        re-densified either way so downstream top-k contracts hold)."""
+        item from its own candidates before the re-rank (annoy includes
+        it), so each query still gets the k nearest of the others, ranked
+        1..k."""
         qs = item_ids.select(F.col(id_col).alias("qid")).join(
             self._vectors.withColumnRenamed("nid", "qid"), "qid"
         )
-        res = _query_plan(
+        return _query_plan(
             qs, self._vectors, self._assign, self._sizes, self._salts,
-            self.model,
-            # fetch one extra so dropping self still yields k
-            k if include_self else k + 1,
-            "qid", "v", spill_eps,
+            self.model, k, "qid", "v", spill_eps,
+            drop_self=not include_self,
         )
-        if include_self:
-            return res
-        return _top_k(res.where(F.col("qid") != F.col("nid")), k)
 
     def unload(self) -> None:
         """annoy ``unload`` (annoylib.h:1141-1165). Nothing is cached —
@@ -1272,8 +1525,8 @@ class AnnIndex:
 
         Returns self (internal relations refreshed in place).
         check_ids=True (default) semi-join-asserts the new ids are not
-        already stored — annoy's positional add_item cannot collide, a
-        keyed store can."""
+        already stored, naming up to 5 that are — annoy's positional
+        add_item cannot collide, a keyed store can."""
         if self._root is None or self._spark is None:
             raise ValueError(
                 "append requires a persisted index (build_index/"
@@ -1316,14 +1569,17 @@ class AnnIndex:
                 )
             else:
                 new_ids = items.select(F.col(id_col).alias("nid"))
-            # one semi-join job, not Column.isin (a py4j call per literal)
-            if new_ids.join(
+            # one semi-join (not Column.isin: a py4j call per literal),
+            # fetched whole: 2 jobs, where take(1) scales up to 3
+            clash = new_ids.join(
                 self._vectors.select("nid"), "nid", "left_semi"
-            ).take(1):
+            ).toArrow()
+            if len(clash):
                 raise ValueError(
-                    "appended item ids collide with stored ids — "
-                    "pass check_ids=False only if upstream guarantees "
-                    "disjoint ids"
+                    f"appended item ids collide with stored ids (e.g. "
+                    f"{sorted(clash['nid'].to_pylist())[:5]}) — pass "
+                    "check_ids=False only if upstream guarantees disjoint "
+                    "ids"
                 )
         n_stored = self.n_items()
         staging = Path(root) / _STAGING

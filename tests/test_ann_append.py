@@ -105,6 +105,46 @@ def test_append_rejects_id_collision_and_dim_change(
         append_index(spark, root, wrong_dim)
 
 
+def test_append_id_clash_names_ids_and_jobs(spark, corpus, tmp_path):
+    """An id clash fails naming up to 5 of the clashing ids, before
+    anything is staged: no marker, the index unchanged. A 250-row
+    append runs at most 4 Spark jobs (the id-clash semi-join fetch and
+    the touched buckets' stored counts, 2 each)."""
+    import pandas as pd
+    from pathlib import Path
+
+    import annoy_spark.sources.ann_index as ann_index
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    root = str(tmp_path / "idx")
+    idx = build_index(spark, corpus.where(F.col("vec_id") < 200), root, cfg)
+    before = _index_state(spark, root)
+    clash = corpus.where(F.col("vec_id").between(190, 209))
+    with pytest.raises(
+        ValueError, match=r"collide with stored ids \(e\.g\. "
+        r"\[190, 191, 192, 193, 194\]\)"
+    ):
+        idx.append(clash)
+    assert not (Path(root) / ann_index._PENDING).exists()
+    assert _index_state(spark, root) == before
+    rng = np.random.default_rng(5)
+    batch = spark.createDataFrame(
+        pd.DataFrame({
+            "vec_id": np.arange(1000, 1250),
+            "embedding": list(rng.standard_normal((250, 16))),
+        }),
+        "vec_id long, embedding array<double>",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("append_250", "250-row append")
+    try:
+        idx.append(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup("append_250")) <= 4
+    assert idx.n_items() == 450
+
+
 def test_append_crossing_bucket_cap_resalts(spark, tmp_path):
     """An append that pushes a bucket over bucket_cap must flip
     has_oversized and re-derive consistent salts for ALL the bucket's
@@ -284,13 +324,16 @@ def test_large_batch_falls_back_to_shuffle(spark, corpus, tmp_path,
         assert df.collect() == []
 
 
-def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
+def test_small_batch_routes_on_driver(spark, corpus, tmp_path, monkeypatch):
     """A 500-query batch from a local relation (the serving shape) runs
-    no Python UDF and at most 6 Spark jobs: the batch fetch runs none,
-    routing is numpy on the driver, and the rest is the stored-relation
-    joins and the re-rank. The same batch as a non-local input is
-    fetched through Arrow and returns the same rows."""
+    no Python UDF and at most 4 Spark jobs: the batch fetch runs none,
+    routing and the re-rank are numpy on the driver, and the two bounded
+    fetches (the routed buckets' assignments, their items' vectors) run
+    two each. The answer is a local relation. The same batch as a
+    non-local input is fetched through Arrow and returns the same rows."""
     import pandas as pd
+
+    import annoy_spark.sources.ann_index as ann_index
 
     cfg = AnnIndexConfig(kind="forest", n_trees=8, seed=42)
     idx = build_index(spark, corpus, str(tmp_path / "idx"), cfg)
@@ -304,6 +347,12 @@ def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
     )
     assert qs.isLocal() and not qs.select("*").isLocal()
     via_arrow = idx.query(qs.select("*"), k=10).collect()
+    fetches = []
+    for name in ("_members_of", "_vectors_of"):
+        def fetch(*a, _f=getattr(ann_index, name)):
+            fetches.append(_f(*a))
+            return fetches[-1]
+        monkeypatch.setattr(ann_index, name, fetch)
     sc = spark.sparkContext
     sc.setJobGroup("driver_routed_batch", "500-query batch")
     try:
@@ -314,9 +363,13 @@ def test_small_batch_routes_on_driver(spark, corpus, tmp_path):
     assert len(rows) == 5000
     assert sorted(rows) == sorted(via_arrow)
     plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert plan.startswith("LocalTableScan"), plan
+    assert len(fetches) == 2
+    for df in fetches:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     jobs = sc.statusTracker().getJobIdsForGroup("driver_routed_batch")
-    assert 0 < len(jobs) <= 6, jobs
+    assert 0 < len(jobs) <= 4, jobs
 
 
 def test_load_rejects_old_format(spark, corpus, tmp_path):

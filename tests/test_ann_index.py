@@ -576,6 +576,29 @@ def _router_cases():
     ]
 
 
+def _router_batch(spark, corpus, metric):
+    """(items, queries) for a router case: random packed words for
+    hamming; else the corpus, queried by every 13th item and an all-zero
+    vector."""
+    if metric == "hamming":
+        rng = np.random.default_rng(5)
+        words = rng.integers(-(2**62), 2**62, (300, 2))
+        items = spark.createDataFrame(
+            [(i, [int(x) for x in w]) for i, w in enumerate(words)],
+            "vec_id long, embedding array<long>",
+        )
+        qrows = [(10_000 + i, [int(x) for x in w ^ (1 << i)])
+                 for i, w in enumerate(words[:30])]
+        qs = spark.createDataFrame(qrows, "vec_id long, embedding array<long>")
+        return items, qs
+    qs = corpus.where("vec_id % 13 = 0").unionByName(
+        spark.createDataFrame(
+            [(-1, [0.0] * 16)], "vec_id long, embedding array<double>"
+        )
+    )
+    return corpus, qs
+
+
 @pytest.mark.parametrize(
     "kind,metric,kw", _router_cases(),
     ids=lambda v: str(v).replace(" ", "") if isinstance(v, dict) else v,
@@ -594,23 +617,7 @@ def test_driver_router_matches_keys_col(spark, corpus, kind, metric, kw):
     )
 
     assert metric in _KIND_METRICS[kind]
-    if metric == "hamming":
-        rng = np.random.default_rng(5)
-        words = rng.integers(-(2**62), 2**62, (300, 2))
-        items = spark.createDataFrame(
-            [(i, [int(x) for x in w]) for i, w in enumerate(words)],
-            "vec_id long, embedding array<long>",
-        )
-        qrows = [(10_000 + i, [int(x) for x in w ^ (1 << i)])
-                 for i, w in enumerate(words[:30])]
-        qs = spark.createDataFrame(qrows, "vec_id long, embedding array<long>")
-    else:
-        items = corpus
-        qs = corpus.where("vec_id % 13 = 0").unionByName(
-            spark.createDataFrame(
-                [(-1, [0.0] * 16)], "vec_id long, embedding array<double>"
-            )
-        )
+    items, qs = _router_batch(spark, corpus, metric)
     cfg = AnnIndexConfig(
         kind=kind, metric=metric, seed=42, n_trees=4, leaf_cap=16,
         n_centroids=12, nprobe=2, n_tables=6, n_bits=6,
@@ -628,6 +635,126 @@ def test_driver_router_matches_keys_col(spark, corpus, kind, metric, kw):
     assert len(rows) == len(spark_keys) > 0
     for r, k in zip(rows, keys):
         assert np.array_equal(k, spark_keys[r.qid]), r.qid
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _bits(rows) -> list:
+    """(qid, nid, rank, exact distance bits) of answer rows, sorted."""
+    return sorted((r.qid, r.nid, r.rank, r.distance.hex()) for r in rows)
+
+
+def _assert_join_parity(monkeypatch, run, cap):
+    """run() answers on the driver (a local relation) and, with
+    SMALL_QUERY_MAX patched to ``cap`` (at least the batch size, below
+    its routed buckets' assignments), through the local-relation join
+    plan: the same schema, (qid, nid, rank) and distance bits. Returns
+    the driver's rows."""
+    import annoy_spark.sources.ann_index as ann_index
+
+    driver = run()
+    with monkeypatch.context() as m:
+        m.setattr(ann_index, "SMALL_QUERY_MAX", cap)
+        joined = run()
+    rows = driver.collect()
+    assert _plan(driver).startswith("LocalTableScan"), _plan(driver)
+    assert "Window" in _plan(joined) and "ArrowEvalPython" not in _plan(
+        joined)
+    assert driver.schema == joined.schema
+    assert _bits(rows) == _bits(joined.collect())
+    return rows
+
+
+@pytest.mark.parametrize(
+    "kind,metric,kw", _router_cases(),
+    ids=lambda v: str(v).replace(" ", "") if isinstance(v, dict) else v,
+)
+def test_driver_rerank_matches_join_plan(spark, corpus, tmp_path, monkeypatch,
+                                         kind, metric, kw):
+    """The driver re-rank (two bounded fetches, numpy scoring and
+    ranking) returns the join plan's rows with bit-equal distances on
+    every (kind, metric) pair and query-time knob, the all-zero query
+    included."""
+    items, qs = _router_batch(spark, corpus, metric)
+    cfg = AnnIndexConfig(
+        kind=kind, metric=metric, seed=42, n_trees=4, leaf_cap=16,
+        n_centroids=12, nprobe=2, n_tables=6, n_bits=6,
+    )
+    idx = build_index(spark, items, str(tmp_path / "idx"), cfg)
+    rows = _assert_join_parity(
+        monkeypatch, lambda: idx.query(qs, k=5, **kw), qs.count())
+    assert rows
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_driver_rerank_salts_ties_and_ids(spark, tmp_path, monkeypatch,
+                                          id_type):
+    """Oversized buckets (salted assignments), 300 identical vectors
+    (distance ties broken by nid, string ids in Spark's order), a
+    repeated qid, a null qid and query_by_items with and without self
+    answer on the driver exactly as the join plan does; an empty batch
+    and one of null ids only answer nothing, with the same schema. With the cap between the member count and the route-member
+    pair count, the re-rank runs in several chunks and its rows do not
+    change."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    import annoy_spark.sources.ann_index as ann_index
+
+    rng = np.random.default_rng(11)
+    base = [float(x) for x in rng.standard_normal(8)]
+    vecs = [base] * 300 + [
+        [float(x) for x in rng.standard_normal(8)] for _ in range(50)]
+    ids = [i if id_type == "long" else f"id{i}" for i in range(350)]
+    schema = f"vec_id {id_type}, embedding array<double>"
+    items = spark.createDataFrame(list(zip(ids, vecs)), schema)
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, bucket_cap=40, seed=42)
+    idx = build_index(spark, items, str(tmp_path / "hot"), cfg)
+    assert idx._salts
+    q = ids[:3]  # a repeated qid, with two different vectors; a null one
+    qs = spark.createDataFrame(
+        pd.DataFrame({
+            "vec_id": pd.Series([q[0], q[1], q[0], q[2], None], dtype=object),
+            "embedding": [base, vecs[320], vecs[330], vecs[340], base],
+        }),
+        schema,
+    )
+    rows = _assert_join_parity(monkeypatch, lambda: idx.query(qs, k=10), 5)
+    assert {r.qid for r in rows} == set(q)
+    assert sorted(r.rank for r in rows if r.qid == q[0]) == list(
+        range(1, 11))
+    by_id = spark.createDataFrame([(i,) for i in q[:2] + ids[310:313]],
+                                  f"vec_id {id_type}")
+    for include_self in (True, False):
+        got = _assert_join_parity(
+            monkeypatch,
+            lambda: idx.query_by_items(by_id, k=6, include_self=include_self),
+            5)
+        assert any(r.qid == r.nid for r in got) == include_self
+    for none in (qs.limit(0), qs.where("vec_id IS NULL")):
+        empty = idx.query(none, k=10)
+        assert empty.schema == idx.query(qs, k=10).schema
+        assert empty.collect() == []
+    # every bucket is routed by the items themselves, so the members are
+    # all assignments; each item meets its whole bucket, so the pairs
+    # are far more
+    members = idx._assign.count()
+    calls = []
+    scorer = ann_index._distance_rows
+
+    def counted(*a):
+        calls.append(1)
+        return scorer(*a)
+
+    whole = idx.query(items, k=10).collect()
+    monkeypatch.setattr(ann_index, "SMALL_QUERY_MAX", members)
+    monkeypatch.setattr(ann_index, "_distance_rows", counted)
+    chunked = idx.query(items, k=10).collect()
+    assert len(calls) > 1
+    assert _bits(chunked) == _bits(whole)
+    assert len(whole) == 3500
 
 
 def test_unit_rows_bit_identical_to_unit(spark):

@@ -108,14 +108,36 @@ def main() -> None:
                            sample_fraction=1.0))
 
     # persisted ANN index: by-vector query against STORED parquet
-    # artifacts — parquet scans of buckets/vectors, query routes and
-    # vectors as local relations routed on the driver, narrow (qid, nid)
-    # dedup before the vector re-attach; plans after one run, so AQE's
-    # join choices show
+    # artifacts. A driver-sized batch is routed and re-ranked on the
+    # driver: its plans are the two bounded semi-join fetches of the
+    # stored relations, and the answer is a local relation. Plans after
+    # one run, so AQE's join choices show
     import tempfile
 
     import annoy_spark.sources.ann_index as ann_index
     from annoy_spark.sources.ann_index import AnnIndexConfig, build_index
+
+    def driver_fetch_plans(run) -> str:
+        """The fetch plans a driver-answered query runs, and the
+        answer's plan."""
+        fetched = []
+        real = {n: getattr(ann_index, n) for n in ("_members_of",
+                                                   "_vectors_of")}
+        for name, fn in real.items():
+            def fetch(*a, _fn=fn):
+                fetched.append(_fn(*a))
+                return fetched[-1]
+            setattr(ann_index, name, fetch)
+        try:
+            answer = run()
+        finally:
+            for name, fn in real.items():
+                setattr(ann_index, name, fn)
+        titles = ("-- member fetch (routed buckets' assignments) --",
+                  "-- vector fetch (their items' vectors) --")
+        return "\n".join(
+            f"{t}\n{final_plan_of(df)}" for t, df in zip(titles, fetched)
+        ) + f"-- answer --\n{plan_of(answer)}"
 
     idx_root = tempfile.mkdtemp(prefix="plans_annidx_")
     idx = build_index(
@@ -127,16 +149,26 @@ def main() -> None:
         (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
     )
     sections[
-        "ANN INDEX QUERY (stored bucket/vector parquet scans, driver-routed "
-        "query side as local relations, no UDF, no hints; narrow (qid,nid) "
-        "dedup, re-attach vectors, exact re-rank)"
-    ] = final_plan_of(idx.query(queries, k=3, spill_eps=0.1))
+        "ANN INDEX QUERY, DRIVER RE-RANK (driver-routed batch: two bounded "
+        "semi-join fetches of the stored bucket/vector parquet, each a "
+        "broadcast local relation into one scan, no UDF, no hints; dedup, "
+        "scoring and ranking in numpy; the answer is a local relation)"
+    ] = driver_fetch_plans(lambda: idx.query(queries, k=3, spill_eps=0.1))
 
-    # the SAME query routed on the executors, as a batch past
-    # SMALL_QUERY_MAX is: forced here by lowering the cap below the batch
+    # the same driver-routed batch when its buckets hold more assignments
+    # than SMALL_QUERY_MAX: forced here by lowering the cap to the batch
     cap = ann_index.SMALL_QUERY_MAX
-    ann_index.SMALL_QUERY_MAX = 2
+    ann_index.SMALL_QUERY_MAX = 5
     try:
+        sections[
+            "ANN INDEX QUERY — LOCAL-RELATION JOIN PLAN (cap lowered "
+            "between the batch and its routed assignments to force it: "
+            "query routes and vectors as local relations, narrow (qid,nid) "
+            "dedup, re-attach vectors, exact re-rank)"
+        ] = final_plan_of(idx.query(queries, k=3, spill_eps=0.1))
+        # the SAME query routed on the executors, as a batch past
+        # SMALL_QUERY_MAX is: forced by lowering the cap below the batch
+        ann_index.SMALL_QUERY_MAX = 2
         sections[
             "ANN INDEX QUERY — EXECUTOR-ROUTED LARGE BATCH (cap lowered "
             "below the batch to force it: Arrow routing UDF, no hints, AQE "
@@ -145,9 +177,9 @@ def main() -> None:
     finally:
         ann_index.SMALL_QUERY_MAX = cap
 
-    # after append + compact the serving plan must be SHAPE-IDENTICAL —
+    # after append + compact the fetch plans must be SHAPE-IDENTICAL —
     # compaction only changes file layout (fewer, bucket-sorted files),
-    # never the logical relations the plan is built from
+    # never the logical relations the plans are built from
     from annoy_spark.sources.ann_index import compact_index
 
     idx.unload()
@@ -157,9 +189,9 @@ def main() -> None:
         (F.col("vec_id") + 5000).alias("vec_id"), "embedding"))
     cidx = compact_index(spark, idx_root)
     sections[
-        "ANN INDEX QUERY AFTER APPEND+COMPACT (same plan shape over the "
+        "ANN INDEX QUERY AFTER APPEND+COMPACT (same fetch plans over the "
         "consolidated bucket-sorted artifacts — compaction is layout-only)"
-    ] = final_plan_of(cidx.query(queries, k=3, spill_eps=0.1))
+    ] = driver_fetch_plans(lambda: cidx.query(queries, k=3, spill_eps=0.1))
 
     out = ["# PLANS — physical plan evidence (auto-generated)\n",
            "Regenerate: `python tools/explain_plans.py`\n"]
