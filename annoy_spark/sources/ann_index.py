@@ -283,8 +283,10 @@ def _distance_rows(
     terms into the +0.0 the JVM fold starts from), the same outer forms,
     and hamming's popcount of the XOR summed exactly."""
     if cfg.metric == "hamming":
+        # a fresh C-contiguous (n, dim) array, so its bytes view is
+        # (n, 8 * dim) — also for n = 0, a chunk without candidates
         x = np.bitwise_xor(qv, v)
-        bits = _POPCOUNT[x.view(np.uint8)].reshape(len(x), -1)
+        bits = _POPCOUNT[x.view(np.uint8)]
         return bits.sum(axis=1, dtype=np.int64).astype(np.float64)
     if cfg.metric in ("angular", "dot"):
         terms = qv * v
@@ -891,12 +893,15 @@ def _answer(
     spark: SparkSession, schema: StructType, qid: np.ndarray,
     nid: np.ndarray, distance: np.ndarray, rank: np.ndarray,
 ) -> DataFrame:
-    return spark.createDataFrame(
+    answer = spark.createDataFrame(
         pd.DataFrame(
             {"qid": qid, "nid": nid, "distance": distance, "rank": rank}
         ),
         schema,
     )
+    # an empty pandas frame becomes a parallelized RDD, not a local
+    # relation; limit(0) plans as an empty one (no job to collect it)
+    return answer if len(qid) else answer.limit(0)
 
 
 def _member_runs(
@@ -1569,15 +1574,18 @@ class AnnIndex:
                 )
             else:
                 new_ids = items.select(F.col(id_col).alias("nid"))
-            # one semi-join (not Column.isin: a py4j call per literal),
-            # fetched whole: 2 jobs, where take(1) scales up to 3
-            clash = new_ids.join(
-                self._vectors.select("nid"), "nid", "left_semi"
-            ).toArrow()
+            # one semi-join (not Column.isin: a py4j call per literal);
+            # its 5 least ids fetched as Arrow: 2 jobs, where take(1)
+            # scales up to 3, and a full re-delivery (every id clashes)
+            # still brings back only 5
+            clash = (
+                new_ids.join(self._vectors.select("nid"), "nid", "left_semi")
+                .orderBy("nid").limit(5).toArrow()
+            )
             if len(clash):
                 raise ValueError(
                     f"appended item ids collide with stored ids (e.g. "
-                    f"{sorted(clash['nid'].to_pylist())[:5]}) — pass "
+                    f"{clash['nid'].to_pylist()}) — pass "
                     "check_ids=False only if upstream guarantees disjoint "
                     "ids"
                 )

@@ -650,8 +650,9 @@ def _assert_join_parity(monkeypatch, run, cap):
     """run() answers on the driver (a local relation) and, with
     SMALL_QUERY_MAX patched to ``cap`` (at least the batch size, below
     its routed buckets' assignments), through the local-relation join
-    plan: the same schema, (qid, nid, rank) and distance bits. Returns
-    the driver's rows."""
+    plan, or with ``cap`` -1 through the executor plan: the same
+    schema, (qid, nid, rank) and distance bits. Returns the driver's
+    rows."""
     import annoy_spark.sources.ann_index as ann_index
 
     driver = run()
@@ -660,8 +661,8 @@ def _assert_join_parity(monkeypatch, run, cap):
         joined = run()
     rows = driver.collect()
     assert _plan(driver).startswith("LocalTableScan"), _plan(driver)
-    assert "Window" in _plan(joined) and "ArrowEvalPython" not in _plan(
-        joined)
+    assert "Window" in _plan(joined)
+    assert cap < 0 or "ArrowEvalPython" not in _plan(joined)
     assert driver.schema == joined.schema
     assert _bits(rows) == _bits(joined.collect())
     return rows
@@ -755,6 +756,43 @@ def test_driver_rerank_salts_ties_and_ids(spark, tmp_path, monkeypatch,
     assert len(calls) > 1
     assert _bits(chunked) == _bits(whole)
     assert len(whole) == 3500
+
+
+@pytest.mark.parametrize("metric", ["hamming", "angular"])
+def test_driver_rerank_without_candidates(spark, tmp_path, monkeypatch,
+                                          metric):
+    """A query whose routes meet no stored assignment answers nothing on
+    the driver, with the join plan's schema: LSH keys of the items'
+    negation miss the items' one bucket per table (every sampled bit or
+    hyperplane sign flips), and query_by_items without self leaves no
+    candidate when every item shares the one vector. A batch mixing
+    such queries with answerable ones keeps the answerable rows."""
+    if metric == "hamming":
+        vec, neg = [0, 0], [-1, -1]
+        schema = "vec_id long, embedding array<long>"
+    else:
+        vec = [float(x) for x in np.random.default_rng(3).standard_normal(8)]
+        neg = [-x for x in vec]
+        schema = "vec_id long, embedding array<double>"
+    items = spark.createDataFrame([(i, vec) for i in range(5)], schema)
+    cfg = AnnIndexConfig(kind="lsh", metric=metric, seed=42, n_tables=6,
+                         n_bits=6)
+    idx = build_index(spark, items, str(tmp_path / "idx"), cfg)
+    missing = spark.createDataFrame([(100, neg), (101, neg)], schema)
+    # no member to fetch, so no cap between the batch and the members:
+    # the executor plan is the reference
+    rows = _assert_join_parity(
+        monkeypatch, lambda: idx.query(missing, k=5), -1)
+    assert rows == []
+    mixed = missing.unionByName(spark.createDataFrame([(102, vec)], schema))
+    rows = _assert_join_parity(monkeypatch, lambda: idx.query(mixed, k=5), 3)
+    assert {r.qid for r in rows} == {102} and len(rows) == 5
+    alone = spark.createDataFrame([(0,)], "vec_id long")
+    idx = build_index(spark, items.limit(1), str(tmp_path / "one"), cfg)
+    rows = _assert_join_parity(
+        monkeypatch,
+        lambda: idx.query_by_items(alone, k=5, include_self=False), -1)
+    assert rows == []
 
 
 def test_unit_rows_bit_identical_to_unit(spark):
