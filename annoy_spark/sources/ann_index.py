@@ -36,6 +36,23 @@ Persisted layout (format 2 — append-friendly):
   (skips the salt-replication machinery entirely in the common case — no
   per-query probe job) and ``n_items``.
 
+Commit and crash safety: build, append and compaction write the index
+through ONE staged commit (annoy publishes with a single ``save``,
+annoylib.h:1093-1127). Each stages its new data files (and a build its
+model.npz) under ``_staging`` behind the ``_COMMIT_PENDING.json`` marker;
+an ordinary failed job rolls staging + marker back. Once staging is
+complete the marker is rewritten as the publish record: the config,
+``n_items``, ``has_oversized`` and the live data files the operation
+retires (none for append, every one for compaction and build). The one
+idempotent publish moves the staged files in, deletes the retired ones,
+re-stamps the stage metas, moves a staged model in, writes the model meta
+and drops staging, then the marker last. While the marker exists every
+reader refuses the index; ``repair_index`` completes a recorded publish
+(no Spark job: the record holds every value) or rolls back anything
+earlier, so the root answers as the old index or the new one, never a
+mix. A build no longer clears the root first: a failed or crashed build
+leaves the previous index intact.
+
 Query semantics (get_nns_by_vector, annoylib.h:1234-1236): the query batch
 is routed with the SAME stored trees/centroids/planes, replicated across
 each oversized bucket's salt sub-buckets (the replicated skew join — no
@@ -82,6 +99,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
 import shutil
 import uuid
 from dataclasses import asdict, dataclass, replace
@@ -120,7 +138,7 @@ from annoy_spark.operators.knn import (
     sample_hash,
     training_sample_rows,
 )
-from annoy_spark.sources.checkpoint import CheckpointStore
+from annoy_spark.sources.checkpoint import CheckpointStore, write_json_atomic
 
 _KIND_METRICS = {
     "forest": ("angular", "dot", "euclidean", "manhattan", "hamming"),
@@ -1126,56 +1144,161 @@ def _query_plan(
 _MODEL_STAGE = "model"
 _NPZ = "model.npz"
 _META = "_ANNOY_SPARK_META.json"
-_STAGING = "_staging_append"
-_PENDING = "_APPEND_PENDING.json"
-_COMPACT_STAGING = "_staging_compact"
-_COMPACT_PENDING = "_COMPACT_PENDING.json"
+#: build, append and compaction all stage under this dir, behind this marker
+_STAGING = "_staging"
+_PENDING = "_COMMIT_PENDING.json"
 #: the persisted relations, one directory each under the index root
 _ARTIFACTS = ("vectors", "buckets", "counts")
 
 
 def _check_pending(root: str) -> None:
-    """Refuse to load/append/query an index whose last append or compact
-    never committed: torn artifacts (vectors without bucket rows etc.)
-    must not serve silently. repair_append / repair_compact either
-    completes the staged batch (publish is resumable) or rolls it back
-    (nothing was published)."""
-    if (Path(root) / _PENDING).exists():
+    """Refuse to load/append/query/compact an index whose last build,
+    append or compaction never committed: torn artifacts (vectors without
+    bucket rows etc.) must not serve silently. repair_index completes a
+    recorded publish or rolls back anything earlier."""
+    marker = Path(root) / _PENDING
+    if marker.exists():
+        op = json.loads(marker.read_text())["op"]
         raise ValueError(
-            f"index at {root} has an UNFINISHED append (crash between "
+            f"index at {root} has an UNFINISHED {op} (crash between "
             "staging and commit) — run annoy_spark.sources.ann_index."
-            "repair_append(spark, root) to complete or roll back the "
-            "staged batch before loading"
-        )
-    if (Path(root) / _COMPACT_PENDING).exists():
-        raise ValueError(
-            f"index at {root} has an UNFINISHED compaction — run "
-            "annoy_spark.sources.ann_index.repair_compact(spark, root) "
-            "to complete or roll back the rewrite before loading"
+            "repair_index(spark, root) to complete or roll it back before "
+            "loading"
         )
 
 
-def _staging_complete(root: str) -> bool:
-    return all(
-        (Path(root) / _STAGING / s / "_SUCCESS").exists()
-        for s in _ARTIFACTS
+def _write_marker(root: Path, record: dict) -> None:
+    """Write the pending marker atomically: a crash leaves the previous
+    marker or the new one, never torn JSON."""
+    write_json_atomic(root / _PENDING, record)
+
+
+def _begin(root: Path, op: str) -> Path:
+    """Open a commit: drop staging debris (without a marker it was rolled
+    back or committed, so it is unreachable; never mix two operations'
+    files) and write the marker, whose presence means 'in flight'.
+    Returns the staging dir."""
+    staging = root / _STAGING
+    shutil.rmtree(staging, ignore_errors=True)
+    root.mkdir(parents=True, exist_ok=True)
+    _write_marker(root, {"op": op})
+    return staging
+
+
+def _rollback(root: Path) -> None:
+    """Undo a commit whose publish was never recorded: nothing live was
+    touched, so dropping staging + marker restores the previous index."""
+    shutil.rmtree(root / _STAGING, ignore_errors=True)
+    (root / _PENDING).unlink(missing_ok=True)
+
+
+def _data_files(d: Path) -> list[Path]:
+    """A stage dir's data files (parquet parts and their checksums):
+    everything but its _SUCCESS and stage meta."""
+    if not d.is_dir():
+        return []
+    return sorted(f for f in d.iterdir() if not f.name.startswith("_"))
+
+
+def _live_files(root: Path) -> dict[str, list[str]]:
+    """Every live artifact's data file names — what a compaction or a
+    build retires."""
+    return {
+        stage: [f.name for f in _data_files(root / stage)]
+        for stage in _ARTIFACTS
+    }
+
+
+def _commit(
+    spark: SparkSession, root: Path, op: str, cfg: AnnIndexConfig,
+    n_items: int, has_oversized: bool, retire: dict[str, list[str]],
+) -> None:
+    """Record everything the publish needs in the marker, then publish:
+    from this record on, a crash is completed forward by repair_index
+    without reading any artifact."""
+    record = {
+        "op": op, "config": json.loads(cfg.to_json()), "n_items": n_items,
+        "has_oversized": has_oversized, "retire": retire,
+    }
+    _write_marker(root, record)
+    _publish(spark, root, record)
+
+
+def _publish(spark: SparkSession, root: Path, record: dict) -> None:
+    """COMMIT a recorded build, append or compaction: per artifact, move
+    the staged data files in, delete the retired ones and re-stamp the
+    stage meta; then move a build's staged model in, write the model
+    meta, and drop staging + the marker (marker last: its absence IS the
+    commit record). Every step is idempotent (staged names are unique and
+    a moved file leaves staging), so a crash anywhere is completed by
+    calling this again with the same record; until then the marker keeps
+    readers out. On Iceberg the whole publish is one transactional
+    snapshot commit; the parquet degradation gets the same
+    all-or-repairable contract from this ordering."""
+    cfg = AnnIndexConfig.from_json(json.dumps(record["config"]))
+    staging = root / _STAGING
+    store = CheckpointStore(str(root), cfg)
+    for stage in _ARTIFACTS:
+        live = root / stage
+        live.mkdir(exist_ok=True)
+        for f in _data_files(staging / stage):
+            os.replace(f, live / f.name)
+        for name in record["retire"].get(stage, ()):
+            (live / name).unlink(missing_ok=True)
+        (live / "_SUCCESS").touch()
+        store.restamp(stage)
+        # files arrived by RENAME, which bypasses the write path's
+        # automatic recache: refresh file listings AND any cached plan
+        # fragment over this path, or readers keep serving the previous
+        # snapshot
+        spark.catalog.refreshByPath(str(live))
+    npz = staging / _MODEL_STAGE / _NPZ
+    if npz.exists():
+        (root / _MODEL_STAGE).mkdir(exist_ok=True)
+        os.replace(npz, root / _MODEL_STAGE / _NPZ)
+    _write_meta(
+        str(root), cfg, has_oversized=record["has_oversized"],
+        n_items=record["n_items"],
     )
+    shutil.rmtree(staging, ignore_errors=True)
+    (root / _PENDING).unlink(missing_ok=True)
+
+
+def _resolve_pending(spark: SparkSession, root: Path) -> None:
+    """Complete a recorded publish, roll back an unrecorded commit, or
+    do nothing when no marker is present."""
+    marker = root / _PENDING
+    if marker.exists():
+        record = json.loads(marker.read_text())
+        if "retire" in record:
+            _publish(spark, root, record)
+        else:
+            _rollback(root)
 
 
 #: the counts artifact's schema, so reading it runs no inference job
 _COUNTS_SCHEMA = "bucket long, gsize long"
 
 
+def _stage_table(staging: Path, stage: str, table) -> None:
+    """Write one pyarrow table as a staged artifact's single file (no
+    Spark job). File names are unique, so publishing never overwrites a
+    live file."""
+    import pyarrow.parquet as pq
+
+    d = staging / stage
+    d.mkdir(parents=True)
+    pq.write_table(table, d / f"part-00000-{uuid.uuid4()}.parquet")
+
+
 def _stage_on_driver(
     staging: Path, ids: list, raw: np.ndarray, keys: list[np.ndarray],
     cfg: AnnIndexConfig, nid_type,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Write a driver-routed batch's staged vectors / buckets / counts
-    with pyarrow, one file each plus _SUCCESS (no Spark job); returns the
-    batch's count delta (touched buckets, gsize). File names are unique,
-    because publishing skips a name already present."""
+    """Stage a driver-routed batch's vectors / buckets / counts with
+    pyarrow, one file each (no Spark job); returns the batch's count
+    delta (touched buckets, gsize)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_type
 
     stored = _stored_rows(cfg, raw)
@@ -1188,19 +1311,14 @@ def _stage_on_driver(
     n_keys = np.fromiter(map(len, keys), np.int64, n)
     bucket = np.concatenate(keys).astype(np.int64)
     touched, gsize = np.unique(bucket, return_counts=True)
-    tables = {
-        "vectors": pa.table({"nid": nid, "v": v}),
-        "buckets": pa.table({
-            "bucket": bucket,
-            "nid": nid.take(np.repeat(np.arange(n), n_keys)),
-        }),
-        "counts": pa.table({"bucket": touched, "gsize": gsize}),
-    }
-    for stage, table in tables.items():
-        d = staging / stage
-        d.mkdir(parents=True)
-        pq.write_table(table, d / f"part-00000-{uuid.uuid4()}.parquet")
-        (d / "_SUCCESS").touch()
+    _stage_table(staging, "vectors", pa.table({"nid": nid, "v": v}))
+    _stage_table(staging, "buckets", pa.table({
+        "bucket": bucket,
+        "nid": nid.take(np.repeat(np.arange(n), n_keys)),
+    }))
+    _stage_table(
+        staging, "counts", pa.table({"bucket": touched, "gsize": gsize})
+    )
     return touched, gsize
 
 
@@ -1209,8 +1327,8 @@ def _stage_on_executors(
     id_col: str, vec_col: str,
 ) -> tuple[np.ndarray, np.ndarray, int]:
     """Stage an append batch or a build over SMALL_QUERY_MAX through the
-    routing UDF into ``staging`` (a build's is the index root); returns
-    (touched buckets, gsize, rows staged). ONE routing pass: the UDF
+    routing UDF into ``staging``; returns (touched buckets, gsize, rows
+    staged). ONE routing pass: the UDF
     lineage is materialized once into the staged 'routed' relation and
     vectors/buckets/counts all derive from its re-read, so a
     non-deterministic input can never persist counts that diverge from
@@ -1257,13 +1375,22 @@ def _merged_salts(
         )
         .toArrow()
     )
-    ub, inv = np.unique(
+    ub, total = _summed(
         np.concatenate([stored["bucket"].to_numpy(), touched]),
-        return_inverse=True,
+        np.concatenate([stored["gsize"].to_numpy(), gsize]),
     )
-    total = np.zeros(len(ub), np.int64)
-    np.add.at(total, inv, np.concatenate([stored["gsize"].to_numpy(), gsize]))
     return _resalted(salts, ub, total, bucket_cap)
+
+
+def _summed(
+    bucket: np.ndarray, gsize: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Partial counts summed per bucket (the groupBy-sum readers run):
+    the distinct buckets, ascending, and their totals."""
+    ub, inv = np.unique(bucket, return_inverse=True)
+    total = np.zeros(len(ub), np.int64)
+    np.add.at(total, inv, gsize)
+    return ub, total
 
 
 def _resalted(
@@ -1280,41 +1407,6 @@ def _resalted(
         else:
             out.pop(b, None)
     return out
-
-
-def _publish_staged(
-    spark: SparkSession, root: str, cfg: AnnIndexConfig,
-    n_items: int | None = None, has_oversized: bool | None = None,
-) -> None:
-    """COMMIT a fully staged append batch: move the staged data files
-    into the live artifact dirs, re-stamp stage metas, write the model
-    meta, then drop staging + the pending marker (marker last: its
-    absence IS the commit record). ``append`` passes the new n_items
-    (stored + batch) and has_oversized (from its merged salt map), so a
-    commit scans nothing; ``repair_append`` passes neither, and the meta
-    is recounted from the published artifacts (n_items from the vectors
-    relation, has_oversized from the summed counts — both idempotent
-    under re-publish). On Iceberg the three appends + meta collapse into
-    one transactional snapshot commit; the parquet degradation gets the
-    same all-or-repairable contract from this ordering."""
-    staging = Path(root) / _STAGING
-    store = CheckpointStore(root, cfg)
-    for stage in _ARTIFACTS:
-        store.publish_files(stage, staging / stage)
-        # files arrived by RENAME, which bypasses the write path's
-        # automatic recache: refresh file listings AND any cached plan
-        # fragment over this path, or readers keep serving the
-        # pre-append snapshot
-        spark.catalog.refreshByPath(str(Path(root) / stage))
-    if n_items is None:
-        counts = _read_artifact(spark, store, "counts")
-        has_oversized = (
-            _oversized(counts, cfg.bucket_cap).limit(1).count() > 0
-        )
-        n_items = _read_artifact(spark, store, "vectors").count()
-    _write_meta(root, cfg, has_oversized=has_oversized, n_items=n_items)
-    shutil.rmtree(staging, ignore_errors=True)
-    (Path(root) / _PENDING).unlink(missing_ok=True)
 
 
 def _meta_path(root: str) -> Path:
@@ -1590,15 +1682,8 @@ class AnnIndex:
                     "ids"
                 )
         n_stored = self.n_items()
-        staging = Path(root) / _STAGING
-        if staging.exists():  # unreachable debris (marker gone => rolled
-            shutil.rmtree(staging)  # back/committed); never mix batches
-        # ---- stage (marker first: its presence means 'in flight') ------
-        import time as _time
-
-        (Path(root) / _PENDING).write_text(
-            json.dumps({"staging": str(staging), "written_at": _time.time()})
-        )
+        out = Path(root)
+        staging = _begin(out, "append")
         try:
             if rows is not None:
                 touched, gsize = _stage_on_driver(
@@ -1614,26 +1699,22 @@ class AnnIndex:
                 spark, root, self._salts, touched, gsize, cfg.bucket_cap
             )
         except BaseException:
-            # publish has not started (it begins only after staging
-            # completes), so an ORDINARY failed job — a ragged embedding,
-            # a cancelled stage — rolls back here instead of bricking the
-            # index behind the pending marker until manual repair; a
-            # process crash still leaves the marker for repair_append
-            shutil.rmtree(staging, ignore_errors=True)
-            (Path(root) / _PENDING).unlink(missing_ok=True)
+            # the publish is not recorded yet, so an ORDINARY failed job —
+            # a ragged embedding, a cancelled stage — rolls back here
+            # instead of bricking the index behind the marker until
+            # repair; a process crash still leaves the marker for
+            # repair_index, which rolls back the same way
+            _rollback(out)
             raise
-        # ---- commit (resumable; see _publish_staged) -------------------
         n_items = n_stored + n_new
-        _publish_staged(
-            spark, root, cfg, n_items=n_items, has_oversized=bool(salts)
-        )
+        _commit(spark, out, "append", cfg, n_items, bool(salts), retire={})
         # re-read with the schemas already held: no inference job
         self._set_body(
             spark.read.schema(self._vectors.schema).parquet(
-                str(Path(root) / "vectors")
+                str(out / "vectors")
             ),
             spark.read.schema(self._bucketed.schema).parquet(
-                str(Path(root) / "buckets")
+                str(out / "buckets")
             ),
             salts, n_items,
         )
@@ -1661,9 +1742,12 @@ def build_index(
 ) -> AnnIndex:
     """Train the router, route every item once, persist model + artifacts
     (annoy ``build`` + ``save``, annoylib.h:1037-1127). The build
-    replaces whatever ``root`` held — a previous index, and an unfinished
-    append or compaction with its staging. Returns the live index (no
-    reload needed to query immediately).
+    replaces whatever index ``root`` held through the one staged commit:
+    an unfinished commit there is first resolved as repair_index does,
+    the new artifacts and model are staged, and the publish retires every
+    live data file. A failed or crashed build leaves the previous index
+    intact (repair_index rolls an unrecorded build back). Returns the
+    live index (no reload needed to query immediately).
 
     Build is the third operation on the driver batch path, after query
     and append (annoy builds in-process over its item array). One bounded
@@ -1684,18 +1768,12 @@ def build_index(
         "h", sample_hash("qid", cfg.seed)
     )
     rows = _fetch_batch(items, head)
-    out = Path(root)
     if rows is None:  # past the cap: sampled and routed on the executors
         cfg = _resolve_cfg(cfg, items, vec_col, id_col)
         model = AnnModel.train(
             _checked_vectors(items, id_col, vec_col, cfg.dim, "item", id_col),
             cfg, id_col, vec_col,
         )
-        _clear_root(out)
-        touched, gsize, n_items = _stage_on_executors(
-            spark, out, items, model, id_col, vec_col
-        )
-        shutil.rmtree(out / "routed")
     else:
         dim = _first_dim(rows)
         cfg = _sized(replace(cfg, dim=cfg.dim or dim))
@@ -1709,40 +1787,33 @@ def build_index(
         max_n2 = float(_norm2_rows(raw).max()) if cfg.metric == "dot" else None
         model = AnnModel.train(raw[pick], cfg, id_col, vec_col, max_n2=max_n2)
         keys = _driver_keys(rows, raw, model, query_side=False)
-        _clear_root(out)
-        touched, gsize = _stage_on_driver(
-            out, ids, raw, keys, cfg, head.schema["qid"].dataType
-        )
-        n_items = len(rows)
-    store = CheckpointStore(root, cfg)
-    for stage in _ARTIFACTS:
-        store.restamp(stage)
-        spark.catalog.refreshByPath(str(out / stage))
+    out = Path(root)
+    _resolve_pending(spark, out)
+    retire = _live_files(out)
+    staging = _begin(out, "build")
+    try:
+        if rows is None:
+            touched, gsize, n_items = _stage_on_executors(
+                spark, staging, items, model, id_col, vec_col
+            )
+        else:
+            touched, gsize = _stage_on_driver(
+                staging, ids, raw, keys, cfg, head.schema["qid"].dataType
+            )
+            n_items = len(rows)
+        (staging / _MODEL_STAGE).mkdir()
+        np.savez(staging / _MODEL_STAGE / _NPZ, **model.arrays)
+    except BaseException:
+        _rollback(out)  # the previous index is untouched
+        raise
     salts = _resalted({}, touched, gsize, cfg.bucket_cap)
-    mdir = store.root / _MODEL_STAGE
-    mdir.mkdir(parents=True, exist_ok=True)
-    np.savez(mdir / _NPZ, **model.arrays)
-    _write_meta(root, cfg, has_oversized=bool(salts), n_items=n_items)
+    _commit(spark, out, "build", cfg, n_items, bool(salts), retire)
+    store = CheckpointStore(root, cfg)
     return AnnIndex(
         model, _read_artifact(spark, store, "vectors"),
         _read_artifact(spark, store, "buckets"), salts,
         spark=spark, root=root, n_items=n_items,
     )
-
-
-def _clear_root(root: Path) -> None:
-    """Remove what an earlier index left under ``root``: its model meta
-    first (a crash part way then leaves no loadable index), the pending
-    markers of an unfinished append or compaction, their staging, the
-    model and every artifact directory."""
-    _meta_path(root).unlink(missing_ok=True)
-    for marker in (_PENDING, _COMPACT_PENDING):
-        (root / marker).unlink(missing_ok=True)
-    for d in (
-        _STAGING, _COMPACT_STAGING, _MODEL_STAGE, *_ARTIFACTS,
-        *(f"{a}__precompact" for a in _ARTIFACTS),
-    ):
-        shutil.rmtree(root / d, ignore_errors=True)
 
 
 def _read_artifact(
@@ -1811,24 +1882,17 @@ def load_index(
     )
 
 
-def repair_append(spark: SparkSession, root: str) -> "AnnIndex":
-    """Resolve an append that crashed mid-flight (the _APPEND_PENDING
-    marker is present): if the staging dirs are COMPLETE (_SUCCESS in all
-    three), the publish had begun or was about to — finish it (file moves
-    are idempotent, meta is recomputed from the published artifacts); if
-    staging is incomplete, NOTHING was published (publish only starts
-    after staging completes) — roll the batch back by dropping staging +
-    marker. Either way the index afterwards loads clean; a rolled-back
-    batch is simply re-appended by the caller/stream replay."""
-    marker = Path(root) / _PENDING
-    if marker.exists():
-        meta = _read_meta(root)
-        cfg = AnnIndexConfig.from_json(json.dumps(meta["config"]))
-        if _staging_complete(root):
-            _publish_staged(spark, root, cfg)
-        else:
-            shutil.rmtree(Path(root) / _STAGING, ignore_errors=True)
-            marker.unlink(missing_ok=True)
+def repair_index(spark: SparkSession, root: str) -> "AnnIndex":
+    """Resolve a build, append or compaction that crashed mid-flight (the
+    pending marker is present) and load the index. A marker that records
+    its publish is completed forward — the record carries the config,
+    n_items, has_oversized and the retired files, so this runs no Spark
+    job before the load; any earlier marker means nothing live was
+    touched, and staging + marker are dropped. Either way the index
+    afterwards loads clean, as the old index or as the new one and never
+    a mix; a rolled-back batch is simply re-appended by the caller or the
+    stream replay. Without a marker this is load_index."""
+    _resolve_pending(spark, Path(root))
     return load_index(spark, root)
 
 
@@ -1873,49 +1937,11 @@ def _compact_parts(n_bytes: int, parallelism: int) -> int:
     )
 
 
-def _publish_compact(spark: SparkSession, root: str, cfg: AnnIndexConfig) -> None:
-    """COMMIT a fully staged compaction: per stage, swap the live dir for
-    the staged one by two directory renames (live -> <stage>__precompact,
-    staged -> live), re-stamp stage metas, recompute the model meta from
-    the published artifacts, then drop the old dirs + staging + marker
-    (marker last: its absence IS the commit record). Every step is
-    idempotent, so a crash anywhere is completed by calling this again.
-    Crucially, even a torn mid-swap state is SEMANTICALLY intact — the
-    staged relations hold the same logical rows as the live ones (counts
-    are summed at load either way), compaction only changes file layout —
-    but the marker still forces repair so no index serves with staging
-    debris attached. On Iceberg this whole publish is `rewrite_data_files`
-    in one transactional snapshot commit."""
-    staging = Path(root) / _COMPACT_STAGING
-    store = CheckpointStore(root, cfg)
-    for stage in _ARTIFACTS:
-        live = Path(root) / stage
-        old = Path(root) / f"{stage}__precompact"
-        staged = staging / stage
-        if staged.exists():
-            if live.exists() and not old.exists():
-                live.rename(old)
-            if not live.exists():
-                staged.rename(live)
-        store.restamp(stage)
-        # dirs arrived by RENAME, which bypasses the write path's
-        # automatic recache (same rationale as _publish_staged)
-        spark.catalog.refreshByPath(str(live))
-    counts = _read_artifact(spark, store, "counts")
-    has_oversized = _oversized(counts, cfg.bucket_cap).limit(1).count() > 0
-    n_items = _read_artifact(spark, store, "vectors").count()
-    _write_meta(root, cfg, has_oversized=has_oversized, n_items=n_items)
-    for stage in _ARTIFACTS:
-        shutil.rmtree(Path(root) / f"{stage}__precompact", ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-    (Path(root) / _COMPACT_PENDING).unlink(missing_ok=True)
-
-
 def compact_index(spark: SparkSession, root: str) -> AnnIndex:
     """Rewrite the persisted index as ONE consolidated snapshot — the
     maintenance op the append-only format needs. Every ``append`` /
     streaming-ingest batch adds parquet files to the vectors/buckets
-    artifacts and a count-DELTA file set to counts; after months of daily
+    artifacts and a count-DELTA file to counts; after months of daily
     ingest the index is thousands of small files and a load must sum a
     long delta history. ``compact`` rewrites each artifact to its target
     file count (sized by rows x row-width against a 96MB/file budget),
@@ -1925,102 +1951,80 @@ def compact_index(spark: SparkSession, root: str) -> AnnIndex:
     one row per bucket. Query results are bit-identical before/after:
     salts re-derive from the same summed counts, the router is untouched.
 
+    Nothing is recounted: n_items and has_oversized come from the meta
+    (compaction changes neither), the deltas are collapsed on the driver
+    from one read of the counts artifact (summed as load_index sums
+    them), and their sum sizes the bucket files — two shuffle rewrites
+    and one fetch in all.
+
     The annoy analog: ``save`` writes the built forest as one contiguous
     mmap-able file (/root/reference/src/annoylib.h:1093-1127); compact is
     the distributed re-materialization of that single-artifact shape. On
     Iceberg this is `CALL rewrite_data_files` on the three tables.
 
-    Crash-safe like ``append``: staged under a pending marker, published
-    by idempotent renames; ``load_index`` refuses a torn compact and
-    ``repair_compact`` completes (staging done) or rolls back (staging
-    incomplete — the live index was never touched). Like append, the
-    marker protocol assumes ONE writer per index root at a time (the
-    Iceberg store upgrades this to real optimistic-concurrency commits).
-    Concurrent READERS must re-open (load_index) after a compact on the
-    parquet store: a loaded AnnIndex holds Spark file listings over the
-    pre-compact part files, which _publish_compact deletes, so its next
-    query fails loudly with FileNotFoundException rather than answering
-    from mixed artifacts. Only the Iceberg store's snapshot isolation
-    gives true read-through-compact (readers pinned to the old
-    snapshot)."""
+    Crash-safe through the same staged commit as build and append: the
+    rewrite is staged under the pending marker, and the publish moves the
+    new files in and retires every file it read; ``load_index`` refuses a
+    torn compaction and ``repair_index`` completes a recorded publish or
+    rolls back (the live index was never touched). The marker protocol
+    assumes ONE writer per index root at a time (the Iceberg store
+    upgrades this to real optimistic-concurrency commits). Concurrent
+    READERS must re-open (load_index) after a compact on the parquet
+    store: a loaded AnnIndex holds Spark file listings over the retired
+    part files, which the publish deletes, so its next query fails loudly
+    with FileNotFoundException rather than answering from mixed
+    artifacts. Only the Iceberg store's snapshot isolation gives true
+    read-through-compact (readers pinned to the old snapshot)."""
+    import pyarrow as pa
+
     _check_pending(root)
     meta = _read_meta(root)
     cfg = AnnIndexConfig.from_json(json.dumps(meta["config"]))
     store = CheckpointStore(root, cfg)
-    staging = Path(root) / _COMPACT_STAGING
-    if staging.exists():  # debris from a rolled-back run; never mix
-        shutil.rmtree(staging)
-    marker = Path(root) / _COMPACT_PENDING
-    marker.write_text(json.dumps({"phase": "staging"}))
+    out = Path(root)
+    retire = _live_files(out)
+    staging = _begin(out, "compaction")
     try:
-        vectors = _read_artifact(spark, store, "vectors")
-        bucketed = _read_artifact(spark, store, "buckets")
-        n_items = int(meta.get("n_items") or vectors.count())
-        n_assign = bucketed.count()
+        counts = spark.read.schema(_COUNTS_SCHEMA).parquet(
+            str(out / "counts")
+        ).toArrow()
+        bucket, gsize = _summed(
+            counts["bucket"].to_numpy(), counts["gsize"].to_numpy()
+        )
         # row widths: vectors carry the (possibly MIPS-augmented) double
         # vector + id; bucket rows are two longs (parquet compresses the
         # sorted bucket column well below this — the estimate is an upper
         # bound, erring toward more, smaller files)
         par = spark.sparkContext.defaultParallelism
-        vparts = _compact_parts(n_items * (cfg.dim * 8 + 24), par)
-        bparts = _compact_parts(n_assign * 16, par)
-        vectors.repartition(vparts, "nid").sortWithinPartitions(
-            "nid"
-        ).write.parquet(str(staging / "vectors"))
-        bucketed.repartition(bparts, "bucket").sortWithinPartitions(
-            "bucket", "nid"
-        ).write.parquet(str(staging / "buckets"))
-        # full recount from the staged buckets: the delta history collapses
-        # to one row per bucket (summing deltas at load == reading these)
-        _bucket_counts(
-            spark.read.parquet(str(staging / "buckets"))
-        ).coalesce(1).write.parquet(str(staging / "counts"))
+        vparts = _compact_parts(meta["n_items"] * (cfg.dim * 8 + 24), par)
+        bparts = _compact_parts(int(gsize.sum()) * 16, par)
+        _read_artifact(spark, store, "vectors").repartition(
+            vparts, "nid"
+        ).sortWithinPartitions("nid").write.parquet(str(staging / "vectors"))
+        _read_artifact(spark, store, "buckets").repartition(
+            bparts, "bucket"
+        ).sortWithinPartitions("bucket", "nid").write.parquet(
+            str(staging / "buckets")
+        )
+        _stage_table(
+            staging, "counts", pa.table({"bucket": bucket, "gsize": gsize})
+        )
     except BaseException:
-        # nothing was published (publish starts only after staging
-        # completes) — an ordinary failed job rolls back instead of
-        # bricking the index behind the marker; a process crash leaves
-        # the marker for repair_compact, which rolls back the same way
-        shutil.rmtree(staging, ignore_errors=True)
-        marker.unlink(missing_ok=True)
+        # the publish is not recorded yet: an ordinary failed job rolls
+        # back instead of bricking the index behind the marker
+        _rollback(out)
         raise
-    marker.write_text(json.dumps({"phase": "publish"}))
-    _publish_compact(spark, root, cfg)
-    return load_index(spark, root)
-
-
-def repair_compact(spark: SparkSession, root: str) -> AnnIndex:
-    """Resolve a compaction that crashed mid-flight (the _COMPACT_PENDING
-    marker is present): in the "publish" phase, finish the swap (renames
-    are idempotent); in the "staging" phase, the live artifacts were
-    never touched — drop staging + marker. Either way the index
-    afterwards loads clean and answers exactly what it answered before
-    the compact started."""
-    marker = Path(root) / _COMPACT_PENDING
-    if marker.exists():
-        meta = _read_meta(root)
-        cfg = AnnIndexConfig.from_json(json.dumps(meta["config"]))
-        try:
-            phase = json.loads(marker.read_text()).get("phase", "staging")
-        except (json.JSONDecodeError, OSError):
-            phase = "staging"  # torn marker write: publish never started
-        # the phase field, not staging completeness, decides: a crash
-        # MID-SWAP has already consumed some staged dirs, so the staging
-        # _SUCCESS check would misread a begun publish as "unstaged" and
-        # roll back a half-swapped index. phase flips to "publish" only
-        # after staging fully completes, and every publish step is
-        # idempotent — so publish-phase repairs always complete forward.
-        if phase == "publish":
-            _publish_compact(spark, root, cfg)
-        else:
-            shutil.rmtree(Path(root) / _COMPACT_STAGING, ignore_errors=True)
-            marker.unlink(missing_ok=True)
+    _commit(
+        spark, out, "compaction", cfg, meta["n_items"],
+        meta["has_oversized"], retire,
+    )
     return load_index(spark, root)
 
 
 def validate_index(spark: SparkSession, root: str) -> dict:
     """fsck for a persisted index: recompute the cross-artifact invariants
-    from the stored relations and report violations. The append/compact
-    marker protocol makes OUR writes all-or-repairable, but it cannot see
+    from the stored relations and report violations. The staged commit
+    makes OUR writes all-or-repairable, but it cannot see
     external damage — a data file deleted by a retention job, a partial
     copy between stores, a hand-edited counts table. Annoy's analog is
     the load-time ``size % _s`` geometry check (annoylib.h:1185-1188);

@@ -29,6 +29,23 @@ from annoy_spark.config import DedupConfig
 _META = "_ANNOY_SPARK_META.json"
 
 
+def write_json_atomic(path: Path, obj: dict) -> None:
+    """Write ``obj`` as JSON through a temp file next to ``path`` that is
+    fsynced and renamed into place: a crash mid-write leaves the old file
+    or none, never truncated JSON."""
+    tmp = path.parent / f".{path.name}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, sort_keys=True)
+            # durable before the rename: after an OS crash the rename
+            # must not survive without the bytes it points at
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
 class CheckpointStore:
     def __init__(self, root: str, cfg: DedupConfig):
         self.root = Path(root)
@@ -76,51 +93,18 @@ class CheckpointStore:
     def restamp(self, stage: str, **extra) -> None:
         """Rewrite a stage's meta under the current config hash without
         touching its data files (used when data files are PUBLISHED into
-        the stage dir by rename — the staged-append commit path).
+        the stage dir by rename — the ANN index's staged commit).
 
         The meta goes to a temp file in the stage dir and is renamed into
         place, so a crash mid-write leaves either the old meta or none —
         never truncated JSON that would break ``exists()``."""
-        d = self._dir(stage)
-        tmp = d / f".{_META}.tmp"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "stage": stage,
-                        "config_hash": self.cfg.config_hash(),
-                        "config": json.loads(self.cfg.to_json()),
-                        "written_at": time.time(),
-                        **extra,
-                    },
-                    f,
-                    sort_keys=True,
-                )
-                # durable before the rename: after an OS crash the rename
-                # must not survive without the bytes it points at
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, d / _META)
-        finally:
-            tmp.unlink(missing_ok=True)
-
-    def publish_files(self, stage: str, staged_dir) -> None:
-        """Move every DATA file from ``staged_dir`` into the live stage
-        dir and re-stamp the meta. Renames within one filesystem are
-        cheap metadata ops; files already moved are skipped, so a
-        crashed publish is completed by calling this again (on Iceberg
-        the whole batch is instead one transactional snapshot commit)."""
-        import shutil
-        from pathlib import Path as _P
-
-        dst = self._dir(stage)
-        for f in sorted(_P(staged_dir).iterdir()):
-            if f.name.startswith(("_", ".")):
-                continue  # _SUCCESS / .crc markers never publish
-            target = dst / f.name
-            if not target.exists():
-                shutil.move(str(f), str(target))
-        self.restamp(stage)
+        write_json_atomic(self._dir(stage) / _META, {
+            "stage": stage,
+            "config_hash": self.cfg.config_hash(),
+            "config": json.loads(self.cfg.to_json()),
+            "written_at": time.time(),
+            **extra,
+        })
 
     def read(self, spark: SparkSession, stage: str, schema=None) -> DataFrame:
         """The stage's rows; with a known ``schema`` (a StructType or DDL

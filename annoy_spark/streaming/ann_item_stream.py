@@ -20,11 +20,12 @@ from the checkpoint dir's metadata file): a deleted-and-recreated
 checkpoint dir restarts batch ids at 0 under a FRESH query id, so the
 new run's early batches are never mistaken for already-applied replays
 of the old run — re-delivered rows instead fail loudly on the stored-id
-collision check (check_ids). A crash inside append itself leaves the
-_APPEND_PENDING marker; stream start repairs it (repair_append: the
-staged batch is completed or rolled back), after which the ledger
-decides — completed-but-unledgered replays collide loudly, rolled-back
-batches replay cleanly. On Iceberg the artifact appends and the ledger
+collision check (check_ids). A crash inside an append or a
+compact_every pass leaves the index's pending commit marker; stream
+start repairs it (repair_index: a recorded publish is completed, an
+unrecorded one rolled back), after which the ledger decides —
+completed-but-unledgered replays collide loudly, rolled-back batches
+replay cleanly. On Iceberg the artifact appends and the ledger
 update collapse into one transactional snapshot commit.
 """
 
@@ -39,12 +40,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from annoy_spark.sources.ann_index import (
     AnnIndex,
-    _COMPACT_PENDING,
-    _PENDING,
     compact_index,
-    load_index,
-    repair_append,
-    repair_compact,
+    repair_index,
 )
 
 ITEM_SCHEMA = "vec_id long, embedding array<double>"
@@ -72,19 +69,11 @@ def ann_item_stream(
     delta files (see compact_index). Safe here because foreachBatch
     serializes batches: no append runs concurrently with the compact,
     and the ledger/batch protocol is untouched (compaction never changes
-    logical content). A crash inside the compact leaves its phase marker;
+    logical content). A crash inside the compact leaves the commit marker;
     the next stream start repairs it below."""
-    if (Path(index_root) / _PENDING).exists():
-        # last run crashed inside append: complete or roll back the
-        # staged batch before ingesting more (see module doc)
-        idx: AnnIndex = repair_append(spark, index_root)
-    elif (Path(index_root) / _COMPACT_PENDING).exists():
-        # last run crashed inside a compact_every maintenance pass:
-        # complete it forward or roll it back — either way the logical
-        # content is exactly what the ledger says was applied
-        idx = repair_compact(spark, index_root)
-    else:
-        idx = load_index(spark, index_root)
+    # a crash inside an append or a compaction: complete or roll back the
+    # commit before ingesting more (see module doc); a plain load otherwise
+    idx: AnnIndex = repair_index(spark, index_root)
     ledger = Path(index_root) / "_ITEM_STREAM_BATCHES.json"
 
     def _ck_key() -> str:

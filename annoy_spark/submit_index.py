@@ -11,7 +11,7 @@
         compact --root <dir>       # small-file maintenance after appends
 
     spark-submit ... submit_index.py \
-        repair --root <dir>        # resolve a crashed append/compact
+        repair --root <dir>        # resolve a crashed build/append/compact
 
     spark-submit ... submit_index.py \
         query --root <dir> --queries <parquet/table> --output <parquet> \
@@ -25,8 +25,9 @@ The subcommands are annoy's lifecycle verbs (build+save / unbuild+add+
 build / load+query / load+serve, /root/reference/src/annoylib.h:1037-1236,
 README.rst:25-27) as cluster jobs: `build` trains the router and persists
 model + bucket artifacts; `append` grows a stored index with the frozen
-router; `repair` resolves an append that crashed mid-commit (completes a
-fully-staged batch or rolls back an unstaged one); `query` answers one
+router; `repair` resolves a build, append or compaction that crashed
+mid-commit (repair_index: completes a recorded publish or rolls back an
+unrecorded one); `query` answers one
 batch of vectors from the stored index; `serve` keeps answering vector
 files as they land (Structured Streaming; --continuous leaves the query
 running instead of draining availableNow).
@@ -89,8 +90,9 @@ def main(argv: list[str] | None = None) -> int:
 
     r = sub.add_parser(
         "repair",
-        help="resolve an append or compact that crashed mid-flight: "
-             "complete a fully-staged batch or roll back an unstaged one",
+        help="resolve a build, append or compact that crashed "
+             "mid-flight: complete a recorded publish or roll back an "
+             "unrecorded one (one pending marker, repair_index)",
     )
     r.add_argument("--root", required=True)
 
@@ -136,8 +138,7 @@ def main(argv: list[str] | None = None) -> int:
         build_index,
         compact_index,
         load_index,
-        repair_append,
-        repair_compact,
+        repair_index,
         validate_index,
     )
 
@@ -175,17 +176,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "repair":
-        # at most one marker can exist (append refuses to start under a
-        # pending compact and vice versa); dispatch on which is present —
-        # each repair ends in load_index, which raises on the OTHER marker
-        from pathlib import Path as _Path
-
-        from annoy_spark.sources.ann_index import _COMPACT_PENDING
-
-        if (_Path(args.root) / _COMPACT_PENDING).exists():
-            idx = repair_compact(spark, args.root)
-        else:
-            idx = repair_append(spark, args.root)
+        idx = repair_index(spark, args.root)
         print(json.dumps({
             "repaired": args.root,
             "n_items": idx.n_items(),

@@ -454,38 +454,47 @@ def test_append_counts_consistent_with_buckets(spark, corpus, tmp_path):
 
 
 def test_torn_append_detected_and_rolled_back(spark, corpus, tmp_path):
-    """A pending marker without complete staging = a crash BEFORE any
-    artifact was published: load refuses loudly, repair_append rolls the
+    """A pending marker without a publish record = a crash BEFORE any
+    artifact was published: load refuses loudly, repair_index rolls the
     batch back, and the index is unchanged."""
-    from pathlib import Path
-
-    from annoy_spark.sources.ann_index import _PENDING, repair_append
-
-    cfg = AnnIndexConfig(kind="forest", metric="angular", n_trees=4,
-                         seed=42, sample_fraction=1.0)
-    root = str(tmp_path / "idx")
-    build_index(spark, corpus, root, cfg)
-    (Path(root) / _PENDING).write_text("{}")
-    with pytest.raises(ValueError, match="UNFINISHED"):
-        load_index(spark, root)
-    idx = repair_append(spark, root)
-    assert idx.n_items() == 400
-    assert not (Path(root) / _PENDING).exists()
-
-
-def test_staged_append_repair_completes(spark, corpus, queries, tmp_path):
-    """A crash AFTER staging completed but before/inside the publish is
-    COMPLETED by repair_append (file moves are idempotent): the staged
-    batch becomes visible exactly once and the repaired index answers
-    queries with the appended items."""
     from pathlib import Path
 
     from annoy_spark.sources.ann_index import (
         _PENDING,
         _STAGING,
-        _bucket_counts,
-        _routed_items,
-        repair_append,
+        _begin,
+        repair_index,
+    )
+
+    cfg = AnnIndexConfig(kind="forest", metric="angular", n_trees=4,
+                         seed=42, sample_fraction=1.0)
+    root = str(tmp_path / "idx")
+    build_index(spark, corpus, root, cfg)
+    # the append's marker is written (no record yet), staging partial
+    (_begin(Path(root), "append") / "vectors").mkdir(parents=True)
+    with pytest.raises(ValueError, match="UNFINISHED append"):
+        load_index(spark, root)
+    idx = repair_index(spark, root)
+    assert idx.n_items() == 400
+    assert not (Path(root) / _PENDING).exists()
+    assert not (Path(root) / _STAGING).exists()
+
+
+def test_staged_append_repair_completes(
+    spark, corpus, queries, tmp_path, monkeypatch
+):
+    """A crash AFTER staging completed and the publish was recorded, but
+    before any file moved, is COMPLETED by repair_index from the
+    marker's record (file moves are idempotent): the staged batch
+    becomes visible exactly once and the repaired index answers queries
+    with the appended items."""
+    from pathlib import Path
+
+    import annoy_spark.sources.ann_index as ann_index
+    from annoy_spark.sources.ann_index import (
+        _PENDING,
+        _STAGING,
+        repair_index,
     )
 
     cfg = AnnIndexConfig(kind="forest", metric="angular", n_trees=8,
@@ -495,29 +504,28 @@ def test_staged_append_repair_completes(spark, corpus, queries, tmp_path):
     rest = corpus.where(F.col("vec_id") >= 200)
     idx = build_index(spark, half, root, cfg)
 
-    # simulate append crashing right before the publish step: staging
-    # fully written + marker present, nothing published
-    staging = Path(root) / _STAGING
-    routed = _routed_items(rest, idx.model, "vec_id", "embedding")
-    routed.write.parquet(str(staging / "routed"))
-    stored = spark.read.parquet(str(staging / "routed"))
-    stored.select("nid", "v").write.parquet(str(staging / "vectors"))
-    stored.select(
-        F.explode("keys").alias("bucket"), "nid"
-    ).write.parquet(str(staging / "buckets"))
-    _bucket_counts(
-        spark.read.parquet(str(staging / "buckets"))
-    ).write.parquet(str(staging / "counts"))
-    (Path(root) / _PENDING).write_text("{}")
+    # crash right at the publish step: staging fully written, the marker
+    # holds the publish record, nothing published
+    def crash(*args):
+        raise RuntimeError("crash before the publish")
 
-    with pytest.raises(ValueError, match="UNFINISHED"):
+    monkeypatch.setattr(ann_index, "_publish", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        idx.append(rest)
+    monkeypatch.undo()
+    staging = Path(root) / _STAGING
+    assert {d.name for d in staging.iterdir()} >= {
+        "vectors", "buckets", "counts"
+    }
+
+    with pytest.raises(ValueError, match="UNFINISHED append"):
         load_index(spark, root)
-    repaired = repair_append(spark, root)
+    repaired = repair_index(spark, root)
     assert repaired.n_items() == 400
     assert not (Path(root) / _PENDING).exists()
     assert not staging.exists()
     # repair is idempotent: a second call is a no-op load
-    assert repair_append(spark, root).n_items() == 400
+    assert repair_index(spark, root).n_items() == 400
     got = repaired.query(queries, k=10, spill_eps=0.15).collect()
     appended_ids = {r.vec_id for r in rest.select("vec_id").collect()}
     assert {r.nid for r in got} & appended_ids
@@ -557,9 +565,11 @@ def test_failed_append_rolls_back_not_bricks(spark, corpus, tmp_path):
     """An ORDINARY failed append job (here: a null embedding that explodes
     the routing UDF) must roll back the pending marker + staging, leaving
     the index loadable and appendable — not bricked until manual
-    repair_append. A process CRASH mid-append still leaves the marker for
+    repair_index. A process CRASH mid-append still leaves the marker for
     repair (covered by the staged-publish tests)."""
     from pathlib import Path
+
+    from annoy_spark.sources.ann_index import _PENDING, _STAGING
 
     cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
     root = str(tmp_path / "idx")
@@ -573,7 +583,8 @@ def test_failed_append_rolls_back_not_bricks(spark, corpus, tmp_path):
     with pytest.raises(Exception, match="invalid vector") as ei:
         idx.append(bad)
     assert "dim" not in str(ei.value)[:200]  # failed IN the staging job
-    assert not (Path(root) / "_APPEND_PENDING.json").exists()
+    assert not (Path(root) / _PENDING).exists()
+    assert not (Path(root) / _STAGING).exists()
     # not bricked: load and a clean append both work
     idx2 = load_index(spark, root)
     ok = corpus.where(
@@ -606,7 +617,7 @@ def test_torn_model_meta_write_keeps_previous_meta(
     """A write that dies partway through the model meta during append's
     publish must leave the previous meta byte-identical (temp file +
     rename, never an in-place rewrite): load refuses the index because of
-    the pending marker, and repair_append completes the batch."""
+    the pending marker, and repair_index completes the batch."""
     import builtins
     import io
     import os
@@ -616,7 +627,7 @@ def test_torn_model_meta_write_keeps_previous_meta(
         _META,
         _MODEL_STAGE,
         _PENDING,
-        repair_append,
+        repair_index,
     )
 
     cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42,
@@ -668,7 +679,7 @@ def test_torn_model_meta_write_keeps_previous_meta(
     assert (Path(root) / _PENDING).exists()
     with pytest.raises(ValueError, match="UNFINISHED"):
         load_index(spark, root)
-    assert repair_append(spark, root).n_items() == 400
+    assert repair_index(spark, root).n_items() == 400
     assert not (Path(root) / _PENDING).exists()
 
 
@@ -827,7 +838,7 @@ def test_incremental_salts_match_recount(spark, tmp_path, monkeypatch):
     the stored counts, and meta n_items equals the stored vectors — for
     batches that touch only cold buckets, push the hot bucket further
     past bucket_cap, and push cold buckets over it. A crash between
-    staging and publish is completed by repair_append to the same meta
+    staging and publish is completed by repair_index to the same meta
     and salts as an uninterrupted append."""
     import json
     import shutil
@@ -840,7 +851,7 @@ def test_incremental_salts_match_recount(spark, tmp_path, monkeypatch):
         _PENDING,
         _oversized,
         _salt_map,
-        repair_append,
+        repair_index,
     )
     from annoy_spark.sources.checkpoint import CheckpointStore
 
@@ -883,20 +894,23 @@ def test_incremental_salts_match_recount(spark, tmp_path, monkeypatch):
     clean = str(tmp_path / "clean")
     shutil.copytree(root, clean)
     want = load_index(spark, clean).append(batch)
-    real, calls = ann_index._publish_staged, []
+    real, calls = ann_index._publish, []
 
-    def crash_once(*args, **kwargs):
-        calls.append(kwargs)
+    def crash_once(spark_, root_, record):
+        calls.append(record)
         if len(calls) == 1:
             raise RuntimeError("crash between staging and publish")
-        return real(*args, **kwargs)
+        return real(spark_, root_, record)
 
-    monkeypatch.setattr(ann_index, "_publish_staged", crash_once)
+    monkeypatch.setattr(ann_index, "_publish", crash_once)
     with pytest.raises(RuntimeError, match="crash between"):
         idx.append(batch)
     assert (Path(root) / _PENDING).exists()
-    repaired = repair_append(spark, root)
-    assert calls[1] == {}  # repair recounts: no values passed
+    repaired = repair_index(spark, root)
+    # repair publishes the recorded values: nothing is recounted
+    assert calls[1] == calls[0]
+    assert (calls[0]["n_items"], calls[0]["has_oversized"]) == (
+        want.n_items(), bool(want._salts))
     assert repaired._salts == want._salts == recount()
     assert meta() == (want.n_items(), bool(want._salts))
     assert _index_state(spark, root) == _index_state(spark, clean)
@@ -980,29 +994,26 @@ def test_rebuild_supersedes_unfinished_append_and_compact(
 ):
     """A build replaces the whole root: after an append or a compaction
     crashed between staging and publish, a rebuild into the same root
-    loads clean with only its own items — no pending marker, no staging,
-    and no parquet file of the old index left."""
+    (which first completes the recorded publish, then retires every live
+    file) loads clean with only its own items — no pending marker, no
+    staging, and no parquet file of the old index left."""
     from pathlib import Path
 
     import annoy_spark.sources.ann_index as ann_index
 
     cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
     root = Path(tmp_path / "idx")
-    leftovers = {
-        "_publish_staged": (ann_index._PENDING, ann_index._STAGING),
-        "_publish_compact": (ann_index._COMPACT_PENDING,
-                             ann_index._COMPACT_STAGING),
-    }
+    left = (ann_index._PENDING, ann_index._STAGING)
 
-    def crash(*args, **kwargs):
+    def crash(*args):
         raise RuntimeError("crash between staging and publish")
 
-    for publish, left in leftovers.items():
+    for op in ("append", "compaction"):
         old = build_index(spark, corpus.where(F.col("vec_id") < 200),
                           str(root), cfg)
-        monkeypatch.setattr(ann_index, publish, crash)
+        monkeypatch.setattr(ann_index, "_publish", crash)
         with pytest.raises(RuntimeError, match="crash between"):
-            if publish == "_publish_staged":
+            if op == "append":
                 old.append(corpus.where(F.col("vec_id").between(200, 249)))
             else:
                 old.compact()
@@ -1016,3 +1027,108 @@ def test_rebuild_supersedes_unfinished_append_and_compact(
         assert idx.n_items() == idx._vectors.count() == 150
         assert not any((root / name).exists() for name in left)
         assert not old_files & set(root.rglob("*.parquet"))
+
+
+def test_crashed_build_publish_answers_old_or_new(
+    spark, corpus, queries, tmp_path, monkeypatch
+):
+    """A build over an existing index, crashed after staging: before its
+    publish is recorded, repair_index rolls back to the old index; inside
+    the publish (after each artifact, and at the model meta write), the
+    marker's record completes the new one. Never a mix: the repaired
+    root's answers, config, artifacts and meta equal a clean build of
+    exactly one of the two, and nothing but the index dirs is left."""
+    from pathlib import Path
+
+    import annoy_spark.sources.ann_index as ann_index
+    from annoy_spark.sources.checkpoint import CheckpointStore
+
+    old_cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    new_cfg = AnnIndexConfig(kind="forest", n_trees=6, seed=7)
+    old_items = corpus.where(F.col("vec_id") < 200)
+    new_items = corpus.where(F.col("vec_id") >= 100)
+    key = lambda r: (r.qid, r.nid, r.rank)  # noqa: E731
+
+    def clean(name, items, cfg):
+        root = str(tmp_path / name)
+        idx = build_index(spark, items, root, cfg)
+        return (sorted(map(key, idx.query(queries, k=5).collect())),
+                idx.cfg, _index_state(spark, root))
+
+    old, new = clean("old", old_items, old_cfg), clean("new", new_items,
+                                                      new_cfg)
+    real_marker, real_restamp = ann_index._write_marker, CheckpointStore.restamp
+
+    def crash_on(real, n):
+        calls = []
+
+        def dying(*args, **kwargs):
+            calls.append(args)
+            if len(calls) == n:
+                raise RuntimeError("simulated crash")
+            return real(*args, **kwargs)
+        return dying
+
+    # the second marker write is the publish record; the n-th restamp
+    # publishes vectors (1), buckets (2), counts (3), the model meta (4)
+    crashes = [("record", ann_index, "_write_marker",
+                crash_on(real_marker, 2), old)] + [
+        (f"restamp {n}", CheckpointStore, "restamp",
+         crash_on(real_restamp, n), new) for n in (1, 2, 3, 4)
+    ]
+    for i, (where, owner, name, dying, want) in enumerate(crashes):
+        root = str(tmp_path / f"idx{i}")
+        build_index(spark, old_items, root, old_cfg)
+        monkeypatch.setattr(owner, name, dying)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            build_index(spark, new_items, root, new_cfg)
+        monkeypatch.undo()
+        with pytest.raises(ValueError, match="UNFINISHED build"):
+            load_index(spark, root)
+        idx = ann_index.repair_index(spark, root)
+        got = sorted(map(key, idx.query(queries, k=5).collect()))
+        assert (got, idx.cfg, _index_state(spark, root)) == want, where
+        assert sorted(p.name for p in Path(root).iterdir()) == [
+            "buckets", "counts", "model", "vectors"], where
+
+
+def test_repair_of_recorded_publish_runs_no_job(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """The publish record carries the config, n_items and has_oversized:
+    completing a recorded append or compaction runs no Spark job before
+    repair_index's closing load_index."""
+    import annoy_spark.sources.ann_index as ann_index
+
+    cfg = AnnIndexConfig(kind="forest", n_trees=4, seed=42)
+    sc = spark.sparkContext
+
+    def crash(*args):
+        raise RuntimeError("crash before the publish")
+
+    for op in ("append", "compaction"):
+        root = str(tmp_path / op)
+        idx = build_index(spark, corpus.where(F.col("vec_id") < 300), root,
+                          cfg)
+        monkeypatch.setattr(ann_index, "_publish", crash)
+        with pytest.raises(RuntimeError, match="crash before"):
+            if op == "append":
+                idx.append(corpus.where(F.col("vec_id") >= 300))
+            else:
+                idx.compact()
+        monkeypatch.undo()
+        seen, real_load = [], ann_index.load_index
+
+        def load(*args, **kwargs):
+            seen.append(len(sc.statusTracker().getJobIdsForGroup(op)))
+            return real_load(*args, **kwargs)
+
+        monkeypatch.setattr(ann_index, "load_index", load)
+        sc.setJobGroup(op, op)
+        try:
+            repaired = ann_index.repair_index(spark, root)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.undo()
+        assert seen == [0], op
+        assert repaired.n_items() == (400 if op == "append" else 300)

@@ -16,13 +16,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from annoy_spark.sources.ann_index import (
-    _COMPACT_PENDING,
-    _COMPACT_STAGING,
+    _PENDING,
+    _STAGING,
     AnnIndexConfig,
+    _begin,
     build_index,
     compact_index,
     load_index,
-    repair_compact,
+    repair_index,
 )
 
 
@@ -81,6 +82,54 @@ def appended_root(spark, corpus, tmp_path_factory):
     return root
 
 
+def _root_entries(root: str) -> list[str]:
+    return sorted(p.name for p in Path(root).iterdir())
+
+
+def _jobs(spark, group, fn):
+    """fn's result and the Spark jobs it ran, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_compact_runs_at_most_six_jobs(spark, appended_root, tmp_path):
+    """Compaction reads n_items and has_oversized from the meta and
+    collapses the count deltas from one fetch of the counts artifact:
+    that fetch plus the vectors and buckets rewrites (a shuffle and a
+    write each) stay within 6 Spark jobs, and its publish and reload run
+    none. A copy keeps the fixture's appended layout for later tests."""
+    import shutil
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(appended_root, root)
+    idx, n_jobs = _jobs(spark, "compact", lambda: compact_index(spark, root))
+    assert n_jobs <= 6
+    assert idx.n_items() == 360
+
+
+def test_append_job_count_unchanged(spark, corpus, appended_root, tmp_path):
+    """An append through the staged commit runs the 5 jobs it ran before
+    the commit was shared with build and compaction (the batch fetch, the
+    id-clash semi-join and the touched buckets' stored counts); its
+    publish runs none."""
+    import shutil
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(appended_root, root)
+    idx = load_index(spark, root)
+    extra = corpus.where(F.col("vec_id") < 30).select(
+        (F.col("vec_id") + 5_000).alias("vec_id"), "embedding"
+    )
+    _, n_jobs = _jobs(spark, "append", lambda: idx.append(extra))
+    assert n_jobs == 5
+    assert idx.n_items() == 390
+
+
 def test_compact_bit_identical_and_fewer_files(
     spark, corpus, queries, appended_root
 ):
@@ -109,10 +158,12 @@ def test_compact_bit_identical_and_fewer_files(
     # deltas collapsed: exactly one stored row per bucket
     counts_raw = spark.read.parquet(str(Path(appended_root) / "counts"))
     assert counts_raw.groupBy("bucket").count().where("count > 1").count() == 0
-    # no staging debris, no marker, no precompact dirs
-    assert not (Path(appended_root) / _COMPACT_PENDING).exists()
-    assert not (Path(appended_root) / _COMPACT_STAGING).exists()
-    assert not list(Path(appended_root).glob("*__precompact"))
+    # no staging debris, no marker, nothing but the index's own dirs
+    assert not (Path(appended_root) / _PENDING).exists()
+    assert not (Path(appended_root) / _STAGING).exists()
+    assert _root_entries(appended_root) == [
+        "buckets", "counts", "model", "vectors"
+    ]
     # a reload (fresh meta read) also answers identically
     assert _answers(load_index(spark, appended_root), queries) == before
 
@@ -131,9 +182,9 @@ def test_append_after_compact(spark, corpus, queries, appended_root):
 
 
 def test_crash_during_staging_rolls_back(spark, corpus, queries, tmp_path):
-    """A marker in the 'staging' phase means nothing was published: the
-    load refuses, repair rolls back, and the index answers exactly as
-    before the attempted compact."""
+    """A marker without a publish record means nothing was published:
+    the load refuses, repair rolls back, and the index answers exactly
+    as before the attempted compact."""
     root = str(tmp_path / "idx")
     cfg = AnnIndexConfig(
         kind="forest", metric="angular", n_trees=8, seed=42,
@@ -141,23 +192,24 @@ def test_crash_during_staging_rolls_back(spark, corpus, queries, tmp_path):
     )
     idx = build_index(spark, corpus, root, cfg)
     before = _answers(idx, queries)
-    # simulate the crash: marker written, staging partially present
-    (Path(root) / _COMPACT_PENDING).write_text(json.dumps({"phase": "staging"}))
-    (Path(root) / _COMPACT_STAGING / "vectors").mkdir(parents=True)
+    # simulate the crash: the compaction's marker written (no record
+    # yet), staging partially present
+    (_begin(Path(root), "compaction") / "vectors").mkdir(parents=True)
     with pytest.raises(ValueError, match="UNFINISHED compaction"):
         load_index(spark, root)
-    repaired = repair_compact(spark, root)
+    repaired = repair_index(spark, root)
     assert _answers(repaired, queries) == before
-    assert not (Path(root) / _COMPACT_STAGING).exists()
-    assert not (Path(root) / _COMPACT_PENDING).exists()
+    assert not (Path(root) / _STAGING).exists()
+    assert not (Path(root) / _PENDING).exists()
 
 
 def test_crash_during_publish_completes_forward(
     spark, corpus, queries, tmp_path, monkeypatch
 ):
-    """Kill the publish after the FIRST stage swap (vectors new, buckets
-    old, staging half-consumed — the nastiest torn state): repair must
-    complete the swap, and answers stay bit-identical."""
+    """Kill the publish after the FIRST artifact (vectors new, buckets
+    half-published, counts old, staging half-consumed — the nastiest torn
+    state): repair must complete the publish from the marker's record,
+    and answers stay bit-identical."""
     import annoy_spark.sources.ann_index as ai
 
     root = str(tmp_path / "idx")
@@ -175,7 +227,7 @@ def test_crash_during_publish_completes_forward(
 
     def dying_restamp(self, stage, **extra):
         calls["n"] += 1
-        if calls["n"] == 2:  # vectors swapped + restamped; die on buckets
+        if calls["n"] == 2:  # vectors published; die on buckets
             raise RuntimeError("simulated crash mid-publish")
         return real_restamp(self, stage, **extra)
 
@@ -184,18 +236,17 @@ def test_crash_during_publish_completes_forward(
         compact_index(spark, root)
     monkeypatch.setattr(ai.CheckpointStore, "restamp", real_restamp)
 
-    # torn: marker present in publish phase, vectors swapped, buckets not
-    assert (Path(root) / _COMPACT_PENDING).exists()
-    assert json.loads(
-        (Path(root) / _COMPACT_PENDING).read_text()
-    )["phase"] == "publish"
+    # torn: the marker records the publish, vectors published, buckets not
+    record = json.loads((Path(root) / _PENDING).read_text())
+    assert record["op"] == "compaction" and record["n_items"] == 360
+    assert record["retire"]["counts"]
     with pytest.raises(ValueError, match="UNFINISHED compaction"):
         load_index(spark, root)
 
-    repaired = repair_compact(spark, root)
+    repaired = repair_index(spark, root)
     assert _answers(repaired, queries) == before
-    assert not (Path(root) / _COMPACT_STAGING).exists()
-    assert not list(Path(root).glob("*__precompact"))
+    assert not (Path(root) / _STAGING).exists()
+    assert _root_entries(root) == ["buckets", "counts", "model", "vectors"]
     # fully compacted: deltas collapsed despite the mid-flight crash
     counts_raw = spark.read.parquet(str(Path(root) / "counts"))
     assert counts_raw.groupBy("bucket").count().where("count > 1").count() == 0
@@ -235,7 +286,7 @@ def test_item_stream_compact_every(spark, corpus, queries, tmp_path):
         spark.read.parquet(str(Path(root) / "counts"))
         .groupBy("bucket").count().where("count > 1").count() == 0
     ), "compact after batch 1 must collapse the delta history"
-    assert not (Path(root) / _COMPACT_PENDING).exists()
+    assert not (Path(root) / _PENDING).exists()
 
     idx = load_index(spark, root)
     assert idx.n_items() == corpus.count()
@@ -243,10 +294,10 @@ def test_item_stream_compact_every(spark, corpus, queries, tmp_path):
     assert nids & {r.vec_id for r in wave2.select("vec_id").collect()}
 
 
-def test_cli_repair_dispatches_on_compact_marker(spark, corpus, tmp_path):
+def test_cli_repair_resolves_unfinished_compaction(spark, corpus, tmp_path):
     """`submit_index repair` must resolve a torn COMPACT (not just a torn
-    append): the dispatcher picks repair_compact when its marker is
-    present — repair_append alone would raise on load."""
+    append): repair_index reads the one marker, whichever operation
+    left it."""
     import annoy_spark.submit_index as cli
 
     root = str(tmp_path / "idx")
@@ -255,10 +306,9 @@ def test_cli_repair_dispatches_on_compact_marker(spark, corpus, tmp_path):
         sample_fraction=1.0,
     )
     build_index(spark, corpus, root, cfg)
-    (Path(root) / _COMPACT_PENDING).write_text(json.dumps({"phase": "staging"}))
-    (Path(root) / _COMPACT_STAGING / "buckets").mkdir(parents=True)
+    (_begin(Path(root), "compaction") / "buckets").mkdir(parents=True)
     assert cli.main(["repair", "--root", root]) == 0
-    assert not (Path(root) / _COMPACT_PENDING).exists()
+    assert not (Path(root) / _PENDING).exists()
     assert load_index(spark, root).n_items() == corpus.count()
 
 
