@@ -207,3 +207,22 @@ def test_verify_plan_is_udf_free(spark, corpus):
     plan = verified._jdf.queryExecution().executedPlan().toString()
     for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
         assert node not in plan, f"{node} reappeared in the verify plan"
+
+
+def test_verify_executor_plan_is_udf_free(spark, corpus, monkeypatch):
+    """The same guard on the executor join plan. A candidate set this
+    small is verified on the driver, whose plan is a LocalTableScan, so
+    the join plan is forced here with DRIVER_PAIRS_MAX = -1."""
+    import annoy_spark.operators.verify as verify_mod
+    from annoy_spark.operators.band import all_candidate_edges
+    from annoy_spark.operators.sign import sign
+
+    monkeypatch.setattr(verify_mod, "DRIVER_PAIRS_MAX", -1)
+    sigs = sign(corpus, CFG).localCheckpoint()
+    cand, _ = all_candidate_edges(sigs, CFG)
+    cand = cand.localCheckpoint()
+    verified = verify_mod.verify(cand, sigs, CFG)
+    plan = verified._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in plan, "the executor join plan was not the one built"
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan, f"{node} reappeared in the verify plan"

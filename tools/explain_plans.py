@@ -42,7 +42,7 @@ def main() -> None:
     from annoy_spark.operators.knn import knn_bruteforce
     from annoy_spark.operators.sign import file_id_col, sign
     from annoy_spark.operators.substring import substring_edges
-    from annoy_spark.operators.verify import verify
+    import annoy_spark.operators.verify as verify_mod
     from annoy_spark.session import get_spark
 
     spark = get_spark("plans", master="local[4]", shuffle_partitions=8)
@@ -70,16 +70,30 @@ def main() -> None:
     from annoy_spark.operators.hamming_pairs import hamming_pairs
     from annoy_spark.operators.knn import knn_lsh
 
+    def executor_verify_plan() -> str:
+        driver_max = verify_mod.DRIVER_PAIRS_MAX
+        verify_mod.DRIVER_PAIRS_MAX = -1
+        try:
+            plan = final_plan_of(verify_mod.verify(
+                cand_p, sigs_p, replace(cfg, star_rescue_cap=0)))
+        finally:
+            verify_mod.DRIVER_PAIRS_MAX = driver_max
+        return (
+            "-- inputs under DRIVER_PAIRS_MAX candidates and "
+            "DRIVER_SHINGLES_MAX shingles are scored on the driver: two "
+            "fetches, numpy, a local relation --\n" + plan
+        )
+
     sections = {
         "SIGN stage (scan -> codegen string ops -> one ArrowEvalPython)":
             plan_of(sign(corpus, cfg)),
         "CANDIDATE stage (posexplode -> map-side-combined min/count -> "
         "tiered joins)": plan_of(all_candidate_edges(sigs_p, cfg)[0]),
-        "VERIFY stage, executed (no join hints: the planner sizes the "
+        "VERIFY stage, executor plan, executed (forced with "
+        "DRIVER_PAIRS_MAX = -1; no join hints: the planner sizes the "
         "parquet candidate set and broadcasts it; each signature side is "
         "semi-joined to its candidate ids before any shuffle)":
-            final_plan_of(verify(
-                cand_p, sigs_p, replace(cfg, star_rescue_cap=0))),
+            executor_verify_plan(),
         "SUBSTRING pair join, executed (the counted anchored pair set is "
         "broadcast into a streamed content scan; its broadcast v ids "
         "semi-filter the v-side content, which the planner broadcasts "
