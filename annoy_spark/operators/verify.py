@@ -15,10 +15,11 @@ A pair passes if jaccard >= cfg.jaccard_s OR hamming <= cfg.hamming_t.
 Scale notes: two plans with the same rows, chosen per call. Up to
 DRIVER_PAIRS_MAX candidate rows over files holding up to
 DRIVER_SHINGLES_MAX shingles are verified on the driver, as the ANN
-index answers its batches: one bounded fetch of the candidates, one
-semi-joined fetch of their files' signatures, numpy scoring in bounded
+index answers its batches: one bounded fetch of the candidates, a
+fetch of their files' shingle counts, then (within the shingle bound)
+one semi-joined fetch of their signatures, numpy scoring in bounded
 chunks and the star rescue in numpy, returned as a local relation. With
-the pipeline stage's write and read-back that is 7 Spark jobs (23 for
+the pipeline stage's write and read-back that is 9 Spark jobs (23 for
 the join plan) on dedup_skewed's 2000 files. Larger inputs take the
 executor join plan: its two joins move only (file_id, shingle_hashes,
 simhash) for *candidate* files — never content: each signature side is
@@ -41,14 +42,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from annoy_spark.config import DedupConfig
+from annoy_spark.driver_batch import fetch_bounded, ragged
 from annoy_spark.operators.band import group_stats, tiered_pairs
-from annoy_spark.sources.ann_index import _ragged
 
 #: candidate rows verified on the driver; more take the executor plan.
 #: Both bounds come from verify alone on dedup_skewed checkpoints, 4-core
 #: host: at 2000 files (23,446 candidates, 0.82M shingles) the driver
-#: path and its write took 1.8 s and 4 jobs, the join plan 8.8 s and 20,
-#: at 8000 files (64,544 candidates, 3.3M shingles) 5.0 s against 15.1 s,
+#: path and its write took 1.7 s and 6 jobs, the join plan 7.7 s and 20,
+#: at 8000 files (64,544 candidates, 3.3M shingles) 5.1 s against 12.3 s,
 #: with a numpy peak of 63 and 186 MB (about 56 bytes per shingle). The
 #: bounds sit just past the larger size.
 DRIVER_PAIRS_MAX = 65_536
@@ -151,9 +152,11 @@ def verify(
     takes the executor plan (_verify_on_executors). Both produce the same
     rows, values bit for bit.
 
-    Cost shape: on the driver path the candidate fetch and the signature
-    fetch are the only Spark jobs before the caller's action (numpy holds
-    the fetched signatures plus one chunk of _PROBE_CHUNK probes); the
+    Cost shape: on the driver path the candidate fetch, the shingle
+    count fetch and the signature fetch are the only Spark jobs before
+    the caller's action (numpy holds the fetched signatures plus one
+    chunk of _PROBE_CHUNK probes); an input over the bounds pays the
+    first one or two of these small fetches before the join plan; the
     executor plan scores the first pass once into a local checkpoint
     that every later filter reads (_verify_on_executors).
     """
@@ -209,13 +212,6 @@ def _verify_on_executors(
     return out.unionByName(rescued)
 
 
-def _bounded(df: DataFrame, cap: int) -> pa.Table | None:
-    """``df`` as one Arrow table if it has at most ``cap`` rows, else None:
-    one bounded fetch of at most cap + 1 rows."""
-    table = df.limit(cap + 1).toArrow()
-    return table if len(table) <= cap else None
-
-
 def _mask(arr) -> np.ndarray:
     """A boolean Arrow array as numpy, nulls as False."""
     return pc.fill_null(arr, False).to_numpy(zero_copy_only=False)
@@ -253,9 +249,10 @@ def _verify_on_driver(
     """verify() answered on the driver as a local relation, or None when
     the candidates or their files' shingles are over the bounds.
 
-    Two fetches: the candidate rows (a bounded fetch of at most
-    DRIVER_PAIRS_MAX) and the signatures of their distinct files
-    (_fetch_signatures, at most DRIVER_SHINGLES_MAX shingles). The exact
+    The candidate rows come in a bounded fetch of at most
+    DRIVER_PAIRS_MAX, then the signatures of their distinct files
+    (_fetch_signatures, at most DRIVER_SHINGLES_MAX shingles, checked
+    on their counts before any array is fetched). The exact
     re-rank then runs in numpy over chunks of at most _PROBE_CHUNK
     shingle probes (_score), and the star rescue follows
     star_rescue_candidates' semantics (_rescue_pairs). Rows keep the
@@ -265,7 +262,7 @@ def _verify_on_driver(
     (a repeated file_id, a null element or count, a simhash of the wrong
     width) returns None, so the join plan answers it."""
     star_col = ["from_star"] if "from_star" in candidates.columns else []
-    cand = _bounded(
+    cand = fetch_bounded(
         candidates.select("u", "v", "kind", *star_col), DRIVER_PAIRS_MAX
     )
     if cand is None:
@@ -330,16 +327,25 @@ def _fetch_signatures(
 ) -> _Signatures | None:
     """The signatures of the files ``ids`` as _Signatures, or None when
     they hold more than DRIVER_SHINGLES_MAX shingles or fall outside
-    sign()'s output. One fetch: a semi-join against the ids as a local
-    relation, which the planner broadcasts into the signature scan. It
-    holds at most one row per id (a repeated file_id returns None), so
-    DRIVER_PAIRS_MAX bounds its rows; the shingle count is checked before
-    any numpy work."""
+    sign()'s output. Two fetches, each a semi-join against the ids as a
+    local relation that the planner broadcasts into the signature scan:
+    first each file's shingle count (at most one row per id, or None),
+    then, only when the counts are within DRIVER_SHINGLES_MAX, the
+    signature rows. So no shingle array of an input over the bound leaves
+    the executors."""
     wanted = spark.createDataFrame(
         pd.DataFrame({"file_id": ids}),
         StructType().add("file_id", signatures.schema["file_id"].dataType),
     )
-    rows = signatures.join(wanted, "file_id", "left_semi").select(
+    semi = signatures.join(wanted, "file_id", "left_semi")
+    counts = fetch_bounded(
+        semi.select(F.size("shingle_hashes").alias("n")), len(ids)
+    )
+    if counts is None or (pc.sum(counts["n"]).as_py() or 0) > (
+        DRIVER_SHINGLES_MAX
+    ):
+        return None
+    rows = semi.select(
         "file_id", "shingle_hashes", "simhash", "n_shingles"
     ).toArrow()
     shingles, simhash = rows["shingle_hashes"], rows["simhash"]
@@ -348,8 +354,7 @@ def _fetch_signatures(
     fid = _ints(rows["file_id"])
     files, first = np.unique(fid, return_index=True)
     if (
-        size.sum() > DRIVER_SHINGLES_MAX
-        or len(files) < len(fid)
+        len(files) < len(fid)
         or flat.null_count or simhash.null_count or words.null_count
         or rows["n_shingles"].null_count
         or (pc.list_value_length(simhash).to_numpy() != cfg.simhash_words)
@@ -443,7 +448,7 @@ def _rescue_pairs(
     last = np.searchsorted(c, c, "right") - 1
     full = (gsize[c] > 1) & (gsize[c] <= cap)
     # full pairs: each member with every later member of its center
-    owner, off = _ragged(np.where(full, last - np.arange(len(c)), 0))
+    owner, off = ragged(np.where(full, last - np.arange(len(c)), 0))
     pu, pv = m[owner], m[owner + 1 + off]
     # star: the center's least member to every other member
     star = (gsize[c] > cap) & (rank > 0)

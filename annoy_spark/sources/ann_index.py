@@ -116,6 +116,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from annoy_spark.driver_batch import fetch_bounded, ragged
 from annoy_spark.operators.forest import (
     HammingTree,
     Tree,
@@ -734,16 +735,8 @@ def _replicate_salts(
     m = np.fromiter(
         (salts.get(b, 1) for b in bucket.tolist()), np.int64, len(bucket)
     )
-    owner, salt = _ragged(m)
+    owner, salt = ragged(m)
     return row[owner], bucket[owner], salt
-
-
-def _ragged(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(owner, offset): each index i repeated counts[i] times, with the
-    offsets 0..counts[i]-1 — the row expansion of a one-to-many match."""
-    owner = np.repeat(np.arange(len(counts)), counts)
-    start = np.repeat(np.cumsum(counts) - counts, counts)
-    return owner, np.arange(len(owner), dtype=np.int64) - start
 
 
 def _query_head(
@@ -807,25 +800,17 @@ def _route_on_driver(
     return raw, _driver_keys(rows, raw, model, spill_eps, nprobe, query_side)
 
 
-def _bounded(df: DataFrame):
-    """``df`` as one Arrow table if it has at most SMALL_QUERY_MAX rows,
-    else None: one bounded fetch, so a relation past the cap costs at
-    most SMALL_QUERY_MAX + 1 rows of columnar buffers."""
-    table = df.limit(SMALL_QUERY_MAX + 1).toArrow()
-    return table if len(table) <= SMALL_QUERY_MAX else None
-
-
 def _fetch_batch(queries: DataFrame, head: DataFrame) -> list | None:
     """The rows of ``head`` (_query_head of ``queries``, a query or an
     appended item batch) if the batch has
     at most SMALL_QUERY_MAX rows, else None. A local input (e.g. a pandas
     batch under spark.sql.execution.arrow.localRelationThreshold) is
     already in driver memory, so collecting it runs no job; anything
-    else is fetched as Arrow (_bounded)."""
+    else is fetched as Arrow (fetch_bounded)."""
     if queries.isLocal():
         rows = head.limit(SMALL_QUERY_MAX + 1).collect()
         return rows if len(rows) <= SMALL_QUERY_MAX else None
-    table = _bounded(head)
+    table = fetch_bounded(head, SMALL_QUERY_MAX)
     return None if table is None else table.to_pylist()
 
 
@@ -969,7 +954,9 @@ def _driver_top_k(
         return _answer(
             spark, schema, empty, empty, np.zeros(0), np.zeros(0, np.int64)
         )
-    members = _bounded(_members_of(spark, assign, np.unique(bucket)))
+    members = fetch_bounded(
+        _members_of(spark, assign, np.unique(bucket)), SMALL_QUERY_MAX
+    )
     if members is None:
         return None
     # sorted codes, so code order is Spark's nid order (strings included)
@@ -1009,7 +996,7 @@ def _driver_top_k(
         b = max(a + 1, int(np.searchsorted(
             pairs_before, pairs_before[a] + SMALL_QUERY_MAX, "right")) - 1)
         ra, rb = first_route[a], first_route[b]
-        owner, off = _ragged(cnt[ra:rb])
+        owner, off = ragged(cnt[ra:rb])
         pq = rq[ra:rb][owner]
         pn = mnid[by_key[lo[ra:rb][owner] + off]]
         keep = has_v[pn]
@@ -1017,7 +1004,7 @@ def _driver_top_k(
             keep &= pn != self_nid[pq]
         pair = np.unique(pq[keep] * n_nids + pn[keep])
         pq, pn = pair // n_nids, pair % n_nids
-        owner, off = _ragged(n_rows[pq])
+        owner, off = ragged(n_rows[pq])
         pq, pn = pq[owner], pn[owner]
         d = _distance_rows(cfg, qv[qrows[first_row[pq] + off]], v_of[pn])
         order = np.lexsort((pn, d, pq))

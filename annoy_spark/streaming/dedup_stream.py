@@ -55,7 +55,9 @@ def incremental_dedup_stream(
     ).groupBy("sha_s").agg(F.min("existing_id").alias("existing_id"))
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        new_sigs = sign(batch, cfg)
+        # signed once: the emptiness probe, verify's candidate and signature
+        # fetches (or its join plan, past the driver bounds) all read it
+        new_sigs = sign(batch, cfg).localCheckpoint()
         if new_sigs.isEmpty():
             return
         # exact matches vs the static snapshot (sha equality)

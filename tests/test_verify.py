@@ -273,3 +273,31 @@ def test_over_the_bounds_takes_executor_plan(spark, split, monkeypatch):
             out = V.verify(cand, sigs, CFG)
             assert "Join" in _plan(out), bound
             assert _rows(out) == want
+
+
+def test_shingle_bound_checked_before_the_fetch(spark, split, monkeypatch):
+    """Candidate files over DRIVER_SHINGLES_MAX shingles are declined on
+    their shingle counts: no shingle array is fetched to the driver, and
+    the executor join plan answers with the same rows."""
+    sigs, ids = split
+    cand = spark.createDataFrame(
+        [(ids["center"], ids["a"], "lsh_star", 1),
+         (ids["a"], ids["b"], "lsh", 0)],
+        CAND_SCHEMA,
+    )
+    want = _rows(V.verify(cand, sigs, CFG))
+    fetched = []
+    to_arrow = type(cand).toArrow
+
+    def spy(df):
+        table = to_arrow(df)
+        fetched.append(table.column_names)
+        return table
+
+    with monkeypatch.context() as m:
+        m.setattr(V, "DRIVER_SHINGLES_MAX", 10)
+        m.setattr(type(cand), "toArrow", spy)
+        out = V.verify(cand, sigs, CFG)
+    assert fetched and all("shingle_hashes" not in c for c in fetched)
+    assert "Join" in _plan(out)
+    assert _rows(out) == want
