@@ -30,10 +30,11 @@ two_means is itself sampled; the tree is a coarse router, not the data
 structure holding the rows) and broadcast inside the routing UDF closure —
 a few hundred KB for 32 trees at dim 64. Items never leave the executors:
 routing is one Arrow-batched pandas UDF pass, candidates come from a
-(tree, leaf) equi-join whose reducers are bounded by the same
-``_cap_buckets`` salting ladder as knn_lsh (a degenerate dump of identical
-vectors routes to one leaf per tree; the salt caps the self-join at
-O(g * cap) — annoy's imbalance fallback, annoylib.h:1337-1425).
+(tree, leaf) equi-join whose reducers are bounded by the one salting
+helper every ANN join uses (``sources.ann_index._salted``; a degenerate
+dump of identical vectors routes to one leaf per tree; the salt caps the
+self-join at O(g * cap) — annoy's imbalance fallback,
+annoylib.h:1337-1425).
 """
 
 from __future__ import annotations
@@ -468,11 +469,11 @@ def knn_forest(
     bit-tree search_k analog).
 
     Same output contract as knn_lsh/knn_ivf; candidate generation is the
-    (tree, leaf) equi-join — shuffle-friendly, reducer-bounded by
-    _cap_buckets salting; exact re-rank in the true metric decides
-    (annoylib.h:1492-1494). All-items spill_eps widens every row's leaf
-    set (both sides of the join); for 'dot' the items keep their single
-    augmented leaf per tree and the query side spills.
+    (tree, leaf) equi-join — shuffle-friendly, reducer-bounded by the
+    shared bucket salting (_salted); exact re-rank in the true metric
+    decides (annoylib.h:1492-1494). All-items spill_eps widens every
+    row's leaf set (both sides of the join); for 'dot' the items keep
+    their single augmented leaf per tree and the query side spills.
 
     queries=DataFrame switches to by-VECTOR mode (get_nns_by_vector,
     annoylib.h:1234-1236): query rows are routed down the SAME trees

@@ -13,15 +13,17 @@ two_means) and partitions the relation by nearest centroid:
   exact re-rank on candidates                     (annoylib.h:1492-1494)
 
 Skew defense (hot cells): cells larger than cell_cap are split into m
-random sub-cells; item rows hash into one sub-cell, probe rows REPLICATE
-across all m (replicated skew join) — no pair is lost and no reducer's
-input exceeds ~cell_cap. Note the tradeoff vs knn_lsh's salted buckets:
-replication keeps FULL recall inside hot cells, so total candidate volume
-for a hot cell stays quadratic (merely spread across m reducers). That is
-the right default for IVF's clustered-data regime; for degenerate
-exact-duplicate embedding dumps, collapse identical vectors upstream (the
-dedup pipeline's sha pre-collapse) or use knn_lsh's capped buckets, which
-trade bounded recall loss for a hard cost cap.
+sub-cells by the same salting rule as every other bucket join (item rows
+hash into one sub-cell, ``sources.ann_index._salted_by``), and probe rows
+REPLICATE across all m (``_replicated``, the replicated skew join) — no
+pair is lost and no reducer's input exceeds ~cell_cap. Note the tradeoff
+vs knn_lsh/knn_forest, whose all-items joins salt BOTH sides
+(``_salted``): replication keeps FULL recall inside hot cells, so total
+candidate volume for a hot cell stays quadratic (merely spread across m
+reducers). That is the right default for IVF's clustered-data regime; for
+degenerate exact-duplicate embedding dumps, collapse identical vectors
+upstream (the dedup pipeline's sha pre-collapse) or use knn_lsh's capped
+buckets, which trade bounded recall loss for a hard cost cap.
 
 Clustered corpora are exactly where IVF beats data-independent hyperplanes
 (the two_means motivation); unstructured data should use knn_lsh.

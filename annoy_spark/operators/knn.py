@@ -18,11 +18,13 @@ join); LSH is the 10^12-row path (bucket join, cost ~ bucket sizes, recall
 tunable by n_tables x n_bits exactly like n_trees x leaf size).
 
 Scale defense: degenerate embedding dumps (many identical vectors) create
-mega-buckets whose self-join is O(g^2). Buckets above `bucket_cap` are
-salted into ~gsize/cap random sub-buckets — the same move as Annoy's
-split-imbalance fallback (annoylib.h:1337-1425: when a hyperplane can't
-split a node, items are sent to random sides), trading bounded recall loss
-inside pathological buckets for a hard cost cap.
+mega-buckets whose self-join is O(g^2). Every bucket join salts by one
+rule, ``sources.ann_index._salted_by``: a bucket above `bucket_cap`
+splits into ceil(gsize/cap) sub-buckets by pmod(xxhash64(id, bucket), m)
+— the same move as Annoy's split-imbalance fallback (annoylib.h:1337-1425:
+when a hyperplane can't split a node, items are sent to random sides),
+trading bounded recall loss inside pathological buckets for a hard cost
+cap.
 """
 
 from __future__ import annotations
@@ -313,26 +315,6 @@ def hamming_keys_col(
     return F.array(*[table_key(t) for t in range(n_tables)])
 
 
-def _cap_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
-    """Salt oversized buckets into ~gsize/cap random sub-buckets.
-
-    Annoy's imbalance fallback (annoylib.h:1337-1425) assigns items to
-    random sides when a node won't split; here the salt IS that random
-    side. Sub-bucketing bounds the self-join at O(g * cap) instead of
-    O(g^2); recall inside a salted bucket degrades gracefully (a pair
-    co-occurs with probability cap/gsize per table, recovered across the
-    other n_tables-1 tables).
-    """
-    w = Window.partitionBy("bucket")
-    sized = buckets.withColumn("gsize", F.count(F.lit(1)).over(w))
-    n_sub = F.ceil(F.col("gsize") / F.lit(bucket_cap)).cast("long")
-    salt = F.when(
-        F.col("gsize") > bucket_cap,
-        F.pmod(F.xxhash64(F.col("id"), F.col("bucket")), n_sub),
-    ).otherwise(F.lit(0).cast("long"))
-    return sized.withColumn("salt", salt).drop("gsize")
-
-
 def embedding_near_dup_pairs_lsh(
     items: DataFrame,
     min_cosine: float = 0.99,
@@ -352,17 +334,18 @@ def embedding_near_dup_pairs_lsh(
     exact-cosine re-rank as the decider (annoylib.h:1492-1494). Near-dup
     vectors (cos -> 1) agree on almost every hyperplane sign, so recall at
     min_cosine ~ 0.99 is near-perfect with a handful of tables."""
+    from annoy_spark.sources.ann_index import _salted
+
     dim = len(items.select(vec_col).first()[0])
     keys = keys_udf(hyperplane_keys(dim, n_tables, n_bits, seed))
-    base = with_unit_vectors(items, vec_col).select(
+    # the salt counts and both join sides read the routed rows:
+    # materialize them so the routing UDF runs once
+    routed = with_unit_vectors(items, vec_col).select(
+        F.explode(keys(F.col(vec_col).cast("array<double>"))).alias("bucket"),
         F.col(id_col).alias("id"),
-        F.col("unit_vec"),
-        keys(F.col(vec_col).cast("array<double>")).alias("keys"),
-    )
-    buckets = _cap_buckets(
-        base.select("id", "unit_vec", F.explode("keys").alias("bucket")),
-        bucket_cap,
-    )
+        "unit_vec",
+    ).localCheckpoint(eager=False)
+    buckets = _salted(routed, bucket_cap)
     cand = (
         buckets.alias("a")
         .join(buckets.alias("b"), ["bucket", "salt"])

@@ -137,8 +137,10 @@ def verify(
 ) -> DataFrame:
     """Verified edges: (u, v, kind, jaccard, hamming) for passing pairs.
 
-    Candidates of kind 'exact' (sha-equal) pass by construction with
-    jaccard=1, hamming=0; only 'lsh' candidates face the exact re-rank.
+    Candidates are (u, v, kind, from_star). Those of kind 'exact'
+    (sha-equal) pass by construction with jaccard=1, hamming=0; only
+    'lsh' candidates face the exact re-rank. from_star = 1 marks a pair
+    a star tier of band.tiered_pairs proposed: only those are rescued.
 
     With cfg.star_rescue_cap > 0 the star-failure rescue pass follows.
     Two star members that are near-dups of each other but not of the group
@@ -261,9 +263,8 @@ def _verify_on_driver(
     key or kind drops the row. A signature outside what sign() produces
     (a repeated file_id, a null element or count, a simhash of the wrong
     width) returns None, so the join plan answers it."""
-    star_col = ["from_star"] if "from_star" in candidates.columns else []
     cand = fetch_bounded(
-        candidates.select("u", "v", "kind", *star_col), DRIVER_PAIRS_MAX
+        candidates.select("u", "v", "kind", "from_star"), DRIVER_PAIRS_MAX
     )
     if cand is None:
         return None
@@ -274,12 +275,7 @@ def _verify_on_driver(
         & _mask(pc.is_valid(cand["u"])) & _mask(pc.is_valid(cand["v"]))
     )
     u, v = _ints(cand["u"])[lsh], _ints(cand["v"])[lsh]
-    # legacy callers without provenance: a star edge is exactly
-    # kind == 'lsh_star' (no min-collapse happened upstream)
-    from_star = _mask(
-        pc.equal(cand["from_star"], 1) if star_col
-        else pc.equal(kind, "lsh_star")
-    )[lsh]
+    from_star = _mask(pc.equal(cand["from_star"], 1))[lsh]
     rows = np.flatnonzero(is_exact)
     jaccard, hamming = np.ones(len(rows)), np.zeros(len(rows), np.int64)
     rescued = None
@@ -497,16 +493,9 @@ def _score_lsh(
     (u, v, kind, jaccard, hamming, min_shingles) — pass/fail NOT applied,
     so callers can inspect failures (the rescue pass needs them)."""
     sig = signatures.select("file_id", "shingle_hashes", "simhash", "n_shingles")
-    candidates = candidates.where(F.col("kind") != "exact")
-    if "from_star" in candidates.columns:
-        candidates = candidates.select("u", "v", "kind", "from_star")
-    else:
-        # legacy callers without provenance: a star edge is exactly
-        # kind == 'lsh_star' (no min-collapse happened upstream)
-        candidates = candidates.select(
-            "u", "v", "kind",
-            (F.col("kind") == "lsh_star").cast("int").alias("from_star"),
-        )
+    candidates = candidates.where(F.col("kind") != "exact").select(
+        "u", "v", "kind", "from_star"
+    )
 
     def side(s: str) -> DataFrame:
         # signatures of the files on one side of a pair, cut down by a
@@ -543,7 +532,8 @@ def star_rescue_candidates(failed_star: DataFrame, cap: int) -> DataFrame:
     star center go through ``tiered_pairs`` grouped by center: full pairs up
     to `cap` failures per center, a star to the min failed member beyond,
     and no salted tier. Returned pairs carry kind='lsh_rescue' and must
-    still pass the exact re-rank.
+    still pass the exact re-rank; their from_star is 0, so they are
+    never rescued in turn.
     """
     members = failed_star.select(
         F.col("u").alias("center"), F.col("v").alias("file_id")
@@ -554,5 +544,8 @@ def star_rescue_candidates(failed_star: DataFrame, cap: int) -> DataFrame:
     return (
         pairs.select("u", "v")
         .distinct()
-        .select("u", "v", F.lit("lsh_rescue").alias("kind"))
+        .select(
+            "u", "v", F.lit("lsh_rescue").alias("kind"),
+            F.lit(0).alias("from_star"),
+        )
     )

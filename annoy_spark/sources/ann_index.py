@@ -92,7 +92,15 @@ relation.
 The ephemeral operators run on the same router, stored-vector projection
 and metric without persisting anything: ``knn_by_vector_approx`` (the
 ``queries=`` mode of knn_forest/knn_ivf/knn_lsh) and ``knn_all_items``
-(their all-items mode, get_nns_by_item for every item).
+(their all-items mode, get_nns_by_item for every item, ranked through the
+index's own candidate join, ``_join_plan``).
+
+One salting rule serves every bucket join (``_salted_by``). The index and
+``knn_by_vector_approx`` feed it the summed counts of their assignments
+(``_salted_assign``), ``knn_all_items`` and the embedding near-dup pairs
+their routed rows' own counts (``_salted``); query sides replicate across
+the salts (``_replicated``), and the driver forms (``_resalted``,
+``_replicate_salts``) compute the same m and salts in numpy.
 """
 
 from __future__ import annotations
@@ -126,7 +134,6 @@ from annoy_spark.operators.forest import (
 )
 from annoy_spark.operators.ivf import ivf_probes, train_centroids
 from annoy_spark.operators.knn import (
-    _cap_buckets,
     _dot,
     _norm2,
     _norm2_rows,
@@ -681,26 +688,70 @@ def _oversized(counts: DataFrame, bucket_cap: int) -> DataFrame:
     )
 
 
+def _salted_by(rows: DataFrame, sizes: DataFrame) -> DataFrame:
+    """Routed (bucket, id, ...) rows plus their ``salt``: THE salting rule
+    of every bucket join. A bucket with an m in ``sizes`` (_oversized)
+    hash-splits into m salt sub-buckets, salt = pmod(xxhash64(id,
+    bucket), m); every other bucket keeps salt 0. The id is the second
+    column, and the other columns ride along, so vectors can travel
+    through the join that follows.
+
+    This is annoy's imbalance fallback (annoylib.h:1337-1425: a node that
+    will not split sends its items to random sides); the salt is that
+    random side. A pure function of (id, bucket, m), so a salt recomputed
+    from a later m never goes stale."""
+    rid = rows.columns[1]
+    return rows.join(F.broadcast(sizes), "bucket", "left").select(
+        *rows.columns,
+        F.coalesce(
+            F.pmod(F.xxhash64(rid, "bucket"), F.col("m")),
+            F.lit(0).cast("long"),
+        ).alias("salt"),
+    )
+
+
+def _salted(rows: DataFrame, bucket_cap: int) -> DataFrame:
+    """_salted_by the rows' own bucket counts. A join of two such sides
+    bounds a mega-bucket at O(g * cap) instead of O(g^2); a pair inside
+    it co-occurs with probability about cap/gsize per table or tree, and
+    the other tables or trees recover the rest."""
+    return _salted_by(rows, _oversized(_bucket_counts(rows), bucket_cap))
+
+
 def _salted_assign(
     bucketed: DataFrame, sizes: DataFrame, has_oversized: bool
 ) -> DataFrame:
-    """(bucket, salt, nid): buckets past bucket_cap hash-split into
-    m = ceil(gsize/cap) salt sub-buckets (the _cap_buckets ladder). The
-    salt is pmod(xxhash64(nid, bucket), m) — a pure function, recomputed
-    from the CURRENT m so appended items never see stale salts. When no
-    bucket is oversized the join is skipped outright (no probe job: the
-    flag is persisted in the index meta / counted once at build)."""
+    """(bucket, salt, nid) of stored assignments, _salted_by the stored
+    counts (``sizes``). When no bucket is oversized the join is skipped
+    outright (no probe job: the flag is persisted in the index meta /
+    counted once at build)."""
     if not has_oversized:
         return bucketed.select(
             "bucket", F.lit(0).cast("long").alias("salt"), "nid"
         )
-    return bucketed.join(F.broadcast(sizes), "bucket", "left").select(
-        "bucket",
-        F.coalesce(
-            F.pmod(F.xxhash64("nid", "bucket"), F.col("m")),
-            F.lit(0).cast("long"),
+    return _salted_by(bucketed.select("bucket", "nid"), sizes).select(
+        "bucket", "salt", "nid"
+    )
+
+
+def _replicated(
+    routes: DataFrame, sizes: DataFrame, has_oversized: bool
+) -> DataFrame:
+    """Routes (bucket, ...) plus ``salt``, each repeated over salts
+    0..m-1 of its bucket (m = 1 unless ``sizes`` has it): the query side
+    of a join with _salted_by items, so no candidate is lost to the
+    salting — the DataFrame twin of _replicate_salts. Without an
+    oversized bucket every salt is 0 and the join is skipped."""
+    if not has_oversized:
+        return routes.select("*", F.lit(0).cast("long").alias("salt"))
+    return routes.join(F.broadcast(sizes), "bucket", "left").select(
+        *routes.columns,
+        F.explode(
+            F.sequence(
+                F.lit(0).cast("long"),
+                F.coalesce(F.col("m"), F.lit(1).cast("long")) - 1,
+            )
         ).alias("salt"),
-        "nid",
     )
 
 
@@ -737,6 +788,22 @@ def _replicate_salts(
     )
     owner, salt = ragged(m)
     return row[owner], bucket[owner], salt
+
+
+def _resalted(
+    salts: dict[int, int], buckets: np.ndarray, totals: np.ndarray,
+    bucket_cap: int,
+) -> dict[int, int]:
+    """``salts`` with each of ``buckets`` re-derived from its full total:
+    m = ceil(total / cap) past bucket_cap (as _oversized), absent
+    otherwise."""
+    out = dict(salts)
+    for b, t in zip(buckets.tolist(), totals.tolist()):
+        if t > bucket_cap:
+            out[b] = -(-t // bucket_cap)
+        else:
+            out.pop(b, None)
+    return out
 
 
 def _query_head(
@@ -1055,24 +1122,10 @@ def _executor_query_side(
                        nprobe=nprobe)
         .alias("keys"),
     )
-    qroutes = qbase.select("qid", F.explode("keys").alias("bucket"))
-    if not has_oversized:
-        # common case: no bucket ever exceeded bucket_cap, every derived
-        # salt is 0 — skip the replication join entirely (the flag lives
-        # in the index meta, so NO per-query probe job)
-        qroutes = qroutes.select(
-            "qid", "bucket", F.lit(0).cast("long").alias("salt")
-        )
-    else:
-        qroutes = qroutes.join(F.broadcast(sizes), "bucket", "left").select(
-            "qid", "bucket",
-            F.explode(
-                F.sequence(
-                    F.lit(0).cast("long"),
-                    F.coalesce(F.col("m"), F.lit(1).cast("long")) - 1,
-                )
-            ).alias("salt"),
-        )
+    qroutes = _replicated(
+        qbase.select("qid", F.explode("keys").alias("bucket")), sizes,
+        has_oversized,
+    )
     return qroutes, qbase.select("qid", "qv")
 
 
@@ -1380,22 +1433,6 @@ def _summed(
     return ub, total
 
 
-def _resalted(
-    salts: dict[int, int], buckets: np.ndarray, totals: np.ndarray,
-    bucket_cap: int,
-) -> dict[int, int]:
-    """``salts`` with each of ``buckets`` re-derived from its full total:
-    m = ceil(total / cap) past bucket_cap (as _oversized), absent
-    otherwise."""
-    out = dict(salts)
-    for b, t in zip(buckets.tolist(), totals.tolist()):
-        if t > bucket_cap:
-            out[b] = -(-t // bucket_cap)
-        else:
-            out.pop(b, None)
-    return out
-
-
 def _meta_path(root: str) -> Path:
     return Path(root) / _MODEL_STAGE / _META
 
@@ -1497,26 +1534,22 @@ class AnnIndex:
         column — and for metric='dot' the RAW dot product <i,j>
         (the query paths rank by -dot ascending; annoy's Python layer
         reports the positive product, annoylib.h:657-659).
-        Raises KeyError when either id is not stored."""
-        va = self._vectors.where(F.col("nid") == F.lit(i)).select(
-            F.col("v").alias("qv")
-        )
-        vb = self._vectors.where(F.col("nid") == F.lit(j)).select(
-            F.col("v").alias("nv")
-        )
-        row = (
-            va.crossJoin(vb)
-            .select(_distance(self.cfg, "qv", "nv").alias("d"))
-            .first()
-        )
-        if row is None:
-            missing = [
-                x for x in (i, j)
-                if self._vectors.where(F.col("nid") == F.lit(x)).first()
-                is None
-            ]
+        Raises KeyError when either id is not stored.
+
+        One semi-joined fetch brings both stored vectors; _distance_rows
+        scores them on the driver, bit for bit the query paths' distance."""
+        ids = np.empty(2, dtype=object)
+        ids[:] = [i, j]
+        got = _vectors_of(
+            self._vectors.sparkSession, self._vectors, ids
+        ).toArrow()
+        stored = dict(zip(got["nid"].to_pylist(), got["v"].to_pylist()))
+        missing = [x for x in (i, j) if x not in stored]
+        if missing:
             raise KeyError(f"no stored item(s) {missing!r} in the index")
-        d = float(row["d"])
+        dtype = np.int64 if self.cfg.metric == "hamming" else np.float64
+        qv, v = (np.array([stored[x]], dtype) for x in (i, j))
+        d = float(_distance_rows(self.cfg, qv, v)[0])
         return -d if self.cfg.metric == "dot" else d
 
     def query(
@@ -2128,13 +2161,16 @@ def knn_all_items(
     routes items and queries differently (the MIPS augmentations), so it
     adds the item-side keys to the same pass.
 
-    The candidate joins keep their cost bounds. Forest/LSH self-join on
-    (bucket, salt) with BOTH sides salted by _cap_buckets (a mega-bucket
-    costs O(g * cap), not O(g^2)) and dedup the narrow id pairs before the
-    vectors are re-attached, so the distance runs once per distinct pair.
-    IVF joins each item's cell (its first probe) with every row's probes
-    replicated across the cell's salts: no pair is lost and each matches
-    exactly once, so the vectors ride that join."""
+    Every join side reads the routed items, so they are materialized
+    once (the routing UDF runs once). Forest/LSH salt both sides by their
+    own bucket counts (_salted: a mega-bucket costs O(g * cap), not
+    O(g^2)) and answer through _join_plan, the index's candidate join:
+    self pairs dropped, narrow (qid, nid) dedup before the vectors are
+    re-attached, so the distance runs once per distinct pair. IVF joins
+    each item's cell (its first probe), _salted_by the cell counts, with
+    every row's probes _replicated across the cell's salts: no pair is
+    lost and each matches exactly once, so the vectors ride that join
+    and there is nothing to dedup."""
     cfg = _resolve_cfg(cfg, items, vec_col, id_col)
     model = AnnModel.train(items, cfg, id_col, vec_col)
     cols = [
@@ -2147,60 +2183,32 @@ def knn_all_items(
     if cfg.metric == "dot":
         ikeys = "ikeys"
         cols.append(model.keys_col(vec_col, query_side=False).alias(ikeys))
-    base = items.select(*cols)
+    base = items.select(*cols).localCheckpoint(eager=False)
+
+    def routed(bucket: F.Column, id_as: str, *more: F.Column) -> DataFrame:
+        return base.select(
+            bucket.alias("bucket"), F.col("id").alias(id_as), *more
+        )
+
     if cfg.kind == "ivf":
-        # both join sides read `base`: materialize it so the routing UDF
-        # runs once
-        base = base.localCheckpoint(eager=False)
-        assign = base.select(
-            F.element_at(ikeys, 1).alias("bucket"),
-            F.col("id").alias("nid"), F.col("v").alias("nv"),
+        cells = routed(F.element_at(ikeys, 1), "nid", F.col("v").alias("nv"))
+        sizes = _oversized(_bucket_counts(cells), cfg.bucket_cap)
+        probes = _replicated(
+            routed(F.explode("keys"), "qid", F.col("v").alias("qv")),
+            sizes, True,
         )
-        sizes = assign.groupBy("bucket").agg(
-            F.greatest(
-                F.lit(1), F.ceil(F.count(F.lit(1)) / cfg.bucket_cap)
-            ).cast("long").alias("m")
+        cand = probes.join(_salted_by(cells, sizes), ["bucket", "salt"])
+        scored = cand.where(F.col("qid") != F.col("nid")).select(
+            "qid", "nid", _distance(cfg, "qv", "nv").alias("distance")
         )
-        assign = assign.join(F.broadcast(sizes), "bucket").select(
-            "bucket", "nid", "nv",
-            F.pmod(F.xxhash64("nid", "bucket"), F.col("m")).alias("salt"),
-        )
-        probes = (
-            base.select(
-                F.col("id").alias("qid"), F.col("v").alias("qv"),
-                F.explode("keys").alias("bucket"),
-            )
-            .join(F.broadcast(sizes), "bucket")
-            .select(
-                "bucket", "qid", "qv",
-                F.explode(F.sequence(F.lit(0), F.col("m") - 1)).alias("salt"),
-            )
-        )
-        cand = probes.join(assign, ["bucket", "salt"]).where(
-            F.col("qid") != F.col("nid")
-        )
-    else:
-        qb = _cap_buckets(
-            base.select("id", F.explode("keys").alias("bucket")),
-            cfg.bucket_cap,
-        )
-        ib = qb if ikeys == "keys" else _cap_buckets(
-            base.select("id", F.explode(ikeys).alias("bucket")),
-            cfg.bucket_cap,
-        )
-        pairs = (
-            qb.alias("a").join(ib.alias("b"), ["bucket", "salt"])
-            .where(F.col("a.id") != F.col("b.id"))
-            .select(F.col("a.id").alias("qid"), F.col("b.id").alias("nid"))
-            .dropDuplicates(["qid", "nid"])
-        )
-        vecs = base.select("id", "v")
-        cand = pairs.join(
-            vecs.select(F.col("id").alias("qid"), F.col("v").alias("qv")),
-            "qid",
-        ).join(
-            vecs.select(F.col("id").alias("nid"), F.col("v").alias("nv")),
-            "nid",
-        )
-    d = _distance(cfg, "qv", "nv")
-    return _top_k(cand.select("qid", "nid", d.alias("distance")), k)
+        return _top_k(scored, k)
+    qroutes = _salted(routed(F.explode("keys"), "qid"), cfg.bucket_cap)
+    assign = (
+        qroutes.withColumnRenamed("qid", "nid") if ikeys == "keys"
+        else _salted(routed(F.explode(ikeys), "nid"), cfg.bucket_cap)
+    )
+    return _join_plan(
+        qroutes, base.select(F.col("id").alias("qid"), F.col("v").alias("qv")),
+        assign, base.select(F.col("id").alias("nid"), "v"), cfg, k,
+        drop_self=True,
+    )

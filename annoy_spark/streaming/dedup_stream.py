@@ -109,8 +109,12 @@ def incremental_dedup_stream(
         # (ids only, never shingle arrays) so the signature snapshot is
         # streamed and semi-filtered to candidate files, never shuffled
         # whole — per-batch cost follows the batch, not the corpus
+        # rescue is off here, so no candidate carries star provenance
         edges = verify(
-            F.broadcast(exact.unionByName(cand).unionByName(intra)),
+            F.broadcast(
+                exact.unionByName(cand).unionByName(intra)
+                .select("*", F.lit(0).alias("from_star"))
+            ),
             all_sigs, dataclasses.replace(cfg, star_rescue_cap=0),
         )
         # idempotent per-batch sink: rerun of a failed batch overwrites

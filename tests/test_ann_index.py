@@ -475,6 +475,32 @@ def test_get_distance_hamming(spark, tmp_path):
     assert idx.get_distance(0, 2) == float(bin((-9 ^ 7) & mask).count("1"))
 
 
+def test_get_distance_names_missing_ids_and_matches_jvm(
+    spark, corpus, tmp_path
+):
+    """get_distance's KeyError names every id the fetch did not return,
+    and its driver-side distance equals the query paths' JVM _distance
+    bit for bit."""
+    from pyspark.sql import functions as F
+
+    from annoy_spark.sources.ann_index import _distance
+
+    cfg = AnnIndexConfig(kind="lsh", metric="angular", n_tables=2,
+                         n_bits=4, seed=42, max_sample=500)
+    idx = build_index(spark, corpus, str(tmp_path / "gd_missing"), cfg)
+    with pytest.raises(KeyError, match=r"\[999998, 999999\]"):
+        idx.get_distance(999_998, 999_999)
+    with pytest.raises(KeyError, match=r"\[999999\]"):
+        idx.get_distance(3, 999_999)
+    v = idx._vectors
+    jvm = (
+        v.where(F.col("nid") == 1).select(F.col("v").alias("qv"))
+        .crossJoin(v.where(F.col("nid") == 2).select(F.col("v").alias("nv")))
+        .select(_distance(idx.cfg, "qv", "nv")).first()[0]
+    )
+    assert idx.get_distance(1, 2) == jvm
+
+
 def test_auto_n_trees_memory_envelope(spark, corpus, tmp_path):
     """n_trees=-1 auto-sizing (annoy build(-1), annoylib.h:1266-1271):
     resolve trees from the memory envelope, persist the RESOLVED count,

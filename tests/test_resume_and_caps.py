@@ -196,10 +196,10 @@ def test_star_rescue_connects_split_members(spark):
     }
     cand = spark.createDataFrame(
         [
-            (ids["center"], ids["a"], "lsh_star"),
-            (ids["center"], ids["b"], "lsh_star"),
+            (ids["center"], ids["a"], "lsh_star", 1),
+            (ids["center"], ids["b"], "lsh_star", 1),
         ],
-        "u long, v long, kind string",
+        "u long, v long, kind string, from_star int",
     )
     out = verify(cand, sigs, cfg).collect()
     pairs = {(r.u, r.v): r.kind for r in out}

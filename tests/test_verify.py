@@ -121,16 +121,15 @@ def test_pipeline_digest_matches_executor_plan(spark, tmp_path,
 
 
 def test_rescue_full_pairs_and_downgraded_kind(spark, split, monkeypatch):
-    """Both star-rescue fixtures: candidates without from_star (star
-    inferred from kind == 'lsh_star') and a star edge whose kind was
-    downgraded to 'lsh' but keeps from_star = 1."""
+    """Both star-rescue fixtures: two star edges and a star edge whose
+    kind was downgraded to 'lsh' but keeps from_star = 1."""
     sigs, ids = split
-    legacy = spark.createDataFrame(
-        [(ids["center"], ids["a"], "lsh_star"),
-         (ids["center"], ids["b"], "lsh_star")],
-        "u long, v long, kind string",
+    star = spark.createDataFrame(
+        [(ids["center"], ids["a"], "lsh_star", 1),
+         (ids["center"], ids["b"], "lsh_star", 1)],
+        CAND_SCHEMA,
     )
-    driver, executor = _both(monkeypatch, legacy, sigs)
+    driver, executor = _both(monkeypatch, star, sigs)
     assert driver == executor
     assert {(u, v): k for u, v, k, _, _ in driver} == {
         _pair(ids, "a", "b"): "lsh_rescue"

@@ -103,7 +103,10 @@ def main() -> None:
                 cfg)),
         "KNN brute force (broadcast queries, no shuffle of items)":
             plan_of(knn_bruteforce(emb, emb.limit(5), k=3)),
-        "KNN LSH (capped/salted bucket self-join, exact re-rank)":
+        "KNN LSH (routed rows checkpointed once; both sides salted by "
+        "their own bucket counts, one broadcast left join each; _join_plan: "
+        "(bucket, salt) self-join, narrow (qid, nid) dedup, re-attach "
+        "vectors, exact re-rank; the one Window is _top_k's rank)":
             plan_of(knn_lsh(emb, k=3, n_tables=4, n_bits=4)),
         "HAMMING ALL-PAIRS (pigeonhole block equi-join, distinct-signature "
         "collapse, popcount re-rank)":
@@ -116,8 +119,9 @@ def main() -> None:
     from annoy_spark.operators.forest import knn_forest
 
     sections[
-        "KNN FOREST (broadcast two_means trees -> one Arrow routing pass -> "
-        "capped (tree, leaf) equi-join, exact re-rank)"
+        "KNN FOREST (broadcast two_means trees -> one Arrow routing pass, "
+        "checkpointed once -> salted (tree, leaf) self-join through "
+        "_join_plan, exact re-rank)"
     ] = plan_of(knn_forest(emb, k=3, n_trees=4, leaf_cap=16,
                            sample_fraction=1.0))
 
