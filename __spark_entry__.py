@@ -33,8 +33,9 @@ def _sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def _duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verified-edge connected components via the iterative large-star /
-    small-star operator (annoy_spark.operators.cluster)."""
+    """Verified-edge connected components (annoy_spark.operators.cluster):
+    a driver union-find up to DRIVER_EDGES_MAX edges, the iterative
+    large-star / small-star rounds above it."""
     _register(spark, sf_dir)
     edges = spark.sql(G.duplicate_clusters_edges_sql_spark())
     nodes = spark.sql(G.duplicate_clusters_nodes_sql_spark())

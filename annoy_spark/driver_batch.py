@@ -1,7 +1,8 @@
 """Helpers shared by the driver batch paths: the ANN index's small query
-and append batches (sources/ann_index.py) and verify's driver-sized
-candidate sets (operators/verify.py). Each path fetches a bounded relation
-as Arrow, works on it in numpy and hands Spark a local relation."""
+and append batches (sources/ann_index.py), verify's driver-sized
+candidate sets (operators/verify.py) and cluster's driver-sized edge
+lists (operators/cluster.py). Each path fetches a bounded relation as
+Arrow, works on it in numpy and hands Spark a local relation."""
 
 from __future__ import annotations
 

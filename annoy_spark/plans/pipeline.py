@@ -14,7 +14,7 @@ from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark import SparkContext
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from annoy_spark.config import DedupConfig
 from annoy_spark.operators.band import all_candidate_edges
@@ -47,9 +47,12 @@ def _stage(store: CheckpointStore, spark: SparkSession, name: str,
         metrics[name] = {"resumed": True, "duration_s": time.time() - t0}
         return df
     df = build()
-    store.write(name, df)
-    out = store.read(spark, name)
-    n = out.count()
+    # the row count rides on the write's own job, and the read-back takes
+    # the known schema: no inference or count job after the write
+    obs = Observation()
+    store.write(name, df.observe(obs, F.count(F.lit(1)).alias("n")))
+    n = obs.get["n"]
+    out = store.read(spark, name, schema=df.schema)
     dur = time.time() - t0
     metrics[name] = {"resumed": False, "duration_s": dur, "n_rows": n}
     store.log_lineage(spark, {"stage": name, "n_rows": n, "duration_s": dur})
@@ -100,9 +103,15 @@ def run_pipeline(
         store, spark, "signatures", lambda: sign(corpus, cfg), metrics, resume
     )
 
+    # the skipped groups' schema, kept when this run writes them so the
+    # read after the branches runs no schema-inference job
+    skipped_schema = None
+
     def build_candidates() -> DataFrame:
+        nonlocal skipped_schema
         cand, skipped = all_candidate_edges(signatures, cfg)
         store.write("skipped_groups", skipped)
+        skipped_schema = skipped.schema
         return cand
 
     def run_band_verify() -> DataFrame:
@@ -158,7 +167,7 @@ def run_pipeline(
         )
     else:
         verified = run_band_verify()
-    skipped = store.read(spark, "skipped_groups")
+    skipped = store.read(spark, "skipped_groups", schema=skipped_schema)
 
     def build_clusters() -> DataFrame:
         edges = verified.select("u", "v")
