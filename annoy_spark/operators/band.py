@@ -10,14 +10,17 @@ defenses mirror Annoy's split-imbalance fallback (annoylib.h:1337-1425):
    cost O(g) instead of O(g^2);
 2. the skew ladder, ``tiered_pairs`` — the one pair enumerator shared by
    banding, the substring pass's fingerprint families and the verify
-   stage's star-rescue pass.
+   stage's star-rescue pass — and ``ladder_rows``, its numpy twin for the
+   driver paths of the latter two.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from annoy_spark.config import DedupConfig
+from annoy_spark.driver_batch import ragged, run_starts
 
 
 def exact_edges(signatures: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -142,6 +145,61 @@ def tiered_pairs(
         .agg(F.first("gsize").alias("n_members"))
     )
     return full.unionByName(star).unionByName(salted), accounting
+
+
+def ladder_rows(
+    key: np.ndarray,
+    member: np.ndarray,
+    pair_cap: int,
+    group_cap: int | None,
+    salt: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """``tiered_pairs`` in numpy over the rows (key[i], member[i]):
+    (u, v, huge_key, huge_size).
+
+    u and v are ROW indices, so callers gather the payloads of the rows a
+    pair comes from; member[u] < member[v] in every pair. The tiers and
+    the accounting are tiered_pairs', row for row: full pairs of the
+    groups of 1 < size <= pair_cap, star edges to the group
+    minimum up to group_cap rows, and above it the two-level star through
+    the minimum of each ``salt`` bucket (salt per row, required unless
+    ``group_cap`` is None); (huge_key, huge_size) are the groups above
+    group_cap and their row counts. As in the DataFrame plan, sizes count
+    repeated members, a member never pairs with itself, and a row equal
+    to its group's (or bucket's) minimum member gets no star edge from
+    it; which of several equal minimum rows lends its row index is
+    unspecified."""
+    order = np.lexsort((member, key))
+    k, m = key[order], member[order]
+    first = run_starts(k)
+    size = np.bincount(first, minlength=len(k))[first]
+    # tier 1: each row with every later row of its group
+    t1 = np.flatnonzero((size > 1) & (size <= pair_cap))
+    owner, off = ragged(first[t1] + size[t1] - 1 - t1)
+    a = t1[owner]
+    b = a + 1 + off
+    full = m[a] < m[b]
+    huge = (size > group_cap) if group_cap is not None else np.zeros(
+        len(k), dtype=bool)
+    # tier 2: the group minimum to every other member
+    t2 = np.flatnonzero((size > pair_cap) & ~huge & (m != m[first]))
+    # tier 3: a member to its bucket minimum; a bucket minimum to the
+    # group minimum
+    u3 = v3 = np.empty(0, np.int64)
+    t3 = np.flatnonzero(huge)
+    if len(t3):
+        s = salt[order][t3]
+        by_bucket = np.lexsort((m[t3], s, k[t3]))
+        t3, s = t3[by_bucket], s[by_bucket]
+        bmin = t3[run_starts(k[t3], s)]
+        to_bucket = m[t3] != m[bmin]
+        edge = to_bucket | (m[t3] != m[first[t3]])
+        u3 = np.where(to_bucket, bmin, first[t3])[edge]
+        v3 = t3[edge]
+    u = order[np.r_[a[full], first[t2], u3]]
+    v = order[np.r_[b[full], t2, v3]]
+    heads = np.flatnonzero(huge & (first == np.arange(len(k))))
+    return u, v, k[heads], size[heads]
 
 
 def all_candidate_edges(

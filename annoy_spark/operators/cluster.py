@@ -33,10 +33,9 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegralType
 
-from annoy_spark.driver_batch import fetch_bounded
+from annoy_spark.driver_batch import fetch_bounded, local_relation
 
 #: edges labelled on the driver; more take the star loop. Random edge
 #: lists over half as many nodes, 4-core host: connected_components took
@@ -142,13 +141,8 @@ def _driver_stars(edges: DataFrame) -> DataFrame | None:
         np.searchsorted(ids, u), np.searchsorted(ids, v), len(ids)
     )
     member = np.flatnonzero(lab != np.arange(len(ids)))
-    stars = pa.table(
-        {"u": ids[member], "v": ids[lab[member]]}
-    ).cast(to_arrow_schema(schema))
-    out = edges.sparkSession.createDataFrame(stars, schema)
-    # an empty input becomes a parallelized RDD, not a local relation;
-    # limit(0) plans as an empty one
-    return out if len(stars) else out.limit(0)
+    stars = pa.table({"u": ids[member], "v": ids[lab[member]]})
+    return local_relation(edges.sparkSession, stars, schema)
 
 
 def _star_loop(edges: DataFrame, max_iters: int) -> DataFrame:

@@ -30,6 +30,20 @@ built across executors without an all-to-all of the corpus):
    length >= min_substring_len. Anchors are real text matches, so hash
    collisions only cost a failed verification — never a false positive
    (Annoy's exact re-rank contract, annoylib.h:1492-1494).
+
+Scale notes: two plans with the same rows, chosen per call. Up to
+DRIVER_FILES_MAX representatives holding up to DRIVER_CONTENT_BYTES of
+content are searched on the driver, as verify and the ANN index answer
+their batches: a bounded fetch of the content sizes, then (within the
+bound) one fetch of (file_id, content, salt), the fingerprint kernel per
+file, the ladder's numpy twin (band.ladder_rows), the diagonal vote and
+the extension over one shared byte buffer, returned as local relations.
+With the pipeline stage's two writes that is 6 Spark jobs (21 for the
+executor plan) on dedup_skewed's 2000 files. Larger corpora take the
+executor plan: a fingerprint UDF pass persisted for the ladder's tiers,
+the vote as map-side-combinable aggregates, and a pair join that moves
+whole-file content once to the mapInPandas extension — broadcasting the
+counted anchored pair set while it is under PAIR_BROADCAST_CAP.
 """
 
 from __future__ import annotations
@@ -38,13 +52,18 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType, LongType, StructField, StructType,
 )
 
 from annoy_spark.config import DedupConfig
-from annoy_spark.operators.band import group_stats, tiered_pairs
+from annoy_spark.driver_batch import (
+    fetch_sized, local_relation, ragged, run_starts,
+)
+from annoy_spark.operators.band import group_stats, ladder_rows, tiered_pairs
 
 _B = np.uint64(0x100000001B3)  # odd => invertible mod 2^64
 _BINV = np.uint64(pow(0x100000001B3, -1, 1 << 64))
@@ -142,9 +161,20 @@ def fingerprint_positions(
     gram in one file and occurrence #j in the other; single-position
     anchors would then under-extend (or miss) the true match."""
     data = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+    uniq, pos, counts = _fingerprints(data, chunk, window, max_pos)
+    return uniq, (np.split(pos, np.cumsum(counts)[:-1]) if len(uniq) else [])
+
+
+def _fingerprints(
+    data: np.ndarray, chunk: int, window: int, max_pos: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """fingerprint_positions of the UTF-8 bytes ``data``, flat: the
+    distinct hashes, their kept positions one run per hash, and each
+    run's length."""
     grams = rolling_gram_hashes(data, chunk)
     if len(grams) == 0:
-        return np.empty(0, dtype=np.int64), []
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, empty
     mixed = _mix64(grams)
     pos = winnow(mixed, window)
     h = mixed[pos].view(np.int64)
@@ -155,13 +185,17 @@ def fingerprint_positions(
     size = np.repeat(counts, counts)
     half = max_pos // 2
     keep = (idx < half) | (idx >= size - half)
-    kept_counts = np.minimum(counts, 2 * half)
-    splits = np.cumsum(kept_counts)[:-1]
-    return uniq, np.split(ps[keep], splits)
+    return uniq, ps[keep], np.minimum(counts, 2 * half)
+
+
+def _window(cfg: DedupConfig) -> int:
+    """Winnowing window: every block of min_substring_len chars covers
+    one full window of substring_chunk-char grams."""
+    return max(cfg.min_substring_len - cfg.substring_chunk + 1, 16)
 
 
 def make_fingerprint_udf(cfg: DedupConfig):
-    window = max(cfg.min_substring_len - cfg.substring_chunk + 1, 16)
+    window = _window(cfg)
     schema = StructType(
         [
             StructField("fp", ArrayType(LongType())),
@@ -183,7 +217,11 @@ def make_fingerprint_udf(cfg: DedupConfig):
     return fp_udf
 
 
-_EXTEND_SCHEMA = "u long, v long, match_len long"
+_EXTEND_SCHEMA = StructType([
+    StructField("u", LongType()),
+    StructField("v", LongType()),
+    StructField("match_len", LongType()),
+])
 
 # Window schedule: most anchors mismatch within a few bytes (failed
 # candidates), so the FIRST window is tiny — the per-anchor cost is
@@ -214,38 +252,69 @@ def _batch_extend(
     base_*: flat index of the first byte to compare (for backwards, the
     byte just LEFT of the anchor); avail: max comparable bytes (min of
     both sides' remaining lengths). Returns matched byte counts."""
-    n = len(base_u)
-    out = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return out
-    cur = np.zeros(n, dtype=np.int64)
+    cur = np.zeros(len(base_u), dtype=np.int64)
     active = np.flatnonzero(avail > 0)
     w = _SCAN_W0
-    sign = -1 if backwards else 1
     while len(active):
         width = np.minimum(w, (avail - cur)[active])
         wmax = int(width.max())
-        steps = np.arange(wmax, dtype=np.int64)
-        iu = base_u[active, None] + sign * (cur[active, None] + steps)
-        iv = base_v[active, None] + sign * (cur[active, None] + steps)
-        # positions past this anchor's width: force "mismatch" so argmax
-        # stops exactly at the boundary (clip keeps the gather in-bounds)
-        pad = steps[None, :] >= width[:, None]
-        neq = (
-            ca[np.clip(iu, 0, len(ca) - 1)]
-            != cb[np.clip(iv, 0, len(cb) - 1)]
-        ) | pad
-        first = np.where(neq.any(axis=1), neq.argmax(axis=1), wmax)
+        # steps past an anchor's width repeat its last compared byte pair,
+        # so they never hold its first mismatch and every gather stays in
+        # bounds (no clip, no padding mask)
+        off = np.minimum(np.arange(wmax), (width - 1)[:, None])
+        off += cur[active, None]
+        if backwards:
+            np.negative(off, out=off)
+        iu = off + base_u[active, None]
+        off += base_v[active, None]
+        neq = ca[iu] != cb[off]
+        first = neq.argmax(axis=1)
+        first[~neq[np.arange(len(active)), first]] = wmax
         matched = np.minimum(first, width)
         cur[active] += matched
         # survivors matched their FULL window and still have bytes left
-        alive = (matched == width) & ((avail - cur)[active] > 0) & (
-            first >= width
-        )
-        active = active[alive]
+        active = active[(matched == width) & ((avail - cur)[active] > 0)]
         w = min(w * 2, _SCAN_WMAX)
-    out[:] = cur
-    return out
+    return cur
+
+
+def _longest_matches(
+    ca: np.ndarray,
+    cb: np.ndarray,
+    oa: np.ndarray,
+    la: np.ndarray,
+    ob: np.ndarray,
+    lb: np.ndarray,
+    row: np.ndarray,
+    pu: np.ndarray,
+    pv: np.ndarray,
+) -> np.ndarray:
+    """Per row r, the longest match through any of its anchors: row r's
+    u file is ca[oa[r]:oa[r] + la[r]], its v file cb[ob[r]:ob[r] + lb[r]],
+    and each anchor (row[i], pu[i], pv[i]) aligns byte pu[i] of u with
+    byte pv[i] of v. Anchors past either file drop out; 0 for a row
+    without anchors."""
+    ok = (pu < la[row]) & (pv < lb[row])
+    row, pu, pv = row[ok], pu[ok], pv[ok]
+    # each distinct anchor once: equal anchors extend to equal totals
+    order = np.lexsort((pv, pu, row))
+    row, pu, pv = row[order], pu[order], pv[order]
+    new = run_starts(row, pu, pv) == np.arange(len(row))
+    row, pu, pv = row[new], pu[new], pv[new]
+    # right extension (includes the anchor gram) + left extension;
+    # no early stop at min_len: match_len reports the TRUE maximal
+    # extension and only the best-aligned anchor reaches it
+    right = _batch_extend(
+        ca, cb, oa[row] + pu, ob[row] + pv,
+        np.minimum(la[row] - pu, lb[row] - pv), backwards=False,
+    )
+    left = _batch_extend(
+        ca, cb, oa[row] + pu - 1, ob[row] + pv - 1,
+        np.minimum(pu, pv), backwards=True,
+    )
+    best = np.zeros(len(la), dtype=np.int64)
+    np.maximum.at(best, row, left + right)
+    return best
 
 
 def make_extend_verifier(cfg: DedupConfig):
@@ -273,7 +342,7 @@ def make_extend_verifier(cfg: DedupConfig):
             ca = np.concatenate(abufs) if la.sum() else np.zeros(1, np.uint8)
             cb = np.concatenate(bbufs) if lb.sum() else np.zeros(1, np.uint8)
 
-            # flatten (row, anchor) pairs; drop anchors past either string
+            # flatten (row, anchor) pairs
             n_anc = np.fromiter(
                 (len(x) for x in pdf["pos_u"]), np.int64, len(pdf)
             )
@@ -286,23 +355,7 @@ def make_extend_verifier(cfg: DedupConfig):
                 np.concatenate(list(pdf["pos_v"])).astype(np.int64)
                 if n_anc.sum() else np.empty(0, np.int64)
             )
-            ok = (pu < la[row]) & (pv < lb[row])
-            row, pu, pv = row[ok], pu[ok], pv[ok]
-
-            # right extension (includes the anchor gram) + left extension;
-            # no early stop at min_len: match_len reports the TRUE maximal
-            # extension and only the best-aligned anchor reaches it
-            right = _batch_extend(
-                ca, cb, oa[row] + pu, ob[row] + pv,
-                np.minimum(la[row] - pu, lb[row] - pv), backwards=False,
-            )
-            left = _batch_extend(
-                ca, cb, oa[row] + pu - 1, ob[row] + pv - 1,
-                np.minimum(pu, pv), backwards=True,
-            )
-            total = left + right
-            best = np.zeros(len(pdf), dtype=np.int64)
-            np.maximum.at(best, row, total)
+            best = _longest_matches(ca, cb, oa, la, ob, lb, row, pu, pv)
             keep = best >= min_len
             yield pd.DataFrame(
                 {
@@ -319,6 +372,24 @@ def make_extend_verifier(cfg: DedupConfig):
 # memory: rows are (u, v, <=8+8 positions) ~ 150 B -> 500k ~ 75 MB
 PAIR_BROADCAST_CAP = 500_000
 
+#: UTF-8 bytes of content searched on the driver; more takes the
+#: executor plan. Set from substring alone (with its two writes) on
+#: dedup_skewed's representatives, 4-core host: at 2000 files (7.0 MB) the
+#: driver path took 2.2-2.8 s and 6 jobs, the executor plan 3.5-5.3 s
+#: and 22; at 8000 files (27.4 MB) 5.0-5.3 s against 5.2-6.7 s, with a
+#: numpy peak (tracemalloc) of 74 and 84 MB beside the fetched content.
+#: Fingerprinting runs on one core and grows with the bytes, so the bound
+#: sits just past the larger size.
+DRIVER_CONTENT_BYTES = 32 << 20
+#: rows whose content sizes the driver path fetches; more take the
+#: executor plan before any content is fetched
+DRIVER_FILES_MAX = 65_536
+
+_SKIPPED_SCHEMA = StructType([
+    StructField("fp", LongType()),
+    StructField("n_members", LongType()),
+])
+
 
 def substring_edges(
     corpus_with_ids: DataFrame,
@@ -334,7 +405,158 @@ def substring_edges(
     accounting DataFrame (fp, n_members) — families above band_group_cap
     go through the salted star (nothing dropped) but are surfaced for skew
     observability, exactly like banding's skipped_groups.
+
+    Up to DRIVER_FILES_MAX rows holding up to DRIVER_CONTENT_BYTES of
+    content are searched on the driver (_substring_on_driver) and both
+    results are local relations; anything larger takes the executor plan
+    (_substring_on_executors). Both produce the same rows.
     """
+    out = _substring_on_driver(corpus_with_ids, cfg)
+    if out is None:
+        out = _substring_on_executors(corpus_with_ids, cfg, return_skipped)
+    return out if return_skipped else out[0]
+
+
+def _utf8(
+    content: pa.ChunkedArray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(data, start, length): every string of ``content`` as the bytes
+    data[start[i]:start[i] + length[i]] of one shared UTF-8 buffer, a null
+    as empty — Arrow's own buffers, no per-string copy."""
+    arr = pc.fill_null(content, "").cast(pa.large_string()).combine_chunks()
+    if not len(arr):
+        empty = np.empty(0, np.int64)
+        return np.zeros(1, np.uint8), empty, empty
+    offsets = np.frombuffer(arr.buffers()[1], np.int64)[
+        arr.offset: arr.offset + len(arr) + 1
+    ]
+    buf = arr.buffers()[2]
+    data = (np.frombuffer(buf, np.uint8) if buf is not None and buf.size
+            else np.zeros(1, np.uint8))
+    return data, offsets[:-1], np.diff(offsets)
+
+
+def _vote(
+    fu: np.ndarray, fv: np.ndarray,
+    at_u: np.ndarray, n_u: np.ndarray,
+    at_v: np.ndarray, n_v: np.ndarray,
+    pos: np.ndarray, n_files: int,
+) -> tuple[np.ndarray, ...]:
+    """The executor plan's diagonal vote over the ladder's pairs.
+
+    Pair i joins files fu[i] < fv[i] (indices below n_files) through one
+    fingerprint whose positions are pos[at_u[i]:at_u[i] + n_u[i]] in fu
+    and likewise in fv. Every position combination votes for its diagonal
+    delta = pu - pv of its file pair; a diagonal keeps its vote count and
+    the least and greatest (pu, pv), and each file pair its top 2
+    diagonals by (-votes, delta). Returns (pair_u, pair_v, anchor_pair,
+    anchor_u, anchor_v): the distinct file pairs, and two anchors per
+    kept diagonal, sorted by the index of their pair."""
+    pair_key, pair = np.unique(fu * n_files + fv, return_inverse=True)
+    owner, off = ragged(n_u * n_v)
+    pu = pos[at_u[owner] + off // n_v[owner]]
+    pv = pos[at_v[owner] + off % n_v[owner]]
+    p, delta = pair[owner], pu - pv
+    order = np.lexsort((pv, pu, delta, p))
+    p, delta, pu, pv = p[order], delta[order], pu[order], pv[order]
+    first = np.flatnonzero(run_starts(p, delta) == np.arange(len(p)))
+    last = np.r_[first[1:], len(p)] - 1
+    dp, dd, votes = p[first], delta[first], last - first + 1
+    by_rank = np.lexsort((dd, -votes, dp))
+    rank = np.arange(len(by_rank)) - run_starts(dp[by_rank])
+    top = by_rank[rank < 2]
+    ends = np.c_[first[top], last[top]].ravel()
+    return (pair_key // n_files, pair_key % n_files, np.repeat(dp[top], 2),
+            pu[ends], pv[ends])
+
+
+def _substring_on_driver(
+    corpus_with_ids: DataFrame, cfg: DedupConfig
+) -> tuple[DataFrame, DataFrame] | None:
+    """(edges, skipped) of substring_edges found on the driver as local
+    relations, or None when the input is over the bounds or has a null or
+    repeated file_id.
+
+    fetch_sized first fetches each row's content size, then, within
+    DRIVER_FILES_MAX rows and DRIVER_CONTENT_BYTES bytes, (file_id,
+    content, salt) in one go; the salt is the executor ladder's, computed
+    in the JVM. Each file is fingerprinted by the UDF's kernel, the
+    families run the ladder (band.ladder_rows), the diagonal vote picks
+    the anchors (_vote), and the anchors are extended over one shared
+    byte buffer (_longest_matches) in chunks of at most one Arrow batch
+    of the executor verifier's pairs."""
+    spark = corpus_with_ids.sparkSession
+    files = fetch_sized(
+        corpus_with_ids.select(
+            "file_id", "content",
+            F.pmod(F.xxhash64("file_id"), F.lit(cfg.salt_buckets))
+            .alias("salt"),
+        ),
+        F.octet_length("content"), DRIVER_FILES_MAX, DRIVER_CONTENT_BYTES,
+    )
+    if files is None or files["file_id"].null_count:
+        return None
+    file_id = files["file_id"].to_numpy().astype(np.int64, copy=False)
+    if len(np.unique(file_id)) < len(file_id):
+        return None
+    data, start, length = _utf8(files["content"])
+
+    # one row per (file, distinct fingerprint), its kept positions a run
+    # of `pos`
+    window = _window(cfg)
+    fps = [
+        _fingerprints(data[a: a + n], cfg.substring_chunk, window,
+                      MAX_POS_PER_HASH)
+        for a, n in zip(start, length)
+    ]
+    n_fp = np.fromiter((len(f[0]) for f in fps), np.int64, len(fps))
+    row_file = np.repeat(np.arange(len(file_id)), n_fp)
+    key, pos, n_pos = (
+        np.concatenate([f[i] for f in fps] or [row_file]) for i in range(3)
+    )
+    at = np.cumsum(n_pos) - n_pos
+
+    u, v, huge_fp, huge_n = ladder_rows(
+        key, file_id[row_file], cfg.pair_enum_cap, cfg.band_group_cap,
+        files["salt"].to_numpy()[row_file],
+    )
+    pair_u, pair_v, anchor, anc_u, anc_v = _vote(
+        row_file[u], row_file[v], at[u], n_pos[u], at[v], n_pos[v], pos,
+        len(file_id),
+    )
+
+    chunk = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    chunk = chunk if chunk > 0 else max(len(pair_u), 1)
+    best = np.zeros(len(pair_u), np.int64)
+    for lo in range(0, len(pair_u), chunk):
+        hi = min(lo + chunk, len(pair_u))
+        a, b = np.searchsorted(anchor, [lo, hi])
+        fu, fv = pair_u[lo:hi], pair_v[lo:hi]
+        best[lo:hi] = _longest_matches(
+            data, data, start[fu], length[fu], start[fv], length[fv],
+            anchor[a:b] - lo, anc_u[a:b], anc_v[a:b],
+        )
+    keep = best >= cfg.min_substring_len
+    edges = pa.table({
+        "u": file_id[pair_u[keep]], "v": file_id[pair_v[keep]],
+        "match_len": best[keep],
+    })
+    skipped = pa.table({"fp": huge_fp, "n_members": huge_n})
+    return (
+        local_relation(spark, edges, _EXTEND_SCHEMA),
+        local_relation(spark, skipped, _SKIPPED_SCHEMA),
+    )
+
+
+def _substring_on_executors(
+    corpus_with_ids: DataFrame,
+    cfg: DedupConfig,
+    return_skipped: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """substring_edges as a lazy plan on the executors: (edges, skipped).
+
+    With return_skipped the accounting is localCheckpointed before the
+    fingerprint relation is unpersisted."""
     fp_udf = make_fingerprint_udf(cfg)
 
     # one UDF pass, one row per (file, distinct fingerprint hash) with the
@@ -455,4 +677,4 @@ def substring_edges(
     edges = joined.mapInPandas(
         make_extend_verifier(cfg), schema=_EXTEND_SCHEMA
     )
-    return (edges, skipped) if return_skipped else edges
+    return edges, skipped

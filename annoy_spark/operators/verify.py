@@ -42,8 +42,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from annoy_spark.config import DedupConfig
-from annoy_spark.driver_batch import fetch_bounded, ragged
-from annoy_spark.operators.band import group_stats, tiered_pairs
+from annoy_spark.driver_batch import (
+    fetch_bounded, fetch_sized, local_relation,
+)
+from annoy_spark.operators.band import group_stats, ladder_rows, tiered_pairs
 
 #: candidate rows verified on the driver; more take the executor plan.
 #: Both bounds come from verify alone on dedup_skewed checkpoints, 4-core
@@ -323,27 +325,24 @@ def _fetch_signatures(
 ) -> _Signatures | None:
     """The signatures of the files ``ids`` as _Signatures, or None when
     they hold more than DRIVER_SHINGLES_MAX shingles or fall outside
-    sign()'s output. Two fetches, each a semi-join against the ids as a
-    local relation that the planner broadcasts into the signature scan:
-    first each file's shingle count (at most one row per id, or None),
-    then, only when the counts are within DRIVER_SHINGLES_MAX, the
-    signature rows. So no shingle array of an input over the bound leaves
-    the executors."""
+    sign()'s output. The two fetches of fetch_sized, each a semi-join
+    against the ids as a local relation that the planner broadcasts into
+    the signature scan: first each file's shingle count (at most one row
+    per id, or None), then, only when the counts are within
+    DRIVER_SHINGLES_MAX, the signature rows. So no shingle array of an
+    input over the bound leaves the executors."""
     wanted = spark.createDataFrame(
         pd.DataFrame({"file_id": ids}),
         StructType().add("file_id", signatures.schema["file_id"].dataType),
     )
-    semi = signatures.join(wanted, "file_id", "left_semi")
-    counts = fetch_bounded(
-        semi.select(F.size("shingle_hashes").alias("n")), len(ids)
+    rows = fetch_sized(
+        signatures.join(wanted, "file_id", "left_semi").select(
+            "file_id", "shingle_hashes", "simhash", "n_shingles"
+        ),
+        F.size("shingle_hashes"), len(ids), DRIVER_SHINGLES_MAX,
     )
-    if counts is None or (pc.sum(counts["n"]).as_py() or 0) > (
-        DRIVER_SHINGLES_MAX
-    ):
+    if rows is None:
         return None
-    rows = semi.select(
-        "file_id", "shingle_hashes", "simhash", "n_shingles"
-    ).toArrow()
     shingles, simhash = rows["shingle_hashes"], rows["simhash"]
     size = _ints(pc.list_value_length(shingles))
     flat, words = pc.list_flatten(shingles), pc.list_flatten(simhash)
@@ -430,27 +429,11 @@ def _rescue_pairs(
     sig: _Signatures, center: np.ndarray, member: np.ndarray, cap: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """star_rescue_candidates of the failed star rows (center, member), as
-    distinct file index pairs: per center, every pair of its members when
-    it has more than one and at most ``cap`` failed rows (repeats count,
-    as in group_stats), else a star from its least member to the
-    others."""
+    distinct file index pairs: the same ladder (ladder_rows), grouped by
+    center, with ``cap`` as its pair cap and no salted tier."""
+    u, v, _, _ = ladder_rows(center, member, cap, group_cap=None)
     n = len(sig.file_id)
-    gsize = np.bincount(center, minlength=n)
-    # distinct (center, member), sorted: each center's members are a run
-    cm = np.unique(center * n + member)
-    c, m = cm // n, cm % n
-    first = np.searchsorted(c, c)
-    rank = np.arange(len(c)) - first
-    last = np.searchsorted(c, c, "right") - 1
-    full = (gsize[c] > 1) & (gsize[c] <= cap)
-    # full pairs: each member with every later member of its center
-    owner, off = ragged(np.where(full, last - np.arange(len(c)), 0))
-    pu, pv = m[owner], m[owner + 1 + off]
-    # star: the center's least member to every other member
-    star = (gsize[c] > cap) & (rank > 0)
-    pu = np.r_[pu, m[first[star]]]
-    pv = np.r_[pv, m[star]]
-    pair = np.unique(pu * n + pv)
+    pair = np.unique(member[u] * n + member[v])
     return pair // n, pair % n
 
 
@@ -463,10 +446,7 @@ def _local_relation(candidates: DataFrame, edges: pa.Table) -> DataFrame:
         StructField("jaccard", DoubleType()),
         StructField("hamming", LongType()),
     ])
-    out = candidates.sparkSession.createDataFrame(edges, schema)
-    # an empty input becomes a parallelized RDD, not a local relation;
-    # limit(0) plans as an empty one
-    return out if len(edges) else out.limit(0)
+    return local_relation(candidates.sparkSession, edges, schema)
 
 
 def _pass_expr(cfg: DedupConfig) -> F.Column:

@@ -258,8 +258,15 @@ def test_tiered_pairs_ladder(spark):
     """The one skew ladder band, substring and the star rescue share: full
     pairs up to pair_cap, a star to the group minimum up to group_cap, a
     salted two-level star beyond, payloads carried to both ends, huge
-    groups accounted; an unbounded group_cap never salts."""
-    from annoy_spark.operators.band import group_stats, tiered_pairs
+    groups accounted; an unbounded group_cap never salts. Its numpy twin
+    (ladder_rows) emits the same rows, also with repeated members."""
+    from collections import Counter
+
+    import numpy as np
+
+    from annoy_spark.operators.band import (
+        group_stats, ladder_rows, tiered_pairs,
+    )
 
     pair_cap, group_cap, buckets = 3, 5, 2
     sizes = [1, 2, pair_cap, pair_cap + 1, group_cap, group_cap + 1,
@@ -298,6 +305,26 @@ def test_tiered_pairs_ladder(spark):
     edges = [(r.u, r.v, r.star) for r in pairs.collect()]
     assert set(edges) == _ladder_want(groups, pair_cap, None, salt)
     assert acc.collect() == []
+
+    # the numpy twin, row for row; repeated rows of a full-pair group's
+    # member and of a star and a salted group's minimum must yield no
+    # (m, m) pair and no star edge from the repeated minimum
+    repeat = {groups[1][0], min(groups[3]), min(groups[6])}
+    for data in (rows, rows + [r for r in rows if r[1] in repeat]):
+        df = spark.createDataFrame(data, "g int, file_id long, pay string")
+        ann = df.select("*", *group_stats(["g"], "pay"))
+        g, fid, pay = (np.array(c) for c in zip(*data))
+        for cap in (group_cap, None):
+            pairs, acc = tiered_pairs(ann, ["g"], pair_cap, cap, buckets,
+                                      payload="pay")
+            u, v, huge, n = ladder_rows(
+                g, fid, pair_cap, cap, np.array([salt[f] for f in fid])
+            )
+            assert Counter(zip(fid[u].tolist(), fid[v].tolist(),
+                               pay[u].tolist(), pay[v].tolist())) == Counter(
+                (r.u, r.v, r.pu, r.pv) for r in pairs.collect())
+            assert sorted(zip(huge.tolist(), n.tolist())) == sorted(
+                tuple(r) for r in acc.collect())
 
 
 def test_failed_branch_cancels_sibling_and_resume_recovers(

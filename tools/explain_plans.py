@@ -41,7 +41,7 @@ def main() -> None:
     from annoy_spark.operators.band import all_candidate_edges
     from annoy_spark.operators.knn import knn_bruteforce
     from annoy_spark.operators.sign import file_id_col, sign
-    from annoy_spark.operators.substring import substring_edges
+    import annoy_spark.operators.substring as substring_mod
     import annoy_spark.operators.verify as verify_mod
     from annoy_spark.session import get_spark
 
@@ -84,6 +84,21 @@ def main() -> None:
             "fetches, numpy, a local relation --\n" + plan
         )
 
+    def executor_substring_plan() -> str:
+        driver_max = substring_mod.DRIVER_CONTENT_BYTES
+        substring_mod.DRIVER_CONTENT_BYTES = -1
+        try:
+            plan = final_plan_of(substring_mod.substring_edges(
+                corpus.select(file_id_col().alias("file_id"), "content"),
+                cfg))
+        finally:
+            substring_mod.DRIVER_CONTENT_BYTES = driver_max
+        return (
+            "-- corpora under DRIVER_CONTENT_BYTES are searched on the "
+            "driver: a size fetch, one content fetch, numpy, a local "
+            "relation --\n" + plan
+        )
+
     sections = {
         "SIGN stage (scan -> codegen string ops -> one ArrowEvalPython)":
             plan_of(sign(corpus, cfg)),
@@ -94,13 +109,12 @@ def main() -> None:
         "parquet candidate set and broadcasts it; each signature side is "
         "semi-joined to its candidate ids before any shuffle)":
             executor_verify_plan(),
-        "SUBSTRING pair join, executed (the counted anchored pair set is "
+        "SUBSTRING pair join, executor plan, executed (forced with "
+        "DRIVER_CONTENT_BYTES = -1; the counted anchored pair set is "
         "broadcast into a streamed content scan; its broadcast v ids "
         "semi-filter the v-side content, which the planner broadcasts "
         "while it is small)":
-            final_plan_of(substring_edges(
-                corpus.select(file_id_col().alias("file_id"), "content"),
-                cfg)),
+            executor_substring_plan(),
         "KNN brute force (broadcast queries, no shuffle of items)":
             plan_of(knn_bruteforce(emb, emb.limit(5), k=3)),
         "KNN LSH (routed rows checkpointed once; both sides salted by "
